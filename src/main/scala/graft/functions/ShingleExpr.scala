@@ -561,12 +561,13 @@ object CosineExpr {
         org.apache.spark.sql.graft.ColumnShim.expression(b)))
 }
 
-/** Squared-euclidean nearest centroids of a float vector. */
+/** Squared-euclidean nearest centroids of a float or double vector. */
 object CentroidUtil {
   /** Indices of the `m` nearest centers (squared euclid, ties by lower
     * index), as an int array — primitive loops, no per-element boxing.
+    * elemKind: 0 = float, 1 = double.
     */
-  def nearest(vec: ArrayData, centers: Array[Array[Double]], m: Int): ArrayData = {
+  def nearest(vec: ArrayData, centers: Array[Array[Double]], m: Int, elemKind: Int): ArrayData = {
     val k = centers.length
     val d2 = new Array[Double](k)
     val dim = vec.numElements()
@@ -580,7 +581,8 @@ object CentroidUtil {
         // null elements contribute nothing (consistent bucketing beats an
         // NPE from unboxing a Generic array's null slot)
         if (!vec.isNullAt(i)) {
-          val diff = vec.getFloat(i) - ctr(i)
+          val x = if (elemKind == 0) vec.getFloat(i).toDouble else vec.getDouble(i)
+          val diff = x - ctr(i)
           s += diff * diff
         }
         i += 1
@@ -612,7 +614,7 @@ object CentroidUtil {
 }
 
 /** `nearest_centers(vec)`: the `m` nearest centroid ids of an
-  * array<float> vector under squared euclidean distance — the IVF
+  * array<float|double> vector under squared euclidean distance — the IVF
   * assignment/probe kernel, with the centroid matrix carried as a
   * codegen reference object.
   */
@@ -622,24 +624,26 @@ case class NearestCentersExpr(child: Expression, centers: Seq[Seq[Double]], m: I
 
   private lazy val centersArr: Array[Array[Double]] = centers.map(_.toArray).toArray
 
+  private def kind: Int = child.dataType match {
+    case ArrayType(org.apache.spark.sql.types.FloatType, _) => 0
+    case ArrayType(org.apache.spark.sql.types.DoubleType, _) => 1
+    case _ => -1
+  }
+
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(org.apache.spark.sql.types.FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nearest_centers needs array<float>, got $other")
-    }
+    if (kind >= 0) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"nearest_centers needs array<float|double>, got ${child.dataType}")
 
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
 
   override protected def nullSafeEval(input: Any): Any =
-    CentroidUtil.nearest(input.asInstanceOf[ArrayData], centersArr, m)
+    CentroidUtil.nearest(input.asInstanceOf[ArrayData], centersArr, m, kind)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("ivfCenters", centersArr, "double[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.CentroidUtil.nearest($c, $ref, $m)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.CentroidUtil.nearest($c, $ref, $m, $kind)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentersExpr =

@@ -7,6 +7,13 @@ import org.apache.spark.sql.functions._
   * cosine, brute-force top-k (the correctness baseline) and an LSH
   * (random-hyperplane) bucketed variant (the scale path). All math uses
   * codegen'd higher-order functions — no UDFs.
+  *
+  * Cache lifetime follows the [[TextOps]] rule: call-scoped caches are
+  * released in `finally`; rows a returned DataFrame reads are a
+  * `Dataset.localCheckpoint` the caller owns, freed by Spark's
+  * ContextCleaner once unreachable. A local checkpoint's blocks are not
+  * recomputed if the executor holding them is lost — re-run the
+  * operator instead.
   */
 object SimilarityOps {
 
@@ -177,55 +184,44 @@ object SimilarityOps {
       scale: Double = 1000.0
   ): DataFrame = {
     require(k >= 1 && iters >= 0, s"kmeansClusters: k=$k iters=$iters")
-    val spark = vectors.sparkSession
-    val q = vectors.select(col(idCol).as("id"),
-        transform(col(vecCol), x => round(x.cast("double") * scale).cast("long")).as("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def assign(centroids: Seq[Seq[Long]]): DataFrame = {
-      val dists = array(centroids.map { c =>
-        aggregate(
-          zip_with(col("qv"), typedLit(c), (x, y) => (x - y) * (x - y)),
-          lit(0L), (acc, d) => acc + d)
-      }: _*)
-      q.withColumn("__d", dists)
-        .withColumn("cluster",
-          (array_position(col("__d"), array_min(col("__d"))) - 1).cast("int"))
-        .drop("__d")
-    }
-    var centroids: Seq[Seq[Long]] = q.orderBy("id").limit(k)
-      .collect().map(_.getSeq[Long](1)).toSeq
-    require(centroids.nonEmpty, "kmeansClusters: empty input")
-    var it = 0
-    while (it < iters) {
-      val upd = assign(centroids)
-        .select(col("cluster"), posexplode(col("qv")).as(Seq("d", "x")))
-        .groupBy("cluster", "d")
-        // SQL ROUND (HALF_UP) keeps the update bit-identical across
-        // engines: sum and count are exact integers, the division and
-        // rounding are single IEEE ops on identical inputs
-        .agg(round(sum(col("x")) / count(lit(1))).cast("long").as("c"))
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-      val byCluster = upd.groupBy(_._1)
-      centroids = centroids.zipWithIndex.map { case (old, ci) =>
-        byCluster.get(ci) match {
-          case Some(rows) => rows.sortBy(_._2).map(_._3).toSeq
-          case None => old // empty cluster keeps its centroid
-        }
+    TextOps.withCached(vectors.select(col(idCol).as("id"),
+        transform(col(vecCol), x => round(x.cast("double") * scale).cast("long")).as("qv"))) { q =>
+      def assign(centroids: Seq[Seq[Long]]): DataFrame = {
+        val dists = array(centroids.map { c =>
+          aggregate(
+            zip_with(col("qv"), typedLit(c), (x, y) => (x - y) * (x - y)),
+            lit(0L), (acc, d) => acc + d)
+        }: _*)
+        q.withColumn("__d", dists)
+          .withColumn("cluster",
+            (array_position(col("__d"), array_min(col("__d"))) - 1).cast("int"))
+          .drop("__d")
       }
-      it += 1
+      var centroids: Seq[Seq[Long]] = q.orderBy("id").limit(k)
+        .collect().map(_.getSeq[Long](1)).toSeq
+      require(centroids.nonEmpty, "kmeansClusters: empty input")
+      var it = 0
+      while (it < iters) {
+        val upd = assign(centroids)
+          .select(col("cluster"), posexplode(col("qv")).as(Seq("d", "x")))
+          .groupBy("cluster", "d")
+          // SQL ROUND (HALF_UP) keeps the update bit-identical across
+          // engines: sum and count are exact integers, the division and
+          // rounding are single IEEE ops on identical inputs
+          .agg(round(sum(col("x")) / count(lit(1))).cast("long").as("c"))
+          .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+        val byCluster = upd.groupBy(_._1)
+        centroids = centroids.zipWithIndex.map { case (old, ci) =>
+          byCluster.get(ci) match {
+            case Some(rows) => rows.sortBy(_._2).map(_._3).toSeq
+            case None => old // empty cluster keeps its centroid
+          }
+        }
+        it += 1
+      }
+      assign(centroids).select(col("id"), col("cluster")).localCheckpoint()
     }
-    val out = assign(centroids).select(col("id"), col("cluster"))
-    out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
-    q.unpersist(blocking = false)
-    // bounded cache: ONE live clustering result per session — repeated
-    // calls release the previous one (same discipline as minhashDedup)
-    val prev = lastKmeansResult.put(spark, out)
-    if (prev != null && (prev ne out)) prev.unpersist(blocking = false)
-    out
   }
-
-  private val lastKmeansResult =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, DataFrame]()
 
   /** Upper bound for [[autoK]]: assignment broadcasts centroids as plan
     * literals (that is what keeps the pass map-only and deterministic),
@@ -287,96 +283,84 @@ object SimilarityOps {
     val assigned = kmeansClusters(vectors, idCol, vecCol, k, iters)
     val v = vectors.select(col(idCol).as("id"), col(vecCol).as("vec"))
     // the (cluster, id, vec) side feeds BOTH legs of the self-join —
-    // persist it, or each leg recomputes the assignment join. k governs
+    // cache it, or each leg recomputes the assignment join. k governs
     // the pairwise cost (≈ (n/k)²·k compares): size k so clusters stay
     // in the hundreds-to-thousands, the published SemDeDup regime
     // ([[autoK]] does this from a targetClusterSize).
-    val j = assigned.join(v, "id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-cluster pair-count guard, the lshCandidates maxBucketSize
-    // discipline: a cluster past maxClusterCompareSize would make the
-    // all-pairs stage quadratic in ITS size alone (one mis-sized k or
-    // one degenerate embedding mode is enough), so oversized clusters
-    // fall back to min-id representative pairing — linear, still
-    // connects each near-dup class through its canonical member — and
-    // the trade is surfaced, never silent. One k-bounded collect.
-    val sizes = j.groupBy(col("cluster"))
-      .agg(count(lit(1)).as("csz"), min(col("id")).as("rep")).collect()
-    val bigRows = sizes.filter(_.getAs[Long]("csz") > maxClusterCompareSize)
-    lastOversizedClusters.put(spark,
-      (bigRows.length.toLong, bigRows.map(_.getAs[Long]("csz")).sum))
-    if (bigRows.nonEmpty)
-      org.apache.log4j.Logger.getLogger(getClass).warn(
-        s"semanticDedup: ${bigRows.length} cluster(s) over " +
-          s"maxClusterCompareSize=$maxClusterCompareSize " +
-          s"(${bigRows.map(_.getAs[Long]("csz")).sum} member rows) fell back to " +
-          "representative pairing — recall within those clusters is reduced; " +
-          "raise k (or use autoK/targetClusterSize) so clusters shrink")
-    val bigSet = bigRows.map(_.getAs[Int]("cluster")).toSeq
-    val small = if (bigSet.isEmpty) j else j.filter(!col("cluster").isin(bigSet: _*))
-    // Within-cluster all-pairs via SALTED block-pair decomposition
-    // (round 21, guide §2.5 "too few distinct key values"): a plain
-    // self-join on `cluster` has only k distinct keys, so its
-    // parallelism is capped at k tasks — and because the exchange BYTES
-    // are tiny while the join OUTPUT is quadratic per key, AQE coalesces
-    // the post-shuffle partitions even further (measured at sf1: k=16
-    // collapsed to 4–5 tasks, 3 × ~2.4 s serial waves = 65% of
-    // q_semantic_dedup). Each row gets a deterministic salt bucket
-    // b = xxhash64(id) mod S; the a-side replicates to every target
-    // bucket ≥ its own, the join runs on (cluster, bucket) — k·S
-    // distinct keys — and each unordered pair lands in EXACTLY one
-    // block: cross-bucket pairs join from the lower-bucket side
-    // (ba < bb), same-bucket pairs keep the id_a < id_b half. The
-    // output pair SET is identical to the plain self-join (orientation
-    // normalized to id order below); the cost is replicating the a-side
-    // (S+1)/2 times — vector rows, bounded by maxClusterCompareSize —
-    // for S× more parallelism on the quadratic stage.
-    val S = PairSaltBuckets
-    val a = small.select(col("cluster"), col("id").as("id_a"), col("vec").as("va"),
-        pmod(xxhash64(col("id")), lit(S)).cast("int").as("ba"))
-      .withColumn("bb", explode(sequence(col("ba"), lit(S - 1))))
-    val b = small.select(col("cluster"), col("id").as("id_b"), col("vec").as("vb"),
-      pmod(xxhash64(col("id")), lit(S)).cast("int").as("bb"))
-    val pairsSmall = a.join(b, Seq("cluster", "bb"))
-      .filter(col("ba") < col("bb") || (col("ba") === col("bb") && col("id_a") < col("id_b")))
-      .filter(round(cosine(col("va"), col("vb")), 4) >= threshold)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-    val pairs =
-      if (bigSet.isEmpty) pairsSmall
-      else {
-        val bigJ = j.filter(col("cluster").isin(bigSet: _*))
-        // the k-bounded representative side broadcasts: one map-only
-        // pass over the oversized clusters, no quadratic anywhere
-        val reps = bigJ.join(
-            broadcast(bigJ.groupBy(col("cluster")).agg(min(col("id")).as("rep_id"))),
-            Seq("cluster"))
-          .filter(col("id") === col("rep_id"))
-          .select(col("cluster"), col("rep_id"), col("vec").as("vrep"))
-        val pairsBig = bigJ.join(broadcast(reps), Seq("cluster"))
-          .filter(col("id") =!= col("rep_id"))
-          .filter(round(cosine(col("vec"), col("vrep")), 4) >= threshold)
-          .select(col("rep_id").as("id_a"), col("id").as("id_b"))
-        pairsSmall.union(pairsBig)
-      }
-    val comps = graft.functions.TextOps
-      .connectedComponents(assigned.select(col("id")), pairs)
-    // survivors: each component's minimum id is its representative
-    val out = assigned
-      .join(comps.filter(col("id") === col("cid")).select(col("id")), "id")
-    val mat = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    mat.count()
-    j.unpersist(blocking = false)
-    // release the intermediate clustering cache; keep only the survivors
-    // (one live result per session, like minhashDedup)
-    assigned.unpersist(blocking = false)
-    val prev = lastSemanticResult.put(vectors.sparkSession, mat)
-    if (prev != null && (prev ne mat)) prev.unpersist(blocking = false)
-    mat
+    TextOps.withCached(assigned.join(v, "id")) { j =>
+      // per-cluster pair-count guard, the lshCandidates maxBucketSize
+      // discipline: a cluster past maxClusterCompareSize would make the
+      // all-pairs stage quadratic in ITS size alone (one mis-sized k or
+      // one degenerate embedding mode is enough), so oversized clusters
+      // fall back to min-id representative pairing — linear, still
+      // connects each near-dup class through its canonical member — and
+      // the trade is surfaced, never silent. One k-bounded collect.
+      val sizes = j.groupBy(col("cluster"))
+        .agg(count(lit(1)).as("csz"), min(col("id")).as("rep")).collect()
+      val bigRows = sizes.filter(_.getAs[Long]("csz") > maxClusterCompareSize)
+      lastOversizedClusters.put(spark,
+        (bigRows.length.toLong, bigRows.map(_.getAs[Long]("csz")).sum))
+      if (bigRows.nonEmpty)
+        org.apache.log4j.Logger.getLogger(getClass).warn(
+          s"semanticDedup: ${bigRows.length} cluster(s) over " +
+            s"maxClusterCompareSize=$maxClusterCompareSize " +
+            s"(${bigRows.map(_.getAs[Long]("csz")).sum} member rows) fell back to " +
+            "representative pairing — recall within those clusters is reduced; " +
+            "raise k (or use autoK/targetClusterSize) so clusters shrink")
+      val bigSet = bigRows.map(_.getAs[Int]("cluster")).toSeq
+      val small = if (bigSet.isEmpty) j else j.filter(!col("cluster").isin(bigSet: _*))
+      // Within-cluster all-pairs via SALTED block-pair decomposition
+      // (round 21, guide §2.5 "too few distinct key values"): a plain
+      // self-join on `cluster` has only k distinct keys, so its
+      // parallelism is capped at k tasks — and because the exchange BYTES
+      // are tiny while the join OUTPUT is quadratic per key, AQE coalesces
+      // the post-shuffle partitions even further (measured at sf1: k=16
+      // collapsed to 4–5 tasks, 3 × ~2.4 s serial waves = 65% of
+      // q_semantic_dedup). Each row gets a deterministic salt bucket
+      // b = xxhash64(id) mod S; the a-side replicates to every target
+      // bucket ≥ its own, the join runs on (cluster, bucket) — k·S
+      // distinct keys — and each unordered pair lands in EXACTLY one
+      // block: cross-bucket pairs join from the lower-bucket side
+      // (ba < bb), same-bucket pairs keep the id_a < id_b half. The
+      // output pair SET is identical to the plain self-join (orientation
+      // normalized to id order below); the cost is replicating the a-side
+      // (S+1)/2 times — vector rows, bounded by maxClusterCompareSize —
+      // for S× more parallelism on the quadratic stage.
+      val S = PairSaltBuckets
+      val a = small.select(col("cluster"), col("id").as("id_a"), col("vec").as("va"),
+          pmod(xxhash64(col("id")), lit(S)).cast("int").as("ba"))
+        .withColumn("bb", explode(sequence(col("ba"), lit(S - 1))))
+      val b = small.select(col("cluster"), col("id").as("id_b"), col("vec").as("vb"),
+        pmod(xxhash64(col("id")), lit(S)).cast("int").as("bb"))
+      val pairsSmall = a.join(b, Seq("cluster", "bb"))
+        .filter(col("ba") < col("bb") || (col("ba") === col("bb") && col("id_a") < col("id_b")))
+        .filter(round(cosine(col("va"), col("vb")), 4) >= threshold)
+        .select(least(col("id_a"), col("id_b")).as("id_a"),
+          greatest(col("id_a"), col("id_b")).as("id_b"))
+      val pairs =
+        if (bigSet.isEmpty) pairsSmall
+        else {
+          val bigJ = j.filter(col("cluster").isin(bigSet: _*))
+          // the k-bounded representative side broadcasts: one map-only
+          // pass over the oversized clusters, no quadratic anywhere
+          val reps = bigJ.join(
+              broadcast(bigJ.groupBy(col("cluster")).agg(min(col("id")).as("rep_id"))),
+              Seq("cluster"))
+            .filter(col("id") === col("rep_id"))
+            .select(col("cluster"), col("rep_id"), col("vec").as("vrep"))
+          val pairsBig = bigJ.join(broadcast(reps), Seq("cluster"))
+            .filter(col("id") =!= col("rep_id"))
+            .filter(round(cosine(col("vec"), col("vrep")), 4) >= threshold)
+            .select(col("rep_id").as("id_a"), col("id").as("id_b"))
+          pairsSmall.union(pairsBig)
+        }
+      val comps = TextOps.connectedComponents(assigned.select(col("id")), pairs)
+      // survivors: each component's minimum id is its representative
+      assigned
+        .join(comps.filter(col("id") === col("cid")).select(col("id")), "id")
+        .localCheckpoint()
+    }
   }
-
-  private val lastSemanticResult =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, DataFrame]()
 
   /** Rows per cluster the pairwise stage compares exhaustively before
     * falling back to representative pairing. 10k members = ≤ ~5·10⁷
@@ -451,8 +435,10 @@ object SimilarityOps {
     // ~cap/P sampled rows and stops — while covering the whole layout;
     // the take() closure runs once per partition at build/fit time, not
     // in any per-row query path.
+    // array<float> and array<double> corpora both collect as doubles
+    val vecs = candidates.select(col("cvec").cast("array<double>"))
     val sampled: Array[org.apache.spark.sql.Row] = {
-      val df = candidates.select(col("cvec"))
+      val df = vecs
         .sample(withReplacement = false, fraction = IvfFitFraction, seed = 42L)
       val rdd = df.rdd
       val parts = math.max(1, rdd.getNumPartitions)
@@ -462,11 +448,11 @@ object SimilarityOps {
     val floor = math.min(fitSampleRows, math.max(256, nlist * 8))
     val fitRows =
       if (sampled.length >= floor) sampled
-      else candidates.select(col("cvec")).limit(fitSampleRows).collect()
+      else vecs.limit(fitSampleRows).collect()
     // null / ragged embeddings carry no fit signal and would NPE the
     // driver-local k-means — drop them from the sample (assignment still
     // buckets such rows via the kernel's guards)
-    val rawVecs = fitRows.map(r => if (r.isNullAt(0)) null else r.getSeq[Float](0))
+    val rawVecs = fitRows.map(r => if (r.isNullAt(0)) null else r.getSeq[Double](0))
       .filter(_ != null)
     // accept the MAJORITY dimensionality, not the first row's: one corrupt
     // short vector appearing first would otherwise discard every
@@ -475,7 +461,7 @@ object SimilarityOps {
       if (rawVecs.isEmpty) 0
       else rawVecs.groupBy(_.length).toSeq
         .maxBy { case (len, vs) => (vs.length, -len) }._1 // count, tie→smaller dim: deterministic
-    rawVecs.filter(_.length == dim0).map(_.toArray.map(_.toDouble))
+    rawVecs.filter(_.length == dim0).map(_.toArray)
   }
 
   private def fitCoarseCenters(
@@ -697,7 +683,7 @@ object SimilarityOps {
     * ([[effectiveNprobe]]) — and it was already being read here as the
     * cache key, so returning it costs nothing extra.
     */
-  private def centroidsWithMarkerAt(
+  private[graft] def centroidsWithMarkerAt(
       spark: org.apache.spark.sql.SparkSession, root: String)
       : (Seq[(Int, Seq[Double], Double)], Option[String]) = {
     def load(): Seq[(Int, Seq[Double], Double)] =
@@ -1015,13 +1001,14 @@ object SimilarityOps {
         .select(col("cluster"), col("cvec"), xxhash64(col("cid")).as("h"), col("cid"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= cap)
-        .select(col("cluster"), col("cvec"))
+        // array<float> and array<double> corpora both collect as doubles
+        .select(col("cluster"), col("cvec").cast("array<double>"))
         .collect()
         .groupBy(_.getInt(0))
         .map { case (c, rows) =>
-          c -> rows.map(_.getSeq[Float](1))
+          c -> rows.map(_.getSeq[Double](1))
             .filter(v => v != null && v.length == dim0)
-            .map(_.toArray.map(_.toDouble))
+            .map(_.toArray)
         }
     }
     val finalCenters = scala.collection.mutable.ArrayBuffer.empty[Seq[Double]]
@@ -1151,12 +1138,6 @@ object SimilarityOps {
           case None => progressing = false
           case Some((fc, targets)) =>
             val splits = targets.filter(_.subCenters.isDefined)
-            org.apache.log4j.Logger.getLogger(getClass).warn(
-              s"ivfIndexBuild: level-$level split of ${splits.length} oversized " +
-                s"cell(s) (occupancy > max($maxCellOccupancyFactor× base mean, " +
-                s"$minCellSplitRows rows)) into " +
-                s"${splits.map(_.subCenters.get.length).sum} sub-cells — " +
-                s"${fc.length} cells now (base nlist $nlist is what rebuilds inherit)")
             // renumber unsplit cells by lookup; re-assign ONLY split
             // cells' rows among their sub-centers (the when-chain guards
             // the kernel to those rows). One map-only projection over
@@ -1179,14 +1160,27 @@ object SimilarityOps {
             val st = re.groupBy("cluster")
               .agg(count(lit(1)).as("n"), avg(col("cos_c")).as("mean_cos"))
               .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2))).toMap
-            // stop when the worst cell stopped shrinking (degenerate
-            // geometry: re-splitting would add centroids for nothing)
+            // publish the level only if the worst cell shrank; otherwise
+            // keep the previous layout and stop (degenerate geometry: the
+            // split would add centroids for nothing)
             val prevMax = curStats.values.map(_._1).max
             val newMax = st.values.map(_._1).max
             progressing = newMax < prevMax
-            curCenters = fc
-            curDf = re
-            curStats = st
+            val log = org.apache.log4j.Logger.getLogger(getClass)
+            if (progressing) {
+              log.warn(
+                s"ivfIndexBuild: level-$level split of ${splits.length} oversized " +
+                  s"cell(s) (occupancy > max($maxCellOccupancyFactor× base mean, " +
+                  s"$minCellSplitRows rows)) into " +
+                  s"${splits.map(_.subCenters.get.length).sum} sub-cells — " +
+                  s"${fc.length} cells now (base nlist $nlist is what rebuilds inherit)")
+              curCenters = fc
+              curDf = re
+              curStats = st
+            } else
+              log.warn(
+                s"ivfIndexBuild: level-$level split left the largest cell at $newMax " +
+                  s"rows (was $prevMax) — discarded, keeping ${curCenters.length} cells")
             level += 1
         }
       }
@@ -1872,20 +1866,12 @@ object SimilarityOps {
     *     `maxFetchIds` the fetch degrades loudly to a full probed-cell
     *     vector read (still partition-pruned to the probed cells).
     *
-    * The shortlist is persisted (memory-with-disk-spill) before the id
-    * collect, so the quantized stage-1 scan executes ONCE per query
-    * batch — the collect materializes it, the re-rank join reads the
-    * cached rows (bounded: queries × rerankFactor × k). An evicted
-    * block's recompute re-reads the caller's version-pinned scan
-    * ([[assignAt]]), so eviction can shift cost but never consistency.
-    * The cache entry is NOT reclaimed by Spark's ContextCleaner —
-    * Dataset.persist registers the plan in the session CacheManager,
-    * which holds a strong reference until an explicit unpersist — so
-    * each call registers its shortlist in the bounded per-session
-    * [[registerShortlist]] ring and the oldest beyond the cap is
-    * unpersisted explicitly: a long-running serving session holds at
-    * most [[ShortlistCacheCap]] cached shortlists instead of one per
-    * query batch forever.
+    * The shortlist is a lazy local checkpoint that the id collect
+    * materializes, so the quantized stage-1 scan executes ONCE per query
+    * batch and the re-rank join reads the checkpointed rows (bounded:
+    * queries × rerankFactor × k). The returned result holds it, so a
+    * caller re-evaluating the result reads the same rows; the cleaner
+    * frees them once the caller drops the result.
     */
   private def rankTopKQuant(
       cells: DataFrame, // assign layout rows, already cluster-filtered
@@ -1905,8 +1891,7 @@ object SimilarityOps {
     val shortlist = scored.withColumn("r1", row_number().over(w1))
       .filter(col("r1") <= m)
       .select(col("qid"), col("qvec"), col("cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerShortlist(shortlist)
+      .localCheckpoint(eager = false)
     val idRows = shortlist.select(col("cid")).distinct()
       .limit(maxFetchIds + 1).collect()
     val exact =
@@ -1924,47 +1909,6 @@ object SimilarityOps {
       .select(col("qid"), col("cid"), round(cosine(col("qvec"), col("cvec")), 4).as("cos"))
     val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cid"))
     reranked.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Most recent stage-1 shortlist caches kept live per session. Small:
-    * each is ≤ queries × rerankFactor × k narrow rows; the cap exists so
-    * the count is BOUNDED (the pre-r21 shape leaked one CacheManager
-    * entry per serving call — ADVICE r20), while the latest few stay
-    * cached for composing callers that re-evaluate a returned plan
-    * (gate queries read a serve result twice). Evicted shortlists stay
-    * correct to recompute: the scan is version-pinned ([[assignAt]]).
-    */
-  private[functions] val ShortlistCacheCap = 8
-  private val liveShortlists =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession,
-      java.util.ArrayDeque[DataFrame]]()
-
-  private def registerShortlist(df: DataFrame): Unit = {
-    val q = liveShortlists.computeIfAbsent(df.sparkSession, s => {
-      // drop the session's queue when its context ends (ADVICE r21: a
-      // short-lived serving session otherwise leaks its ArrayDeque plus
-      // up to ShortlistCacheCap cached plans, pinning the stopped
-      // session object for the driver's lifetime); unpersist on a
-      // stopped session is a no-op, so removal alone is enough
-      try s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          liveShortlists.remove(s); ()
-        }
-      }) catch { case _: Throwable => () }
-      new java.util.ArrayDeque[DataFrame]()
-    })
-    q.synchronized {
-      q.addLast(df)
-      while (q.size > ShortlistCacheCap) q.removeFirst().unpersist(blocking = false)
-    }
-  }
-
-  /** Test hook: live cached shortlists registered for a session. */
-  private[functions] def liveShortlistCount(
-      spark: org.apache.spark.sql.SparkSession): Int = {
-    val q = liveShortlists.get(spark)
-    if (q == null) 0 else q.synchronized(q.size)
   }
 
   /** Dispatch a probed-cells DF to the layout's ranker. */

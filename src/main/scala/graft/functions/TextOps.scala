@@ -2,14 +2,32 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, shingling, MinHash+LSH dedup, SimHash dedup, language ID,
   * quality scoring, fingerprinting. Everything is built from codegen'd
   * Spark SQL functions (no UDFs) so plans stay inside whole-stage codegen
   * and scale with ordinary shuffles.
+  *
+  * Cache lifetime (shared with [[SimilarityOps]]): an intermediate that
+  * no returned DataFrame reads is persisted for the call only and
+  * released in `finally` ([[withCached]]). Rows a returned DataFrame
+  * reads are a `Dataset.localCheckpoint`: the caller owns the result,
+  * and Spark's ContextCleaner frees its blocks once it is unreachable.
+  * The cost: a local checkpoint's blocks are not recomputed if the
+  * executor holding them is lost — re-run the operator instead.
   */
 object TextOps {
+
+  /** Persist `df` (memory with disk spill) for the span of `body` and
+    * unpersist it in `finally`, so neither a return nor an exception
+    * leaves the entry in the session CacheManager.
+    */
+  private[functions] def withCached[T](df: DataFrame)(body: DataFrame => T): T = {
+    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(cached) finally cached.unpersist(blocking = false)
+  }
 
   /** Whitespace tokens. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
@@ -67,45 +85,39 @@ object TextOps {
   ): DataFrame = {
     // the char-shingle projection is the op's most expensive pass and
     // feeds FOUR plan branches (the exploded join's map side plus the
-    // sizes table joined back on each pair end): persist it and
+    // sizes table joined back on each pair end): cache it and
     // materialize ONCE up front, so every branch reads the cache instead
     // of re-shingling the corpus (round 22 — the same discipline as
     // minhashDedup's shingle cache; measured ~3 evaluations per action
-    // before). The final pairs persist + count lets the shingle cache
-    // release before returning; one live result per session, like
-    // minhashDedup.
-    val sh = docs.select(col(idCol).as("id"), charShingles(col(textCol), n).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sh.count()
-    val sizes = sh.select(col("id"), size(col("sh")).as("sz"))
-    val exAll = sh.select(col("id"), explode(col("sh")).as("g"))
-    // stop-gram bound (the skew guard for corpus scale): a shingle in k
-    // docs contributes k² join rows, and ubiquitous shingles carry no
-    // dedup signal. Dropping them UNDER-counts intersections slightly →
-    // jaccard becomes a lower bound; 0 disables (exact, the oracle mode).
-    val ex =
-      if (maxShingleDF <= 0) exAll
-      else exAll.join(
-        exAll.groupBy("g").agg(count(lit(1)).as("df")).filter(col("df") <= maxShingleDF)
-          .select("g"),
-        "g")
-    val inter = ex.as("x").join(ex.as("y"),
-        col("x.g") === col("y.g") && col("x.id") < col("y.id"))
-      .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    val szA = sizes.select(col("id").as("id_a"), col("sz").as("sz_a"))
-    val szB = sizes.select(col("id").as("id_b"), col("sz").as("sz_b"))
-    val ni = col("n_inter").cast("double")
-    val verified = inter.join(szA, "id_a").join(szB, "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(ni / (col("sz_a") + col("sz_b") - ni), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    val out = verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    sh.unpersist(blocking = false)
-    val prev = lastDedupResult.put(docs.sparkSession, out)
-    if (prev != null && (prev ne out)) prev.unpersist(blocking = false)
-    out
+    // before). The pairs are checkpointed before the shingle cache is
+    // released.
+    withCached(docs.select(col(idCol).as("id"), charShingles(col(textCol), n).as("sh"))) { sh =>
+      sh.count()
+      val sizes = sh.select(col("id"), size(col("sh")).as("sz"))
+      val exAll = sh.select(col("id"), explode(col("sh")).as("g"))
+      // stop-gram bound (the skew guard for corpus scale): a shingle in k
+      // docs contributes k² join rows, and ubiquitous shingles carry no
+      // dedup signal. Dropping them UNDER-counts intersections slightly →
+      // jaccard becomes a lower bound; 0 disables (exact, the oracle mode).
+      val ex =
+        if (maxShingleDF <= 0) exAll
+        else exAll.join(
+          exAll.groupBy("g").agg(count(lit(1)).as("df")).filter(col("df") <= maxShingleDF)
+            .select("g"),
+          "g")
+      val inter = ex.as("x").join(ex.as("y"),
+          col("x.g") === col("y.g") && col("x.id") < col("y.id"))
+        .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
+        .agg(count(lit(1)).as("n_inter"))
+      val szA = sizes.select(col("id").as("id_a"), col("sz").as("sz_a"))
+      val szB = sizes.select(col("id").as("id_b"), col("sz").as("sz_b"))
+      val ni = col("n_inter").cast("double")
+      inter.join(szA, "id_a").join(szB, "id_b")
+        .select(col("id_a"), col("id_b"),
+          round(ni / (col("sz_a") + col("sz_b") - ni), 4).as("jaccard"))
+        .filter(col("jaccard") >= threshold)
+        .localCheckpoint()
+    }
   }
 
   // ---- MinHash --------------------------------------------------------
@@ -199,39 +211,32 @@ object TextOps {
       s"minhashDedup: numHashes ($numHashes) must be a positive multiple of bands ($bands)")
     val rows = numHashes / bands
     // shingling is the most expensive projection and feeds three plan
-    // branches (signatures + both sides of the verify join) — persist it
+    // branches (signatures + both sides of the verify join) — cache it
     // instead of recomputing per branch. WordShinglesExpr is the codegen'd
     // single-pass form of wordShingles(tokens(...)) (same trim/split/join
     // semantics, spec-proven equal).
-    val sh = docs.select(
-      col(idCol).as("id"),
-      WordShinglesExpr.of(col(textCol), shingleSize).as("shingles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sig = sh.select(col("id"), col("shingles"),
-      bandSignatures(minhash(col("shingles"), numHashes), bands, rows).as("bands"))
-    // the banded rows feed only the bucket window now: lshCandidates
-    // persists its POST-window sized rows (round 22), whose exchange map
-    // side evaluates the expensive MinHash signature pass exactly once
-    // per call — the r21 pre-window persist here became pure overhead
-    // (an extra copy of rows read exactly once) and was dropped
-    val exploded = sig.select(col("id"), posexplode(col("bands")).as(Seq("band", "sig")))
-    val cand = lshCandidates(exploded, Seq("band", "sig"), maxBucketSize)
-    val shA = sh.select(col("id").as("id_a"), col("shingles").as("sh_a"))
-    val shB = sh.select(col("id").as("id_b"), col("shingles").as("sh_b"))
-    val verified = cand.join(shA, "id_a").join(shB, "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(jaccard(col("sh_a"), col("sh_b")), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    // materialize the (much smaller) verified pairs so the shingle cache
-    // can be released before returning; the cached result itself is
-    // bounded to ONE live instance per session — each invocation releases
-    // the previous one — so repeated runs can't grow storage monotonically
-    val out = verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    sh.unpersist(blocking = false)
-    val prev = lastDedupResult.put(docs.sparkSession, out)
-    if (prev != null && (prev ne out)) prev.unpersist(blocking = false)
-    out
+    withCached(docs.select(
+        col(idCol).as("id"),
+        WordShinglesExpr.of(col(textCol), shingleSize).as("shingles"))) { sh =>
+      val sig = sh.select(col("id"), col("shingles"),
+        bandSignatures(minhash(col("shingles"), numHashes), bands, rows).as("bands"))
+      // the banded rows feed only the bucket window now: lshCandidates
+      // checkpoints its POST-window sized rows (round 22), whose exchange
+      // map side evaluates the expensive MinHash signature pass exactly
+      // once per call — the r21 pre-window persist here became pure
+      // overhead (an extra copy of rows read exactly once) and was dropped
+      val exploded = sig.select(col("id"), posexplode(col("bands")).as(Seq("band", "sig")))
+      val cand = lshCandidates(exploded, Seq("band", "sig"), maxBucketSize)
+      val shA = sh.select(col("id").as("id_a"), col("shingles").as("sh_a"))
+      val shB = sh.select(col("id").as("id_b"), col("shingles").as("sh_b"))
+      // checkpoint the (much smaller) verified pairs so the shingle cache
+      // can be released before returning
+      cand.join(shA, "id_a").join(shB, "id_b")
+        .select(col("id_a"), col("id_b"),
+          round(jaccard(col("sh_a"), col("sh_b")), 4).as("jaccard"))
+        .filter(col("jaccard") >= threshold)
+        .localCheckpoint()
+    }
   }
 
   /** INCREMENTAL MinHash+LSH near-dup: pairs (id_new, id_corpus, jaccard
@@ -267,8 +272,6 @@ object TextOps {
     def prep(df: DataFrame): DataFrame = df.select(
       col(idCol).as("id"),
       WordShinglesExpr.of(col(textCol), shingleSize).as("shingles"))
-    val shC = prep(corpus).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shN = prep(increment).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def bandRows(sh: DataFrame): DataFrame = sh.select(col("id"),
         bandSignatures(minhash(col("shingles"), numHashes), bands, rows).as("bands"))
       .select(col("id"), posexplode(col("bands")).as(Seq("band", "sig")))
@@ -277,57 +280,49 @@ object TextOps {
     // min-id representative — linear in bucket size, loudly telemetered
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("band"), col("sig"))
-    // the sized corpus band rows feed THREE plan branches (the telemetry
-    // aggregate, smallC and bigRepsC — the latter two land in the same
-    // final action as separate subtrees), so without a cache the corpus
-    // signature pass + window shuffle evaluate three times per batch.
-    // Persist the NARROW post-window rows once (round 21); released
-    // below after the verify pipeline materializes.
-    val sizedC = bandRows(shC)
-      .withColumn("bsz", count(lit(1)).over(w))
-      .withColumn("rep", min(col("id")).over(w))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    locally {
-      val spark = corpus.sparkSession
-      val big = sizedC.filter(col("bsz") > maxBucketSize)
-        .agg(count_distinct(struct(col("band"), col("sig"))).as("buckets"),
-          count(lit(1)).as("members"))
-        .collect()(0)
-      lastOversizedBuckets.put(spark, (big.getLong(0), big.getLong(1)))
-      if (big.getLong(0) > 0)
-        org.apache.log4j.Logger.getLogger(getClass).warn(
-          s"minhashIncrement: ${big.getLong(0)} corpus bucket(s) over " +
-            s"maxBucketSize=$maxBucketSize (${big.getLong(1)} member rows) expose " +
-            "only their min-id representative — recall within those buckets is " +
-            "reduced; raise maxBucketSize")
+    withCached(prep(corpus)) { shC =>
+      withCached(prep(increment)) { shN =>
+        // the sized corpus band rows feed THREE plan branches (the telemetry
+        // aggregate, smallC and bigRepsC — the latter two land in the same
+        // final action as separate subtrees), so without a cache the corpus
+        // signature pass + window shuffle evaluate three times per batch.
+        // Cache the NARROW post-window rows once (round 21).
+        withCached(bandRows(shC)
+            .withColumn("bsz", count(lit(1)).over(w))
+            .withColumn("rep", min(col("id")).over(w))) { sizedC =>
+          locally {
+            val spark = corpus.sparkSession
+            val big = sizedC.filter(col("bsz") > maxBucketSize)
+              .agg(count_distinct(struct(col("band"), col("sig"))).as("buckets"),
+                count(lit(1)).as("members"))
+              .collect()(0)
+            lastOversizedBuckets.put(spark, (big.getLong(0), big.getLong(1)))
+            if (big.getLong(0) > 0)
+              org.apache.log4j.Logger.getLogger(getClass).warn(
+                s"minhashIncrement: ${big.getLong(0)} corpus bucket(s) over " +
+                  s"maxBucketSize=$maxBucketSize (${big.getLong(1)} member rows) expose " +
+                  "only their min-id representative — recall within those buckets is " +
+                  "reduced; raise maxBucketSize")
+          }
+          val smallC = sizedC.filter(col("bsz") <= maxBucketSize)
+            .select(col("id"), col("band"), col("sig"))
+          val bigRepsC = sizedC.filter(col("bsz") > maxBucketSize)
+            .select(col("rep").as("id"), col("band"), col("sig")).distinct()
+          val nx = bandRows(shN)
+          val cand = nx.as("n")
+            .join(smallC.union(bigRepsC).as("c"), Seq("band", "sig"))
+            .select(col("n.id").as("id_new"), col("c.id").as("id_corpus")).distinct()
+          cand
+            .join(shN.select(col("id").as("id_new"), col("shingles").as("sh_n")), "id_new")
+            .join(shC.select(col("id").as("id_corpus"), col("shingles").as("sh_c")), "id_corpus")
+            .select(col("id_new"), col("id_corpus"),
+              round(jaccard(col("sh_n"), col("sh_c")), 4).as("jaccard"))
+            .filter(col("jaccard") >= threshold)
+            .localCheckpoint()
+        }
+      }
     }
-    val smallC = sizedC.filter(col("bsz") <= maxBucketSize)
-      .select(col("id"), col("band"), col("sig"))
-    val bigRepsC = sizedC.filter(col("bsz") > maxBucketSize)
-      .select(col("rep").as("id"), col("band"), col("sig")).distinct()
-    val nx = bandRows(shN)
-    val cand = nx.as("n")
-      .join(smallC.union(bigRepsC).as("c"), Seq("band", "sig"))
-      .select(col("n.id").as("id_new"), col("c.id").as("id_corpus")).distinct()
-    val verified = cand
-      .join(shN.select(col("id").as("id_new"), col("shingles").as("sh_n")), "id_new")
-      .join(shC.select(col("id").as("id_corpus"), col("shingles").as("sh_c")), "id_corpus")
-      .select(col("id_new"), col("id_corpus"),
-        round(jaccard(col("sh_n"), col("sh_c")), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    val out = verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    shC.unpersist(blocking = false)
-    shN.unpersist(blocking = false)
-    sizedC.unpersist(blocking = false)
-    val prev = lastDedupResult.put(corpus.sparkSession, out)
-    if (prev != null && (prev ne out)) prev.unpersist(blocking = false)
-    out
   }
-
-  // one cached dedup result per session (see minhashDedup)
-  private val lastDedupResult =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, DataFrame]()
 
   /** (oversized buckets, member rows) of the most recent [[lshCandidates]]
     * run in a session — the representative-path recall-trade telemetry
@@ -349,23 +344,20 @@ object TextOps {
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(bucketCols.map(col): _*)
-    // persist the POST-window rows (round 22): sized feeds THREE
+    // checkpoint the POST-window rows (round 22): sized feeds THREE
     // consumers — the telemetry aggregate below (which doubles as the
-    // cache's materializing action) and both candidate branches (the
+    // checkpoint's materializing action) and both candidate branches (the
     // small-bucket self-join's two sides + the representative branch in
-    // one final action). Without the cache each consumer re-ran the
-    // window reduce over the bucket-key exchange — and everything BELOW
-    // the window (the signature/projection pass when the caller did not
-    // persist its own input) — per evaluation. Narrow rows: id + bucket
-    // keys + two longs. Released on the session's next lshCandidates
-    // call (one live sized cache per session, the lastDedupResult
-    // discipline); callers materialize their verified pairs before then.
+    // one final action). Without it each consumer re-ran the window
+    // reduce over the bucket-key exchange — and everything BELOW the
+    // window (the signature/projection pass when the caller did not
+    // cache its own input) — per evaluation. Narrow rows: id + bucket
+    // keys + two longs. A checkpoint, not a call-scoped cache, because
+    // the returned candidates read it.
     val sized = exploded
       .withColumn("bsz", count(lit(1)).over(w))
       .withColumn("rep", min(col("id")).over(w))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val prev = lastSizedCache.put(exploded.sparkSession, sized)
-    if (prev != null && (prev ne sized)) prev.unpersist(blocking = false)
+      .localCheckpoint(eager = false)
     // the representative path is a recall trade (members of an oversized
     // bucket only connect through its min-id doc) — it must never trigger
     // SILENTLY. One small aggregate job surfaces how many buckets (and
@@ -395,11 +387,6 @@ object TextOps {
       .select(col("rep").as("id_a"), col("id").as("id_b"))
     candSmall.union(candBig).distinct()
   }
-
-  // one live sized-bucket cache per session (see lshCandidates): released
-  // on the session's next call, after the caller's pipeline materialized
-  private val lastSizedCache =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, DataFrame]()
 
   /** Connected components over a near-dup pair graph by iterative
     * min-label propagation: every node's label converges to the smallest
@@ -440,8 +427,8 @@ object TextOps {
         case _ => false
       })
     // The edge pipeline (often an expensive verified-pair join) is
-    // evaluated EXACTLY ONCE, at full parallelism, into a bounded cache:
-    // the pre-r21 shape probed it through `limit(cap+1).collect()`,
+    // evaluated EXACTLY ONCE, at full parallelism, into a call-scoped
+    // cache: the pre-r21 shape probed it through `limit(cap+1).collect()`,
     // whose CollectLimit executes the upstream join in serial partition
     // waves (1, then ×4, …) — measured at sf1 as three ~2.4 s waves on
     // ≤5 tasks for q_semantic_dedup. A persist + count runs the join as
@@ -456,90 +443,81 @@ object TextOps {
     // count ran pre-filter, so null rows straddling the cap pushed a
     // driver-solvable graph onto the iterative path)
     val e0 = edges.select(col("id_a"), col("id_b"))
-    val e = (if (integralIds)
+    withCached(if (integralIds)
       e0.filter(col("id_a").isNotNull && col("id_b").isNotNull)
-    else e0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEdges = e.count()
-    if (integralIds && nEdges <= maxDriverEdges && maxDriverEdges + 1 <= Int.MaxValue) {
-      val pairs = {
-        import edges.sparkSession.implicits._
-        e.select(col("id_a").cast("long"), col("id_b").cast("long"))
-          .as[(Long, Long)]
-          .collect()
+    else e0) { e =>
+      val nEdges = e.count()
+      if (integralIds && nEdges <= maxDriverEdges && maxDriverEdges + 1 <= Int.MaxValue) {
+        val pairs = {
+          import edges.sparkSession.implicits._
+          e.select(col("id_a").cast("long"), col("id_b").cast("long"))
+            .as[(Long, Long)]
+            .collect()
+        }
+        val parent = new java.util.HashMap[Long, Long]()
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+          var c = x // path compression
+          while (parent.getOrDefault(c, c) != r) { val n = parent.getOrDefault(c, c); parent.put(c, r); c = n }
+          r
+        }
+        pairs.foreach { case (a, b) =>
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) } // min id wins
+        }
+        val labels = new java.util.HashMap[Long, Long]()
+        pairs.foreach { case (a, b) => labels.put(a, find(a)); labels.put(b, find(b)) }
+        val spark = ids.sparkSession
+        import scala.jdk.CollectionConverters._
+        val labelDf = spark.createDataFrame(
+          labels.entrySet().asScala.toSeq.map(e => org.apache.spark.sql.Row(e.getKey, e.getValue)).asJava,
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("__lid", org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("__lbl", org.apache.spark.sql.types.LongType))))
+        val idType = ids.schema("id").dataType
+        val keyed = ids.select(col("id"))
+        keyed
+          .join(broadcast(labelDf), keyed("id").cast("long") === col("__lid"), "left")
+          .select(keyed("id"),
+            coalesce(col("__lbl"), keyed("id").cast("long")).cast(idType).as("cid"))
       }
-      e.unpersist(blocking = false)
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-        var c = x // path compression
-        while (parent.getOrDefault(c, c) != r) { val n = parent.getOrDefault(c, c); parent.put(c, r); c = n }
-        r
+      // iterative path: build the symmetric edge view from the SAME cached
+      // evaluation (the pre-r21 union re-ran the pair pipeline twice).
+      // Each round's labels are a local checkpoint, materialized by that
+      // round's label sum: the lineage stops growing round over round,
+      // and the returned labels need neither edge cache.
+      else withCached(e.select(col("id_a").as("src"), col("id_b").as("dst"))
+          .union(e.select(col("id_b").as("src"), col("id_a").as("dst")))) { sym =>
+        var labels = ids.select(col("id"), col("id").as("cid")).localCheckpoint(eager = false)
+        // labels only ever DECREASE (least of self and neighbor min), so the
+        // exact label sum strictly decreases iff any label changed — one
+        // aggregate per round instead of a change-detection join (decimal
+        // keeps the sum exact for any id range)
+        def labelSum(df: DataFrame): java.math.BigDecimal =
+          df.agg(sum(col("cid").cast("decimal(38,0)"))).head.getDecimal(0)
+        var prevSum = labelSum(labels)
+        var round = 0
+        var converged = false
+        while (!converged && round < maxRounds) {
+          // next label = min(own, every neighbor's): one union + one shuffled
+          // min-agg per round (partial aggregation halves the shuffle), one
+          // fewer shuffle than the join+groupBy+left-join formulation
+          val viaNbr = sym.join(labels, sym("dst") === labels("id"))
+            .select(col("src").as("id"), col("cid"))
+          val next = labels.select(col("id"), col("cid")).union(viaNbr)
+            .groupBy(col("id")).agg(min(col("cid")).as("cid"))
+            .localCheckpoint(eager = false)
+          val nextSum = labelSum(next)
+          converged = nextSum.compareTo(prevSum) == 0
+          prevSum = nextSum
+          labels = next
+          round += 1
+        }
+        labels
       }
-      pairs.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) } // min id wins
-      }
-      val labels = new java.util.HashMap[Long, Long]()
-      pairs.foreach { case (a, b) => labels.put(a, find(a)); labels.put(b, find(b)) }
-      val spark = ids.sparkSession
-      import scala.jdk.CollectionConverters._
-      val labelDf = spark.createDataFrame(
-        labels.entrySet().asScala.toSeq.map(e => org.apache.spark.sql.Row(e.getKey, e.getValue)).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__lid", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("__lbl", org.apache.spark.sql.types.LongType))))
-      val idType = ids.schema("id").dataType
-      val keyed = ids.select(col("id"))
-      return keyed
-        .join(broadcast(labelDf), keyed("id").cast("long") === col("__lid"), "left")
-        .select(keyed("id"),
-          coalesce(col("__lbl"), keyed("id").cast("long")).cast(idType).as("cid"))
     }
-    // iterative path: build the symmetric edge view from the SAME cached
-    // evaluation (the pre-r21 union re-ran the pair pipeline twice)
-    val sym = e.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(e.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = ids.select(col("id"), col("id").as("cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // labels only ever DECREASE (least of self and neighbor min), so the
-    // exact label sum strictly decreases iff any label changed — one
-    // aggregate per round instead of a change-detection join (decimal
-    // keeps the sum exact for any id range)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("cid").cast("decimal(38,0)"))).head.getDecimal(0)
-    var prevSum = labelSum(labels)
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      // next label = min(own, every neighbor's): one union + one shuffled
-      // min-agg per round (partial aggregation halves the shuffle), one
-      // fewer shuffle than the join+groupBy+left-join formulation
-      val viaNbr = sym.join(labels, sym("dst") === labels("id"))
-        .select(col("src").as("id"), col("cid"))
-      val next = labels.select(col("id"), col("cid")).union(viaNbr)
-        .groupBy(col("id")).agg(min(col("cid")).as("cid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels.unpersist(blocking = false)
-      labels = next
-      round += 1
-    }
-    sym.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    val out = labels
-    val prev = lastCcResult.put(ids.sparkSession, out)
-    if (prev != null && (prev ne out)) prev.unpersist(blocking = false)
-    out
   }
-
-  // one cached CC result per session (released on the next invocation)
-  private val lastCcResult =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, DataFrame]()
 
   // ---- SimHash --------------------------------------------------------
 
@@ -614,17 +592,11 @@ object TextOps {
       useMd5: Boolean = false
   ): DataFrame = {
     // the signature projection feeds THREE plan branches (block buckets +
-    // both sides of the hamming verify join); persist the tiny
-    // (id, simhash) result once instead of recomputing per branch
-    val sh = simhash(docs, idCol, textCol, bits, useMd5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = simhashPairsFromSignatures(sh, maxDist, maxBucketSize, bits)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    sh.unpersist(blocking = false)
-    val prev = lastSimhashResult.put(docs.sparkSession, out)
-    if (prev != null && (prev ne out)) prev.unpersist(blocking = false)
-    out
+    // both sides of the hamming verify join); cache the tiny (id,
+    // simhash) result for the call instead of recomputing per branch
+    withCached(simhash(docs, idCol, textCol, bits, useMd5)) { sh =>
+      simhashPairsFromSignatures(sh, maxDist, maxBucketSize, bits).localCheckpoint()
+    }
   }
 
   /** Pair generation from an (id, simhash) frame — the bucketing +
@@ -660,10 +632,6 @@ object TextOps {
         bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxDist)
   }
-
-  // one cached simhash result per session (see simhashDedup)
-  private val lastSimhashResult =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, DataFrame]()
 
   /** Top-k TF-IDF keywords per document. Ranking is fully integer
     * (tf desc, document-frequency asc, token asc) so it is deterministic

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *   - recall@k of the i8 serve against the SAME-nprobe f64 serve — the
   *     quantization + shortlist-depth loss in isolation (cell misses
   *     from a finite nprobe affect both sides equally and cancel);
-  *   - the i8 serve latency (min of 3), so the shortlist-persist fold
+  *   - the i8 serve latency (min of 3), so the shortlist-checkpoint fold
   *     and the shortlist-depth cost are readable from the same line.
   *
   * One context line per dim carries the f64 serve's own recall against

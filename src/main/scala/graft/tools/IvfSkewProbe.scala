@@ -88,14 +88,13 @@ object IvfSkewProbe {
         .select(col("cid").as("qid"), col("cvec").as("qvec"))
         .cache()
       queries.count()
-      // probed-cell mass: the rows the serving scan must rank per batch.
-      // Mirror the serving path's share-contract nprobe scaling (round
-      // 22): a split build probes ceil(nprobe x cells / base) cells.
-      val centers = graft.functions.SimilarityOps.centroidsOf(spark, dir).map(_._2)
-      val (_, _, baseNlist) =
-        graft.functions.SimilarityOps.ivfIndexLayoutOf(spark, dir)
-      val nprobeEff = math.min(centers.length.toLong,
-        (nprobe.toLong * centers.length + baseNlist - 1) / baseNlist).toInt
+      // probed-cell mass: the rows the serving scan must rank per batch,
+      // through the serving path's own share-contract nprobe scaling
+      val (centRows, marker) = SimilarityOps.centroidsWithMarkerAt(
+        spark, SimilarityOps.ivfIndexState(dir).root)
+      val centers = centRows.map(_._2)
+      val nprobeEff =
+        SimilarityOps.effectiveNprobe(nprobe, centers.length, marker, "IvfSkewProbe")
       val probed = queries.select(explode(graft.functions.NearestCentersExpr.of(
           col("qvec"), centers, math.min(nprobeEff, centers.length))).as("cluster"))
         .distinct().collect().map(_.getInt(0)).toSet

@@ -182,4 +182,42 @@ class IvfCellSplitSpec extends AnyFunSuite {
       "split i8 serve must match brute force at full probe on separated queries")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
+
+  test("a split level that does not shrink the worst cell is not published") {
+    val dir = tmp("unsplittable")
+    // 800 IDENTICAL vectors far from 200 spread ones: the blob's cell is
+    // oversized, but every sub-center fitted to it coincides, so a split
+    // cannot move a single row out of it
+    val rnd = new scala.util.Random(9)
+    val blob = (0L until 800L).map(i => i -> Seq.fill(Dim)(100f))
+    val spread = (800L until 1000L).map(i => i -> Seq.fill(Dim)(rnd.nextGaussian().toFloat))
+    SimilarityOps.ivfIndexBuild(df(blob ++ spread), dir, nlist = 4, fitSampleRows = 1000,
+      maxCellOccupancyFactor = 2.0, minCellSplitRows = 100L)
+    assert(SimilarityOps.centroidsOf(spark, dir).length == 4,
+      "a failed split level must keep the level-0 layout (4 cells)")
+    assert(occupancy(dir).values.sum == 1000)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("an array<double> corpus with an oversized cell splits") {
+    val dir = tmp("split-f64-input")
+    val corpus = skewedCorpus().map { case (i, v) => (i, v.map(_.toDouble)) }
+    val full = corpus.toDF("cid", "cvec")
+    SimilarityOps.ivfIndexBuild(full, dir, nlist = 4, fitSampleRows = 1000,
+      maxCellOccupancyFactor = 2.0, minCellSplitRows = 100L)
+    val cents = SimilarityOps.centroidsOf(spark, dir)
+    assert(cents.length > 4, s"expected a split (> 4 cells), got ${cents.length}")
+    val occ = occupancy(dir)
+    assert(occ.values.sum == corpus.length)
+    assert(occ.values.max <= 400,
+      s"split must bound the hot cell, got max occupancy ${occ.values.max}")
+    val qs = full.filter(col("cid") < 3 || col("cid") >= 998L)
+      .select(col("cid").as("qid"), col("cvec").as("qvec"))
+    val served = SimilarityOps.ivfTopKServe(qs, dir, k = 3, nprobe = cents.length)
+      .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
+    val exact = SimilarityOps.bruteForceTopK(qs, full, 3)
+      .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
+    assert(served == exact, "full-probe serve over a split index must equal brute force")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheProbe
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Quantized IVF-flat vector storage (VERDICT r18 top item): f32 halves
@@ -173,21 +174,37 @@ class IvfQuantSpec extends AnyFunSuite {
     SimilarityOps.ivfIndexBuild(df(corpus), dir, nlist = 8, fitSampleRows = 300,
       vectorStorage = "i8")
     val qs = df(corpus.take(2)).select(col("cid").as("qid"), col("cvec").as("qvec"))
-    val served = SimilarityOps.ivfTopKServe(qs, dir, k = 3, nprobe = 2)
-    served.collect()
+    // the stage-1 shortlist is a local checkpoint, so its quantized scan
+    // runs in its own execution, not in the result's plan: collect the
+    // executed plans of every execution the serve runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try SimilarityOps.ivfTopKServe(qs, dir, k = 3, nprobe = 2).collect()
+    finally {
+      // the listener bus delivers asynchronously; wait for the collect
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.{Seconds, Span}
+      eventually(timeout(Span(30, Seconds))) { assert(plans.size >= 2) }
+      spark.listenerManager.unregister(listener)
+    }
     def leaves(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.SparkPlan] =
       p.collectLeaves().flatMap {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           leaves(a.executedPlan)
         case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => leaves(q.plan)
-        // the persisted stage-1 shortlist (scanned once, reread from
-        // cache by the re-rank join) — the quantized scan lives inside
-        case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          leaves(m.relation.cachedPlan)
         case x => Seq(x)
       }
-    val scans = leaves(served.queryExecution.executedPlan).collect {
+    import scala.jdk.CollectionConverters._
+    val scans = plans.asScala.toSeq.flatMap(leaves).collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
     val outs = scans.map(_.output.map(_.name).toSet)
@@ -444,33 +461,40 @@ class IvfQuantSpec extends AnyFunSuite {
     }
   }
 
-  test("i8 shortlist caches are BOUNDED per session (ADVICE r20: no per-call leak)") {
+  test("i8 shortlists are caller-owned: no CacheManager entry, freed once unreachable") {
     val dir = tmp("i8-shortlist-bound")
     val corpus = randVecs(0L until 120L, seed = 83)
     SimilarityOps.ivfIndexBuild(df(corpus), dir, nlist = 4, fitSampleRows = 120,
       vectorStorage = "i8")
     val qs = df(corpus.take(2)).select(col("cid").as("qid"), col("cvec").as("qvec"))
     val expected = pairs(SimilarityOps.ivfTopKServe(qs, dir, k = 3, nprobe = 4))
-    // many serving calls: pre-r21 each left one CacheManager entry live
-    // forever; the ring must hold the count at the cap with every evicted
-    // entry explicitly unpersisted (storage level dropped to NONE)
-    val calls = SimilarityOps.ShortlistCacheCap + 5
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    val results = (1 to calls).map { _ =>
-      SimilarityOps.ivfTopKServe(qs, dir, k = 3, nprobe = 4)
+    val entriesBefore = CacheProbe.cachedEntries(spark)
+    val rddsBefore = CacheProbe.persistentRddIds(spark)
+    // many serving calls: each shortlist is a local checkpoint held by
+    // its result, so no call registers a session CacheManager entry and
+    // an early result still answers after later calls. Returns the ids
+    // of the persistent RDDs the calls created.
+    def serveMany(calls: Int): Set[Int] = {
+      val results = (1 to calls).map(_ => SimilarityOps.ivfTopKServe(qs, dir, k = 3, nprobe = 4))
+      assert(CacheProbe.cachedEntries(spark) == entriesBefore,
+        s"$calls serving calls added CacheManager entries")
+      assert(pairs(results.head) == expected)
+      assert(pairs(results.last) == expected)
+      CacheProbe.persistentRddIds(spark) -- rddsBefore
     }
-    assert(SimilarityOps.liveShortlistCount(spark) <= SimilarityOps.ShortlistCacheCap)
-    // the persisted-RDD set must not grow one-per-call (delta-based: the
-    // shared session may carry caches from other suites): at most the
-    // cap's worth of shortlist caches joined the block manager
-    val grown = spark.sparkContext.getPersistentRDDs.size - cachedBefore
-    assert(grown <= SimilarityOps.ShortlistCacheCap,
-      s"expected <= ${SimilarityOps.ShortlistCacheCap} new persistent RDDs after " +
-        s"$calls serving calls, got $grown — shortlist caches are leaking")
-    // an evicted shortlist's result plan stays CORRECT to re-evaluate
-    // (the scan is version-pinned): the oldest result still answers
-    assert(pairs(results.head) == expected)
-    assert(pairs(results.last) == expected)
+    val created = serveMany(13)
+    assert(created.nonEmpty, "the shortlists should be checkpointed while their results live")
+    // the results are unreachable now: the ContextCleaner frees their
+    // checkpoint blocks after a GC
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Millis, Seconds, Span}
+    eventually(timeout(Span(30, Seconds)), interval(Span(500, Millis))) {
+      System.gc()
+      val live = CacheProbe.persistentRddIds(spark)
+      assert(live.size <= rddsBefore.size && created.forall(id => !live.contains(id)),
+        s"expected the ${created.size} shortlist checkpoints freed once the results " +
+          s"are dropped; ${created.count(live.contains)} still live")
+    }
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }

@@ -97,7 +97,7 @@ object Bench {
       // The reference's primary read-path metric (per-column compressed /
       // decompressed bytes, time, MB/s): the column whose decode is the
       // bottleneck must be NAMEABLE from the artifact. One shared
-      // implementation with the ScanProbe CLI (graft.tools.ColumnBandwidth)
+      // implementation with the BtrCli tool (graft.tools.ColumnBandwidth)
       // so the two surfaces can never drift on a metric meant to be
       // comparable across both.
       if (sys.env.getOrElse("SPARK_GRAFT_COL_BW", "1") != "0") try {

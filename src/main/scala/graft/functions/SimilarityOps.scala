@@ -418,7 +418,7 @@ object SimilarityOps {
     * [[ivfTopK]] and the persisted [[ivfIndexBuild]], so an index built
     * from the same candidate set reproduces the per-call centers exactly.
     */
-  private def fitSampleOf(
+  private[graft] def fitSampleOf(
       candidates: DataFrame, // has cvec
       nlist: Int,
       fitSampleRows: Int
@@ -442,8 +442,22 @@ object SimilarityOps {
         .sample(withReplacement = false, fraction = IvfFitFraction, seed = 42L)
       val rdd = df.rdd
       val parts = math.max(1, rdd.getNumPartitions)
-      val perPart = math.max(1, (fitSampleRows + parts - 1) / parts)
-      rdd.mapPartitions(_.take(perPart)).collect().take(fitSampleRows)
+      if (parts <= fitSampleRows) {
+        val perPart = math.max(1, (fitSampleRows + parts - 1) / parts)
+        rdd.mapPartitions(_.take(perPart)).collect().take(fitSampleRows)
+      } else {
+        // more partitions than sample rows: one row from each of
+        // fitSampleRows partitions picked at an even stride before the
+        // job, so the collect stays at the cap and still spans the
+        // layout (a trailing take would keep only the leading partitions).
+        // The stride is the sample: a Bernoulli pick inside each partition
+        // would leave small partitions empty and could drop the sample
+        // under the floor below, whose limit() fallback is prefix-biased.
+        val picks = (0 until fitSampleRows).map(i => (i.toLong * parts / fitSampleRows).toInt)
+        val whole = vecs.rdd
+        whole.sparkContext.runJob(whole,
+          (it: Iterator[org.apache.spark.sql.Row]) => it.take(1).toArray, picks).flatten
+      }
     }
     val floor = math.min(fitSampleRows, math.max(256, nlist * 8))
     val fitRows =

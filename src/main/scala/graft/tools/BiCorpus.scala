@@ -113,6 +113,10 @@ object BiCorpus {
         }
         c -> (hist, rs.map(_.getLong(2)).sum)
       }
+
+  /** A scheme → chunks histogram as a JSON object, most chunks first. */
+  def histJson(h: Map[String, Int]): String =
+    h.toSeq.sortBy(-_._2).map { case (s, n) => s""""$s":$n""" }.mkString("{", ",", "}")
 }
 
 /** Ratio/selection report over the BI corpus, mirroring the per-scheme
@@ -129,20 +133,15 @@ object BiCorpus {
 object RatioCorpus {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 1L << 19
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val df = BiCorpus.generate(spark, rows).coalesce(4)
-    val base = "/tmp/btr-ratio-corpus"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    val lines = Kit.withSession("ratio-corpus")(report(_, rows))
+    args.lift(1).foreach(Kit.save(_, lines))
+  }
 
-    def histJson(h: Map[String, Int]) =
-      h.toSeq.sortBy(-_._2).map { case (s, n) => s""""$s":$n""" }.mkString("{", ",", "}")
+  private def report(spark: SparkSession, rows: Long): Seq[String] = {
+    import BiCorpus.histJson
+    val df = BiCorpus.generate(spark, rows).coalesce(4)
+    val base = Kit.freshDir("/tmp/btr-ratio-corpus")
+    val lines = new Kit.Lines
 
     // natural selection, production (sampled) and exhaustive (tryall);
     // the SAMPLE write also reports the escalation gates' aggregate cost
@@ -212,11 +211,6 @@ object RatioCorpus {
       lines += s"""{"column":"ledger_amount","forced":"$scheme","forced_bytes":$bytes,""" +
         s""""alp_natural_bytes":$alpBytes,"penalty":${f"${bytes.toDouble / alpBytes}%.3f"}}"""
     }
-    lines.foreach(println)
-    if (args.length > 1) {
-      val w = new java.io.PrintWriter(new java.io.File(args(1)))
-      try lines.foreach(w.println) finally w.close()
-    }
-    spark.stop()
+    lines.toSeq
   }
 }

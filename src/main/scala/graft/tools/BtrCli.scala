@@ -1,201 +1,83 @@
 package graft.tools
 
-import graft.format._
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** CLI surface of the codec library — the analog of the reference's
-  * conversion/inspection tools (/root/reference/tools/conversion/
-  * decompression-speed.cpp, csvtobtr.cpp): reads a parquet table, encodes
-  * every column in 65,536-row chunks, decodes it back, verifies equality
-  * on non-null positions, and prints per-column scheme, compression ratio
-  * and decode bandwidth.
+/** CLI surface of the format — the analog of the reference's conversion
+  * and decompression-speed tools. For each table it writes the parquet
+  * table through the btr DSv2 writer, checks that the read-back content
+  * equals the source, and reports:
+  *   - per table: rows, write seconds, full-decode scan seconds (fastest
+  *     of 3 `sum(hash(*))` scans after a warm one), planned scan splits,
+  *     btr bytes and whether the content matched;
+  *   - per column: decoded and compressed bytes, their ratio and decode
+  *     MB/s ([[ColumnBandwidth.measure]], the bench's `col_bw` metric),
+  *     and the chunks each root scheme won (footers via
+  *     [[graft.functions.BtrInspect.describe]]).
   *
-  * Usage: runMain graft.tools.BtrCli <sfDir> <table> [reps]
+  * After the tables it prints the formatted plan of a filtered projection
+  * over the written lineitem (when converted) and `ALL_MATCH`, and exits 1
+  * when any table's read-back differs from its source.
+  *
+  *   runMain graft.tools.BtrCli <sfDir> [table,...=lineitem] [outDir=/tmp/btr-cli]
   */
 object BtrCli {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val table = if (args.length > 1) args(1) else "lineitem"
-    val reps = if (args.length > 2) args(2).toInt else 3
-
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("btr-cli")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
-      // default; read it as raw nanos-since-epoch longs instead.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val df = spark.read.parquet(s"$sfDir/$table.parquet")
-    val rows = df.collect() // CLI inspection tool: single-node by design
-    val schema = df.schema
-    println(s"table=$table rows=${rows.length}")
-    println(f"${"column"}%-20s ${"type"}%-10s ${"scheme"}%-14s ${"raw"}%10s ${"comp"}%10s ${"ratio"}%7s ${"MB/s"}%9s")
-
-    var totalRaw = 0L
-    var totalComp = 0L
-    schema.fields.zipWithIndex.foreach { case (field, ci) =>
-      if (PhysType.supported(field.dataType)) {
-        val tag = PhysType.of(field.dataType)
-        val n = rows.length
-        var rawBytes = 0L
-        var compBytes = 0L
-        var decodeNanos = 0L
-        var schemeName = ""
-        var off = 0
-        while (off < n) {
-          val count = math.min(BtrFile.DefaultBlockSize, n - off)
-          val chunk = new ColumnChunk(tag, count)
-          if (PhysType.isIntFamily(tag)) {
-            chunk.longs = new Array[Long](count)
-            var i = 0
-            while (i < count) {
-              val r = rows(off + i)
-              if (r.isNullAt(ci)) chunk.isNull(i) = true
-              else chunk.longs(i) = field.dataType match {
-                case IntegerType => r.getInt(ci).toLong
-                case LongType => r.getLong(ci)
-                case ShortType => r.getShort(ci).toLong
-                case ByteType => r.getByte(ci).toLong
-                case BooleanType => if (r.getBoolean(ci)) 1L else 0L
-                case DateType => r.getDate(ci).toLocalDate.toEpochDay
-                case d: DecimalType => r.getDecimal(ci).setScale(d.scale).unscaledValue().longValueExact()
-                case _ => // timestamp / timestamp_ntz → micros
-                  r.get(ci) match {
-                    case ts: java.sql.Timestamp =>
-                      ts.getTime * 1000L + (ts.getNanos / 1000) % 1000
-                    case ldt: java.time.LocalDateTime =>
-                      val inst = ldt.toInstant(java.time.ZoneOffset.UTC)
-                      inst.getEpochSecond * 1000000L + inst.getNano / 1000
-                    case inst: java.time.Instant =>
-                      inst.getEpochSecond * 1000000L + inst.getNano / 1000
-                  }
-              }
-              i += 1
-            }
-            rawBytes += count.toLong * PhysType.physWidth(tag)
-          } else if (tag == PhysType.Double) {
-            chunk.doubles = new Array[Double](count)
-            var i = 0
-            while (i < count) {
-              val r = rows(off + i)
-              if (r.isNullAt(ci)) chunk.isNull(i) = true
-              else chunk.doubles(i) = r.getDouble(ci)
-              i += 1
-            }
-            rawBytes += count.toLong * 8
-          } else if (tag == PhysType.Float) {
-            // floats travel as raw bits through the int path (the same
-            // lossless convention as the writer, BtrWrite.scala)
-            chunk.longs = new Array[Long](count)
-            var i = 0
-            while (i < count) {
-              val r = rows(off + i)
-              if (r.isNullAt(ci)) chunk.isNull(i) = true
-              else chunk.longs(i) = java.lang.Float.floatToRawIntBits(r.getFloat(ci)).toLong
-              i += 1
-            }
-            rawBytes += count.toLong * 4
-          } else {
-            chunk.strings = new Array[Array[Byte]](count)
-            var i = 0
-            while (i < count) {
-              val r = rows(off + i)
-              if (r.isNullAt(ci)) { chunk.isNull(i) = true; chunk.strings(i) = Array.emptyByteArray }
-              else chunk.strings(i) = r.get(ci) match {
-                case b: Array[Byte] => b
-                case other => String.valueOf(other).getBytes("UTF-8")
-              }
-              rawBytes += chunk.strings(i).length + 4
-              i += 1
-            }
-          }
-          val out = new BufWriter()
-          ChunkCodec.encode(out, chunk, BtrFile.DefaultCascadeDepth)
-          val blob = out.result()
-          compBytes += blob.length
-          // scheme name from the data block (skip nullmap)
-          val peek = new BufReader(blob)
-          NullMap.decode(peek, count)
-          schemeName = schemeLabel(tag, peek.getByte())
-          // decode + verify
-          var rep = 0
-          var dec: ChunkCodec.Decoded = null
-          while (rep < reps) {
-            val t0 = System.nanoTime()
-            dec = ChunkCodec.decode(new BufReader(blob), tag, count)
-            decodeNanos += System.nanoTime() - t0
-            rep += 1
-          }
-          var i = 0
-          var strOff = 0 // running byte offset into the decoded string stream
-          while (i < count) {
-            assert(dec.isNull(i) == chunk.isNull(i), s"null mismatch $table.${field.name} row ${off + i}")
-            if (!dec.isNull(i)) {
-              val ok =
-                if (PhysType.isIntFamily(tag) || tag == PhysType.Float) dec.longs(i) == chunk.longs(i)
-                else if (tag == PhysType.Double)
-                  java.lang.Double.doubleToRawLongBits(dec.doubles(i)) ==
-                    java.lang.Double.doubleToRawLongBits(chunk.doubles(i))
-                else {
-                  // strings/binary: byte-exact against the decoded stream
-                  // (a verify tool that skips values verifies nothing)
-                  dec.strLens(i) == chunk.strings(i).length &&
-                    java.util.Arrays.equals(
-                      java.util.Arrays.copyOfRange(dec.strBytes, strOff, strOff + dec.strLens(i)),
-                      chunk.strings(i))
-                }
-              assert(ok, s"value mismatch $table.${field.name} row ${off + i}")
-            }
-            if (dec.strLens != null) strOff += dec.strLens(i)
-            i += 1
-          }
-          off += count
-        }
-        totalRaw += rawBytes
-        totalComp += compBytes
-        val mbps = rawBytes.toDouble * reps / 1e6 / (decodeNanos / 1e9)
-        println(f"${field.name}%-20s ${field.dataType.simpleString}%-10s $schemeName%-14s $rawBytes%10d $compBytes%10d ${rawBytes.toDouble / compBytes}%7.2f $mbps%9.0f")
-      } else {
-        println(f"${field.name}%-20s ${field.dataType.simpleString}%-10s ${"(skipped)"}%-14s")
-      }
-    }
-    println(f"TOTAL raw=$totalRaw comp=$totalComp ratio=${totalRaw.toDouble / totalComp}%.2f")
-    spark.stop()
+    require(args.nonEmpty, "usage: BtrCli <sfDir> [table,...] [outDir]")
+    val tables = args.lift(1).getOrElse("lineitem").split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val outDir = args.lift(2).getOrElse("/tmp/btr-cli")
+    val allMatch = Kit.withSession("btr-cli")(run(_, args(0), tables, outDir))
+    if (!allMatch) sys.exit(1)
   }
 
-  def schemeLabel(tag: Int, id: Int): String =
-    if (PhysType.isIntFamily(tag) || tag == PhysType.Float) id match {
-      case IntCodec.Uncompressed => "raw"
-      case IntCodec.OneValue => "one_value"
-      case IntCodec.Dict => "dict"
-      case IntCodec.Rle => "rle"
-      case IntCodec.ForBp => "for_bp"
-      case IntCodec.DeltaBp => "delta_bp"
-      case IntCodec.Frequency => "frequency"
-      case _ => s"int:$id"
+  /** Converts and reports every table; true when all of them round-trip. */
+  def run(spark: SparkSession, sfDir: String, tables: Seq[String], outDir: String): Boolean = {
+    val matched = tables.map(t => convert(spark, s"$sfDir/$t.parquet", t, s"$outDir/$t"))
+    if (tables.contains("lineitem")) {
+      println("--- explain (formatted) ---")
+      spark.read.format("btr").load(s"$outDir/lineitem")
+        .filter(col("l_orderkey") > 100).select("l_orderkey", "l_extendedprice")
+        .explain("formatted")
     }
-    else if (tag == PhysType.Double) id match {
-      case DoubleCodec.Uncompressed => "raw"
-      case DoubleCodec.OneValue => "one_value"
-      case DoubleCodec.Dict => "dict"
-      case DoubleCodec.Rle => "rle"
-      case DoubleCodec.Frequency => "frequency"
-      case DoubleCodec.Pseudodecimal => "pseudodec"
-      case DoubleCodec.DoubleBp => "double_bp"
-      case DoubleCodec.Alp => "alp"
-      case _ => s"dbl:$id"
+    val allMatch = matched.forall(identity)
+    println(s"ALL_MATCH=$allMatch")
+    allMatch
+  }
+
+  // order-insensitive full-content rendering; fields join on \u0001 so a
+  // comma inside a string can't alias adjacent-column corruption the way
+  // Row.toString's "[a,b,c]" rendering would
+  private def render(r: Row): String =
+    r.toSeq.map {
+      case bytes: Array[Byte] => bytes.map("%02x".format(_)).mkString
+      case other => String.valueOf(other)
+    }.mkString("\u0001")
+
+  private def convert(spark: SparkSession, src: String, table: String, path: String): Boolean = {
+    val orig = spark.read.parquet(src)
+    Kit.freshDir(path)
+    val writeSec = Kit.secs(orig.write.format("btr").mode("overwrite").save(path))
+    val back = spark.read.format("btr").load(path)
+    val scanSec = Kit.warmMinSecs(back.selectExpr("sum(hash(*))"))
+    val expected = orig.collect().map(render).sorted.toSeq
+    val got = back.collect().map(render).sorted.toSeq
+    val ok = got == expected
+    val btrBytes = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".btr")).map(_.length).sum
+    println(f"$table%-12s rows=${got.length}%8d write=$writeSec%6.2fs scan=$scanSec%6.3fs " +
+      f"splits=${back.rdd.getNumPartitions}%4d btrBytes=$btrBytes%10d match=$ok")
+
+    val schemes = BiCorpus.schemeWins(spark, path)
+    println(f"  ${"column"}%-20s ${"type"}%-14s ${"raw"}%11s ${"comp"}%10s ${"ratio"}%7s ${"MB/s"}%9s  schemes")
+    val stats = ColumnBandwidth.measure(spark, path)
+    stats.foreach { c =>
+      val ratio = if (c.decompBytes > 0 && c.compBytes > 0) f"${c.decompBytes.toDouble / c.compBytes}%7.2f" else f"${"-"}%7s"
+      val hist = schemes.get(c.name).fold("{}")(w => BiCorpus.histJson(w._1))
+      println(f"  ${c.name}%-20s ${back.schema(c.name).dataType.simpleString}%-14s ${c.decompBytes}%11d ${c.compBytes}%10d $ratio ${c.mbps}%9.1f  $hist")
     }
-    else id match {
-      case StringCodec.Uncompressed => "raw"
-      case StringCodec.OneValue => "one_value"
-      case StringCodec.Dict => "dict"
-      case StringCodec.Fsst => "fsst"
-      case _ => s"str:$id"
-    }
+    val sized = stats.filter(c => c.decompBytes > 0 && c.compBytes > 0)
+    val (raw, comp) = (sized.map(_.decompBytes).sum, sized.map(_.compBytes).sum)
+    println(f"  TOTAL raw=$raw comp=$comp ratio=${raw.toDouble / comp}%.2f")
+    ok
+  }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Per-column decompression-bandwidth measurement, shared by [[graft.Bench]]
-  * (the `col_bw` artifact field) and [[ScanProbe]] (the diagnostic CLI) so
+  * (the `col_bw` artifact field) and [[BtrCli]] (the conversion CLI) so
   * the two surfaces report ONE comparable metric — mirrors the reference's
   * decompression-speed tool (`decompression-speed.cpp:205-238`: per-column
   * compressed/decompressed bytes, time, MB/s), naming the bottleneck column
@@ -38,11 +38,8 @@ object ColumnBandwidth {
     val nRows = df.count() // metadata-only on an unfiltered btr scan
     df.schema.fields.toSeq.map { f =>
       def scanOnce(): Unit = df.selectExpr(s"sum(hash(`${f.name}`))").collect()
-      def secsOf(body: => Unit): Double = {
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }
       scanOnce() // warm: codegen + page cache
-      val sec = (1 to 2).map(_ => secsOf(scanOnce())).min
+      val sec = Kit.minSecs(2)(scanOnce())
       val decomp: Long = f.dataType match {
         case IntegerType | FloatType | DateType => nRows * 4
         case LongType | DoubleType | TimestampType | TimestampNTZType => nRows * 8

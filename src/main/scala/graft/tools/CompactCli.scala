@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** OPTIMIZE entry point: `runMain graft.tools.CompactCli <table-dir>
   * [targetMiB]` — packs a btr table's small files toward the target size
   * via footer-level merges (see [[graft.sources.BtrCompact]]).
@@ -11,14 +9,8 @@ object CompactCli {
     require(args.nonEmpty, "usage: CompactCli <btr-table-dir> [targetMiB]")
     val path = args(0)
     val targetBytes = (if (args.length > 1) args(1).toLong else 128L) * 1024 * 1024
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val (before, after) = graft.sources.BtrCompact.compact(spark, path, targetBytes)
+    val (before, after) =
+      Kit.withSession("btr-compact")(graft.sources.BtrCompact.compact(_, path, targetBytes))
     println(s"[compact] $path: $before files -> $after files (target ${targetBytes >> 20} MiB)")
-    spark.stop()
   }
 }

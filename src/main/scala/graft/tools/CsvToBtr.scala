@@ -51,14 +51,8 @@ object CsvToBtr {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: CsvToBtr <csv path> <btr out dir> [schema json] [skip cols csv]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("csv-to-btr")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val skips = args.lift(3).toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    run(spark, args(0), args(1), args.lift(2).filter(_.nonEmpty), skips)
-    spark.stop()
+    Kit.withSession("csv-to-btr")(run(_, args(0), args(1), args.lift(2).filter(_.nonEmpty), skips))
   }
 }
 
@@ -71,12 +65,6 @@ object BtrToCsv {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: BtrToCsv <btr dir> <csv out dir>")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("btr-to-csv")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    run(spark, args(0), args(1))
-    spark.stop()
+    Kit.withSession("btr-to-csv")(run(_, args(0), args(1)))
   }
 }

@@ -29,15 +29,7 @@ object KernelBench {
   private def bench(decodedBytes: Long, reps: Int)(decodeOnce: () => Unit): (Double, Double) = {
     var w = 0
     while (w < 3) { decodeOnce(); w += 1 } // JIT warm
-    var best = Double.MaxValue
-    var r = 0
-    while (r < reps) {
-      val t0 = System.nanoTime()
-      decodeOnce()
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (sec < best) best = sec
-      r += 1
-    }
+    val best = Kit.minSecs(reps)(decodeOnce())
     (best, decodedBytes / 1e9 / best)
   }
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for the headline queries so
   * plan regressions (lost pushdown, surprise shuffles, missing broadcast)
   * are visible at a glance. Usage: runMain graft.tools.PlanAudit [sfDir] [q...]
@@ -14,19 +12,11 @@ object PlanAudit {
       else Seq("q_rt_filter", "q_agg_meta", "q_agg_join", "q_dedup_exact", "q_runs",
         "q_text_keywords", "q_dedup_ngram", "q_tpch_q1", "q_tpch_q3", "q_tpch_q6",
         "q_tpch_q14", "q_tpch_q18")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("plan-audit")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { name =>
-      println(s"\n================ $name ================")
-      graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+    Kit.withSession("plan-audit") { spark =>
+      names.foreach { name =>
+        println(s"\n================ $name ================")
+        graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      }
     }
-    spark.stop()
   }
 }

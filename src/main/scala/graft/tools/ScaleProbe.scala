@@ -17,32 +17,22 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.catalog.graft", classOf[graft.sources.BtrCatalog].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val line = Kit.withSession("scale-probe")(probe(_, sfDir, names))
+    println(line)
+    args.lift(2).foreach(Kit.save(_, Seq(line)))
+  }
 
-    def secs(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+  private def probe(spark: SparkSession, sfDir: String, names: Seq[String]): String = {
     // warm only the probed queries' source caches (first run builds the
     // btr round-trip cache; the timed run measures the operator)
     names.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
+      try Kit.drain(graft.SparkEntry.queries(n)(spark, sfDir))
       catch { case e: Throwable => System.err.println(s"[probe] warm $n: ${e.getMessage}") }
     }
     // a failing or misnamed query records a -1 sentinel instead of
     // aborting the probe — the other queries' measurements still emit
     val times = names.map { n =>
-      n -> (try secs {
-        graft.SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
-      } catch {
+      n -> (try Kit.secs(Kit.drain(graft.SparkEntry.queries(n)(spark, sfDir))) catch {
         case e: Throwable =>
           System.err.println(s"[probe] timed $n FAILED: ${e.getMessage}")
           -1.0
@@ -58,12 +48,6 @@ object ScaleProbe {
       s""""oversized_buckets":$obS,"oversized_clusters":$sdS"""
     }
     val qs = times.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    val line = s"""{"sf":"$sfDir","queries":$qs,$tele}"""
-    println(line)
-    if (args.length > 2) {
-      val w = new java.io.PrintWriter(new java.io.File(args(2)))
-      try w.println(line) finally w.close()
-    }
-    spark.stop()
+    s"""{"sf":"$sfDir","queries":$qs,$tele}"""
   }
 }

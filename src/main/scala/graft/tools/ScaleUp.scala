@@ -42,16 +42,11 @@ object ScaleUp {
       if (args.length > 4 && args(4) != "all")
         Some(args(4).split(',').map(_.trim).filter(_.nonEmpty).toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    Kit.withSession("scale-up")(scaleUp(_, src, out, copies, mode, only))
+  }
 
+  private def scaleUp(spark: SparkSession, src: String, out: String, copies: Int,
+      mode: String, only: Option[Set[String]]): Unit = {
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 
     /** Union `copies` replicas, shifting the listed key columns by i*K;
@@ -103,6 +98,5 @@ object ScaleUp {
         throw new java.io.IOException(s"rename $from -> $to failed")
       println(s"[scaleup] $name x$copies done")
     }
-    spark.stop()
   }
 }

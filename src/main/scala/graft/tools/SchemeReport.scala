@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 /** Scheme-selection telemetry for the opt-in legacy DOUBLE_BP pool: writes
@@ -27,15 +27,12 @@ object SchemeReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val tables = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val lines = Kit.withSession("scheme-report")(report(_, sfDir, tables))
+    args.lift(2).foreach(Kit.save(_, lines))
+  }
 
+  private def report(spark: SparkSession, sfDir: String, tables: Seq[String]): Seq[String] = {
+    import BiCorpus.histJson
     // a non-empty btr.schemes REPLACES the pool, so "doublebp on" means
     // the full default pool plus doublebp
     val allSchemes = (graft.format.BtrConfig.intByName.keySet ++
@@ -45,36 +42,25 @@ object SchemeReport {
       "default" -> Map("btr.selection" -> "tryall"),
       "doublebp" -> Map("btr.selection" -> "tryall", "btr.schemes" -> allSchemes))
 
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    val lines = new Kit.Lines
     for (table <- tables) {
       val src = spark.read.parquet(s"$sfDir/$table.parquet")
       val cols = src.schema.fields.filter(f => hasDoubleLeaf(f.dataType)).map(_.name).toSeq
       if (cols.isEmpty) {
         System.err.println(s"[scheme-report] $table: no double/float columns, skipped")
       } else {
-        // (column, config) -> (bytes, rootSchemeHistogram)
+        // config -> column -> (rootSchemeHistogram, bytes)
         val byCfg = configs.map { case (label, opts) =>
-          val out = s"/tmp/btr-scheme-report/$table-$label"
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+          val out = Kit.freshDir(s"/tmp/btr-scheme-report/$table-$label")
           val w = src.select(cols.map(org.apache.spark.sql.functions.col): _*)
             .write.format("btr").mode("overwrite")
           opts.foldLeft(w) { case (wr, (k, v)) => wr.option(k, v) }.save(out)
-          val desc = graft.functions.BtrInspect.describe(spark, out)
-            .select("column", "scheme_tree", "compressed_bytes").collect()
-          val perCol = desc.groupBy(_.getString(0)).map { case (c, rows) =>
-            val bytes = rows.map(_.getLong(2)).sum
-            val hist = rows.groupBy(_.getString(1).takeWhile(_ != '('))
-              .map { case (s, rs) => s -> rs.length }
-            c -> (bytes, hist)
-          }
-          label -> perCol
+          label -> BiCorpus.schemeWins(spark, out)
         }.toMap
         val allCols = byCfg.values.flatMap(_.keys).toSeq.distinct.sorted
         for (c <- allCols) {
-          val (db, dh) = byCfg("default").getOrElse(c, (0L, Map.empty[String, Int]))
-          val (bb, bh) = byCfg("doublebp").getOrElse(c, (0L, Map.empty[String, Int]))
-          def histJson(h: Map[String, Int]) =
-            h.toSeq.sortBy(-_._2).map { case (s, n) => s""""$s":$n""" }.mkString("{", ",", "}")
+          val (dh, db) = byCfg("default").getOrElse(c, (Map.empty[String, Int], 0L))
+          val (bh, bb) = byCfg("doublebp").getOrElse(c, (Map.empty[String, Int], 0L))
           val bpWins = bh.getOrElse("doublebp", 0)
           lines += s"""{"table":"$table","column":"$c","default_bytes":$db,""" +
             s""""doublebp_bytes":$bb,"doublebp_chunks_won":$bpWins,""" +
@@ -82,11 +68,6 @@ object SchemeReport {
         }
       }
     }
-    lines.foreach(println)
-    if (args.length > 2) {
-      val w = new java.io.PrintWriter(new java.io.File(args(2)))
-      try lines.foreach(w.println) finally w.close()
-    }
-    spark.stop()
+    lines.toSeq
   }
 }

@@ -220,4 +220,35 @@ class IvfCellSplitSpec extends AnyFunSuite {
     assert(served == exact, "full-probe serve over a split index must equal brute force")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
+
+  test("the fit sample spans the layout and stays at the cap when partitions outnumber it") {
+    // 8 one-hot clusters in id order, 3,000 rows each, over 400 partitions
+    // of 60 rows: more partitions than the 100-row sample cap, each big
+    // enough that the 5% Bernoulli pick almost always keeps a row
+    val clusters = 8
+    val cl = (col("id") / 3000L).cast("int")
+    val generated = spark.range(0, 24000, 1, 400).select(col("id").as("cid"),
+      transform(sequence(lit(0), lit(clusters - 1)), i =>
+        (when(i === cl, 10.0).otherwise(0.0) +
+          (pmod(hash(col("id"), i), lit(101)) - lit(50)).cast("double") / 500.0).cast("float"))
+        .as("cvec"))
+    // counts the corpus partitions each job reads: every partition read
+    // hands the driver one sampled row
+    val partsRead = spark.sparkContext.longAccumulator("fit-sample-partitions")
+    val corpus = generated.mapPartitions { it => partsRead.add(1); it }(
+      org.apache.spark.sql.Encoders.row(generated.schema))
+    assert(corpus.rdd.getNumPartitions == 400)
+    def clusterOf(v: Seq[Double]): Int = v.indices.maxBy(v)
+    val sample = SimilarityOps.fitSampleOf(corpus, nlist = clusters, fitSampleRows = 100)
+    assert(partsRead.value <= 100, s"the sample job must read at most 100 partitions, read ${partsRead.value}")
+    assert(sample.length <= 100, s"sample must stay at the cap, got ${sample.length}")
+    assert(sample.map(v => clusterOf(v.toSeq)).toSet == (0 until clusters).toSet,
+      "the sample must reach past the leading partitions")
+    val dir = tmp("fit-many-partitions")
+    SimilarityOps.ivfIndexBuild(corpus, dir, nlist = clusters, fitSampleRows = 100)
+    val fitted = SimilarityOps.centroidsOf(spark, dir).map(c => clusterOf(c._2)).toSet
+    assert(fitted.size >= clusters / 2 && fitted.exists(_ >= clusters / 2),
+      s"centroids must cover clusters beyond the leading partitions, got $fitted")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
 }

@@ -37,18 +37,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 object BtrRetention {
   val RemovedDir = "_btr_removed"
 
-  private def esc(rel: String): String = {
-    val sb = new StringBuilder
-    rel.foreach {
-      case '/' => sb.append("%2F")
-      case '%' => sb.append("%25")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
-  private def unesc(name: String): String =
-    name.replace("%2F", "/").replace("%25", "%")
+  // the same flat-name escaping deletion-vector blobs use
+  import DeletionVector.{esc, unesc}
 
   /** Remove a VISIBLE data file: move into the store when the table
     * retains removed files, plain delete otherwise. `rel` must be the

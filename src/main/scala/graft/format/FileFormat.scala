@@ -2,7 +2,7 @@ package graft.format
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import java.nio.charset.StandardCharsets
 
 /** On-disk layout of one `.btr` file (our analog of the reference's
@@ -463,12 +463,65 @@ object BtrFooterIndex {
 }
 
 /** Table-level metadata: `_btr_meta.json` at the table root holds the
-  * schema (Spark StructType JSON) + format config — the analog of the
-  * reference's FileMetadata (/root/reference/btrblocks/compression/Datablock.hpp:23-35).
-  * Data files are discovered by listing `*.btr` (append-friendly).
+  * schema (Spark StructType JSON) + format config and table policy — the
+  * analog of the reference's FileMetadata
+  * (/root/reference/btrblocks/compression/Datablock.hpp:23-35). Encoded
+  * and parsed by [[BtrJson]]. Data files are discovered by listing
+  * `*.btr` (append-friendly).
   */
 object BtrTableMeta {
   val MetaFile = "_btr_meta.json"
+
+  /** One parsed `_btr_meta.json`. The policy fields are table meta, not
+    * session config: every writer and every engine must honor the same
+    * values.
+    *
+    * @param blockSize / cascade recorded writer geometry — rewrites reuse
+    *   it so an OPTIMIZE never silently changes the table's row-group size
+    * @param partitionCols partition columns recorded at write time
+    *   (hive-style layout)
+    * @param retainRemoved opt-in retention of removed files (see
+    *   BtrRetention): removal commits MOVE visible data files into
+    *   `_btr_removed/` instead of deleting, extending time travel and the
+    *   change feed across removals
+    * @param logRetention snapshot-log entries prune keeps
+    *   (`btr.logRetention`); None = the engine default
+    *   ([[graft.sources.BtrLog.KeepEntries]]). It bounds how far a CDC
+    *   consumer may lag, so one writer's prune must not break another
+    *   consumer's resolvable range
+    * @param deletionVectors merge-on-read deletion vectors
+    *   (`btr.deletionVectors`): row-level DELETE writes position sidecars
+    *   under `_btr_dv/` instead of rewriting files, and scans mask the
+    *   recorded ordinals out — every reader must apply the masks or
+    *   deleted rows resurrect
+    * @param dvPurgeThreshold `OPTIMIZE ... APPLY PURGE` trigger
+    *   (`btr.dvPurgeThreshold`): a file rewrites when its committed masks
+    *   cover at least this fraction of its rows; None = the engine
+    *   default ([[graft.sources.BtrCompact.DefaultDvPurgeThreshold]])
+    * @param clusterBy declared clustering columns (`btr.clusterBy`):
+    *   writers sort incoming rows by these so fresh files arrive
+    *   pre-clustered for chunk skipping; `OPTIMIZE ... CLUSTER BY` remains
+    *   the explicit whole-table re-cluster. Nil = no declaration
+    */
+  final case class Meta(
+      schema: StructType,
+      blockSize: Int = BtrFile.DefaultBlockSize,
+      cascade: Int = BtrFile.DefaultCascadeDepth,
+      partitionCols: Seq[String] = Nil,
+      retainRemoved: Boolean = false,
+      logRetention: Option[Int] = None,
+      deletionVectors: Boolean = false,
+      dvPurgeThreshold: Option[Double] = None,
+      clusterBy: Seq[String] = Nil)
+
+  /** The table's meta; `FileNotFoundException` when the table has none. */
+  def read(fs: FileSystem, dir: Path): Meta =
+    BtrJson.parseMeta(BtrJson.readFile(fs, new Path(dir, MetaFile)))
+
+  /** None when the table has no meta yet (policy reads default). */
+  def readIfExists(fs: FileSystem, dir: Path): Option[Meta] =
+    try Some(read(fs, dir))
+    catch { case _: java.io.FileNotFoundException => None }
 
   def write(
       fs: FileSystem,
@@ -477,187 +530,46 @@ object BtrTableMeta {
       blockSize: Int,
       cascade: Int,
       partitionCols: Seq[String] = Nil,
-      // None = PRESERVE the existing table's flag (commit paths rewrite
-      // the meta without knowing about retention); Some(x) sets it
+      // policy fields: None = PRESERVE the existing table's value (commit
+      // paths rewrite the meta without knowing about policy); Some(x)
+      // sets it; clusterBy Some(Nil) clears the declaration
       retainRemoved: Option[Boolean] = None,
-      // snapshot-log entries to keep (None = preserve / engine default):
-      // per-table because retention bounds how far a CDC consumer may lag
       logRetention: Option[Int] = None,
-      // merge-on-read deletion vectors (see graft.format.DeletionVector):
-      // None = preserve the table's recorded policy
       deletionVectors: Option[Boolean] = None,
-      // masked-row fraction above which OPTIMIZE ... APPLY PURGE
-      // rewrites a file (None = preserve / engine default)
       dvPurgeThreshold: Option[Double] = None,
-      // declared clustering columns (`btr.clusterBy` TBLPROPERTIES):
-      // None = preserve; Some(Nil) = clear the declaration
       clusterBy: Option[Seq[String]] = None
   ): Unit = {
-    // minimal JSON by hand: schema json is already valid JSON; column
-    // names go through the shared escaper (quotes/commas/control chars)
-    val parts = partitionCols.map(jsonStr).mkString("[", ",", "]")
-    val exists = fs.exists(new Path(dir, MetaFile))
-    val retain = retainRemoved.getOrElse(exists && readRetainRemoved(fs, dir))
-    val retainJson = if (retain) ""","retainRemoved":true""" else ""
-    val keepLog = logRetention.orElse(if (exists) readLogRetention(fs, dir) else None)
-    val keepJson = keepLog.map(n => s""","logRetention":$n""").getOrElse("")
-    val dv = deletionVectors.getOrElse(exists && readDeletionVectors(fs, dir))
-    val dvJson = if (dv) ""","deletionVectors":true""" else ""
-    val purge = dvPurgeThreshold.orElse(if (exists) readDvPurgeThreshold(fs, dir) else None)
-    val purgeJson = purge.map(t => s""","dvPurgeThreshold":$t""").getOrElse("")
-    val cluster = clusterBy.getOrElse(if (exists) readClusterBy(fs, dir) else Nil)
-    val clusterJson =
-      if (cluster.isEmpty) ""
-      else s""","clusterBy":${cluster.map(jsonStr).mkString("[", ",", "]")}"""
-    val json =
-      s"""{"version":${BtrFile.Version},"blockSize":$blockSize,"cascade":$cascade$retainJson$keepJson$dvJson$purgeJson$clusterJson,"partitionCols":$parts,"schema":${schema.json}}"""
-    val out = fs.create(new Path(dir, MetaFile), true)
-    out.write(json.getBytes(StandardCharsets.UTF_8))
-    out.close()
+    val prior = readIfExists(fs, dir)
+    val meta = Meta(schema, blockSize, cascade, partitionCols,
+      retainRemoved.getOrElse(prior.exists(_.retainRemoved)),
+      logRetention.orElse(prior.flatMap(_.logRetention)),
+      deletionVectors.getOrElse(prior.exists(_.deletionVectors)),
+      dvPurgeThreshold.orElse(prior.flatMap(_.dvPurgeThreshold)),
+      clusterBy.getOrElse(prior.map(_.clusterBy).getOrElse(Nil)))
+    BtrJson.publish(fs, new Path(dir, MetaFile), BtrJson.meta(meta))
   }
 
-  /** Opt-in retention of removed files (see BtrRetention): removal
-    * commits MOVE visible data files into `_btr_removed/` instead of
-    * deleting, extending time travel and the change feed across
-    * removals. Recorded in the table meta so every writer and every
-    * engine sees the same policy.
-    */
-  def readRetainRemoved(fs: FileSystem, dir: Path): Boolean =
-    fs.exists(new Path(dir, MetaFile)) &&
-      readMetaJson(fs, dir).contains("\"retainRemoved\":true")
+  // single-field reads; a caller that needs several fields calls read once
+  def readSchema(fs: FileSystem, dir: Path): StructType = read(fs, dir).schema
 
-  /** Merge-on-read deletion vectors enabled (`btr.deletionVectors`
-    * write option / TBLPROPERTIES): row-level DELETE writes position
-    * sidecars under `_btr_dv/` instead of rewriting files, and scans
-    * mask the recorded ordinals out. Table meta, not session config —
-    * every reader must apply the masks or deleted rows resurrect.
-    */
-  def readDeletionVectors(fs: FileSystem, dir: Path): Boolean =
-    fs.exists(new Path(dir, MetaFile)) &&
-      readMetaJson(fs, dir).contains("\"deletionVectors\":true")
-
-  /** Per-table snapshot-log retention (`btr.logRetention` write option):
-    * how many newest log entries prune keeps. None = the engine default
-    * ([[graft.sources.BtrLog.KeepEntries]]). Table meta, not session
-    * config, because it bounds how far a CDC consumer may lag — every
-    * writer must honor the same bound or one commit's prune would break
-    * another consumer's resolvable range.
-    */
-  def readLogRetention(fs: FileSystem, dir: Path): Option[Int] = {
-    if (!fs.exists(new Path(dir, MetaFile))) return None
-    val json = readMetaJson(fs, dir)
-    val k = "\"logRetention\":"
-    val i = json.indexOf(k)
-    if (i < 0) None
-    else {
-      val digits = json.substring(i + k.length).dropWhile(_ == ' ').takeWhile(_.isDigit)
-      if (digits.isEmpty) None else Some(digits.toInt)
-    }
-  }
-
-  /** Per-table `OPTIMIZE ... APPLY PURGE` trigger
-    * (`btr.dvPurgeThreshold` TBLPROPERTIES): a file rewrites when its
-    * committed masks cover at least this fraction of its rows. None =
-    * the engine default ([[graft.sources.BtrCompact.DefaultDvPurgeThreshold]]).
-    */
-  def readDvPurgeThreshold(fs: FileSystem, dir: Path): Option[Double] = {
-    if (!fs.exists(new Path(dir, MetaFile))) return None
-    val json = readMetaJson(fs, dir)
-    val k = "\"dvPurgeThreshold\":"
-    val i = json.indexOf(k)
-    if (i < 0) None
-    else {
-      val num = json.substring(i + k.length).dropWhile(_ == ' ')
-        .takeWhile(c => c.isDigit || c == '.' || c == 'E' || c == '-')
-      if (num.isEmpty) None else Some(num.toDouble)
-    }
-  }
-
-  private def readMetaJson(fs: FileSystem, dir: Path): String = {
-    val p = new Path(dir, MetaFile)
-    val in = fs.open(p)
-    val len = fs.getFileStatus(p).getLen.toInt
-    val bytes = new Array[Byte](len)
-    in.readFully(0, bytes)
-    in.close()
-    new String(bytes, StandardCharsets.UTF_8)
-  }
-
-  /** Recorded writer geometry (blockSize, cascade) — rewrites reuse it so
-    * an OPTIMIZE never silently changes the table's row-group size.
-    */
   def readGeometry(fs: FileSystem, dir: Path): (Int, Int) = {
-    val json = readMetaJson(fs, dir)
-    def intField(key: String, dflt: Int): Int = {
-      val k = s""""$key":"""
-      val i = json.indexOf(k)
-      if (i < 0) dflt
-      else {
-        val rest = json.substring(i + k.length).dropWhile(_ == ' ')
-        val digits = rest.takeWhile(_.isDigit)
-        if (digits.isEmpty) dflt else digits.toInt
-      }
-    }
-    (intField("blockSize", BtrFile.DefaultBlockSize),
-      intField("cascade", BtrFile.DefaultCascadeDepth))
+    val m = read(fs, dir)
+    (m.blockSize, m.cascade)
   }
 
-  def readSchema(fs: FileSystem, dir: Path): StructType = {
-    val json = readMetaJson(fs, dir)
-    // extract the schema object: find "schema": and parse the rest (it is
-    // the last field, so take everything up to the final '}')
-    val idx = json.indexOf("\"schema\":")
-    val schemaJson = json.substring(idx + "\"schema\":".length, json.length - 1)
-    DataType.fromJson(schemaJson).asInstanceOf[StructType]
-  }
+  def readPartitionCols(fs: FileSystem, dir: Path): Seq[String] = read(fs, dir).partitionCols
 
-  /** Partition column names recorded at write time (hive-style layout). */
-  def readPartitionCols(fs: FileSystem, dir: Path): Seq[String] =
-    readStringArray(readMetaJson(fs, dir), "partitionCols")
+  def readRetainRemoved(fs: FileSystem, dir: Path): Boolean =
+    readIfExists(fs, dir).exists(_.retainRemoved)
 
-  /** Declared clustering columns (`btr.clusterBy` TBLPROPERTIES). Writers
-    * sort incoming rows by these so fresh files arrive pre-clustered for
-    * chunk skipping; `OPTIMIZE ... CLUSTER BY` remains the explicit
-    * whole-table re-cluster. Nil = no declaration.
-    */
+  def readDeletionVectors(fs: FileSystem, dir: Path): Boolean =
+    readIfExists(fs, dir).exists(_.deletionVectors)
+
+  def readLogRetention(fs: FileSystem, dir: Path): Option[Int] =
+    readIfExists(fs, dir).flatMap(_.logRetention)
+
   def readClusterBy(fs: FileSystem, dir: Path): Seq[String] =
-    if (!fs.exists(new Path(dir, MetaFile))) Nil
-    else readStringArray(readMetaJson(fs, dir), "clusterBy")
-
-  private def readStringArray(json: String, name: String): Seq[String] = {
-    val key = "\"" + name + "\":"
-    val idx = json.indexOf(key)
-    if (idx < 0) Nil
-    else {
-      // parse the JSON string array respecting quotes/escapes — a split
-      // on ',' would shear a column name containing a comma in two
-      val start = json.indexOf('[', idx)
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var i = start + 1
-      val sb = new StringBuilder
-      var inStr = false
-      var done = false
-      while (!done && i < json.length) {
-        val c = json.charAt(i)
-        if (!inStr) {
-          if (c == '"') { inStr = true; sb.clear() }
-          else if (c == ']') done = true
-        } else c match {
-          case '"' => inStr = false; out += sb.toString
-          case '\\' =>
-            i += 1
-            json.charAt(i) match {
-              case 'u' =>
-                sb.append(Integer.parseInt(json.substring(i + 1, i + 5), 16).toChar); i += 4
-              case e => sb.append(e)
-            }
-          case e => sb.append(e)
-        }
-        i += 1
-      }
-      out.toSeq
-    }
-  }
+    readIfExists(fs, dir).map(_.clusterBy).getOrElse(Nil)
 
   /** Hive null-partition directory marker (shared by writer and pruner). */
   val NullPartition: String =
@@ -771,14 +683,6 @@ object BtrTableMeta {
   // same reason).
   private val DonePrefix = "_btr_swapdone_"
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Atomically publish a swap journal (write temp, rename visible). */
   def writeSwapJournal(fs: FileSystem, root: Path, id: String, groups: Seq[SwapGroup]): Path =
     writeJournalFile(fs, root, s"$SwapPrefix$id.json", groups)
@@ -875,14 +779,8 @@ object BtrTableMeta {
 
   private def writeJournalFile(
       fs: FileSystem, root: Path, name: String, groups: Seq[SwapGroup]): Path = {
-    val body = groups.map { g =>
-      s"""{"dir":${jsonStr(g.dir)},"finals":${g.finals.map(jsonStr).mkString("[", ",", "]")},""" +
-        s""""sources":${g.sources.map(jsonStr).mkString("[", ",", "]")}}"""
-    }.mkString("""{"groups":[""", ",", "]}")
     val fin = new Path(root, name)
-    // atomic-visibility publish through the store's commit primitive
-    // (temp+rename on HDFS-semantics stores, one PUT on object stores)
-    BtrCommitProtocol.forFs(fs).put(fs, fin, body.getBytes(StandardCharsets.UTF_8))
+    BtrJson.publish(fs, fin, BtrJson.swapGroups(groups))
     fin
   }
 
@@ -918,41 +816,9 @@ object BtrTableMeta {
       .filter(st => st.isFile && st.getPath.getName.startsWith(prefix))
       .sortBy(_.getPath.getName)
       .flatMap { st =>
-        try {
-          val len = st.getLen.toInt
-          val bytes = new Array[Byte](len)
-          val in = fs.open(st.getPath)
-          in.readFully(0, bytes)
-          in.close()
-          Some(st.getPath -> parseSwapGroups(new String(bytes, StandardCharsets.UTF_8)))
-        } catch { case _: Exception => None } // torn journal: publish is atomic, so skip
+        try Some(st.getPath -> BtrJson.parseSwapGroups(BtrJson.readFile(fs, st.getPath)))
+        catch { case _: Exception => None } // torn journal: publish is atomic, so skip
       }
-  }
-
-  private def parseSwapGroups(json: String): Seq[SwapGroup] = {
-    val groupRe =
-      """\{"dir":("(?:[^"\\]|\\.)*"),"finals":(\[[^\]]*\]),"sources":(\[[^\]]*\])\}""".r
-    def unq(s: String): String = {
-      val b = new StringBuilder
-      var i = 1 // skip quotes
-      while (i < s.length - 1) {
-        s.charAt(i) match {
-          case '\\' =>
-            s.charAt(i + 1) match {
-              case 'u' => b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 5
-              case c => b.append(c); i += 1
-            }
-          case c => b.append(c)
-        }
-        i += 1
-      }
-      b.toString
-    }
-    def arr(s: String): Seq[String] =
-      """"(?:[^"\\]|\\.)*"""".r.findAllIn(s).map(unq).toSeq
-    groupRe.findAllMatchIn(json).map { m =>
-      SwapGroup(unq(m.group(1)), arr(m.group(2)), arr(m.group(3)))
-    }.toSeq
   }
 
   /** Finish (or roll back) every pending swap and retire its journal:
@@ -1117,8 +983,14 @@ object BtrTableMeta {
 
   val StatsFile = "_btr_stats.json"
 
-  /** Commit-time ingest stats (one JSON object per line, spark.read.json
-    * friendly): per column — nulls, raw vs compressed bytes, ratio.
+  /** One column's commit-time ingest stats: rows, nulls, raw vs
+    * compressed bytes and their ratio, aggregated over one write's files.
+    */
+  final case class ColumnStats(column: String, rows: Long, nulls: Long,
+      raw_bytes: Long, compressed_bytes: Long, ratio: Double)
+
+  /** Publish the commit-time ingest stats: one JSON object per line, one
+    * line per column ([[BtrJson.stats]]).
     */
   def writeStats(
       fs: FileSystem,
@@ -1129,49 +1001,31 @@ object BtrTableMeta {
       rawBytes: Array[Long],
       compBytes: Array[Long]
   ): Unit = {
-    val sb = new StringBuilder
-    var c = 0
-    while (c < colNames.length) {
-      val ratio =
-        if (compBytes(c) > 0) rawBytes(c).toDouble / compBytes(c) else 0.0
-      sb.append(
-        s"""{"column":"${colNames(c)}","rows":$rows,"nulls":${nulls(c)},""" +
-          f""""raw_bytes":${rawBytes(c)},"compressed_bytes":${compBytes(c)},"ratio":$ratio%.4f}%n""")
-      c += 1
+    val cols = colNames.indices.map { c =>
+      val ratio = if (compBytes(c) > 0) rawBytes(c).toDouble / compBytes(c) else 0.0
+      ColumnStats(colNames(c), rows, nulls(c), rawBytes(c), compBytes(c), ratio)
     }
-    val out = fs.create(new Path(dir, StatsFile), true)
-    out.write(sb.toString.getBytes(StandardCharsets.UTF_8))
-    out.close()
+    BtrJson.publish(fs, new Path(dir, StatsFile), BtrJson.stats(cols))
   }
+
+  /** The last write's ingest stats; empty when the table has none
+    * (DELETE and row-level rewrites drop the sidecar).
+    */
+  def readStats(fs: FileSystem, dir: Path): Seq[ColumnStats] =
+    try BtrJson.parseStats(BtrJson.readFile(fs, new Path(dir, StatsFile)))
+    catch { case _: java.io.FileNotFoundException => Nil }
 
   /** Per-column decoded/compressed expansion ratios from `_btr_stats.json`
     * (commit-time ingest stats), for scan size estimation. Floored at 1.0:
     * a LARGER estimate is the safe direction for broadcast planning.
-    * Empty when the stats file is missing (e.g. tables from very old
-    * writes); callers fall back to a configurable factor.
+    * Advisory: empty when the stats file is missing or unreadable (e.g.
+    * tables from very old writes); callers fall back to a configurable
+    * factor.
     */
-  def readStatsRatios(fs: FileSystem, dir: Path): Map[String, Double] = {
-    val p = new Path(dir, StatsFile)
-    if (!fs.exists(p)) return Map.empty
-    try {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val bytes = new Array[Byte](len)
-      val in = fs.open(p)
-      in.readFully(0, bytes)
-      in.close()
-      val colRe = """"column":"((?:[^"\\]|\\.)*)"""".r
-      val rawRe = """"raw_bytes":(\d+)""".r
-      val compRe = """"compressed_bytes":(\d+)""".r
-      new String(bytes, StandardCharsets.UTF_8).split('\n').flatMap { line =>
-        for {
-          c <- colRe.findFirstMatchIn(line).map(_.group(1))
-          r <- rawRe.findFirstMatchIn(line).map(_.group(1).toLong)
-          z <- compRe.findFirstMatchIn(line).map(_.group(1).toLong)
-          if z > 0
-        } yield c -> math.max(r.toDouble / z, 1.0)
-      }.toMap
-    } catch { case _: Exception => Map.empty }
-  }
+  def readStatsRatios(fs: FileSystem, dir: Path): Map[String, Double] =
+    try readStats(fs, dir).filter(_.compressed_bytes > 0).map(s =>
+      s.column -> math.max(s.raw_bytes.toDouble / s.compressed_bytes, 1.0)).toMap
+    catch { case _: Exception => Map.empty }
 
   def listDataFiles(fs: FileSystem, dir: Path): Array[Path] = {
     if (!fs.exists(dir)) return Array.empty

@@ -7,13 +7,8 @@ package graft.format
   * Scala from the paper: ≤255 symbols of ≤8 bytes, greedy longest-match
   * encode, escape byte 255 for uncovered bytes, iterative symbol-table
   * training on a sample.
-  *
-  * `enabled` can gate FSST off, routing string columns to the raw-dict
-  * path (the reference's own fallback, string/DynamicDictionary.cpp:153-165).
   */
 object FsstCodec {
-  @volatile var enabled: Boolean = true
-
   /** Capability flag for the Java decode kernels ([[FsstVectorKernel]]:
     * SWAR escape-scan sizing + VarHandle word-store expansion, both
     * plain java.base). `-Dgraft.fsst.vector=false` opts out for A/B; a

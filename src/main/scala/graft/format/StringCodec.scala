@@ -115,7 +115,7 @@ object StringCodec {
     case OneValue => s.runCount <= 1
     case Uncompressed => true
     case Dict => depth >= 1 && s.count >= 1
-    case Fsst => depth >= 1 && s.count >= 1 && FsstCodec.enabled
+    case Fsst => depth >= 1 && s.count >= 1
     case _ => false
   }
 
@@ -150,7 +150,7 @@ object StringCodec {
     if (depth >= 1 && cfg.stringEnabled(Dict) && s.sDistinct * 2 <= s.sampleN) return Dict
     // whole-column FSST when high uniqueness and enough bytes
     if (depth >= 1 && cfg.stringEnabled(Fsst) && s.totalLen > FsstMinBytes &&
-      s.sDistinct * 2 > s.sampleN && graft.format.FsstCodec.enabled) return Fsst
+      s.sDistinct * 2 > s.sampleN) return Fsst
     Uncompressed
   }
 
@@ -182,8 +182,7 @@ object StringCodec {
         var dictBytes = 0L
         var j = 0
         while (j < dict.length) { dictBytes += dict(j).length; j += 1 }
-        val useFsst = FsstCodec.enabled && dictBytes >= FsstMinBytes &&
-          cfg.stringEnabled(Fsst)
+        val useFsst = dictBytes >= FsstMinBytes && cfg.stringEnabled(Fsst)
         out.putByte(if (useFsst) 1 else 0)
         if (useFsst) FsstCodec.encodeStrings(out, dict, dict.length, depth - 1, cfg, seed)
         else {

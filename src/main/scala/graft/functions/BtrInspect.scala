@@ -40,34 +40,8 @@ object BtrInspect {
     */
   def tableStats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    // the stats file is '_'-prefixed (ignored by data scans), so read its
-    // bytes directly instead of through a file-listing source
-    val p = new Path(path, BtrTableMeta.StatsFile)
-    val fs = p.getFileSystem(BtrTableMeta.hadoopConf())
-    def emptyStats = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("column", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("rows", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("nulls", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("raw_bytes", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("compressed_bytes", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ratio", org.apache.spark.sql.types.DoubleType))))
-    // open-and-catch, not exists-then-open: a concurrent DELETE may drop
-    // the sidecar between the two calls
-    val bytes =
-      try {
-        val len = fs.getFileStatus(p).getLen.toInt
-        val b = new Array[Byte](len)
-        val in = fs.open(p)
-        try in.readFully(0, b)
-        finally in.close()
-        b
-      } catch { case _: java.io.FileNotFoundException => return emptyStats }
-    val lines = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").toSeq.filter(_.nonEmpty)
-    spark.read.json(spark.createDataset(lines))
-      .select("column", "rows", "nulls", "raw_bytes", "compressed_bytes", "ratio")
+    val dir = new Path(path)
+    BtrTableMeta.readStats(dir.getFileSystem(BtrTableMeta.hadoopConf()), dir).toDF()
   }
 
   /** Deletion-vector inventory: one row per COMMITTED blob (log-resolved,
@@ -152,8 +126,8 @@ object BtrInspect {
     import spark.implicits._
     val dir = new Path(path)
     val fs = dir.getFileSystem(BtrTableMeta.hadoopConf())
-    val schema = BtrTableMeta.readSchema(fs, dir)
-    val partCols = BtrTableMeta.readPartitionCols(fs, dir)
+    val meta = BtrTableMeta.read(fs, dir)
+    val (schema, partCols) = (meta.schema, meta.partitionCols)
     val fields = schema.fields.filterNot(f => partCols.contains(f.name))
     val entries = BtrTableMeta.listDataFilesWithPartitions(fs, dir)
     val footers = graft.sources.BtrFooters.readAllIndexed(fs, dir, entries).map(_._2)
@@ -247,8 +221,8 @@ object BtrInspect {
     import spark.implicits._
     val dir = new Path(path)
     val fs = dir.getFileSystem(BtrTableMeta.hadoopConf())
-    val schema = BtrTableMeta.readSchema(fs, dir)
-    val partCols = BtrTableMeta.readPartitionCols(fs, dir)
+    val meta = BtrTableMeta.read(fs, dir)
+    val (schema, partCols) = (meta.schema, meta.partitionCols)
     val entries = BtrTableMeta.listDataFilesWithPartitions(fs, dir)
     val footers = graft.sources.BtrFooters.readAllIndexed(fs, dir, entries)
     val dataFields = schema.fields.filterNot(f => partCols.contains(f.name))
@@ -319,8 +293,8 @@ object BtrInspect {
     import spark.implicits._
     val dir = new Path(path)
     val fs = dir.getFileSystem(BtrTableMeta.hadoopConf())
-    val schema = BtrTableMeta.readSchema(fs, dir)
-    val partCols = BtrTableMeta.readPartitionCols(fs, dir)
+    val meta = BtrTableMeta.read(fs, dir)
+    val (schema, partCols) = (meta.schema, meta.partitionCols)
     val files = BtrTableMeta.listDataFilesWithPartitions(fs, dir).map(_.path.toString)
     // footers hold only the data columns; partition values live in dirs
     val fields = schema.fields.filterNot(f => partCols.contains(f.name))

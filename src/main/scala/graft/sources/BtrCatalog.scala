@@ -112,11 +112,9 @@ class BtrCatalog extends TableCatalog with FunctionCatalog {
       version: Option[Long], tsMicros: Option[Long]): Table = {
     val path = pathOf(ident)
     val (fs, dir) = fsDir(path)
-    if (!fs.exists(new Path(dir, BtrTableMeta.MetaFile))) throw new NoSuchTableException(ident)
-    val schema = BtrTableMeta.readSchema(fs, dir)
-    val parts = BtrTableMeta.readPartitionCols(fs, dir)
-      .map(c => graft.format.PartitionTransform.toV2(c)).toArray
-    new BtrTable(path, schema, parts, version, tsMicros)
+    val meta = BtrTableMeta.readIfExists(fs, dir).getOrElse(throw new NoSuchTableException(ident))
+    val parts = meta.partitionCols.map(c => graft.format.PartitionTransform.toV2(c)).toArray
+    new BtrTable(path, meta.schema, parts, version, tsMicros)
   }
 
   override def createTable(
@@ -170,14 +168,13 @@ class BtrCatalog extends TableCatalog with FunctionCatalog {
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val path = pathOf(ident)
     val (fs, dir) = fsDir(path)
-    if (!fs.exists(new Path(dir, BtrTableMeta.MetaFile))) throw new NoSuchTableException(ident)
-    var schema = BtrTableMeta.readSchema(fs, dir)
-    val partCols = BtrTableMeta.readPartitionCols(fs, dir)
+    val meta = BtrTableMeta.readIfExists(fs, dir).getOrElse(throw new NoSuchTableException(ident))
+    var schema = meta.schema
+    val partCols = meta.partitionCols
     // the guarded names: identity fields AND transform sources (renaming
     // or dropping `ts` under days(ts) would orphan the spec; dir values
     // of identity fields are typed under the recorded type)
     val partSources = partCols.map(c => graft.format.PartitionTransform.parse(c).source)
-    val (blockSize, cascade) = BtrTableMeta.readGeometry(fs, dir)
     import graft.format.BtrColumnMapping
     def liveNames = schema.fields.filterNot(BtrColumnMapping.isDropped).map(_.name)
     changes.foreach {
@@ -263,7 +260,7 @@ class BtrCatalog extends TableCatalog with FunctionCatalog {
             "SET/UNSET TBLPROPERTIES (btr.retainRemoved, btr.deletionVectors, " +
             "btr.logRetention, btr.dvPurgeThreshold, btr.clusterBy)")
     }
-    BtrTableMeta.write(fs, dir, schema, blockSize, cascade, partCols)
+    BtrTableMeta.write(fs, dir, schema, meta.blockSize, meta.cascade, partCols)
     new BtrTable(path, schema,
       partCols.map(c => graft.format.PartitionTransform.toV2(c)).toArray)
   }
@@ -274,13 +271,11 @@ class BtrCatalog extends TableCatalog with FunctionCatalog {
     */
   private def setPolicy(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
       key: String, value: Option[String]): Unit = {
-    val schema = BtrTableMeta.readSchema(fs, dir)
-    val partCols = BtrTableMeta.readPartitionCols(fs, dir)
-    val (blockSize, cascade) = BtrTableMeta.readGeometry(fs, dir)
+    val meta = BtrTableMeta.read(fs, dir)
     def write(retain: Option[Boolean] = None, keep: Option[Int] = None,
         dv: Option[Boolean] = None, purge: Option[Double] = None,
         cluster: Option[Seq[String]] = None): Unit =
-      BtrTableMeta.write(fs, dir, schema, blockSize, cascade, partCols,
+      BtrTableMeta.write(fs, dir, meta.schema, meta.blockSize, meta.cascade, meta.partitionCols,
         retainRemoved = retain, logRetention = keep, deletionVectors = dv,
         dvPurgeThreshold = purge, clusterBy = cluster)
     key match {
@@ -328,12 +323,12 @@ class BtrCatalog extends TableCatalog with FunctionCatalog {
           case Some(v) =>
             val cols = v.split(',').map(_.trim).filter(_.nonEmpty).toSeq
             require(cols.nonEmpty, "btr.clusterBy must name at least one column")
-            val logical = graft.format.BtrColumnMapping.logical(schema)
+            val logical = graft.format.BtrColumnMapping.logical(meta.schema)
             cols.foreach { c =>
               require(logical.fieldNames.contains(c),
                 s"btr.clusterBy column '$c' does not exist " +
                   s"(columns: ${logical.fieldNames.mkString(", ")})")
-              require(!partCols.contains(c),
+              require(!meta.partitionCols.contains(c),
                 s"btr.clusterBy column '$c' is a partition column — partition " +
                   "values are constant within a file; clustering by them is a no-op")
             }

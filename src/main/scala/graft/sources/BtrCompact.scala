@@ -221,11 +221,11 @@ object BtrCompact {
     val root = new Path(path)
     val fs = root.getFileSystem(BtrTableMeta.hadoopConf())
     val qroot = fs.makeQualified(root)
-    require(!BtrTableMeta.readSchema(fs, root).fieldNames.contains(BtrScan.FileMetaCol),
+    val meta = BtrTableMeta.read(fs, root)
+    require(!meta.schema.fieldNames.contains(BtrScan.FileMetaCol),
       s"btr APPLY PURGE: the table has a data column named ${BtrScan.FileMetaCol}, " +
         "which shadows the file-identity metadata column the purge scopes by")
-    val threshold = BtrTableMeta.readDvPurgeThreshold(fs, root)
-      .getOrElse(DefaultDvPurgeThreshold)
+    val threshold = meta.dvPurgeThreshold.getOrElse(DefaultDvPurgeThreshold)
     val latest = BtrLog.latestVersion(fs, qroot)
     if (latest.isEmpty) return (0, 0)
     val committedDv = BtrLog.resolveSnapshot(fs, qroot, latest.get).files
@@ -265,10 +265,11 @@ object BtrCompact {
     import org.apache.spark.sql.types._
     val root = new Path(path)
     val fs = root.getFileSystem(BtrTableMeta.hadoopConf())
-    val partCols = BtrTableMeta.readPartitionCols(fs, root)
+    val meta = BtrTableMeta.read(fs, root)
+    val partCols = meta.partitionCols
     require(partCols.nonEmpty,
       "btr: a partition predicate needs a partitioned table")
-    val schema = BtrTableMeta.readSchema(fs, root)
+    val schema = meta.schema
     // transform fields surface their DERIVED directory value as a string
     // column named after the dir (`WHERE ts_days >= '2026-08-15'` — ISO
     // values compare lexicographically in time order)
@@ -324,7 +325,8 @@ object BtrCompact {
   )(layout: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame): (Int, Int) = {
     val root = new Path(path)
     val fs = root.getFileSystem(BtrTableMeta.hadoopConf())
-    val partCols = BtrTableMeta.readPartitionCols(fs, root)
+    val meta = BtrTableMeta.read(fs, root)
+    val partCols = meta.partitionCols
     require(where.isEmpty || partCols.nonEmpty,
       "btr rewrite WHERE: a partition predicate needs a partitioned table")
     graft.format.BtrFs.requireCommitCapable(fs, root)
@@ -415,7 +417,6 @@ object BtrCompact {
     // the rewrite must keep the table's recorded geometry — defaulting
     // here would silently inflate a small-block table's row groups and
     // destroy the chunk-skipping granularity the rewrite exists to restore
-    val (blockSize, cascade) = BtrTableMeta.readGeometry(fs, root)
     // the staging write must keep the table's SLOT layout (column
     // mapping): a plain overwrite into the empty staging dir would write
     // only the logical columns, and after the swap the table meta's
@@ -423,8 +424,7 @@ object BtrCompact {
     // staging dir with the table meta and APPENDING makes the writer
     // compute the same tombstone slot projection the final location
     // expects (identity for unmapped tables — meta equals the df schema).
-    BtrTableMeta.write(fs, staging, BtrTableMeta.readSchema(fs, root), blockSize, cascade,
-      partCols)
+    BtrTableMeta.write(fs, staging, meta.schema, meta.blockSize, meta.cascade, partCols)
     // partitioning comes from the staging dir's seeded meta (the write
     // builder reads it — partitionBy can't express transform specs), and
     // distribution=none keeps the layout closure's EXACT shape: the
@@ -432,7 +432,7 @@ object BtrCompact {
     // the clustering range partition the rewrite just computed
     layout(df, numFiles)
       .write.format("btr").mode("append")
-      .option("btr.blockSize", blockSize).option("btr.maxCascadeDepth", cascade)
+      .option("btr.blockSize", meta.blockSize).option("btr.maxCascadeDepth", meta.cascade)
       .option("btr.write.distribution", "none")
       .save(staging.toString)
     // swap under a journal: readers see the OLD file set until every

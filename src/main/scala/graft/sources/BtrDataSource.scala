@@ -44,10 +44,8 @@ class BtrDataSource extends TableProvider with DataSourceRegister {
   override def inferPartitioning(options: CaseInsensitiveStringMap): Array[Transform] = {
     val dir = new Path(pathOf(options))
     val fs = dir.getFileSystem(BtrTableMeta.hadoopConf())
-    if (fs.exists(new Path(dir, BtrTableMeta.MetaFile)))
-      BtrTableMeta.readPartitionCols(fs, dir)
-        .map(c => graft.format.PartitionTransform.toV2(c)).toArray
-    else Array.empty
+    BtrTableMeta.readIfExists(fs, dir).map(_.partitionCols).getOrElse(Nil)
+      .map(c => graft.format.PartitionTransform.toV2(c)).toArray
   }
 
   override def getTable(
@@ -128,11 +126,8 @@ class BtrTable(path: String, tableSchema: StructType, partitionTransforms: Array
       else {
         val dir = new Path(path)
         val fs = dir.getFileSystem(BtrTableMeta.hadoopConf())
-        if (!fs.exists(new Path(dir, BtrTableMeta.MetaFile))) tableSchema
-        else {
-          val m = BtrTableMeta.readSchema(fs, dir)
-          if (graft.format.BtrColumnMapping.hasTombstones(m)) m else tableSchema
-        }
+        BtrTableMeta.readIfExists(fs, dir).map(_.schema)
+          .filter(graft.format.BtrColumnMapping.hasTombstones).getOrElse(tableSchema)
       }
     // CDC columns appended by inferSchema must survive the meta-schema
     // fallback (a column-mapped table's meta lacks them)
@@ -162,18 +157,13 @@ class BtrTable(path: String, tableSchema: StructType, partitionTransforms: Array
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(graft.format.BtrTableMeta.hadoopConf())
     val m = new util.HashMap[String, String]()
-    try {
-      if (graft.format.BtrTableMeta.readRetainRemoved(fs, dir))
-        m.put("btr.retainRemoved", "true")
-      if (graft.format.BtrTableMeta.readDeletionVectors(fs, dir))
-        m.put("btr.deletionVectors", "true")
-      graft.format.BtrTableMeta.readLogRetention(fs, dir)
-        .foreach(n => m.put("btr.logRetention", n.toString))
-      graft.format.BtrTableMeta.readDvPurgeThreshold(fs, dir)
-        .foreach(t => m.put("btr.dvPurgeThreshold", t.toString))
-      val cluster = graft.format.BtrTableMeta.readClusterBy(fs, dir)
-      if (cluster.nonEmpty) m.put("btr.clusterBy", cluster.mkString(","))
-    } catch { case _: java.io.IOException => () } // advisory surface
+    graft.format.BtrTableMeta.readIfExists(fs, dir).foreach { meta =>
+      if (meta.retainRemoved) m.put("btr.retainRemoved", "true")
+      if (meta.deletionVectors) m.put("btr.deletionVectors", "true")
+      meta.logRetention.foreach(n => m.put("btr.logRetention", n.toString))
+      meta.dvPurgeThreshold.foreach(t => m.put("btr.dvPurgeThreshold", t.toString))
+      if (meta.clusterBy.nonEmpty) m.put("btr.clusterBy", meta.clusterBy.mkString(","))
+    }
     m
   }
 

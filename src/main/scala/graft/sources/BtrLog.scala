@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.format.BtrTableMeta
+import graft.format.{BtrJson, BtrTableMeta}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Snapshot log for time travel: every mutating commit (append,
@@ -95,37 +95,6 @@ object BtrLog {
 
   private def nameOf(v: Long): String = f"v$v%020d.json"
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'n' => sb += '\n'; i += 2
-          case 'r' => sb += '\r'; i += 2
-          case 't' => sb += '\t'; i += 2
-          case 'u' if i + 5 < s.length =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case other => sb += other; i += 2
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
-
   /** Current visible files as (table-root-relative path, len) — the SAME
     * relativization the scan's `onlyFiles` filter applies, so a recorded
     * snapshot round-trips byte-exact into a planned file set.
@@ -170,35 +139,16 @@ object BtrLog {
     (data ++ dv ++ extras).sortBy(_._1)
   }
 
-  private def txnJson(txn: Option[(String, Long)]): String =
-    txn.map { case (app, ver) =>
-      ",\"txnApp\":\"" + esc(app) + "\",\"txnVer\":" + ver
-    }.getOrElse("")
-
   private def fullJson(v: Long, ts: Long, action: String, files: Seq[(String, Long)],
-      txn: Option[(String, Long)] = None): String = {
-    val sb = new StringBuilder()
-      .append("{\"version\":").append(v).append(",\"ts\":").append(ts)
-      .append(",\"action\":\"").append(esc(action)).append("\",\"files\":[")
-    sb.append(files.map(f => "\"" + esc(f._1) + "\"").mkString(","))
-    sb.append("],\"sizes\":[").append(files.map(_._2).mkString(","))
-    sb.append("]").append(txnJson(txn)).append("}")
-    sb.toString
-  }
+      txn: Option[(String, Long)] = None): String =
+    BtrJson.logEntry(Entry(v, ts, action, files.map(_._1), sizes = files.toMap,
+      txnApp = txn.map(_._1), txnVer = txn.map(_._2)))
 
   private def deltaJson(v: Long, ts: Long, action: String,
       add: Seq[(String, Long)], remove: Seq[String],
-      txn: Option[(String, Long)] = None): String = {
-    val sb = new StringBuilder()
-      .append("{\"version\":").append(v).append(",\"ts\":").append(ts)
-      .append(",\"action\":\"").append(esc(action)).append("\",\"add\":[")
-    sb.append(add.map(f => "\"" + esc(f._1) + "\"").mkString(","))
-    sb.append("],\"addSizes\":[").append(add.map(_._2).mkString(","))
-    sb.append("],\"remove\":[")
-    sb.append(remove.map(f => "\"" + esc(f) + "\"").mkString(","))
-    sb.append("]").append(txnJson(txn)).append("}")
-    sb.toString
-  }
+      txn: Option[(String, Long)] = None): String =
+    BtrJson.logEntry(Entry(v, ts, action, Nil, isDelta = true, add = add.map(_._1),
+      remove = remove, sizes = add.toMap, txnApp = txn.map(_._1), txnVer = txn.map(_._2)))
 
   /** Claim the next version through the store's no-clobber publish
     * primitive (no-clobber rename on HDFS-semantics stores, conditional
@@ -379,8 +329,8 @@ object BtrLog {
 
   def readEntry(fs: FileSystem, root: Path, version: Long): Entry = {
     val p = new Path(new Path(root, LogDir), nameOf(version))
-    val st =
-      try fs.getFileStatus(p)
+    val json =
+      try BtrJson.readFile(fs, p)
       catch {
         case _: java.io.FileNotFoundException =>
           throw new IllegalArgumentException(
@@ -389,101 +339,10 @@ object BtrLog {
               s"(the newest ${keepEntriesFor(fs, root)} commits; older entries " +
               "are pruned — raise btr.logRetention to keep more)")
       }
-    val b = new Array[Byte](st.getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, b)
-    finally in.close()
-    parse(new String(b, java.nio.charset.StandardCharsets.UTF_8))
+    parse(json)
   }
 
-  private[sources] def parse(json: String): Entry = {
-    def longField(key: String): Long = {
-      val k = "\"" + key + "\":"
-      val i = json.indexOf(k)
-      require(i >= 0, s"btr log: missing $key")
-      var j = i + k.length
-      val sb = new StringBuilder
-      while (j < json.length && (json.charAt(j).isDigit || json.charAt(j) == '-')) {
-        sb += json.charAt(j); j += 1
-      }
-      sb.toString.toLong
-    }
-    def strField(key: String): String = {
-      val k = "\"" + key + "\":\""
-      val i = json.indexOf(k)
-      require(i >= 0, s"btr log: missing $key")
-      var j = i + k.length
-      val sb = new StringBuilder
-      while (j < json.length && json.charAt(j) != '"') {
-        if (json.charAt(j) == '\\' && j + 1 < json.length) { sb += json.charAt(j); j += 1 }
-        sb += json.charAt(j); j += 1
-      }
-      unesc(sb.toString)
-    }
-    def strArray(key: String): Option[Seq[String]] = {
-      val k = "\"" + key + "\":["
-      val fi = json.indexOf(k)
-      if (fi < 0) return None
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var i = fi + k.length
-      var inStr = false
-      val sb = new StringBuilder
-      var done = false
-      while (!done && i < json.length) {
-        val c = json.charAt(i)
-        if (inStr) {
-          if (c == '\\' && i + 1 < json.length) { sb += c; sb += json.charAt(i + 1); i += 2 }
-          else if (c == '"') { out += unesc(sb.toString); sb.clear(); inStr = false; i += 1 }
-          else { sb += c; i += 1 }
-        } else c match {
-          case '"' => inStr = true; i += 1
-          case ']' => done = true
-          case _ => i += 1
-        }
-      }
-      Some(out.toSeq)
-    }
-    def longArray(key: String): Option[Seq[Long]] = {
-      val k = "\"" + key + "\":["
-      val fi = json.indexOf(k)
-      if (fi < 0) return None
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var i = fi + k.length
-      val sb = new StringBuilder
-      var done = false
-      while (!done && i < json.length) {
-        val c = json.charAt(i)
-        if (c.isDigit || c == '-') { sb += c; i += 1 }
-        else {
-          if (sb.nonEmpty) { out += sb.toString.toLong; sb.clear() }
-          if (c == ']') done = true else i += 1
-        }
-      }
-      Some(out.toSeq)
-    }
-    def zipSizes(names: Seq[String], sizes: Option[Seq[Long]]): Map[String, Long] =
-      sizes match {
-        case Some(s) if s.length == names.length =>
-          names.zip(s).filter(_._2 >= 0).toMap
-        case _ => Map.empty
-      }
-    val v = longField("version"); val ts = longField("ts"); val a = strField("action")
-    val txnA: Option[String] =
-      if (json.contains("\"txnApp\":")) Some(strField("txnApp")) else None
-    val txnV: Option[Long] =
-      if (json.contains("\"txnVer\":")) Some(longField("txnVer")) else None
-    strArray("add") match {
-      case Some(add) =>
-        val rem = strArray("remove").getOrElse(Nil)
-        Entry(v, ts, a, Nil, isDelta = true, add = add, remove = rem,
-          sizes = zipSizes(add, longArray("addSizes")), txnApp = txnA, txnVer = txnV)
-      case None =>
-        val files = strArray("files").getOrElse(
-          throw new IllegalArgumentException("btr log: missing files"))
-        Entry(v, ts, a, files, sizes = zipSizes(files, longArray("sizes")),
-          txnApp = txnA, txnVer = txnV)
-    }
-  }
+  private[sources] def parse(json: String): Entry = BtrJson.parseLogEntry(json)
 
   /** Apply one entry on top of a resolved predecessor state. */
   private def applyEntry(prevFiles: Seq[String], prevSizes: Map[String, Long],

@@ -1279,49 +1279,6 @@ class BtrMicroBatchStream(
     override def json(): String = batchId.toString
   }
 
-  /** JSON-array (de)serialization for log entries — file names may hold
-    * any character a hive-escaped path can.
-    */
-  private object Names {
-    def quote(s: String): String = {
-      val sb = new StringBuilder("\"")
-      s.foreach {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      sb.append('"').toString
-    }
-
-    def render(files: Seq[String]): String = files.map(quote).mkString("[", ",", "]")
-
-    def parse(json: String): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var i = json.indexOf('[') + 1
-      val sb = new StringBuilder
-      var inStr = false
-      while (i < json.length) {
-        val c = json.charAt(i)
-        if (!inStr) {
-          if (c == '"') { inStr = true; sb.clear() }
-          else if (c == ']') i = json.length
-        } else c match {
-          case '"' => inStr = false; out += sb.toString
-          case '\\' =>
-            i += 1
-            json.charAt(i) match {
-              case 'u' => sb.append(Integer.parseInt(json.substring(i + 1, i + 5), 16).toChar); i += 4
-              case e => sb.append(e)
-            }
-          case e => sb.append(e)
-        }
-        i += 1
-      }
-      out.toSeq
-    }
-  }
-
   require(checkpointLocation.nonEmpty, "btr streaming source needs a checkpoint location")
   private val logDir = new Path(checkpointLocation, "btr-file-log")
   private def logFs = logDir.getFileSystem(BtrTableMeta.hadoopConf())
@@ -1339,7 +1296,7 @@ class BtrMicroBatchStream(
     fs.mkdirs(logDir)
     val tmp = new Path(logDir, s".${target.getName}.tmp")
     val out = fs.create(tmp, true)
-    out.write(Names.render(files).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    out.write(BtrJson.names(files).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
     fs.delete(target, false) // a retried trigger rewrites its entry
     if (!fs.rename(tmp, target))
@@ -1349,15 +1306,8 @@ class BtrMicroBatchStream(
   private def writeEntry(id: Long, files: Seq[String]): Unit =
     writeLogFile(entryPath(id), files)
 
-  private def readLogFile(p: Path): Seq[String] = {
-    val fs = logFs
-    val len = fs.getFileStatus(p).getLen.toInt
-    val bytes = new Array[Byte](len)
-    val in = fs.open(p)
-    try in.readFully(0, bytes)
-    finally in.close()
-    Names.parse(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-  }
+  private def readLogFile(p: Path): Seq[String] =
+    BtrJson.parseNames(BtrJson.readFile(logFs, p))
 
   private def readEntry(id: Long): Seq[String] = readLogFile(entryPath(id))
 
@@ -1673,10 +1623,23 @@ object BtrMicroBatchStream {
 object PartitionPrune {
   val NullPart: String = BtrTableMeta.NullPartition
 
-  def canSkip(schema: StructType, values: Map[String, String], f: Filter): Boolean = {
-    def dtOf(a: String): Option[DataType] =
-      schema.fields.find(_.name == a).map(_.dataType)
+  /** True only when the filter PROVABLY excludes the partition: its
+    * exact evaluation ([[holds]]) is known to match no row.
+    */
+  def canSkip(schema: StructType, values: Map[String, String], f: Filter): Boolean =
+    holds(schema, values, f).contains(false)
 
+  /** EXACT evaluation of a filter against one partition's directory
+    * values: Some(result) when the partition values alone decide the
+    * predicate for every row of the file, None when they don't (data
+    * column involved, unparseable value, unsupported shape). Unlike
+    * [[canSkip]] (one-sided proof of emptiness) this is two-sided, so
+    * metadata DELETE can tell "whole file matches" from "no row matches".
+    */
+  def holds(schema: StructType, values: Map[String, String], f: Filter): Option[Boolean] = {
+    def dtOf(a: String): Option[DataType] = schema.fields.find(_.name == a).map(_.dataType)
+    def isPart(a: String): Boolean = values.contains(a)
+    def isNullPart(a: String): Boolean = values(a) == NullPart
     // -1/0/1 comparison of the stored value with the literal, None when
     // not comparable (null partition, type mismatch, parse failure)
     def cmp(a: String, lit: Any): Option[Int] = {
@@ -1713,88 +1676,6 @@ object PartitionPrune {
               // UTF-8 binary order — the ordering Spark's UTF8String
               // comparisons use (Java's compareTo diverges on
               // supplementary characters)
-              Some(java.util.Arrays.compareUnsigned(
-                s.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                ls.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-            case _ => None
-          }
-        case BooleanType =>
-          lit match {
-            case b: Boolean => Some(java.lang.Boolean.compare(s.toBoolean, b))
-            case _ => None
-          }
-        case _ => None
-      } catch { case _: Exception => None }
-    }
-
-    def isPart(a: String): Boolean = values.contains(a)
-
-    f match {
-      case EqualTo(a, v) if isPart(a) =>
-        values(a) == NullPart || cmp(a, v).exists(_ != 0)
-      case EqualNullSafe(a, null) if isPart(a) => values(a) != NullPart
-      case EqualNullSafe(a, v) if isPart(a) =>
-        values(a) == NullPart || cmp(a, v).exists(_ != 0)
-      case In(a, vs) if isPart(a) =>
-        values(a) == NullPart || (vs.nonEmpty && vs.forall(v => cmp(a, v).exists(_ != 0)))
-      case GreaterThan(a, v) if isPart(a) => cmp(a, v).exists(_ <= 0) || values(a) == NullPart
-      case GreaterThanOrEqual(a, v) if isPart(a) => cmp(a, v).exists(_ < 0) || values(a) == NullPart
-      case LessThan(a, v) if isPart(a) => cmp(a, v).exists(_ >= 0) || values(a) == NullPart
-      case LessThanOrEqual(a, v) if isPart(a) => cmp(a, v).exists(_ > 0) || values(a) == NullPart
-      case IsNull(a) if isPart(a) => values(a) != NullPart
-      case IsNotNull(a) if isPart(a) => values(a) == NullPart
-      case StringStartsWith(a, p) if isPart(a) =>
-        values(a) == NullPart || !values(a).startsWith(p)
-      case And(l, r) => canSkip(schema, values, l) || canSkip(schema, values, r)
-      case Or(l, r) => canSkip(schema, values, l) && canSkip(schema, values, r)
-      case _ => false
-    }
-  }
-
-  /** EXACT evaluation of a filter against one partition's directory
-    * values: Some(result) when the partition values alone decide the
-    * predicate for every row of the file, None when they don't (data
-    * column involved, unparseable value, unsupported shape). Unlike
-    * [[canSkip]] (one-sided proof of emptiness) this is two-sided, so
-    * metadata DELETE can tell "whole file matches" from "no row matches".
-    */
-  def holds(schema: StructType, values: Map[String, String], f: Filter): Option[Boolean] = {
-    def dtOf(a: String): Option[DataType] = schema.fields.find(_.name == a).map(_.dataType)
-    def isPart(a: String): Boolean = values.contains(a)
-    def isNullPart(a: String): Boolean = values(a) == NullPart
-    // delegate the 3-way compare to a canSkip probe pair would be opaque;
-    // re-derive it exactly like canSkip's cmp
-    def cmp(a: String, lit: Any): Option[Int] = {
-      val s = values.get(a) match {
-        case Some(v) if v != NullPart => v
-        case _ => return None
-      }
-      try dtOf(a).flatMap {
-        case IntegerType | LongType | ShortType | ByteType =>
-          val l = lit match {
-            case i: Int => i.toLong
-            case l: Long => l
-            case sh: Short => sh.toLong
-            case b: Byte => b.toLong
-            case _ => return None
-          }
-          Some(java.lang.Long.compare(s.toLong, l))
-        case DateType =>
-          val epoch = lit match {
-            case d: java.sql.Date => d.toLocalDate.toEpochDay
-            case d: java.time.LocalDate => d.toEpochDay
-            case _ => return None
-          }
-          Some(java.lang.Long.compare(java.time.LocalDate.parse(s).toEpochDay, epoch))
-        case TimestampType =>
-          BtrPartTime.literalMicros(lit).map(m =>
-            java.lang.Long.compare(BtrPartTime.instantMicros(s), m))
-        case TimestampNTZType =>
-          BtrPartTime.literalMicros(lit).map(m =>
-            java.lang.Long.compare(BtrPartTime.localMicros(s), m))
-        case StringType =>
-          lit match {
-            case ls: String =>
               Some(java.util.Arrays.compareUnsigned(
                 s.getBytes(java.nio.charset.StandardCharsets.UTF_8),
                 ls.getBytes(java.nio.charset.StandardCharsets.UTF_8)))

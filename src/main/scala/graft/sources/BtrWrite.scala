@@ -45,12 +45,8 @@ class BtrWriteBuilder(path: String, schema: StructType, options: CaseInsensitive
       // from the table meta (Spark's path-write flow hands the builder
       // the DataFrame schema and empty partitioning)
       val dir = new Path(path)
-      try {
-        val fs = dir.getFileSystem(BtrTableMeta.hadoopConf())
-        if (fs.exists(new Path(dir, BtrTableMeta.MetaFile)))
-          BtrTableMeta.readPartitionCols(fs, dir)
-        else Nil
-      } catch { case _: java.io.IOException => Nil }
+      BtrTableMeta.readIfExists(dir.getFileSystem(BtrTableMeta.hadoopConf()), dir)
+        .map(_.partitionCols).getOrElse(Nil)
     }
 
   private var mode: BtrOverwriteMode = BtrOverwriteMode.Append
@@ -97,10 +93,10 @@ class BtrWriteBuilder(path: String, schema: StructType, options: CaseInsensitive
   private def checkAppendCompatible(): Unit = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(BtrTableMeta.hadoopConf())
-    if (!fs.exists(new Path(dir, BtrTableMeta.MetaFile))) return
+    val meta = BtrTableMeta.readIfExists(fs, dir).getOrElse(return)
     // appends validate against the LOGICAL schema: tombstoned slots are
     // the writer's business (it null-fills them), not the caller's
-    val existing = graft.format.BtrColumnMapping.logical(BtrTableMeta.readSchema(fs, dir))
+    val existing = graft.format.BtrColumnMapping.logical(meta.schema)
     // prefix match by name, with type equality relaxed to the sanctioned
     // widening pairs (int→long, float→double) in EITHER direction: a
     // wider append widens the table meta; a narrow append into an
@@ -116,7 +112,7 @@ class BtrWriteBuilder(path: String, schema: StructType, options: CaseInsensitive
         "Appends may add new columns at the END or widen int->long / " +
         "float->double only; use overwrite to replace the table with an " +
         "incompatible schema.")
-    val existingParts = BtrTableMeta.readPartitionCols(fs, dir)
+    val existingParts = meta.partitionCols
       .map(c => graft.format.PartitionTransform.parse(c).serialized)
     require(existingParts == partCols.map(c =>
         graft.format.PartitionTransform.parse(c).serialized),
@@ -155,9 +151,7 @@ class BtrWriteBuilder(path: String, schema: StructType, options: CaseInsensitive
           val dir = new Path(path)
           val hfs = dir.getFileSystem(BtrTableMeta.hadoopConf())
           val classifySchema =
-            if (hfs.exists(new Path(dir, BtrTableMeta.MetaFile)))
-              BtrTableMeta.readSchema(hfs, dir)
-            else schema
+            BtrTableMeta.readIfExists(hfs, dir).map(_.schema).getOrElse(schema)
           require(BtrDelete.canDelete(path, classifySchema, partCols, fs),
             s"btr: overwrite condition does not align with file boundaries at $path — " +
               "use partition-column predicates, or read + filter + full overwrite")
@@ -224,8 +218,7 @@ object BtrWriteLayout {
         strictly = false, advisoryBytes = 0L)
     val cluster = BtrOptions.clusterBy(options).getOrElse {
       val dir = new Path(path)
-      try BtrTableMeta.readClusterBy(dir.getFileSystem(BtrTableMeta.hadoopConf()), dir)
-      catch { case _: java.io.IOException => Nil }
+      BtrTableMeta.readClusterBy(dir.getFileSystem(BtrTableMeta.hadoopConf()), dir)
     }
     cluster.foreach { c =>
       require(schema.fieldNames.contains(c),
@@ -282,17 +275,13 @@ class BtrStreamingWrite(path: String, schema: StructType, blockSize: Int, cascad
   private lazy val slotLayout: Option[BtrSlotLayout] = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(BtrTableMeta.hadoopConf())
-    if (!fs.exists(new Path(dir, BtrTableMeta.MetaFile))) None
-    else {
-      val metaSchema = BtrTableMeta.readSchema(fs, dir)
-      if (!graft.format.BtrColumnMapping.hasTombstones(metaSchema)) None
-      else {
+    BtrTableMeta.readIfExists(fs, dir).map(_.schema)
+      .filter(graft.format.BtrColumnMapping.hasTombstones).map { metaSchema =>
         val metaData = metaSchema.fields.filterNot(f => partCols.contains(f.name))
         val dataFields = schema.fields.filterNot(f => partCols.contains(f.name))
         val (phys, ords) = graft.format.BtrColumnMapping.slotLayout(metaData, dataFields)
-        Some(BtrSlotLayout(phys, ords))
+        BtrSlotLayout(phys, ords)
       }
-    }
   }
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): streaming.StreamingDataWriterFactory =
@@ -388,8 +377,7 @@ object BtrStreamingWrite {
   */
 object BtrWriteSchemas {
   def widened(fs: org.apache.hadoop.fs.FileSystem, dir: Path, schema: StructType): StructType = {
-    if (!fs.exists(new Path(dir, BtrTableMeta.MetaFile))) return schema
-    val metaSchema = BtrTableMeta.readSchema(fs, dir)
+    val metaSchema = BtrTableMeta.readIfExists(fs, dir).getOrElse(return schema).schema
     if (graft.format.BtrColumnMapping.hasTombstones(metaSchema))
       return widenedSlots(dir, metaSchema, schema)
     val existing = metaSchema
@@ -539,17 +527,13 @@ class BtrBatchWrite(path: String, schema: StructType, mode: BtrOverwriteMode, bl
     else {
       val dir = new Path(path)
       val fs = dir.getFileSystem(BtrTableMeta.hadoopConf())
-      if (!fs.exists(new Path(dir, BtrTableMeta.MetaFile))) None
-      else {
-        val metaSchema = BtrTableMeta.readSchema(fs, dir)
-        if (!graft.format.BtrColumnMapping.hasTombstones(metaSchema)) None
-        else {
+      BtrTableMeta.readIfExists(fs, dir).map(_.schema)
+        .filter(graft.format.BtrColumnMapping.hasTombstones).map { metaSchema =>
           val metaData = metaSchema.fields.filterNot(f => partCols.contains(f.name))
           val (phys, ords) =
             graft.format.BtrColumnMapping.slotLayout(metaData, dataSchema.fields)
-          Some(BtrSlotLayout(phys, ords))
+          BtrSlotLayout(phys, ords)
         }
-      }
     }
   }
 
@@ -658,9 +642,7 @@ class BtrBatchWrite(path: String, schema: StructType, mode: BtrOverwriteMode, bl
         // footer columns index by slot position, not logical position.
         BtrTableMeta.completeSwapJournals(fs, dir)
         val classifySchema =
-          if (fs.exists(new Path(dir, BtrTableMeta.MetaFile)))
-            BtrTableMeta.readSchema(fs, dir)
-          else schema
+          BtrTableMeta.readIfExists(fs, dir).map(_.schema).getOrElse(schema)
         val verdicts = BtrDelete.classify(fs, dir, classifySchema, partCols, filters,
           exclude = e => isNew(e.path))
         val undecided = verdicts.collect { case (e, BtrDelete.Undecided) => e.path.getName }

@@ -172,6 +172,111 @@ class BtrLogDeltaSpec extends AnyFunSuite {
       delta.sizes == Map("c.btr" -> 42L))
   }
 
+  // ---- metadata-file compatibility pins: bodies in the exact layout the
+  // hand-rolled encoders wrote (every btr table on disk carries these)
+  // must parse to the same values, and re-encode byte-identically
+
+  private val pinSchema = org.apache.spark.sql.types.StructType.fromDDL("k INT, v STRING")
+  private val pinSchemaJson =
+    """{"type":"struct","fields":[{"name":"k","type":"integer","nullable":true,"metadata":{}},""" +
+      """{"name":"v","type":"string","nullable":true,"metadata":{}}]}"""
+
+  test("meta pin: every optional key absent, each alone, and all together") {
+    import graft.format.{BtrFile, BtrJson}
+    val v = BtrFile.Version
+    val bare = BtrTableMeta.Meta(pinSchema, 4096, 2, Seq("k"))
+    val cases = Seq(
+      "" -> bare,
+      ""","retainRemoved":true""" -> bare.copy(retainRemoved = true),
+      ""","logRetention":10""" -> bare.copy(logRetention = Some(10)),
+      ""","deletionVectors":true""" -> bare.copy(deletionVectors = true),
+      ""","dvPurgeThreshold":0.25""" -> bare.copy(dvPurgeThreshold = Some(0.25)),
+      ""","dvPurgeThreshold":1.0E-4""" -> bare.copy(dvPurgeThreshold = Some(1.0e-4)),
+      ""","clusterBy":["v","a\"b"]""" -> bare.copy(clusterBy = Seq("v", "a\"b")),
+      ""","retainRemoved":true,"logRetention":10,"deletionVectors":true,""" +
+        """"dvPurgeThreshold":0.25,"clusterBy":["v"]""" ->
+        bare.copy(retainRemoved = true, logRetention = Some(10), deletionVectors = true,
+          dvPurgeThreshold = Some(0.25), clusterBy = Seq("v")))
+    cases.foreach { case (optional, want) =>
+      val body =
+        s"""{"version":$v,"blockSize":4096,"cascade":2$optional,"partitionCols":["k"],""" +
+          s""""schema":$pinSchemaJson}"""
+      assert(BtrJson.parseMeta(body) == want, body)
+      assert(BtrJson.meta(want) == body)
+    }
+    // tables written before geometry was recorded read the defaults
+    assert(BtrJson.parseMeta(s"""{"version":1,"partitionCols":[],"schema":$pinSchemaJson}""") ==
+      BtrTableMeta.Meta(pinSchema, BtrFile.DefaultBlockSize, BtrFile.DefaultCascadeDepth))
+  }
+
+  test("meta pin: field metadata and malformed bodies never read as table policy") {
+    import graft.format.BtrJson
+    // the policy keys inside a column's field metadata stay column metadata
+    val md = """{"deletionVectors":true,"retainRemoved":true,"logRetention":1,"clusterBy":["nope"]}"""
+    val meta = BtrJson.parseMeta(
+      """{"version":8,"blockSize":65536,"cascade":3,"partitionCols":[],"schema":""" +
+        """{"type":"struct","fields":[{"name":"x","type":"long","nullable":true,""" +
+        s""""metadata":$md}]}}""")
+    assert(!meta.retainRemoved && !meta.deletionVectors && meta.logRetention.isEmpty &&
+      meta.clusterBy.isEmpty)
+    assert(meta.schema("x").metadata.getBoolean("deletionVectors"))
+    // a torn body, a mistyped key and a missing schema fail loudly
+    Seq(
+      """{"version":8,"blockSize":65536,"casc""",
+      s"""{"version":8,"retainRemoved":"true","partitionCols":[],"schema":$pinSchemaJson}""",
+      """{"version":8,"blockSize":65536,"cascade":3,"partitionCols":[]}""",
+      ""
+    ).foreach(body => intercept[Exception](BtrJson.parseMeta(body)))
+  }
+
+  test("log entry pin: full and delta entries encode in the recorded layout") {
+    import graft.format.BtrJson
+    val full = """{"version":3,"ts":5,"action":"append","files":["a.btr","p=1/b.btr"],""" +
+      """"sizes":[10,20],"txnApp":"app\"1","txnVer":7}"""
+    val fullEntry = BtrLog.Entry(3L, 5L, "append", Seq("a.btr", "p=1/b.btr"),
+      sizes = Map("a.btr" -> 10L, "p=1/b.btr" -> 20L), txnApp = Some("app\"1"), txnVer = Some(7L))
+    assert(BtrLog.parse(full) == fullEntry)
+    assert(BtrJson.logEntry(fullEntry) == full)
+    // -1 = size unknown (status failed at commit): not a recorded size
+    val delta = """{"version":4,"ts":6,"action":"delete","add":["c\\d.btr"],""" +
+      """"addSizes":[-1],"remove":["a.btr"]}"""
+    val deltaEntry = BtrLog.Entry(4L, 6L, "delete", Nil, isDelta = true,
+      add = Seq("c\\d.btr"), remove = Seq("a.btr"))
+    assert(BtrLog.parse(delta) == deltaEntry)
+    assert(BtrJson.logEntry(deltaEntry) == delta)
+    // control characters: the \u00XX form every reader decodes (`u` holds a
+    // JSON-text backslash-u: the compiler would decode one in the literal)
+    val u = "\\u"
+    val ctl = BtrLog.parse(s"""{"version":1,"ts":1,"action":"a\\n${u}0001","files":[]}""")
+    assert(ctl.action == "a\n\u0001")
+    assert(BtrJson.logEntry(ctl).contains(s""""action":"a${u}000a${u}0001""""))
+  }
+
+  test("swap journal, stats line and stream file-log pins") {
+    import graft.format.BtrJson
+    import graft.format.BtrTableMeta.{ColumnStats, SwapGroup}
+    val u = "\\u" // a JSON-text backslash-u (see the log entry pin)
+    val journal = """{"groups":[{"dir":"p=1","finals":["part-a.btr"],""" +
+      s""""sources":["part-b.btr","c\\"d.btr"]},{"dir":"","finals":[],"sources":["x${u}0001.btr"]}]}"""
+    val groups = Seq(SwapGroup("p=1", Seq("part-a.btr"), Seq("part-b.btr", "c\"d.btr")),
+      SwapGroup("", Nil, Seq("x\u0001.btr")))
+    assert(BtrJson.parseSwapGroups(journal) == groups)
+    assert(BtrJson.swapGroups(groups) == journal)
+    val stats =
+      """{"column":"l_orderkey","rows":60000,"nulls":0,"raw_bytes":480000,""" +
+        """"compressed_bytes":105011,"ratio":4.5709}""" + "\n" +
+        """{"column":"e","rows":60000,"nulls":60000,"raw_bytes":0,""" +
+        """"compressed_bytes":0,"ratio":0.0000}""" + "\n"
+    val cols = Seq(ColumnStats("l_orderkey", 60000L, 0L, 480000L, 105011L, 4.5709),
+      ColumnStats("e", 60000L, 60000L, 0L, 0L, 0.0))
+    assert(BtrJson.parseStats(stats) == cols)
+    assert(BtrJson.stats(cols.updated(0, cols.head.copy(ratio = 480000.0 / 105011))) == stats)
+    val names = """["part-00000-a.btr","p=x%2Fy/c\"d.btr","e\\f.btr"]"""
+    assert(BtrJson.parseNames(names) == Seq("part-00000-a.btr", "p=x%2Fy/c\"d.btr", "e\\f.btr"))
+    assert(BtrJson.names(BtrJson.parseNames(names)) == names)
+    assert(BtrJson.parseNames("[]").isEmpty)
+  }
+
   test("rel-path reuse: a pinned snapshot NEVER silently reads a re-created file") {
     // v1 writes file F (retained table); DELETE moves F to the store; a
     // foreign file of DIFFERENT length is then planted at F's rel path.

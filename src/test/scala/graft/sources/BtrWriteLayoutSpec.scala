@@ -150,6 +150,26 @@ class BtrWriteLayoutSpec extends AnyFunSuite {
     assert(err.getMessage.contains("ghost"))
   }
 
+  test("policy keys in a column's field metadata leave the table policy unchanged") {
+    import spark.implicits._
+    val p = tmp("field-metadata")
+    val md = new org.apache.spark.sql.types.MetadataBuilder()
+      .putBoolean("deletionVectors", true).putBoolean("retainRemoved", true)
+      .putLong("logRetention", 1).putStringArray("clusterBy", Array("nope")).build()
+    Seq((1, "a")).toDF("id", "s").select(col("id"), col("s").as("s", md))
+      .write.format("btr").mode("overwrite").save(p)
+    val (fs, root) = fsRoot(p)
+    val body = graft.format.BtrJson.readFile(fs, new Path(root, BtrTableMeta.MetaFile))
+    assert(body.contains(""""clusterBy":["nope"]"""), "the field metadata is in the meta file")
+    assert(!BtrTableMeta.readDeletionVectors(fs, root))
+    assert(!BtrTableMeta.readRetainRemoved(fs, root))
+    assert(BtrTableMeta.readLogRetention(fs, root).isEmpty)
+    assert(BtrTableMeta.readClusterBy(fs, root).isEmpty)
+    // the next plain append sees no clustering declaration to validate
+    Seq((2, "b")).toDF("id", "s").write.format("btr").mode("append").save(p)
+    assert(spark.read.format("btr").load(p).count() == 2)
+  }
+
   test("pure DV DELETE clusters by _file: one blob per touched file") {
     import spark.implicits._
     val p = tmp("dv-blob-per-file")

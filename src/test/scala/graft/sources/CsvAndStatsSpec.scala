@@ -86,6 +86,19 @@ class CsvAndStatsSpec extends AnyFunSuite {
     assert(stats("id")._3 > 0L && stats("s")._3 > 0L)
   }
 
+  test("ingest stats round-trip column names holding quotes and backslashes") {
+    import spark.implicits._
+    val p = tmp("stats_escaped")
+    Seq((1L, "x"), (2L, "y")).toDF("a\"b", "c\\d")
+      .write.format("btr").mode("overwrite").save(p)
+    val dir = new org.apache.hadoop.fs.Path(p)
+    val fs = dir.getFileSystem(graft.format.BtrTableMeta.hadoopConf())
+    assert(graft.format.BtrTableMeta.readStatsRatios(fs, dir).keySet == Set("a\"b", "c\\d"))
+    val stats = graft.functions.BtrInspect.tableStats(spark, p).collect()
+      .map(r => r.getAs[String]("column") -> r.getAs[Long]("rows")).toMap
+    assert(stats == Map("a\"b" -> 2L, "c\\d" -> 2L))
+  }
+
   test("ingest stats aggregate across multiple writer tasks") {
     val orig = spark.read.parquet(s"$sf/lineitem.parquet")
     orig.repartition(3).write.format("btr").mode("overwrite").save(tmp("li_stats"))

@@ -816,8 +816,20 @@ object BtrTableMeta {
       .filter(st => st.isFile && st.getPath.getName.startsWith(prefix))
       .sortBy(_.getPath.getName)
       .flatMap { st =>
-        try Some(st.getPath -> BtrJson.parseSwapGroups(BtrJson.readFile(fs, st.getPath)))
-        catch { case _: Exception => None } // torn journal: publish is atomic, so skip
+        // publish is atomic, so a journal that exists is whole: one that
+        // does not parse is damage, and skipping it would un-hide both
+        // sides of its swap. A journal retired between the listing and
+        // the read is simply gone.
+        val body =
+          try Some(BtrJson.readFile(fs, st.getPath))
+          catch { case _: java.io.FileNotFoundException => None }
+        body.map { b =>
+          try st.getPath -> BtrJson.parseSwapGroups(b)
+          catch {
+            case e: Exception => throw new IllegalStateException(
+              s"btr: journal ${st.getPath} exists but does not parse", e)
+          }
+        }
       }
   }
 

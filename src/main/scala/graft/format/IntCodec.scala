@@ -417,7 +417,7 @@ object IntCodec {
   private def structurallyValid(scheme: Int, s: IntStats, depth: Int): Boolean = scheme match {
     case OneValue => s.runCount <= 1
     case Uncompressed | ForBp => true
-    case DeltaBp => s.count >= 2
+    case DeltaBp => true
     case Dict | Rle | Frequency => depth >= 1 && s.count >= 1
     case Pfor => depth >= 1 && s.count >= 1 && Bitpack.bitsForRange(s.min, s.max) > 0
     case _ => false
@@ -556,10 +556,10 @@ object IntCodec {
           Bitpack.pack(rebased, count, width, out)
         }
       case DeltaBp =>
-        // sorted: store v0, then FOR-bitpacked deltas
-        val deltas = new Array[Long](count - 1)
-        var minD = Long.MaxValue
-        var maxD = Long.MinValue
+        // sorted: store v0, then FOR-bitpacked deltas (none below 2 values)
+        val deltas = new Array[Long](math.max(count - 1, 0))
+        var minD = if (count > 1) Long.MaxValue else 0L
+        var maxD = if (count > 1) Long.MinValue else 0L
         var i = 1
         while (i < count) {
           val d = values(i) - values(i - 1)
@@ -569,7 +569,7 @@ object IntCodec {
           i += 1
         }
         val width = Bitpack.bitsForRange(minD, maxD)
-        out.putLong(values(0))
+        out.putLong(if (count > 0) values(0) else 0L)
         out.putLong(minD)
         out.putByte(width)
         if (width > 0) {
@@ -692,14 +692,22 @@ object IntCodec {
         val v0 = in.getLong()
         val minD = in.getLong()
         val width = in.getByte()
-        Bitpack.unpack(in, count - 1, width, out)
-        var acc = v0
-        var i = count - 1
-        // shift right by one while prefix-summing (out currently holds deltas at 0..count-2)
-        val deltas = java.util.Arrays.copyOf(out, math.max(count - 1, 0))
-        out(0) = v0
-        i = 1
-        while (i < count) { acc += deltas(i - 1) + minD; out(i) = acc; i += 1 }
+        if (count > 0) {
+          Bitpack.unpack(in, count - 1, width, out)
+          // prefix-sum in place, shifted right by one: out holds deltas at
+          // 0..count-2, so each slot's delta is read before it is overwritten
+          var acc = v0
+          var d = out(0)
+          out(0) = v0
+          var i = 1
+          while (i < count) {
+            val next = out(i)
+            acc += d + minD
+            out(i) = acc
+            d = next
+            i += 1
+          }
+        }
       case Dict =>
         val dictSize = in.getInt()
         val dict = decode(in, dictSize)

@@ -466,7 +466,10 @@ object BtrOptions {
     options.getInt("btr.blockSize", BtrFile.DefaultBlockSize)
   def cascade(options: CaseInsensitiveStringMap): Int =
     options.getInt("btr.maxCascadeDepth", BtrFile.DefaultCascadeDepth)
-  /** Target bytes per read split when grouping row groups into partitions. */
+  /** Largest projected compressed bytes per read split: an unpartitioned
+    * scan plans `P × ceil(bytes / (P × this))` equal shares (`P` =
+    * [[splitParallelism]]), a partitioned one cuts each file at this size.
+    */
   def splitBytes(options: CaseInsensitiveStringMap): Long =
     options.getLong("btr.maxSplitBytes", 128L * 1024 * 1024)
 
@@ -488,9 +491,8 @@ object BtrOptions {
     if (v > 0) Some(v) else None
   }
 
-  /** Small-table split-parallelism floor: target split count for
-    * unpartitioned tables smaller than cores×maxSplitBytes
-    * (0 = session defaultParallelism, 1 disables subdivision).
+  /** Tasks per wave of an unpartitioned scan (0 = the session's
+    * defaultParallelism); 1 plans one split per maxSplitBytes.
     */
   def splitParallelism(options: CaseInsensitiveStringMap): Int =
     options.getInt("btr.splitParallelism", 0)

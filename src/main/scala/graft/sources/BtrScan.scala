@@ -906,43 +906,13 @@ class BtrScan(
         if (pp.length > rootPrefixLen) pp.substring(rootPrefixLen) else pp
       }
 
-    val partitions = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
+    // one slice per surviving file (its row groups filled in below), in
+    // listing order
+    val slices = scala.collection.mutable.ArrayBuffer.empty[BtrInputPartition]
     val live = rewriteNarrow match {
       case Some(set) => discovered.filter { case (e, _) => set.contains(e.path.toString) }
       case None => discovered
     }
-    // Split-size floor: a table whose projected bytes fit in a handful
-    // of 128 MB splits would otherwise plan fewer tasks than the session
-    // has cores (a 10-file fact table scans on 10 of 32 threads — a 3×
-    // parallelism loss invisible at 100 TB but dominant at bench scale).
-    // For UNPARTITIONED tables, shrink the per-split target so the scan
-    // yields ≈ defaultParallelism splits at row-group granularity.
-    // Partitioned tables keep the configured size: key-grouped planning
-    // (SPJ) needs one split per key for its zero-sort guarantee, and
-    // their parallelism comes from directory count.
-    val effectiveSplitBytes: Long =
-      if (partCols.nonEmpty) splitBytes
-      else {
-        // btr.splitParallelism: target split count for small tables
-        // (default: the session's core count; 1 disables subdivision)
-        val want = if (splitParallelism > 0) splitParallelism
-        else {
-          try org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
-          catch { case _: Throwable => 0 }
-        }
-        if (want <= 1) splitBytes
-        else {
-          var projBytes = 0L
-          live.foreach { case (_, footer) =>
-            footer.rowGroups.foreach { rg =>
-              dataIdx.foreach(ci =>
-                if (ci < rg.columns.length) projBytes += rg.columns(ci).length)
-            }
-          }
-          if (projBytes <= 0) splitBytes
-          else math.min(splitBytes, math.max(BtrScan.MinSplitFloorBytes, projBytes / want))
-        }
-      }
     // `_file` prunes through the partition machinery: its value is a
     // per-file constant exactly like a directory value
     val pruneSchema =
@@ -997,19 +967,8 @@ class BtrScan(
         val dvPrior: Array[String] =
           if (dvResolved._2.isEmpty) Array.empty
           else dvResolved._2.getOrElse(fileRel, Array.empty)
-        // chunk-skip + group surviving row groups into ~splitBytes splits
-        var current = scala.collection.mutable.ArrayBuffer.empty[BtrChunkRange]
-        var currentBytes = 0L
-        def flush(): Unit = {
-          // a DV event read emits only masked rows: a file with no new
-          // blobs plans nothing at all
-          if (current.nonEmpty && !(dvEmitDeleted && dvBlobs.isEmpty))
-            partitions += BtrInputPartition(file.toString, current.toArray, reqPartValues, reqTags,
-              partKey, dvBlobs = dvBlobs, fileLen = entry.len,
-              dvEmitDeleted = dvEmitDeleted, dvPriorBlobs = dvPrior)
-          current = scala.collection.mutable.ArrayBuffer.empty[BtrChunkRange]
-          currentBytes = 0L
-        }
+        // chunk skipping and the limit budget, in file order
+        val kept = scala.collection.mutable.ArrayBuffer.empty[BtrChunkRange]
         var ordinal = 0L // within-file row ordinal, counted BEFORE skipping
         footer.rowGroups.foreach { rg =>
           val groupBase = ordinal
@@ -1024,45 +983,130 @@ class BtrScan(
               if (ci < rg.columns.length) rg.columns(ci).offset else -1L)
             val lengths = dataIdx.map(ci =>
               if (ci < rg.columns.length) rg.columns(ci).length else 0)
-            current += BtrChunkRange(rg.numRows, offsets, lengths, groupBase)
-            currentBytes += lengths.map(_.toLong).sum
+            kept += BtrChunkRange(rg.numRows, offsets, lengths, groupBase)
             plannedRows += rg.numRows
-            if (currentBytes >= effectiveSplitBytes) flush()
           }
         }
-        flush()
+        // a DV event read emits only masked rows: a file with no new
+        // blobs plans nothing at all
+        if (kept.nonEmpty && !(dvEmitDeleted && dvBlobs.isEmpty))
+          slices += BtrInputPartition(file.toString, kept.toArray, reqPartValues, reqTags,
+            partKey, dvBlobs = dvBlobs, fileLen = entry.len,
+            dvEmitDeleted = dvEmitDeleted, dvPriorBlobs = dvPrior)
       }
     }
     // seeded chunk sample: keep at most N row groups across the whole
     // plan, chosen by a deterministic shuffle over the (stable) planned
     // order — the sampling-experiment surface, never a DML/CDC shape
-    val afterSample: Array[InputPartition] = sampleChunks match {
+    val sampled: Seq[BtrInputPartition] = sampleChunks match {
       case Some(n) =>
         require(!rewriteGroups && !dvEmitDeleted,
           "btr.sampleChunks is a batch SAMPLING read option — row-level " +
             "rewrites and change-feed reads must see every surviving row")
-        val flat = partitions.toArray.flatMap {
-          case p: BtrInputPartition => p.groups.map(g => (p, g))
-          case _ => Array.empty[(BtrInputPartition, BtrChunkRange)]
-        }
-        val rnd = new scala.util.Random(sampleSeed)
-        val picked = rnd.shuffle(flat.toIndexedSeq).take(n)
-        picked.groupBy(_._1).toArray
-          .map { case (p, gs) =>
-            p.copy(groups = gs.map(_._2).sortBy(_.firstOrdinal).toArray): InputPartition
-          }
-          .sortBy {
-            case p: BtrInputPartition => (p.file, p.groups.head.firstOrdinal)
-            case _ => ("", 0L)
-          }
-      case None => partitions.toArray
+        val flat = groupsOf(slices.toSeq)
+        val picked = new scala.util.Random(sampleSeed).shuffle(flat.indices.toVector).take(n)
+        fileRuns(picked.sorted.map(flat))
+      case None => slices.toSeq
     }
-    // pack toward the EFFECTIVE size: packing many tiny files toward the
-    // configured 128 MB would re-create the parallelism floor the
-    // subdivision above exists to remove (1000×1 MB files → 8 packed
-    // tasks on 32 cores); with the effective target the packed count
-    // lands at ≈ the session's parallelism instead
-    packSmallSplits(afterSample, effectiveSplitBytes)
+    if (partCols.isEmpty) balancedShares(sampled)
+    else packSmallSplits(sampled.flatMap(splitFile).toArray)
+  }
+
+  /** Target tasks per wave: `btr.splitParallelism`, else the session's
+    * default parallelism (0 when no session is active).
+    */
+  private def splitWant: Int =
+    if (splitParallelism > 0) splitParallelism
+    else {
+      try org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
+      catch { case _: Throwable => 0 }
+    }
+
+  /** An unpartitioned scan's surviving row groups, in file order, cut into
+    * `n` contiguous shares of equal projected compressed bytes, with
+    * `n = min(groups, P × ceil(bytes / (P × maxSplitBytes)))` and `P` =
+    * [[splitWant]]: every wave of tasks fills every core, and no task is
+    * left for a second, mostly idle wave. A share end lands where the
+    * running byte total comes closest to its even cut, so shares differ
+    * by about one row group. A share that crosses files is a
+    * [[BtrPackedInputPartition]] of per-file slices, each keeping its
+    * file's `_file`/`_pos`, deletion vectors and physical tags. Each
+    * group weighs one byte more than its chunks, so a scan that projects
+    * no column bytes (`count(*)`) cuts by group count.
+    */
+  private def balancedShares(files: Seq[BtrInputPartition]): Array[InputPartition] = {
+    val groups = groupsOf(files)
+    if (groups.isEmpty) return Array.empty
+    val bytes = groups.map(_._2.lengths.iterator.map(_.toLong).sum + 1L)
+    val total = bytes.sum
+    val p = math.max(1, splitWant)
+    val waves = math.ceil(total.toDouble / p / math.max(1L, splitBytes))
+    val n = math.min(groups.length.toDouble, p * waves).toInt
+    val shares = new Array[InputPartition](n)
+    var end = 0
+    var prefix = 0L
+    var k = 1
+    while (k <= n) {
+      val start = end
+      if (k == n) end = groups.length
+      else {
+        // at least one group per share, and one left for each share after
+        val cut = total.toDouble * k / n
+        val maxEnd = groups.length - (n - k)
+        prefix += bytes(end)
+        end += 1
+        while (end < maxEnd && math.abs(prefix + bytes(end) - cut) < math.abs(prefix - cut)) {
+          prefix += bytes(end)
+          end += 1
+        }
+      }
+      shares(k - 1) = fileRuns(groups.slice(start, end)) match {
+        case Seq(one) => one
+        case perFile => BtrPackedInputPartition(perFile.toArray)
+      }
+      k += 1
+    }
+    shares
+  }
+
+  /** Every planned row group with the file slice it came from, in order. */
+  private def groupsOf(files: Seq[BtrInputPartition])
+      : IndexedSeq[(BtrInputPartition, BtrChunkRange)] =
+    files.iterator.flatMap(f => f.groups.iterator.map(g => (f, g))).toIndexedSeq
+
+  /** Consecutive groups of one file become one slice of that file. */
+  private def fileRuns(groups: IndexedSeq[(BtrInputPartition, BtrChunkRange)])
+      : Seq[BtrInputPartition] = {
+    val runs = scala.collection.mutable.ArrayBuffer.empty[BtrInputPartition]
+    var i = 0
+    while (i < groups.length) {
+      val f = groups(i)._1
+      var j = i
+      while (j < groups.length && (groups(j)._1 eq f)) j += 1
+      runs += f.copy(groups = groups.slice(i, j).map(_._2).toArray)
+      i = j
+    }
+    runs.toSeq
+  }
+
+  /** A partitioned table's file in ~splitBytes splits at row-group grain;
+    * a split never crosses files, so each carries one partition key.
+    */
+  private def splitFile(f: BtrInputPartition): Seq[BtrInputPartition] = {
+    val splits = scala.collection.mutable.ArrayBuffer.empty[BtrInputPartition]
+    var from = 0
+    var bytes = 0L
+    var i = 0
+    while (i < f.groups.length) {
+      bytes += f.groups(i).lengths.iterator.map(_.toLong).sum
+      i += 1
+      if (bytes >= splitBytes || i == f.groups.length) {
+        splits += f.copy(groups = f.groups.slice(from, i))
+        from = i
+        bytes = 0L
+      }
+    }
+    splits.toSeq
   }
 
   /** Pack many small per-file splits into ~splitBytes tasks (each slice
@@ -1076,8 +1120,7 @@ class BtrScan(
     * NOT value order. Row-level rewrites pack too — their file set is
     * recorded at classification, not from the splits.
     */
-  private def packSmallSplits(raw: Array[InputPartition],
-      targetBytes: Long): Array[InputPartition] = {
+  private def packSmallSplits(raw: Array[InputPartition]): Array[InputPartition] = {
     val keyGrouped = keyFields.nonEmpty &&
       org.apache.spark.sql.internal.SQLConf.get
         .getConfString("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean
@@ -1086,20 +1129,15 @@ class BtrScan(
     def sizeOf(p: BtrInputPartition): Long =
       p.groups.iterator.map(_.lengths.iterator.map(_.toLong).sum).sum + openCost
     // equal-share packing: aim at total-work/parallelism per task (work =
-    // bytes + per-file open cost), never below the caller's target — a
-    // sub-openCost target would disable packing outright, and packing
-    // tiny files toward a raw 128 MB would re-create the parallelism
-    // floor for many-small-file tables (1000×1 MB → 8 tasks on 32 cores)
-    val want = if (splitParallelism > 0) splitParallelism
-    else {
-      try org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
-      catch { case _: Throwable => 0 }
-    }
+    // bytes + per-file open cost), never below splitBytes — packing tiny
+    // files toward a raw 128 MB would re-create the parallelism floor for
+    // many-small-file tables (1000×1 MB → 8 tasks on 32 cores)
+    val want = splitWant
     val totalWork = raw.iterator.map {
       case p: BtrInputPartition => sizeOf(p)
       case _ => 0L
     }.sum
-    val target = if (want > 1) math.max(targetBytes, totalWork / want) else math.max(targetBytes, splitBytes)
+    val target = if (want > 1) math.max(splitBytes, totalWork / want) else splitBytes
     val packed = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
     var cur = scala.collection.mutable.ArrayBuffer.empty[BtrInputPartition]
     var bytes = 0L
@@ -2187,14 +2225,15 @@ final case class BtrChunkRange(numRows: Int, offsets: Array[Long], lengths: Arra
   * data columns (their offsets live in `groups`), the hive directory
   * value (or the null-partition marker) for partition columns.
   */
-/** Several per-file slices chained into one Spark task — the small-files
-  * defense (Spark's parquet path packs files into FilePartitions for the
-  * same reason): a 100k-file table (a long-running streaming sink, an
-  * hour-partitioned event layout) must not cost 100k scheduler rounds
-  * when its bytes fit in a handful of splits. Slices keep their own
-  * partition values and physical tags; the packed reader chains them.
-  * Never used when key-grouped (storage-partitioned) planning is on —
-  * grouping needs per-key splits with HasPartitionKey.
+/** Several per-file slices chained into one Spark task: an unpartitioned
+  * scan's equal-bytes share that crosses files, or many small files of a
+  * partitioned table packed together (Spark's parquet path packs files
+  * into FilePartitions for the same reason) — a 100k-file table must not
+  * cost 100k scheduler rounds when its bytes fit in a handful of splits.
+  * Slices keep their own partition values, physical tags and deletion
+  * vectors; the packed reader chains them over one vector set. Never
+  * used when key-grouped (storage-partitioned) planning is on — grouping
+  * needs per-key splits with HasPartitionKey.
   */
 final case class BtrPackedInputPartition(slices: Array[BtrInputPartition])
     extends InputPartition
@@ -2240,11 +2279,6 @@ object BtrScan {
     * overhead is noise and per-file splits keep plans observable).
     */
   val PackMinSplits = 64
-
-  /** Absolute lower bound for subdivided splits (guards tiny tables from
-    * degenerating into per-row-group scheduling confetti).
-    */
-  val MinSplitFloorBytes: Long = 1024L * 1024
 
   /** Full struct types by column name — the reader maps a PRUNED struct
     * projection's leaves onto file leaf positions through these.
@@ -2389,7 +2423,8 @@ class BtrReaderFactory(requiredSchema: StructType, filters: Array[Filter] = Arra
 
 /** Chains one [[BtrColumnarReader]] per packed slice — per-slice reader
   * state (file stream, physical tags, partition constants) stays where it
-  * was; this just sequences them inside one task.
+  * was; this just sequences them inside one task, over one vector set
+  * sized for the largest row group of any slice.
   */
 class BtrPackedColumnarReader(packed: BtrPackedInputPartition,
     requiredSchema: StructType, filters: Array[Filter],
@@ -2397,13 +2432,15 @@ class BtrPackedColumnarReader(packed: BtrPackedInputPartition,
     extends PartitionReader[ColumnarBatch] {
   private var idx = 0
   private var cur: BtrColumnarReader = null
+  private lazy val buffers = new BtrReadBuffers(requiredSchema,
+    packed.slices.iterator.flatMap(_.groups.iterator).map(_.numRows).foldLeft(0)(math.max))
 
   override def next(): Boolean = {
     while (true) {
       if (cur == null) {
         if (idx >= packed.slices.length) return false
         cur = new BtrColumnarReader(packed.slices(idx), requiredSchema, filters, fullStructs,
-          posCol)
+          posCol, buffers)
         idx += 1
       }
       if (cur.next()) return true
@@ -2464,6 +2501,21 @@ final class BtrStringDictionary(entries: Array[Array[Byte]])
     throw new UnsupportedOperationException("btr string dictionary")
 }
 
+/** A reader's reusable buffers, sized for `maxRows` rows per group. */
+final class BtrReadBuffers(requiredSchema: StructType, maxRows: Int) {
+  // one vector set reused across row groups (reset + refill, like Spark's
+  // parquet vectorized reader) — never close a batch a consumer may still
+  // hold, and no per-group allocation
+  val vectors: Array[OnHeapColumnVector] =
+    requiredSchema.fields.map(f => new OnHeapColumnVector(maxRows, f.dataType))
+  val batch = new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]], 0)
+  // grow-only per-column compressed-blob scratch (the analog of the
+  // reference's thread-local get_level_data buffers, common/Units.hpp:118-129):
+  // wide scans would otherwise allocate one Array[Byte] per column per row
+  // group — pure GC churn, the blob is dead the moment decode returns
+  val blobBufs = new Array[Array[Byte]](requiredSchema.length)
+}
+
 /** Vectorized reader: one ColumnarBatch per row group, decoded straight
   * into OnHeapColumnVectors — the analog of BtrReader::readColumn
   * (/root/reference/btrblocks/compression/BtrReader.cpp:31-74), with
@@ -2471,7 +2523,9 @@ final class BtrStringDictionary(entries: Array[Array[Byte]])
   */
 class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType,
     filters: Array[Filter] = Array.empty,
-    fullStructs: Map[String, StructType] = Map.empty, posCol: Int = -1)
+    fullStructs: Map[String, StructType] = Map.empty, posCol: Int = -1,
+    // a packed split's slices share one set; a lone split makes its own
+    shared: BtrReadBuffers = null)
     extends PartitionReader[ColumnarBatch] {
 
   private val fs = new Path(partition.file).getFileSystem(BtrTableMeta.hadoopConf())
@@ -2524,9 +2578,6 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
   }
   private var stream: org.apache.hadoop.fs.FSDataInputStream = _
   private var groupIdx = -1
-  // one vector set reused across row groups (reset + refill, like Spark's
-  // parquet vectorized reader) — never close a batch a consumer may still
-  // hold, and no per-group allocation
   private var vectors: Array[OnHeapColumnVector] = _
   private var batch: ColumnarBatch = _
   // deletion-vector masking: the decoded vectors stay columnar; groups
@@ -2537,10 +2588,6 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
   private var rowMap: BtrRowMap = _
   private var maskedBatch: ColumnarBatch = _
   private var emitMasked = false
-  // grow-only per-column compressed-blob scratch (the analog of the
-  // reference's thread-local get_level_data buffers, common/Units.hpp:118-129):
-  // wide scans would otherwise allocate one Array[Byte] per column per row
-  // group — pure GC churn, the blob is dead the moment decode returns
   private var blobBufs: Array[Array[Byte]] = _
 
   // Spark's DataSourceRDD closes a task's PREVIOUS reader when the same
@@ -2563,10 +2610,13 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
 
   private def ensureInit(): Unit = {
     if (vectors != null) return
-    var maxRows = 0
-    partition.groups.foreach(gr => if (gr.numRows > maxRows) maxRows = gr.numRows)
-    vectors = requiredSchema.fields.map(f => new OnHeapColumnVector(maxRows, f.dataType))
-    batch = new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]], 0)
+    val buffers =
+      if (shared != null) shared
+      else new BtrReadBuffers(requiredSchema,
+        partition.groups.iterator.map(_.numRows).foldLeft(0)(math.max))
+    vectors = buffers.vectors
+    batch = buffers.batch
+    blobBufs = buffers.blobBufs
     if (partition.dvBlobs.nonEmpty) {
       def load(paths: Array[String]) = paths.map { bp =>
         val p = new Path(bp)
@@ -2591,7 +2641,6 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
       maskedBatch = new ColumnarBatch(
         vectors.map(v => new BtrMaskedColumnVector(v, rowMap): ColumnVector), 0)
     }
-    blobBufs = new Array[Array[Byte]](tags.length)
     val hasPart = partition.partValues.nonEmpty
     dataIdxOf = new Array[Int](tags.length)
     var d = 0

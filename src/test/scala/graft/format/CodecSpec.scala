@@ -121,6 +121,31 @@ class CodecSpec extends AnyFunSuite {
     roundTripInts(Array.fill(65000) { acc += rnd.nextInt(10); acc })
   }
 
+  test("int delta_bp forced: round-trips at 0, 1, 2 and 65,536 values, zero and negative deltas") {
+    def forced(values: Array[Long]): Unit = {
+      val out = new BufWriter()
+      IntCodec.encodeForced(IntCodec.DeltaBp, out, values, values.length, 8, 3)
+      val bytes = out.result()
+      assert(bytes(0) == IntCodec.DeltaBp)
+      assert(IntCodec.decode(new BufReader(bytes), values.length).toSeq == values.toSeq)
+      // a larger output array (the scan's reused buffers): the tail is untouched
+      val big = Array.fill(values.length + 3)(-7L)
+      IntCodec.decodeInto(new BufReader(bytes), values.length, big)
+      assert(big.take(values.length).toSeq == values.toSeq)
+      assert(big.drop(values.length).forall(_ == -7L))
+    }
+    forced(Array.emptyLongArray)
+    forced(Array(-42L))
+    forced(Array(5L, 5L))
+    forced(Array(5L, -3L))
+    val rnd = new Random(17)
+    var acc = 1000L
+    // steps in -3..3: zero and negative deltas, FOR-rebased to a 3-bit width
+    forced(Array.fill(65536) { acc += rnd.nextInt(7) - 3; acc })
+    forced(Array.fill(65536)(9L))
+    forced(Array.tabulate(65536)(i => Long.MaxValue - 2L * i))
+  }
+
   test("int extremes and random") {
     roundTripInts(Array(Long.MinValue, Long.MaxValue, 0L, -1L, 1L, Int.MinValue.toLong, Int.MaxValue.toLong))
     val rnd = new Random(6)

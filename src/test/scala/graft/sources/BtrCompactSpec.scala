@@ -156,7 +156,10 @@ class BtrCompactSpec extends AnyFunSuite {
       val q = spark.read.format("btr").load(dir).filter(col("k").between(10000, 30000))
       q.queryExecution.executedPlan.collectLeaves().head
         .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-        .inputPartitions.collect { case p: BtrInputPartition => p }.map(_.groups.length).sum
+        .inputPartitions.flatMap {
+          case pk: BtrPackedInputPartition => pk.slices.toSeq
+          case p: BtrInputPartition => Seq(p)
+        }.map(_.groups.length).sum
     }
     val beforeGroups = surviving()
     val (nb, na) = BtrCompact.rewriteClustered(spark, dir, Seq("k"), targetBytes = 1L << 30)

@@ -24,7 +24,10 @@ class BtrEvolutionSpec extends AnyFunSuite {
   private def survivingGroups(df: DataFrame): Int =
     df.queryExecution.executedPlan.collectLeaves().head
       .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-      .inputPartitions.collect { case p: BtrInputPartition => p }.map(_.groups.length).sum
+      .inputPartitions.flatMap {
+        case pk: BtrPackedInputPartition => pk.slices.toSeq
+        case p: BtrInputPartition => Seq(p)
+      }.map(_.groups.length).sum
 
   private def writeEvolved(dir: String): Unit = {
     (1 to 100).map(i => (i.toLong, s"old-$i")).toDF("id", "s")

@@ -277,6 +277,27 @@ class BtrLogDeltaSpec extends AnyFunSuite {
     assert(BtrJson.parseNames("[]").isEmpty)
   }
 
+  test("a swap journal that exists but does not parse fails the read, naming the file") {
+    import spark.implicits._
+    val dir = tmp("torn-journal")
+    Seq(1L, 2L, 3L).toDF("v").coalesce(1).write.format("btr").mode("overwrite").save(dir)
+    val a = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.endsWith(".btr") && !f.getName.startsWith("_")).head
+    java.nio.file.Files.copy(a.toPath, new java.io.File(dir, "B.btr").toPath)
+    val journal = new java.io.File(dir, "_btr_swap_x.json")
+    // a whole journal hides the copy's source: 3 rows
+    java.nio.file.Files.writeString(journal.toPath,
+      s"""{"groups":[{"dir":"","finals":["B.btr"],"sources":["${a.getName}"]}]}""")
+    assert(spark.read.format("btr").load(dir).count() == 3)
+    // a damaged one used to be skipped, un-hiding both sides (6 rows)
+    java.nio.file.Files.writeString(journal.toPath,
+      """{"groups":[{"dir":"","finals":["B.btr"],"sources":["A""")
+    val e = intercept[Exception](spark.read.format("btr").load(dir).count())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => t.isInstanceOf[IllegalStateException] &&
+      t.getMessage.contains("_btr_swap_x.json")), chain.map(_.toString).mkString("\n"))
+  }
+
   test("rel-path reuse: a pinned snapshot NEVER silently reads a re-created file") {
     // v1 writes file F (retained table); DELETE moves F to the store; a
     // foreign file of DIFFERENT length is then planted at F's rel path.

@@ -40,46 +40,19 @@ object Bitpack {
     out.putLongs(words, words.length)
   }
 
-  /** Unpack `count` width-bit values into `out` (no sign extension). */
+  /** Unpack `count` width-bit values into `out` (no sign extension). The
+    * words are read in place from `in`'s byte array
+    * ([[BitpackKernel.unpack]]); `in` advances past them.
+    */
   def unpack(in: BufReader, count: Int, width: Int, out: Array[Long]): Unit = {
     if (width == 0) { java.util.Arrays.fill(out, 0, count, 0L); return }
     if (count == 0) return
-    val words = in.getLongs(numWords(count, width))
-    val m = mask(width)
-    if (64 % width == 0) {
-      // aligned widths (1/2/4/8/16/32/64): no value straddles a word —
-      // one word load feeds 64/width values with shift-only extraction,
-      // no multiply, no straddle branch (the scalar shape of the
-      // reference's unrolled per-width kernels)
-      val per = 64 / width
-      var i = 0
-      var w = 0
-      while (i + per <= count) {
-        var word = words(w)
-        w += 1
-        var j = 0
-        while (j < per) { out(i + j) = word & m; word = word >>> width; j += 1 }
-        i += per
-      }
-      if (i < count) {
-        var word = words(w)
-        while (i < count) { out(i) = word & m; word = word >>> width; i += 1 }
-      }
-    } else {
-      // general widths: running word/offset cursors instead of per-value
-      // 64-bit multiply + div/mod
-      var i = 0
-      var w = 0
-      var off = 0
-      while (i < count) {
-        var v = words(w) >>> off
-        if (off + width > 64) v |= words(w + 1) << (64 - off)
-        out(i) = v & m
-        off += width
-        if (off >= 64) { off -= 64; w += 1 }
-        i += 1
-      }
-    }
+    require(width <= 64, s"btr: bit width $width > 64 (corrupt chunk)")
+    val off = in.pos
+    // bounds-check the packed words against the reader's slice (its
+    // backing array may be a reused buffer longer than the chunk)
+    in.skip(packedBytes(count, width))
+    BitpackKernel.unpack(in.array, off, count, width, out)
   }
 
   def unpackAlloc(in: BufReader, count: Int, width: Int): Array[Long] = {

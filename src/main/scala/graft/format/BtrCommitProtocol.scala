@@ -118,13 +118,7 @@ object ConditionalPutCommit extends BtrCommitPrimitive {
     try {
       val st = fs.getFileStatus(dst)
       if (st.getLen != body.length) false
-      else {
-        val b = new Array[Byte](body.length)
-        val in = fs.open(dst)
-        try in.readFully(0, b)
-        finally in.close()
-        java.util.Arrays.equals(b, body)
-      }
+      else java.util.Arrays.equals(BtrFs.readFile(fs, dst, body.length), body)
     } catch { case _: java.io.IOException => false }
 }
 

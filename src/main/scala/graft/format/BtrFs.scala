@@ -1,6 +1,6 @@
 package graft.format
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
 
 /** Filesystem capability gate for the commit protocol.
   *
@@ -70,5 +70,47 @@ object BtrFs {
           "preconditions), or put the table on an HDFS-semantics filesystem " +
           "(hdfs/abfs/local), or — for a SINGLE-writer deployment that accepts " +
           s"the risk — set spark.hadoop.$OverrideKey=true.")
+  }
+
+  /** Stream buffer for btr reads. Chunk reads go straight into the
+    * caller's array in whole checksum chunks, so the stream's own buffer
+    * holds only a checksum chunk's tail and the `.crc` reads; a larger one
+    * reads ahead past a split's last chunk. At Spark's
+    * `io.file.buffer.size` of 64 KiB, a four-split scan of a 0.8 MB table
+    * read 1.19× its data and checksum bytes.
+    */
+  val ReadBufferBytes = 4096
+
+  /** Open a btr data or metadata file for [[readAt]]. */
+  def open(fs: FileSystem, path: Path): FSDataInputStream = fs.open(path, ReadBufferBytes)
+
+  /** Read `len` bytes at `offset` of an open file into `buf(off ...)`:
+    * a seek plus a sequential read on that one stream. Every btr file
+    * read goes through here instead of the positional
+    * `readFully(position, ...)`, which on a `ChecksumFileSystem` (the
+    * local filesystem included) opens a fresh checker on the data file
+    * and its `.crc` per call (118–126 µs per call even for a 15 KB chunk,
+    * Hadoop 3.4 on a 4-CPU Xeon) and re-reads the checksum chunks at
+    * both ends. The stream is still
+    * the filesystem's checksummed one: every CRC is verified.
+    */
+  def readAt(in: FSDataInputStream, offset: Long, buf: Array[Byte], off: Int, len: Int): Unit = {
+    in.seek(offset)
+    in.readFully(buf, off, len)
+  }
+
+  def readAt(in: FSDataInputStream, offset: Long, len: Int): Array[Byte] = {
+    val buf = new Array[Byte](len)
+    readAt(in, offset, buf, 0, len)
+    buf
+  }
+
+  /** A small file's first `len` bytes (metadata files and deletion
+    * vectors pass the whole length) in one sequential read.
+    */
+  def readFile(fs: FileSystem, path: Path, len: Int): Array[Byte] = {
+    val in = open(fs, path)
+    try readAt(in, 0L, len)
+    finally in.close()
   }
 }

@@ -87,7 +87,10 @@ final class BufReader(bytes: Array[Byte], start: Int, end: Int) {
   private val bb: ByteBuffer =
     ByteBuffer.wrap(bytes, start, end - start).order(ByteOrder.LITTLE_ENDIAN)
 
+  /** Absolute index into [[array]]. */
   def pos: Int = bb.position()
+  /** The backing array, for kernels that read a slice in place. */
+  def array: Array[Byte] = bytes
   def remaining: Int = bb.remaining()
   def getByte(): Int = bb.get() & 0xff
   def getInt(): Int = bb.getInt()
@@ -100,6 +103,7 @@ final class BufReader(bytes: Array[Byte], start: Int, end: Int) {
     while (i < n) { a(i) = bb.getLong(); i += 1 }
     a
   }
+  /** Advance `n` bytes; fails if that passes the slice's end. */
   def skip(n: Int): Unit = bb.position(bb.position() + n)
 
   /** Independent reader over the same bytes at the current position

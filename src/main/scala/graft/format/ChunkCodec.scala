@@ -867,6 +867,29 @@ object ChunkCodec {
     }
   }
 
+  /** Grow-only decode outputs one scan column reuses from chunk to chunk
+    * (the reader keeps one per required column). A [[Decoded]] built on
+    * them is valid only until the next decode into the same set, and its
+    * arrays may be longer than its `count`: consumers read `[0, count)`.
+    */
+  final class ScanOut {
+    private var nullsBuf: Array[Boolean] = _
+    private var longsBuf: Array[Long] = _
+    private var doublesBuf: Array[Double] = _
+    def nulls(n: Int): Array[Boolean] = {
+      if (nullsBuf == null || nullsBuf.length < n) nullsBuf = new Array[Boolean](n)
+      nullsBuf
+    }
+    def longs(n: Int): Array[Long] = {
+      if (longsBuf == null || longsBuf.length < n) longsBuf = new Array[Long](n)
+      longsBuf
+    }
+    def doubles(n: Int): Array[Double] = {
+      if (doublesBuf == null || doublesBuf.length < n) doublesBuf = new Array[Double](n)
+      doublesBuf
+    }
+  }
+
   /** Scan-side decode: identical to [[decode]] except DICT chunks keep
     * their dictionary structure (entries + codes) instead of
     * materializing every row — the reader hands Spark a
@@ -876,18 +899,36 @@ object ChunkCodec {
     * to access time, so rows a late-materialization filter rejects never
     * resolve. Booleans stay materialized (Spark vectors don't consult
     * dictionaries for getBoolean).
+    *
+    * `out` (optional) makes a top-level scalar column decode into reused
+    * buffers: its null flags, non-dict long and double values and
+    * dictionary codes. Struct, map and array columns and string values
+    * still allocate.
     */
   def decodeForScan(in: BufReader, tag: Int, count: Int,
-      wantLeaves: Array[Boolean] = null): Decoded = {
+      wantLeaves: Array[Boolean] = null, out: ScanOut = null): Decoded = {
     if (tag == PhysType.Struct) {
       val (isNull, hasNulls) = NullMap.decodeWithFlag(in, count)
       val (leaves, tags) = decodeStructLeaves(in, count, wantLeaves, forScan = true)
       return new Decoded(count, isNull, hasNulls, null, null, null, null,
         structLeaves = leaves, structTags = tags)
     }
+    val scalar = PhysType.isStringFamily(tag) || tag == PhysType.Double ||
+      (PhysType.isIntFamily(tag) && tag != PhysType.Bool) || tag == PhysType.Float
+    if (!scalar) {
+      return if (tag == PhysType.KvMap || tag == PhysType.ArrStruct)
+        // wantLeaves names the VALUE-struct (map) / element-struct
+        // (array<struct>) leaves to keep
+        decode(in, tag, count, wantValueLeaves = wantLeaves)
+      else decode(in, tag, count)
+    }
+    val (isNull, hasNulls) =
+      NullMap.decodeWithFlag(in, count, if (out == null) null else out.nulls(count))
+    // codes and non-dict values share the column's long buffer: a chunk
+    // is one or the other
+    val longsOut = if (out == null) null else out.longs(count)
     if (PhysType.isStringFamily(tag)) {
-      val (isNull, hasNulls) = NullMap.decodeWithFlag(in, count)
-      val view = StringCodec.decodeDictView(in, count)
+      val view = StringCodec.decodeDictView(in, count, longsOut)
       if (view != null)
         new Decoded(count, isNull, hasNulls, view.codes, null, null, null,
           dictEntries = view.entries)
@@ -896,23 +937,25 @@ object ChunkCodec {
         new Decoded(count, isNull, hasNulls, null, null, lens, bytes)
       }
     } else if (tag == PhysType.Double) {
-      val (isNull, hasNulls) = NullMap.decodeWithFlag(in, count)
-      val view = DoubleCodec.decodeDictView(in, count)
+      val view = DoubleCodec.decodeDictView(in, count, longsOut)
       if (view != null)
         new Decoded(count, isNull, hasNulls, view.codes, null, null, null,
           dictLongs = view.entries)
-      else new Decoded(count, isNull, hasNulls, null, DoubleCodec.decode(in, count), null, null)
-    } else if ((PhysType.isIntFamily(tag) && tag != PhysType.Bool) || tag == PhysType.Float) {
-      val (isNull, hasNulls) = NullMap.decodeWithFlag(in, count)
-      val view = IntCodec.decodeDictView(in, count)
+      else {
+        val doubles = if (out == null) new Array[Double](count) else out.doubles(count)
+        DoubleCodec.decodeInto(in, count, doubles)
+        new Decoded(count, isNull, hasNulls, null, doubles, null, null)
+      }
+    } else {
+      val view = IntCodec.decodeDictView(in, count, longsOut)
       if (view != null)
         new Decoded(count, isNull, hasNulls, view.codes, null, null, null,
           dictLongs = view.entries)
-      else new Decoded(count, isNull, hasNulls, IntCodec.decode(in, count), null, null, null)
-    } else if (tag == PhysType.KvMap || tag == PhysType.ArrStruct)
-      // wantLeaves names the VALUE-struct (map) / element-struct
-      // (array<struct>) leaves to keep
-      decode(in, tag, count, wantValueLeaves = wantLeaves)
-    else decode(in, tag, count)
+      else {
+        val longs = if (longsOut == null) new Array[Long](count) else longsOut
+        IntCodec.decodeInto(in, count, longs)
+        new Decoded(count, isNull, hasNulls, longs, null, null, null)
+      }
+    }
   }
 }

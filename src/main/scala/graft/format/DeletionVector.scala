@@ -178,11 +178,7 @@ object DeletionVector {
   }
 
   def readBlob(fs: FileSystem, path: Path): Blob = {
-    val len = fs.getFileStatus(path).getLen.toInt
-    val bytes = new Array[Byte](len)
-    val in = fs.open(path)
-    try in.readFully(0, bytes) finally in.close()
-    deserialize(bytes)
+    deserialize(BtrFs.readFile(fs, path, fs.getFileStatus(path).getLen.toInt))
   }
 
   /** The union mask of every blob targeting one data file. Group slicing

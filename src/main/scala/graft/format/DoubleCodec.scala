@@ -719,14 +719,16 @@ object DoubleCodec {
   /** Top-level DICT chunk as (raw-bits entries, codes) — same lazy
     * dictionary contract as [[IntCodec.decodeDictView]]; entries stay as
     * the stored long bits (the vector dictionary converts on access).
-    * Returns null (with `in` unadvanced) for every other scheme.
+    * Returns null (with `in` unadvanced) for every other scheme. The
+    * codes land in `codesOut` when given.
     */
-  def decodeDictView(in: BufReader, count: Int): IntCodec.DictView = {
+  def decodeDictView(in: BufReader, count: Int, codesOut: Array[Long] = null): IntCodec.DictView = {
     val probe = in.duplicate()
     if (probe.getByte() != Dict) return null
     val dictSize = probe.getInt()
     val bits = probe.getLongs(dictSize)
-    val codes = IntCodec.decode(probe, count)
+    val codes = if (codesOut != null) codesOut else new Array[Long](count)
+    IntCodec.decodeInto(probe, count, codes)
     new IntCodec.DictView(bits, codes)
   }
 

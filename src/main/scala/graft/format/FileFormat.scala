@@ -224,10 +224,11 @@ object BtrFile {
     v
   }
 
-  /** Footer-only read: positioned-read the 8-byte tail (footerLen + magic)
-    * then just the footer slice. Planning I/O is O(footer bytes), never
-    * O(data bytes), and offsets are long-safe for files > 2 GiB — the
-    * analog of the reference reading only `metadata` at plan time
+  /** Footer-only read: the 8-byte header, the 8-byte tail (footerLen +
+    * magic), then just the footer slice, all on one open stream. Planning
+    * I/O is O(footer bytes), never O(data bytes), and offsets are
+    * long-safe for files > 2 GiB — the analog of the reference reading
+    * only `metadata` at plan time
     * (tools/conversion/decompression-speed.cpp:113-120).
     */
   /** Count of per-file footer tail-reads (diagnostic: specs assert the
@@ -249,22 +250,16 @@ object BtrFile {
   def readFooter(fs: FileSystem, file: Path, fileLen: Long): Footer = {
     footerTailReads.incrementAndGet()
     require(fileLen > 16, s"btr file too short: $file")
-    val in = fs.open(file)
+    val in = BtrFs.open(fs, file)
     try {
-      val head = new Array[Byte](8)
-      in.readFully(0L, head)
-      val v = checkHeader(new BufReader(head), file)
-      val tail = new Array[Byte](8)
-      in.readFully(fileLen - 8L, tail)
-      val tr = new BufReader(tail)
+      val v = checkHeader(new BufReader(BtrFs.readAt(in, 0L, 8)), file)
+      val tr = new BufReader(BtrFs.readAt(in, fileLen - 8L, 8))
       val footerLen = tr.getInt()
       require(
         java.util.Arrays.equals(tr.getBytes(4), Magic),
         s"bad btr magic in tail of $file")
       require(footerLen > 0 && footerLen <= fileLen - 16, s"bad footerLen $footerLen in $file")
-      val buf = new Array[Byte](footerLen)
-      in.readFully(fileLen - 8L - footerLen, buf)
-      parseFooterBody(new BufReader(buf), v)
+      parseFooterBody(new BufReader(BtrFs.readAt(in, fileLen - 8L - footerLen, footerLen)), v)
     } finally in.close()
   }
 
@@ -437,11 +432,7 @@ object BtrFooterIndex {
       val st =
         try fs.getFileStatus(p)
         catch { case _: java.io.FileNotFoundException => return Map.empty }
-      val bytes = new Array[Byte](st.getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, bytes)
-      finally in.close()
-      val r = new BufReader(bytes)
+      val r = new BufReader(BtrFs.readFile(fs, p, st.getLen.toInt))
       if (!java.util.Arrays.equals(r.getBytes(4), Magic)) return Map.empty
       if (r.getInt() != BtrFile.Version) return Map.empty
       val n = r.getInt()

@@ -662,13 +662,15 @@ object IntCodec {
     * ColumnVector (ids only) and values resolve lazily on access, so
     * rows a late-materialization filter rejects never touch the entry
     * array. Returns null (with `in` unadvanced) for every other scheme.
+    * The codes land in `codesOut` when given (at least `count` long),
+    * else in a fresh array.
     */
-  def decodeDictView(in: BufReader, count: Int): DictView = {
+  def decodeDictView(in: BufReader, count: Int, codesOut: Array[Long] = null): DictView = {
     val probe = in.duplicate()
     if (probe.getByte() != Dict) return null
     val dictSize = probe.getInt()
     val entries = decode(probe, dictSize)
-    val codes = new Array[Long](count)
+    val codes = if (codesOut != null) codesOut else new Array[Long](count)
     decodeInto(probe, count, codes)
     new DictView(entries, codes)
   }

@@ -47,23 +47,29 @@ object NullMap {
     decodeWithFlag(in, count)._1
 
   /** Decode returning (flags, anyNull) — the flag lets readers take a
-    * null-check-free bulk-copy fast path for all-valid chunks.
+    * null-check-free bulk-copy fast path for all-valid chunks. `reuse`,
+    * when non-null, receives the flags in its first `count` slots (it
+    * may be longer) instead of a fresh array.
     */
-  def decodeWithFlag(in: BufReader, count: Int): (Array[Boolean], Boolean) = {
-    val isNull = new Array[Boolean](count)
+  def decodeWithFlag(in: BufReader, count: Int,
+      reuse: Array[Boolean] = null): (Array[Boolean], Boolean) = {
+    val isNull = if (reuse != null) reuse else new Array[Boolean](count)
     var any = true
     in.getByte() match {
-      case NoNulls => any = false
-      case AllNulls => java.util.Arrays.fill(isNull, true)
+      case NoNulls =>
+        any = false
+        if (reuse != null) java.util.Arrays.fill(isNull, 0, count, false)
+      case AllNulls => java.util.Arrays.fill(isNull, 0, count, true)
       case kind =>
         val n = in.getInt()
         val width = in.getByte()
         val positions = Bitpack.unpackAlloc(in, n, width)
         if (kind == NullPositions) {
+          if (reuse != null) java.util.Arrays.fill(isNull, 0, count, false)
           var i = 0
           while (i < n) { isNull(positions(i).toInt) = true; i += 1 }
         } else {
-          java.util.Arrays.fill(isNull, true)
+          java.util.Arrays.fill(isNull, 0, count, true)
           var i = 0
           while (i < n) { isNull(positions(i).toInt) = false; i += 1 }
         }

@@ -227,9 +227,10 @@ object StringCodec {
     * hand Spark a dictionary-encoded ColumnVector instead of
     * materializing every row; ONE_VALUE yields a 1-entry dictionary.
     * Returns null (with `in` unadvanced) for UNCOMPRESSED/FSST — the
-    * caller falls back to the materializing [[decode]].
+    * caller falls back to the materializing [[decode]]. DICT codes land
+    * in `codesOut` when given.
     */
-  def decodeDictView(in: BufReader, count: Int): DictView = {
+  def decodeDictView(in: BufReader, count: Int, codesOut: Array[Long] = null): DictView = {
     val probe = in.duplicate()
     probe.getByte() match {
       case OneValue =>
@@ -256,7 +257,8 @@ object StringCodec {
           off += dictLens(j)
           j += 1
         }
-        val codes = IntCodec.decode(probe, count)
+        val codes = if (codesOut != null) codesOut else new Array[Long](count)
+        IntCodec.decodeInto(probe, count, codes)
         new DictView(entries, codes)
       case _ => null
     }

@@ -186,10 +186,8 @@ object BtrInspect {
         val len = ffs.getFileStatus(p).getLen
         val ok =
           try {
-            val in = ffs.open(p)
-            val tail = new Array[Byte](8)
-            try in.readFully(len - 8L, tail)
-            finally in.close()
+            val in = BtrFs.open(ffs, p)
+            val tail = try BtrFs.readAt(in, len - 8L, 8) finally in.close()
             val footerLen = new BufReader(tail).getInt()
             val footer = BtrFile.readFooter(ffs, p, len)
             val chunks = footer.rowGroups.flatMap(_.columns)
@@ -306,16 +304,14 @@ object BtrInspect {
         val ffs = p.getFileSystem(BtrTableMeta.hadoopConf())
         val len = ffs.getFileStatus(p).getLen
         val footer = BtrFile.readFooter(ffs, p, len)
-        val in = ffs.open(p)
+        val in = BtrFs.open(ffs, p)
         val rows = footer.rowGroups.toSeq.zipWithIndex.flatMap { case (rg, g) =>
           // schema evolution: describe only what the file stores (columns
           // it predates would index past its footer)
           fields.toSeq.zipWithIndex.take(rg.columns.length).map { case ((name, typ, tag), c) =>
             val meta = rg.columns(c)
-            // positioned read of just this chunk's blob (long-safe offsets)
-            val blob = new Array[Byte](meta.length)
-            in.readFully(meta.offset, blob)
-            val reader = new BufReader(blob)
+            // just this chunk's blob (long-safe offsets)
+            val reader = new BufReader(BtrFs.readAt(in, meta.offset, meta.length))
             val (nullKind, tree) = BlockDescribe.describeChunk(reader, tag, rg.numRows)
             val uncompressed = tag match {
               case t if PhysType.isIntFamily(t) || t == PhysType.Float =>

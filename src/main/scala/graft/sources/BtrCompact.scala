@@ -44,11 +44,9 @@ object BtrCompact {
   final case class Bin(dirUri: String, files: Seq[String])
 
   private def footerSpan(fs: FileSystem, file: Path, fileLen: Long): (Long, Int) = {
-    val in = fs.open(file)
+    val in = BtrFs.open(fs, file)
     try {
-      val tail = new Array[Byte](8)
-      in.readFully(fileLen - 8L, tail)
-      val tr = new BufReader(tail)
+      val tr = new BufReader(BtrFs.readAt(in, fileLen - 8L, 8))
       val footerLen = tr.getInt()
       require(footerLen > 0 && footerLen <= fileLen - 16, s"bad footerLen $footerLen in $file")
       (fileLen - 8L - footerLen, footerLen)
@@ -110,11 +108,12 @@ object BtrCompact {
         val (footerStart, _) = footerSpan(fs, src, len)
         // stream the data span [8, footerStart) verbatim
         val delta = cursor - 8L
-        val in = fs.open(src)
+        val in = BtrFs.open(fs, src)
         try {
           var pos = 8L
+          in.seek(pos)
           while (pos < footerStart) {
-            val n = in.read(pos, buf, 0, math.min(buf.length.toLong, footerStart - pos).toInt)
+            val n = in.read(buf, 0, math.min(buf.length.toLong, footerStart - pos).toInt)
             require(n > 0, s"btr compact: short read in $src at $pos")
             out.write(buf, 0, n)
             pos += n

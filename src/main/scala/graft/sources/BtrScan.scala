@@ -2050,9 +2050,8 @@ class BtrAggReader(
                       // chunk-local one did (and vice versa) — only the TRUE
                       // total exceeding Long is order-independent, and the
                       // emit path raises exactly there.
-                      if (dataIn == null) dataIn = fs.open(p)
-                      val blob = new Array[Byte](m.length)
-                      dataIn.readFully(m.offset, blob, 0, m.length)
+                      if (dataIn == null) dataIn = BtrFs.open(fs, p)
+                      val blob = BtrFs.readAt(dataIn, m.offset, m.length)
                       val tag = graft.format.PhysType.of(tableSchema.fields(c).dataType)
                       val dec = ChunkCodec.decode(new graft.format.BufReader(blob), tag, rg.numRows)
                       var i = 0
@@ -2090,9 +2089,8 @@ class BtrAggReader(
                 val wantMin = needMin(c) && !minPruned
                 val wantMax = needMax(c) && !maxPruned
                 if ((wantMin && !m.minExact) || (wantMax && !m.maxExact)) {
-                  if (dataIn == null) dataIn = fs.open(p)
-                  val blob = new Array[Byte](m.length)
-                  dataIn.readFully(m.offset, blob, 0, m.length)
+                  if (dataIn == null) dataIn = BtrFs.open(fs, p)
+                  val blob = BtrFs.readAt(dataIn, m.offset, m.length)
                   val tag = graft.format.PhysType.of(tableSchema.fields(c).dataType)
                   val dec = ChunkCodec.decode(new graft.format.BufReader(blob), tag, rg.numRows)
                   var i = 0
@@ -2514,6 +2512,12 @@ final class BtrReadBuffers(requiredSchema: StructType, maxRows: Int) {
   // wide scans would otherwise allocate one Array[Byte] per column per row
   // group — pure GC churn, the blob is dead the moment decode returns
   val blobBufs = new Array[Array[Byte]](requiredSchema.length)
+  // grow-only per-column decode outputs, for the same reason: a chunk's
+  // values are dead once they are copied into its vector. Slices of a
+  // packed split share them, so each decode may land in arrays longer
+  // than its chunk, holding a previous chunk's tail
+  val decodeOuts: Array[ChunkCodec.ScanOut] =
+    Array.fill(requiredSchema.length)(new ChunkCodec.ScanOut)
 }
 
 /** Vectorized reader: one ColumnarBatch per row group, decoded straight
@@ -2589,6 +2593,7 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
   private var maskedBatch: ColumnarBatch = _
   private var emitMasked = false
   private var blobBufs: Array[Array[Byte]] = _
+  private var decodeOuts: Array[ChunkCodec.ScanOut] = _
 
   // Spark's DataSourceRDD closes a task's PREVIOUS reader when the same
   // partition is computed again within one task (self-zip / multi-consume,
@@ -2596,7 +2601,7 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
   // close() releases only the stream, and next() lazily reopens it —
   // vectors are on-heap and GC-managed, so nothing else needs freeing.
   private def in(): org.apache.hadoop.fs.FSDataInputStream = {
-    if (stream == null) stream = fs.open(new Path(partition.file))
+    if (stream == null) stream = BtrFs.open(fs, new Path(partition.file))
     stream
   }
 
@@ -2617,6 +2622,7 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
     vectors = buffers.vectors
     batch = buffers.batch
     blobBufs = buffers.blobBufs
+    decodeOuts = buffers.decodeOuts
     if (partition.dvBlobs.nonEmpty) {
       def load(paths: Array[String]) = paths.map { bp =>
         val p = new Path(bp)
@@ -2684,10 +2690,10 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
         buf = new Array[Byte](len)
         blobBufs(d) = buf
       }
-      in().readFully(g.offsets(d), buf, 0, len)
+      BtrFs.readAt(in(), g.offsets(d), buf, 0, len)
       BtrLateMat.chunkDecodes.incrementAndGet()
       val dec = ChunkCodec.decodeForScan(new BufReader(buf, 0, len), tags(c), g.numRows,
-        wantLeaves = structWant(c))
+        wantLeaves = structWant(c), out = decodeOuts(c))
       fillVector(vectors(c), requiredSchema.fields(c).dataType, tags(c), dec, g.numRows,
         leafMap = structMap(c),
         fullDt = fullStructs.get(requiredSchema.fields(c).name).orNull)

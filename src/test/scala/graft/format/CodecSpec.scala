@@ -66,6 +66,92 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 
+  test("bitpack reads its words in place and only inside the reader's slice") {
+    val rnd = new Random(43)
+    for (width <- Seq(1, 7, 8, 13, 32, 33, 63, 64); n <- Seq(1, 63, 64, 65, 1000)) {
+      val vals = Array.fill(n)(rnd.nextLong() & Bitpack.mask(width))
+      val out = new BufWriter()
+      out.putInt(0x5eed) // the words start mid-array
+      Bitpack.pack(vals, n, width, out)
+      val packed = out.result()
+      // a reused buffer: the slice is followed by a stale tail
+      val buf = java.util.Arrays.copyOf(packed, packed.length + 64)
+      java.util.Arrays.fill(buf, packed.length, buf.length, 0xff.toByte)
+      val in = new BufReader(buf, 0, packed.length)
+      in.skip(4)
+      val back = new Array[Long](n + 3)
+      java.util.Arrays.fill(back, 7L)
+      Bitpack.unpack(in, n, width, back)
+      assert(back.take(n).toSeq == vals.toSeq, s"width $width n $n")
+      assert(back.drop(n).forall(_ == 7L), "unpack wrote past count")
+      assert(in.remaining == 0)
+      // a slice one byte short of the words fails instead of reading the tail
+      val short = new BufReader(buf, 4, packed.length - 1)
+      assertThrows[IllegalArgumentException](Bitpack.unpack(short, n, width, back))
+    }
+  }
+
+  test("decodeForScan into reused buffers: 65,536, then 1, then 0 values") {
+    val rnd = new Random(44)
+    def chunk(tag: Int, n: Int, withNulls: Boolean): ColumnChunk = {
+      val c = new ColumnChunk(tag, n)
+      c.isNull = Array.tabulate(n)(i => withNulls && i % 5 == 0)
+      if (tag == PhysType.Double)
+        c.doubles = Array.tabulate(n)(i => if (c.isNull(i)) 0.0 else rnd.nextInt(10000) / 100.0)
+      else if (tag == PhysType.Str) c.strings = Array.tabulate(n)(i =>
+        if (c.isNull(i)) Array.emptyByteArray else s"v${rnd.nextInt(1 + n / 8)}".getBytes("UTF-8"))
+      else c.longs = Array.tabulate(n)(i => if (c.isNull(i)) 0L else 1000000L + rnd.nextInt(1 << 20))
+      c
+    }
+    def encoded(c: ColumnChunk, cfg: BtrConfig): Array[Byte] = {
+      val out = new BufWriter()
+      ChunkCodec.encode(out, c, 3, cfg)
+      out.result()
+    }
+    val configs = Seq(
+      PhysType.Int64 -> BtrConfig.Default,
+      PhysType.Int64 -> BtrConfig.Default.copy(forceInt = Some(IntCodec.Dict)),
+      PhysType.Int32 -> BtrConfig.Default.copy(forceInt = Some(IntCodec.ForBp)),
+      PhysType.Double -> BtrConfig.Default,
+      PhysType.Double -> BtrConfig.Default.copy(forceDouble = Some(DoubleCodec.Dict)),
+      PhysType.Str -> BtrConfig.Default.copy(forceString = Some(StringCodec.Dict)))
+    for ((tag, cfg) <- configs) {
+      val reused = new ChunkCodec.ScanOut
+      // the first, largest chunk has nulls and the smaller ones none, so
+      // a stale flag or value would show in the later ones
+      for ((n, nulls) <- Seq(65536 -> true, 1 -> false, 0 -> false)) {
+        val c = chunk(tag, n, nulls)
+        // a forced scheme cannot encode an empty chunk
+        val bytes = encoded(c, if (n == 0) BtrConfig.Default else cfg)
+        val fresh = ChunkCodec.decodeForScan(new BufReader(bytes), tag, n)
+        val dec = ChunkCodec.decodeForScan(new BufReader(bytes), tag, n, out = reused)
+        assert(dec.hasNulls == fresh.hasNulls && dec.hasNulls == (n > 0 && nulls), s"tag $tag n $n")
+        val strOff = if (dec.strLens == null) null else dec.strLens.take(n).scanLeft(0)(_ + _)
+        var i = 0
+        while (i < n) {
+          assert(dec.isNull(i) == c.isNull(i), s"tag $tag n $n null flag at $i")
+          if (!c.isNull(i)) {
+            if (tag == PhysType.Str) {
+              val v =
+                if (dec.dictEntries == null)
+                  java.util.Arrays.copyOfRange(dec.strBytes, strOff(i), strOff(i) + dec.strLens(i))
+                else if (dec.longs == null) dec.dictEntries(0)
+                else dec.dictEntries(dec.longs(i).toInt)
+              assert(java.util.Arrays.equals(v, c.strings(i)), s"n $n row $i")
+            } else if (dec.dictLongs != null) {
+              val bits = dec.dictLongs(dec.longs(i).toInt)
+              val want =
+                if (tag == PhysType.Double) java.lang.Double.doubleToRawLongBits(c.doubles(i)) else c.longs(i)
+              assert(bits == want, s"tag $tag n $n row $i")
+            } else if (tag == PhysType.Double) assert(dec.doubles(i) == c.doubles(i), s"n $n row $i")
+            else assert(dec.longs(i) == c.longs(i), s"tag $tag n $n row $i")
+          }
+          i += 1
+        }
+      }
+    }
+  }
+
   // --- nullmap ---
   test("nullmap four kinds round-trip") {
     val rnd = new Random(7)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.format.Bloom
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,11 +20,6 @@ class BloomSkipSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(name: String) = s"/tmp/btr-bloom-spec/$name"
-
-  private def survivingGroups(df: DataFrame): Int =
-    df.queryExecution.executedPlan.collectLeaves().head
-      .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-      .inputPartitions.collect { case p: BtrInputPartition => p }.map(_.groups.length).sum
 
   test("split-block bloom core: no false negatives, low false-positive rate") {
     val present = (0 until 1000).map(i => Bloom.hashBytes(s"key-$i".getBytes))
@@ -52,7 +47,7 @@ class BloomSkipSpec extends AnyFunSuite {
     // absent value lexicographically inside every chunk's bounds
     val absent = back.filter($"key" === "id-00500x")
     assert(absent.count() == 0)
-    assert(survivingGroups(absent) == 0,
+    assert(ScanGroups.surviving(absent) == 0,
       "bloom should prune all groups for an in-range absent string")
 
     // every present value is found (no false skip), probing one per group
@@ -63,7 +58,7 @@ class BloomSkipSpec extends AnyFunSuite {
 
     // In() with all-absent values prunes; with one present value it doesn't
     val inAbsent = back.filter($"key".isin("id-00500x", "id-00777x"))
-    assert(inAbsent.count() == 0 && survivingGroups(inAbsent) == 0)
+    assert(inAbsent.count() == 0 && ScanGroups.surviving(inAbsent) == 0)
     val inMixed = back.filter($"key".isin("id-00500x", rows.head._2))
     assert(inMixed.count() == rows.count(_._2 == rows.head._2))
   }
@@ -79,7 +74,7 @@ class BloomSkipSpec extends AnyFunSuite {
     val missing = (0 until 100000).find(x => !rows.exists(_._1 == x)).get
     val q = back.filter($"k" === missing)
     assert(q.count() == 0)
-    assert(survivingGroups(q) == 0, s"bloom should prune all groups for absent int $missing")
+    assert(ScanGroups.surviving(q) == 0, s"bloom should prune all groups for absent int $missing")
 
     val presentKey = rows(513)._1
     assert(back.filter($"k" === presentKey).count() == rows.count(_._1 == presentKey))
@@ -125,6 +120,6 @@ class BloomSkipSpec extends AnyFunSuite {
     assert(back.count() == 1024)
     val absent = back.filter($"key" === "id-00500x")
     assert(absent.count() == 0)
-    assert(survivingGroups(absent) == 0, "bloom pruning must survive compaction + index")
+    assert(ScanGroups.surviving(absent) == 0, "bloom pruning must survive compaction + index")
   }
 }

@@ -127,10 +127,7 @@ class BtrCompactSpec extends AnyFunSuite {
     df.repartition(4).write.format("btr").option("btr.blockSize", "2048")
       .mode("overwrite").save(dirRand)
     def surviving(path: String): Int = {
-      val q = spark.read.format("btr").load(path).filter(col("k").between(10000, 20000))
-      q.queryExecution.executedPlan.collectLeaves().head
-        .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-        .inputPartitions.collect { case p: BtrInputPartition => p }.map(_.groups.length).sum
+      ScanGroups.surviving(spark.read.format("btr").load(path).filter(col("k").between(10000, 20000)))
     }
     val expected = df.filter(col("k").between(10000, 20000)).count()
     assert(spark.read.format("btr").load(dir)
@@ -153,13 +150,7 @@ class BtrCompactSpec extends AnyFunSuite {
     }
     val expected = sortedRows(spark.read.format("btr").load(dir))
     def surviving(): Int = {
-      val q = spark.read.format("btr").load(dir).filter(col("k").between(10000, 30000))
-      q.queryExecution.executedPlan.collectLeaves().head
-        .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-        .inputPartitions.flatMap {
-          case pk: BtrPackedInputPartition => pk.slices.toSeq
-          case p: BtrInputPartition => Seq(p)
-        }.map(_.groups.length).sum
+      ScanGroups.surviving(spark.read.format("btr").load(dir).filter(col("k").between(10000, 30000)))
     }
     val beforeGroups = surviving()
     val (nb, na) = BtrCompact.rewriteClustered(spark, dir, Seq("k"), targetBytes = 1L << 30)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,14 +20,6 @@ class BtrEvolutionSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(name: String) = s"/tmp/btr-evolution-spec/$name"
-
-  private def survivingGroups(df: DataFrame): Int =
-    df.queryExecution.executedPlan.collectLeaves().head
-      .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-      .inputPartitions.flatMap {
-        case pk: BtrPackedInputPartition => pk.slices.toSeq
-        case p: BtrInputPartition => Seq(p)
-      }.map(_.groups.length).sum
 
   private def writeEvolved(dir: String): Unit = {
     (1 to 100).map(i => (i.toLong, s"old-$i")).toDF("id", "s")
@@ -52,15 +44,15 @@ class BtrEvolutionSpec extends AnyFunSuite {
   test("filters on the added column prune pre-widening row groups at planning") {
     writeEvolved(tmp("prune"))
     val back = spark.read.format("btr").load(tmp("prune"))
-    val allGroups = survivingGroups(back.filter($"id".isNotNull))
+    val allGroups = ScanGroups.surviving(back.filter($"id".isNotNull))
     // IsNotNull(extra): every old group is provably all-null → skipped
     val notNull = back.filter($"extra".isNotNull)
     assert(notNull.count() == 60)
-    assert(survivingGroups(notNull) < allGroups, "old groups must be pruned")
+    assert(ScanGroups.surviving(notNull) < allGroups, "old groups must be pruned")
     // equality on the added column also proves old groups can't match
     val eq = back.filter($"extra" === 1010)
     assert(eq.count() == 1)
-    assert(survivingGroups(eq) <= 2, s"expected near-total pruning, got ${survivingGroups(eq)}")
+    assert(ScanGroups.surviving(eq) <= 2, s"expected near-total pruning, got ${ScanGroups.surviving(eq)}")
     // IsNull matches every old row — nothing lost
     assert(back.filter($"extra".isNull).count() == 100)
   }
@@ -208,7 +200,7 @@ class BtrEvolutionSpec extends AnyFunSuite {
     // equality far above the old files' max prunes every old group
     val hit = back.filter($"k" === 100L)
     assert(hit.count() == 1)
-    assert(survivingGroups(hit) <= 2, s"got ${survivingGroups(hit)}")
+    assert(ScanGroups.surviving(hit) <= 2, s"got ${ScanGroups.surviving(hit)}")
     // metadata-only SUM/MIN/MAX across mixed int32/int64 footers
     val agg = back.agg(sum($"k").as("sk"), min($"k").as("mn"), max($"k").as("mx"),
       min($"x").as("mnx"), max($"x").as("mxx"))

@@ -75,15 +75,8 @@ class BtrSourceSpec extends AnyFunSuite {
     val got = back.filter(col("l_orderkey") > maxKey - 10).count()
     assert(got == expected)
     // partition planning must produce fewer splits than total groups
-    val scanExec = back.filter(col("l_orderkey") > maxKey - 10)
-      .queryExecution.executedPlan.collectLeaves().head
-      .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-    val parts = scanExec.inputPartitions.collect { case p: BtrInputPartition => p }
-    val survivingGroups = parts.map(_.groups.length).sum
-    val allGroups = spark.read.format("btr").load(tmp("lineitem_small"))
-      .queryExecution.executedPlan.collectLeaves().head
-      .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-      .inputPartitions.collect { case p: BtrInputPartition => p }.map(_.groups.length).sum
+    val survivingGroups = ScanGroups.surviving(back.filter(col("l_orderkey") > maxKey - 10))
+    val allGroups = ScanGroups.surviving(spark.read.format("btr").load(tmp("lineitem_small")))
     assert(survivingGroups < allGroups, s"expected chunk skipping: $survivingGroups vs $allGroups")
   }
 
@@ -93,20 +86,15 @@ class BtrSourceSpec extends AnyFunSuite {
       .option("btr.blockSize", "512").mode("overwrite").save(tmp("lineitem_str"))
     val back = spark.read.format("btr").load(tmp("lineitem_str"))
 
-    def survivingGroups(df: DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().head
-        .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-        .inputPartitions.collect { case p: BtrInputPartition => p }.map(_.groups.length).sum
-
     // 'Z' is above every l_returnflag value -> every row group pruned
     val none = back.filter(col("l_returnflag") === "Z")
     assert(none.count() == 0)
-    assert(survivingGroups(none) == 0, "expected all row groups pruned for 'Z'")
+    assert(ScanGroups.surviving(none) == 0, "expected all row groups pruned for 'Z'")
 
     // 'R' exists: results match parquet, and sorting means some groups pruned
     val r = back.filter(col("l_returnflag") === "R")
     assert(r.count() == orig.filter(col("l_returnflag") === "R").count())
-    assert(survivingGroups(r) < survivingGroups(back.filter(col("l_returnflag").isNotNull)),
+    assert(ScanGroups.surviving(r) < ScanGroups.surviving(back.filter(col("l_returnflag").isNotNull)),
       "expected partial pruning on sorted string column")
   }
 
@@ -416,16 +404,12 @@ class BtrSourceSpec extends AnyFunSuite {
     orig.sort("p_brand").coalesce(1).write.format("btr")
       .option("btr.blockSize", "32").mode("overwrite").save(tmp("part_prefix"))
     val back = spark.read.format("btr").load(tmp("part_prefix"))
-    def surviving(df: DataFrame): Int =
-      df.queryExecution.executedPlan.collectLeaves().head
-        .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-        .inputPartitions.collect { case p: BtrInputPartition => p }.map(_.groups.length).sum
     val hit = back.filter(col("p_brand").startsWith("Brand#3"))
     assert(hit.count() == orig.filter(col("p_brand").startsWith("Brand#3")).count())
-    assert(surviving(hit) < surviving(back.filter(col("p_brand").isNotNull)))
+    assert(ScanGroups.surviving(hit) < ScanGroups.surviving(back.filter(col("p_brand").isNotNull)))
     val none = back.filter(col("p_brand").startsWith("Zrand"))
     assert(none.count() == 0)
-    assert(surviving(none) == 0)
+    assert(ScanGroups.surviving(none) == 0)
   }
 
   test("btr.sampleChunks plans a seeded random chunk subset (getRanges RANDOM analog)") {
@@ -488,14 +472,12 @@ class BtrSourceSpec extends AnyFunSuite {
     val scan = back.queryExecution.sparkPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
     }.head.asInstanceOf[BtrScan]
-    val before = scan.planInputPartitions()
-      .collect { case p: BtrInputPartition => p.groups.length }.sum
+    val before = ScanGroups.count(scan.planInputPartitions().toSeq)
     // simulate Spark delivering a runtime IN-set of join keys
     val minKey = orig.agg(min("l_orderkey")).head.getLong(0)
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("l_orderkey", Array(minKey, minKey + 1))))
-    val after = scan.planInputPartitions()
-      .collect { case p: BtrInputPartition => p.groups.length }.sum
+    val after = ScanGroups.count(scan.planInputPartitions().toSeq)
     assert(after < before, s"runtime filter should prune: $after vs $before")
     assert(after >= 1)
   }
@@ -513,13 +495,9 @@ class BtrSourceSpec extends AnyFunSuite {
     assertSameRows(df, back)
 
     // range predicate prunes row groups via unscaled-long stats
-    def surviving(d: DataFrame): Int =
-      d.queryExecution.executedPlan.collectLeaves().head
-        .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-        .inputPartitions.collect { case p: BtrInputPartition => p }.map(_.groups.length).sum
     val hit = back.filter(col("price") > BigDecimal("39.00"))
     assert(hit.count() == df.filter(col("price") > BigDecimal("39.00")).count())
-    assert(surviving(hit) < surviving(back.filter(col("price").isNotNull)))
+    assert(ScanGroups.surviving(hit) < ScanGroups.surviving(back.filter(col("price").isNotNull)))
 
     // metadata-only min/max/count
     val agg = back.agg(count(col("price")), min(col("price")), max(col("price")))
@@ -571,9 +549,7 @@ class BtrSourceSpec extends AnyFunSuite {
       .option("btr.blockSize", "512").mode("overwrite").save(tmp("li_limit"))
     val limited = spark.read.format("btr").load(tmp("li_limit")).limit(5)
     assert(limited.count() == 5)
-    val planned = limited.queryExecution.executedPlan.collectLeaves().head
-      .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-      .inputPartitions.collect { case p: BtrInputPartition => p }.map(_.groups.length).sum
+    val planned = ScanGroups.surviving(limited)
     assert(planned == 1, s"expected a single planned row group for limit 5, got $planned")
   }
 

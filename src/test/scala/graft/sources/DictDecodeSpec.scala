@@ -79,6 +79,47 @@ class DictDecodeSpec extends AnyFunSuite {
     assert(flat.dictEntries == null && flat.strBytes != null)
   }
 
+  test("reused scan buffers: a DICT chunk then smaller non-dict chunks of 1 and 0 values") {
+    val n = 65536
+    val reused = new ChunkCodec.ScanOut
+    def enc(c: ColumnChunk, cfg: BtrConfig): Array[Byte] = {
+      val out = new BufWriter()
+      ChunkCodec.encode(out, c, 3, cfg)
+      out.result()
+    }
+    def ints(count: Int, f: Int => Long) = {
+      val c = new ColumnChunk(PhysType.Int64, count)
+      c.longs = Array.tabulate(count)(i => f(i))
+      c
+    }
+    // int: the DICT chunk's codes and the later values share one buffer
+    val dict = enc(ints(n, i => (i % 7L) * 1000003L), BtrConfig.Default.copy(forceInt = Some(IntCodec.Dict)))
+    val d = ChunkCodec.decodeForScan(new BufReader(dict), PhysType.Int64, n, out = reused)
+    assert(d.dictLongs != null)
+    assert((0 until n).forall(i => d.dictLongs(d.longs(i).toInt) == (i % 7L) * 1000003L))
+    for (m <- Seq(1, 0)) {
+      val flat = enc(ints(m, i => 5000000L + i), BtrConfig.Default.copy(forceInt = Some(IntCodec.ForBp)))
+      val f = ChunkCodec.decodeForScan(new BufReader(flat), PhysType.Int64, m, out = reused)
+      assert(f.dictLongs == null && !f.hasNulls)
+      assert((0 until m).forall(i => f.longs(i) == 5000000L + i), s"$m values")
+    }
+    // string: a DICT view's codes, then a materialized chunk of 1 and 0 rows
+    val pool = Array("a", "bb", "ccc")
+    val sd = enc(chunkOf(Array.tabulate(n)(i => utf8(pool(i % 3))), Array.tabulate(n)(_ % 11 == 0)),
+      BtrConfig.Default.copy(forceString = Some(StringCodec.Dict)))
+    val sv = ChunkCodec.decodeForScan(new BufReader(sd), PhysType.Str, n, out = reused)
+    assert(sv.dictEntries != null && sv.hasNulls)
+    assert((0 until n).forall(i =>
+      sv.isNull(i) || new String(sv.dictEntries(sv.longs(i).toInt), "UTF-8") == pool(i % 3)))
+    for (m <- Seq(1, 0)) {
+      val su = enc(chunkOf(Array.tabulate(m)(i => utf8(s"u$i")), new Array[Boolean](m)),
+        BtrConfig.Default.copy(forceString = Some(StringCodec.Uncompressed)))
+      val u = ChunkCodec.decodeForScan(new BufReader(su), PhysType.Str, m, out = reused)
+      assert(u.dictEntries == null && !u.hasNulls && (0 until m).forall(i => !u.isNull(i)))
+      assert(new String(u.strBytes, "UTF-8") == (0 until m).map(i => s"u$i").mkString)
+    }
+  }
+
   test("dictionary read path is bit-equal to forced-uncompressed read end to end") {
     import spark.implicits._
     // low-cardinality strings (dict fires), sprinkled nulls, empty string

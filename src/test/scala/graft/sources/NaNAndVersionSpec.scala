@@ -24,11 +24,6 @@ class NaNAndVersionSpec extends AnyFunSuite {
     case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
   }.head
 
-  private def survivingGroups(df: DataFrame): Int =
-    df.queryExecution.executedPlan.collectLeaves().head
-      .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-      .inputPartitions.collect { case p: BtrInputPartition => p }.map(_.groups.length).sum
-
   test("GreaterThan chunk skipping keeps NaN rows (hasNaN guard)") {
     import spark.implicits._
     // chunk 0: [NaN, 10, 11, 12] — non-NaN max 12; chunk 1: [1, 2, 3, 4]
@@ -42,13 +37,13 @@ class NaNAndVersionSpec extends AnyFunSuite {
     val gt = back.filter(col("v") > 25.0)
     assert(gt.count() == 1, "the NaN row matches col > 25 under Spark ordering")
     assert(gt.collect().head.getDouble(0).isNaN)
-    assert(survivingGroups(gt) == 1, "clean chunk skipped, NaN chunk kept")
+    assert(ScanGroups.surviving(gt) == 1, "clean chunk skipped, NaN chunk kept")
 
     // LessThan skipping stays effective: NaN rows can never match col < v,
     // so the NaN chunk's (non-NaN) min remains a valid proof
     val lt = back.filter(col("v") < 5.0)
     assert(lt.count() == 4)
-    assert(survivingGroups(lt) == 1, "NaN chunk min=10 proves col<5 empty there")
+    assert(ScanGroups.surviving(lt) == 1, "NaN chunk min=10 proves col<5 empty there")
   }
 
   test("double min/max push down metadata-only and stay NaN-exact") {

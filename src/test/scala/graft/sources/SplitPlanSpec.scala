@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.read.InputPartition
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,33 +43,25 @@ class SplitPlanSpec extends AnyFunSuite {
   private def read(p: String, opts: (String, String)*): DataFrame =
     spark.read.format("btr").options(opts.toMap).load(p)
 
-  private def planned(df: DataFrame): Seq[InputPartition] =
-    df.queryExecution.executedPlan.collectLeaves().head.asInstanceOf[BatchScanExec].inputPartitions
-
-  private def slicesOf(p: InputPartition): Seq[BtrInputPartition] = p match {
-    case pk: BtrPackedInputPartition => pk.slices.toSeq
-    case s: BtrInputPartition => Seq(s)
-  }
-
   private def bytesOf(p: InputPartition): Long =
-    slicesOf(p).flatMap(_.groups).map(_.lengths.map(_.toLong).sum).sum
+    ScanGroups.slicesOf(p).flatMap(_.groups).map(_.lengths.map(_.toLong).sum).sum
 
   private def groupIds(parts: Seq[InputPartition]): Seq[(String, Long)] =
-    parts.flatMap(slicesOf).flatMap(s => s.groups.map(g => (s.file, g.firstOrdinal)))
+    parts.flatMap(ScanGroups.slicesOf).flatMap(s => s.groups.map(g => (s.file, g.firstOrdinal)))
 
   test("a 5-file unpartitioned table plans one split per core, each row group once") {
-    val parts = planned(read(five, "btr.splitParallelism" -> "4"))
+    val parts = ScanGroups.planned(read(five, "btr.splitParallelism" -> "4"))
     assert(parts.length == 4, s"expected 4 splits on 4 cores, got ${parts.length}")
-    val files = parts.flatMap(slicesOf).map(_.file).distinct
+    val files = parts.flatMap(ScanGroups.slicesOf).map(_.file).distinct
     assert(files.length == Files, s"precondition: $Files files, got ${files.length}")
     assert(parts.exists(_.isInstanceOf[BtrPackedInputPartition]),
       "expected at least one share to cross a file boundary")
     val ids = groupIds(parts)
     assert(ids.distinct.length == ids.length, "a row group was planned twice")
-    val whole = groupIds(planned(read(five, "btr.splitParallelism" -> "1")))
+    val whole = groupIds(ScanGroups.planned(read(five, "btr.splitParallelism" -> "1")))
     assert(whole.length == Files * GroupsPerFile)
     assert(ids.sorted == whole.sorted, "the shares must cover every row group")
-    assert(parts.flatMap(slicesOf).flatMap(_.groups).map(_.numRows.toLong).sum ==
+    assert(parts.flatMap(ScanGroups.slicesOf).flatMap(_.groups).map(_.numRows.toLong).sum ==
       Files.toLong * GroupsPerFile * GroupRows)
     // shares are contiguous in file order: concatenated, they are the
     // single split's order
@@ -79,10 +70,10 @@ class SplitPlanSpec extends AnyFunSuite {
 
   test("share bytes differ by at most one row group") {
     for (p <- Seq(3, 4, 6)) {
-      val parts = planned(read(five, "btr.splitParallelism" -> p.toString))
+      val parts = ScanGroups.planned(read(five, "btr.splitParallelism" -> p.toString))
       assert(parts.length == p)
       val shares = parts.map(bytesOf)
-      val maxGroup = parts.flatMap(slicesOf).flatMap(_.groups)
+      val maxGroup = parts.flatMap(ScanGroups.slicesOf).flatMap(_.groups)
         .map(_.lengths.map(_.toLong).sum).max
       assert(shares.max - shares.min <= maxGroup,
         s"P=$p: share bytes ${shares.mkString(",")} differ by more than one group ($maxGroup)")
@@ -90,9 +81,9 @@ class SplitPlanSpec extends AnyFunSuite {
   }
 
   test("a small btr.maxSplitBytes plans a whole number of waves") {
-    val total = planned(read(five, "btr.splitParallelism" -> "4")).map(bytesOf).sum
+    val total = ScanGroups.planned(read(five, "btr.splitParallelism" -> "4")).map(bytesOf).sum
     // 10 splits' worth of bytes on 4 cores rounds up to 3 waves
-    val parts = planned(read(five, "btr.splitParallelism" -> "4",
+    val parts = ScanGroups.planned(read(five, "btr.splitParallelism" -> "4",
       "btr.maxSplitBytes" -> (total / 10).toString))
     assert(parts.length % 4 == 0, s"expected whole waves of 4, got ${parts.length}")
     assert(parts.length == 12, s"expected 3 waves of 4, got ${parts.length}")
@@ -112,7 +103,7 @@ class SplitPlanSpec extends AnyFunSuite {
     def check(): Unit = {
       val one = answer(1)
       for (par <- Seq(3, 4)) {
-        assert(planned(read(p, "btr.splitParallelism" -> par.toString))
+        assert(ScanGroups.planned(read(p, "btr.splitParallelism" -> par.toString))
           .exists(_.isInstanceOf[BtrPackedInputPartition]), "precondition: a packed share")
         assert(answer(par) == one, s"splitParallelism=$par differs from one split")
       }
@@ -126,7 +117,7 @@ class SplitPlanSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.catalog.graft", classOf[BtrCatalog].getName)
     spark.sql(s"ALTER TABLE graft.`$p` SET TBLPROPERTIES ('btr.deletionVectors'='true')")
     spark.sql(s"DELETE FROM graft.`$p` WHERE id % 7 = 0 OR id BETWEEN 9000 AND 9999")
-    assert(planned(read(p, "btr.splitParallelism" -> "4")).flatMap(slicesOf)
+    assert(ScanGroups.planned(read(p, "btr.splitParallelism" -> "4")).flatMap(ScanGroups.slicesOf)
       .exists(_.dvBlobs.nonEmpty), "precondition: deletion vectors on planned slices")
     check()
     val kept = answer(4)

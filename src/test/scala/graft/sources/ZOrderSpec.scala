@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,11 +19,6 @@ class ZOrderSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(name: String) = s"/tmp/btr-zorder-spec/$name"
-
-  private def survivingGroups(df: DataFrame): Int =
-    df.queryExecution.executedPlan.collectLeaves().head
-      .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-      .inputPartitions.collect { case p: BtrInputPartition => p }.map(_.groups.length).sum
 
   // 100x100 grid in shuffled order: every (x, y) pair exactly once
   private lazy val grid = {
@@ -64,13 +59,13 @@ class ZOrderSpec extends AnyFunSuite {
     BtrCompact.rewriteClustered(spark, tmp("ranged"), Seq("x"), targetBytes = 1L << 20)
     val ranged = spark.read.format("btr").load(tmp("ranged"))
 
-    val total = survivingGroups(zed.filter($"x".isNotNull))
+    val total = ScanGroups.surviving(zed.filter($"x".isNotNull))
 
     // point probes on each dimension: z-order prunes both
-    val zx = survivingGroups(zed.filter($"x" === 42))
-    val zy = survivingGroups(zed.filter($"y" === 42))
-    val rx = survivingGroups(ranged.filter($"x" === 42))
-    val ry = survivingGroups(ranged.filter($"y" === 42))
+    val zx = ScanGroups.surviving(zed.filter($"x" === 42))
+    val zy = ScanGroups.surviving(zed.filter($"y" === 42))
+    val rx = ScanGroups.surviving(ranged.filter($"x" === 42))
+    val ry = ScanGroups.surviving(ranged.filter($"y" === 42))
     assert(zed.filter($"x" === 42).count() == 100 && zed.filter($"y" === 42).count() == 100)
     assert(zx < total / 2, s"zorder x probe: $zx of $total groups")
     assert(zy < total / 2, s"zorder y probe: $zy of $total groups")

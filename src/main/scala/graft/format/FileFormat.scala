@@ -224,18 +224,6 @@ object BtrFile {
     v
   }
 
-  /** Footer-only read: the 8-byte header, the 8-byte tail (footerLen +
-    * magic), then just the footer slice, all on one open stream. Planning
-    * I/O is O(footer bytes), never O(data bytes), and offsets are
-    * long-safe for files > 2 GiB — the analog of the reference reading
-    * only `metadata` at plan time
-    * (tools/conversion/decompression-speed.cpp:113-120).
-    */
-  /** Count of per-file footer tail-reads (diagnostic: specs assert the
-    * footer-index sidecar eliminates them on covered tables).
-    */
-  val footerTailReads = new java.util.concurrent.atomic.AtomicLong()
-
   /** Standalone serialized footer body (for shipping planner-cached
     * footers to executor tasks inside input partitions).
     */
@@ -247,8 +235,14 @@ object BtrFile {
 
   def footerFromBody(bytes: Array[Byte]): Footer = parseFooterBody(new BufReader(bytes))
 
+  /** Footer-only read: the 8-byte header, the 8-byte tail (footerLen +
+    * magic), then just the footer slice, all on one open stream. Planning
+    * I/O is O(footer bytes), never O(data bytes), and offsets are
+    * long-safe for files > 2 GiB — the analog of the reference reading
+    * only `metadata` at plan time
+    * (tools/conversion/decompression-speed.cpp:113-120).
+    */
   def readFooter(fs: FileSystem, file: Path, fileLen: Long): Footer = {
-    footerTailReads.incrementAndGet()
     require(fileLen > 16, s"btr file too short: $file")
     val in = BtrFs.open(fs, file)
     try {

@@ -655,18 +655,6 @@ object SimilarityOps {
     }
   }
 
-  /** Per-session drift telemetry of the last [[ivfIndexAppend]]:
-    * (rowsAssigned, driftRatio) where driftRatio = the increment's mean
-    * cosine-to-assigned-centroid over the build-time mean. A ratio well
-    * below 1 means the corpus distribution has drifted off the centroids
-    * (time to re-fit); surfaced loudly below 0.8. Weak keys: the value is
-    * session-free, so a stopped-and-dropped session's entry collects with
-    * it instead of pinning the session for the driver's lifetime.
-    */
-  val lastIvfDrift: java.util.Map[org.apache.spark.sql.SparkSession, (Long, Double)] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, (Long, Double)]())
-
   private[graft] def centroidsOf(spark: org.apache.spark.sql.SparkSession, indexDir: String)
       : Seq[(Int, Seq[Double], Double)] =
     centroidsAt(spark, ivfIndexState(indexDir).root)
@@ -1350,7 +1338,6 @@ object SimilarityOps {
         if (ms.isEmpty) 1.0 else ms.sum / ms.length
       }
       val drift = if (buildMean <= 0) 1.0 else incMean / buildMean
-      lastIvfDrift.put(spark, (n, drift))
       if (n > 0 && drift < 0.8)
         org.apache.log4j.Logger.getLogger(getClass).warn(
           f"ivfIndexAppend: increment mean centroid-cosine $incMean%.4f is " +
@@ -1559,7 +1546,7 @@ object SimilarityOps {
   /** Corpus-level drift probe: the mean centroid-cosine of a seeded,
     * bounded sample of `candidates` (assigned map-only against the
     * persisted centroids) over the BUILD-TIME mean — the whole-corpus
-    * analog of the per-append [[lastIvfDrift]] telemetry. ≈1 means the
+    * analog of the drift ratio each [[ivfIndexAppend]] returns. ≈1 means the
     * centroids still describe the corpus; well below 1 means the
     * embedding distribution has moved and recall is degrading. One
     * bounded job: the sample is capped at `sampleRows` regardless of

@@ -4,6 +4,7 @@ import graft.format._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.aggregate
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -537,11 +538,15 @@ class BtrScan(
 
   private def dvByTarget: Map[String, Array[String]] = dvResolved._1
 
-  private lazy val discovered: Array[(BtrTableMeta.DataFileEntry, BtrFile.Footer)] = {
+  // footers with the number of them tail-read (the rest came from the
+  // footer-index sidecar)
+  private lazy val discoveredAndReads: (Array[(BtrTableMeta.DataFileEntry, BtrFile.Footer)], Int) = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(BtrTableMeta.hadoopConf())
-    BtrFooters.readAllIndexed(fs, dir, dvAndEntries._2)
+    BtrFooters.readCounted(fs, dir, dvAndEntries._2)
   }
+
+  private def discovered: Array[(BtrTableMeta.DataFileEntry, BtrFile.Footer)] = discoveredAndReads._1
 
   /** Table statistics from footers only: row count is exact; size is the
     * DECODED bytes of the REQUIRED columns (post-pruning) — per-column
@@ -862,6 +867,8 @@ class BtrScan(
   // once, not twice, per query
   private var plannedFor: Array[Filter] = null
   private var planned: Array[InputPartition] = _
+  // row groups the last planning pruned by footer stats or bloom
+  private var statsPruned = 0L
 
   override def planInputPartitions(): Array[InputPartition] = {
     require(!readChanges,
@@ -909,6 +916,7 @@ class BtrScan(
     // one slice per surviving file (its row groups filled in below), in
     // listing order
     val slices = scala.collection.mutable.ArrayBuffer.empty[BtrInputPartition]
+    var pruned = 0L
     val live = rewriteNarrow match {
       case Some(set) => discovered.filter { case (e, _) => set.contains(e.path.toString) }
       case None => discovered
@@ -973,10 +981,9 @@ class BtrScan(
         footer.rowGroups.foreach { rg =>
           val groupBase = ordinal
           ordinal += rg.numRows
-          val underLimit = rowBudget.forall(n => plannedRows < n)
-          val keep = underLimit &&
-            (allFilters.isEmpty || !allFilters.exists(f => ChunkSkip.canSkip(dataSchema, rg, f)))
-          if (keep) {
+          // a row budget exists only without filters, so the two never meet
+          if (allFilters.exists(f => ChunkSkip.canSkip(dataSchema, rg, f))) pruned += 1
+          else if (rowBudget.forall(n => plannedRows < n)) {
             // schema evolution: columns a pre-widening file lacks plan as
             // the all-null sentinel (offset -1) and synthesize in the reader
             val offsets = dataIdx.map(ci =>
@@ -1008,8 +1015,28 @@ class BtrScan(
         fileRuns(picked.sorted.map(flat))
       case None => slices.toSeq
     }
+    statsPruned = pruned
     if (partCols.isEmpty) balancedShares(sampled)
     else packSmallSplits(sampled.flatMap(splitFile).toArray)
+  }
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    BtrScanMetrics.scanMetrics
+
+  /** Planning counts of the final planning (Spark asks after runtime
+    * filtering, once per scan node).
+    */
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    if (planned == null) return Array.empty // never planned: nothing to report
+    val groups = planned.iterator.map {
+      case p: BtrPackedInputPartition => p.slices.iterator.map(_.groups.length.toLong).sum
+      case p: BtrInputPartition => p.groups.length.toLong
+      case _ => 0L
+    }.sum
+    Array(
+      BtrScanMetrics.value(BtrScanMetrics.PlannedGroups, groups),
+      BtrScanMetrics.value(BtrScanMetrics.StatsPrunedGroups, statsPruned),
+      BtrScanMetrics.value(BtrScanMetrics.FooterReads, discoveredAndReads._2.toLong))
   }
 
   /** Target tasks per wave: `btr.splitParallelism`, else the session's
@@ -1245,18 +1272,26 @@ object BtrFooters {
       fs: org.apache.hadoop.fs.FileSystem,
       root: Path,
       entries: Array[BtrTableMeta.DataFileEntry]
-  ): Array[(BtrTableMeta.DataFileEntry, BtrFile.Footer)] = {
-    if (entries.isEmpty) return Array.empty
+  ): Array[(BtrTableMeta.DataFileEntry, BtrFile.Footer)] = readCounted(fs, root, entries)._1
+
+  /** [[readAllIndexed]] with the number of footers it tail-read. */
+  def readCounted(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: Path,
+      entries: Array[BtrTableMeta.DataFileEntry]
+  ): (Array[(BtrTableMeta.DataFileEntry, BtrFile.Footer)], Int) = {
+    if (entries.isEmpty) return (Array.empty, 0)
     val cached = BtrFooterIndex.read(fs, root)
     if (cached.isEmpty)
-      return readAll(entries)(e => BtrFile.readFooter(fs, e.path, e.len))
+      return (readAll(entries)(e => BtrFile.readFooter(fs, e.path, e.len)), entries.length)
     val qualified = fs.makeQualified(root)
     def key(e: BtrTableMeta.DataFileEntry) = BtrFooterIndex.keyOf(qualified, e)
-    if (entries.forall(e => cached.contains(key(e))))
-      entries.map(e => (e, cached(key(e))))
+    val uncovered = entries.count(e => !cached.contains(key(e)))
+    if (uncovered == 0)
+      (entries.map(e => (e, cached(key(e)))), 0)
     else
-      readAll(entries)(e =>
-        cached.getOrElse(key(e), BtrFile.readFooter(fs, e.path, e.len)))
+      (readAll(entries)(e =>
+        cached.getOrElse(key(e), BtrFile.readFooter(fs, e.path, e.len))), uncovered)
   }
 
   /** Rebuild the footer-index sidecar from the current listing, reusing
@@ -1922,6 +1957,9 @@ class BtrAggScan(path: String, tableSchema: StructType, agg: aggregate.Aggregati
       .map(b => BtrAggPartition(b.map(_._1), b.map(_._2), b.map(_._3)): InputPartition).toArray
   }
 
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    BtrScanMetrics.aggMetrics
+
   override def createReaderFactory(): PartitionReaderFactory = {
     val sp = specs
     val dsch = dataSchema
@@ -1989,6 +2027,7 @@ class BtrAggReader(
 
   private var rowsIter: Iterator[InternalRow] = _
   private var current: InternalRow = _
+  private var footerReads = 0L
 
   // same directory-value parse the partition-key and fillConstant paths
   // use; one shared implementation so adding a partition type is one edit
@@ -2008,7 +2047,10 @@ class BtrAggReader(
       val footer =
         if (partition.footers != null && partition.footers(f) != null)
           BtrFile.footerFromBody(partition.footers(f))
-        else BtrFile.readFooter(fs, p, fs.getFileStatus(p).getLen)
+        else {
+          footerReads += 1
+          BtrFile.readFooter(fs, p, fs.getFileStatus(p).getLen)
+        }
       // lazily opened only if some string chunk needs a decode fallback
       var dataIn: org.apache.hadoop.fs.FSDataInputStream = null
       try {
@@ -2206,6 +2248,12 @@ class BtrAggReader(
   }
 
   override def get(): InternalRow = current
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    Array(BtrScanMetrics.value(BtrScanMetrics.FooterReads, footerReads))
+
+  override def initMetricsValues(prior: Array[CustomTaskMetric]): Unit =
+    prior.foreach(m => if (m.name() == BtrScanMetrics.FooterReads) footerReads += m.value())
 
   override def close(): Unit = ()
 }
@@ -2422,7 +2470,8 @@ class BtrReaderFactory(requiredSchema: StructType, filters: Array[Filter] = Arra
 /** Chains one [[BtrColumnarReader]] per packed slice — per-slice reader
   * state (file stream, physical tags, partition constants) stays where it
   * was; this just sequences them inside one task, over one vector set
-  * sized for the largest row group of any slice.
+  * sized for the largest row group of any slice and one set of work
+  * counts.
   */
 class BtrPackedColumnarReader(packed: BtrPackedInputPartition,
     requiredSchema: StructType, filters: Array[Filter],
@@ -2432,13 +2481,14 @@ class BtrPackedColumnarReader(packed: BtrPackedInputPartition,
   private var cur: BtrColumnarReader = null
   private lazy val buffers = new BtrReadBuffers(requiredSchema,
     packed.slices.iterator.flatMap(_.groups.iterator).map(_.numRows).foldLeft(0)(math.max))
+  private val counts = new BtrReadCounts
 
   override def next(): Boolean = {
     while (true) {
       if (cur == null) {
         if (idx >= packed.slices.length) return false
         cur = new BtrColumnarReader(packed.slices(idx), requiredSchema, filters, fullStructs,
-          posCol, buffers)
+          posCol, buffers, counts)
         idx += 1
       }
       if (cur.next()) return true
@@ -2450,6 +2500,10 @@ class BtrPackedColumnarReader(packed: BtrPackedInputPartition,
 
   override def get(): ColumnarBatch = cur.get()
 
+  override def currentMetricsValues(): Array[CustomTaskMetric] = counts.values
+
+  override def initMetricsValues(prior: Array[CustomTaskMetric]): Unit = counts.add(prior)
+
   // mid-task close/resume (DataSourceRDD closes the previous reader when
   // one task computes the same partition twice, e.g. self-zip): release
   // only the in-flight slice's stream and KEEP cur/idx — nulling cur here
@@ -2459,13 +2513,6 @@ class BtrPackedColumnarReader(packed: BtrPackedInputPartition,
   override def close(): Unit = if (cur != null) cur.close()
 }
 
-/** Spark-side dictionary over a DICT string chunk's distinct entries.
-  * `decodeToBinary` returns the SHARED entry array (no copy) — the same
-  * contract as Spark's own ParquetDictionary, whose decodeToBinary hands
-  * out the page dictionary's backing bytes. Entries are immutable after
-  * decode. Mirrors the reference's zero-copy dict view
-  * (/root/reference/btrblocks/storage/StringPointerArrayViewer.hpp:11-26).
-  */
 /** Spark-side dictionary over a numeric DICT chunk's distinct entries:
   * the stored longs (double chunks: raw bits; float chunks: raw int
   * bits). The accessor conversions double as the type-widening upcast —
@@ -2486,6 +2533,13 @@ final class BtrNumericDictionary(entries: Array[Long], tag: Int)
     throw new UnsupportedOperationException("btr numeric dictionary")
 }
 
+/** Spark-side dictionary over a DICT string chunk's distinct entries.
+  * `decodeToBinary` returns the SHARED entry array (no copy) — the same
+  * contract as Spark's own ParquetDictionary, whose decodeToBinary hands
+  * out the page dictionary's backing bytes. Entries are immutable after
+  * decode. Mirrors the reference's zero-copy dict view
+  * (btrblocks/storage/StringPointerArrayViewer.hpp:11-26).
+  */
 final class BtrStringDictionary(entries: Array[Array[Byte]])
     extends org.apache.spark.sql.execution.vectorized.Dictionary {
   override def decodeToBinary(id: Int): Array[Byte] = entries(id)
@@ -2529,7 +2583,9 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
     filters: Array[Filter] = Array.empty,
     fullStructs: Map[String, StructType] = Map.empty, posCol: Int = -1,
     // a packed split's slices share one set; a lone split makes its own
-    shared: BtrReadBuffers = null)
+    shared: BtrReadBuffers = null,
+    // work counts for the task metrics, shared by a packed split's slices
+    counts: BtrReadCounts = new BtrReadCounts)
     extends PartitionReader[ColumnarBatch] {
 
   private val fs = new Path(partition.file).getFileSystem(BtrTableMeta.hadoopConf())
@@ -2691,7 +2747,7 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
         blobBufs(d) = buf
       }
       BtrFs.readAt(in(), g.offsets(d), buf, 0, len)
-      BtrLateMat.chunkDecodes.incrementAndGet()
+      counts.decodedChunks += 1
       val dec = ChunkCodec.decodeForScan(new BufReader(buf, 0, len), tags(c), g.numRows,
         wantLeaves = structWant(c), out = decodeOuts(c))
       fillVector(vectors(c), requiredSchema.fields(c).dataType, tags(c), dec, g.numRows,
@@ -2742,7 +2798,7 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
         if (!anyRowPasses(g.numRows)) {
           // stats/bloom couldn't prove this group empty but the decoded
           // filter columns do — siblings are never decoded
-          BtrLateMat.groupsSkipped.incrementAndGet()
+          counts.lateMatSkippedGroups += 1
           survives = false
         }
       }
@@ -3115,6 +3171,10 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
 
   override def get(): ColumnarBatch = if (emitMasked) maskedBatch else batch
 
+  override def currentMetricsValues(): Array[CustomTaskMetric] = counts.values
+
+  override def initMetricsValues(prior: Array[CustomTaskMetric]): Unit = counts.add(prior)
+
   override def close(): Unit = {
     // only the stream: a concurrent consumer in the same task may still
     // hold the batch (see DataSourceRDD note above); vectors are on-heap
@@ -3125,7 +3185,6 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
   }
 }
 
-/** Chunk-skipping predicate evaluation against footer min/max stats. */
 /** Row-level evaluation of pushed filters against FILLED vectors (late
   * materialization). [[build]] returns the referenced required-schema
   * column indices plus a predicate where pred(row)==false PROVES the
@@ -3139,13 +3198,6 @@ class BtrColumnarReader(partition: BtrInputPartition, requiredSchema: StructType
   */
 object BtrLateMat {
   import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-
-  /** Diagnostics: groups dropped after decoding only their filter
-    * columns / total column-chunk decodes (specs assert sibling decodes
-    * drop under a selective conjunction).
-    */
-  val groupsSkipped = new java.util.concurrent.atomic.AtomicLong()
-  val chunkDecodes = new java.util.concurrent.atomic.AtomicLong()
 
   def build(schema: StructType, vectors: Array[OnHeapColumnVector], f: Filter)
       : Option[(Seq[Int], Int => Boolean)] = f match {
@@ -3334,6 +3386,7 @@ object BtrLateMat {
   }
 }
 
+/** Chunk-skipping predicate evaluation against footer min/max stats. */
 object ChunkSkip {
   def supports(schema: StructType, f: Filter): Boolean = f match {
     case EqualTo(a, v) => statable(schema, a) && litOk(v)

@@ -11,10 +11,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * session time zone and the `graft` btr catalog registered.
   */
 object Kit {
+  /** Local threads of a graft session: `SPARK_GRAFT_CPUS`, else the
+    * available processors.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Run a tool's body in the kit's session and stop the session after it. */
   def withSession[T](app: String)(body: SparkSession => T): T = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val cpus = Kit.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(app)

@@ -13,10 +13,11 @@ object JobProbe {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
+    val cpus = graft.tools.Kit.cpus
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[$cpus]")
       .appName("job-probe")
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -10,10 +10,11 @@ object TimeOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1)
+    val cpus = graft.tools.Kit.cpus
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[$cpus]")
       .appName("time-one")
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -510,7 +510,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       "append must not touch existing assignments")
     // same-distribution increment → no drift warning zone
     assert(drift > 0.8 && drift < 1.25, s"drift ratio $drift")
-    assert(SimilarityOps.lastIvfDrift.get(spark) == ((n, drift)))
     // every appended assignment equals a FRESH assignment against the
     // persisted centroids (the incremental path loses nothing)
     val centers = SimilarityOps.centroidsOf(spark, dir).map(_._2)

@@ -58,15 +58,16 @@ class BtrFooterIndexSpec extends AnyFunSuite {
     val dir = tmp("zeroreads")
     writeSample(dir)
     val expected = sortedRows(spark.read.format("btr").load(dir))
-    val before = BtrFile.footerTailReads.get()
     // sum(hash(id)) is NOT answerable from footer stats, so this plans the
     // data-scan path (BtrScan.discovered) and then reads chunk payloads —
     // with a covering index neither step tail-reads a footer. (COUNT(*)
     // would take the metadata-only agg path, which tail-reads per task on
     // purpose: that parallelism is the point of partial agg pushdown.)
-    val n = spark.read.format("btr").load(dir)
-      .selectExpr("sum(hash(id))").collect().head.getLong(0)
-    val delta = BtrFile.footerTailReads.get() - before
+    var n = 0L
+    val delta = ScanMetrics.during(spark) {
+      n = spark.read.format("btr").load(dir)
+        .selectExpr("sum(hash(id))").collect().head.getLong(0)
+    }(BtrScanMetrics.FooterReads)
     assert(n != 0)
     assert(delta == 0, s"expected 0 footer tail-reads with a covering index, saw $delta")
     assert(sortedRows(spark.read.format("btr").load(dir)) == expected)
@@ -79,14 +80,13 @@ class BtrFooterIndexSpec extends AnyFunSuite {
       .selectExpr("count(*)", "min(id)", "max(id)", "min(v)", "max(v)")
       .collect().head
     val expected = agg()
-    val c0 = BtrFile.footerTailReads.get()
-    assert(agg() == expected)
-    assert(BtrFile.footerTailReads.get() == c0,
+    val indexed = ScanMetrics.during(spark)(assert(agg() == expected))(BtrScanMetrics.FooterReads)
+    assert(indexed == 0,
       "indexed agg pushdown must not tail-read footers in tasks")
     // without the index the same query still answers identically
     fsOf(dir).delete(new Path(dir, BtrFooterIndex.IndexFile), false)
-    assert(agg() == expected)
-    assert(BtrFile.footerTailReads.get() > c0, "fallback path should tail-read")
+    val fallback = ScanMetrics.during(spark)(assert(agg() == expected))(BtrScanMetrics.FooterReads)
+    assert(fallback > 0, "fallback path should tail-read")
   }
 
   test("a deleted or corrupt index falls back to tail-reads with identical results") {
@@ -166,9 +166,10 @@ class BtrFooterIndexSpec extends AnyFunSuite {
       "index must cover the merged files")
     assert(sortedRows(spark.read.format("btr").load(dir)) == expected)
     // and planning off the refreshed index is tail-read-free again
-    val c0 = BtrFile.footerTailReads.get()
-    spark.read.format("btr").load(dir).selectExpr("sum(hash(id))").collect()
-    assert(BtrFile.footerTailReads.get() == c0,
+    val reads = ScanMetrics.during(spark) {
+      spark.read.format("btr").load(dir).selectExpr("sum(hash(id))").collect()
+    }(BtrScanMetrics.FooterReads)
+    assert(reads == 0,
       "post-compaction scan should plan from the refreshed index")
   }
 }

@@ -156,9 +156,10 @@ class BtrPartitionSpec extends AnyFunSuite {
     assert(back.filter(col("ts_hour") >= cutoff).count() == 40)
     // hour-grain retention DELETE stays metadata-only (directory drops)
     spark.conf.set("spark.sql.catalog.graft", classOf[BtrCatalog].getName)
-    val before = BtrLateMat.chunkDecodes.get()
-    spark.sql(s"DELETE FROM graft.`$p` WHERE ts_hour < TIMESTAMP '2026-03-01 12:00:00'")
-    assert(BtrLateMat.chunkDecodes.get() == before, "retention DELETE decoded data")
+    val decodes = ScanMetrics.during(spark) {
+      spark.sql(s"DELETE FROM graft.`$p` WHERE ts_hour < TIMESTAMP '2026-03-01 12:00:00'")
+    }(BtrScanMetrics.DecodedChunks)
+    assert(decodes == 0, "retention DELETE decoded data")
     assert(spark.read.format("btr").load(p).count() == 120)
     assert(!new java.io.File(p).listFiles().map(_.getName)
       .exists(_.contains("2026-03-01T00")), "dropped hour dir still present")

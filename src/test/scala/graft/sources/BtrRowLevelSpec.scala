@@ -127,9 +127,10 @@ class BtrRowLevelSpec extends AnyFunSuite {
       .coalesce(1).write.format("btr").mode("overwrite").save(p)
     (100 until 200).map(i => (i.toLong, s"r$i")).toDF("v", "s")
       .coalesce(1).write.format("btr").mode("append").save(p)
-    val before = BtrLateMat.chunkDecodes.get()
-    spark.sql(s"DELETE FROM graft.`$p` WHERE v < 100") // exact file boundary
-    assert(BtrLateMat.chunkDecodes.get() == before,
+    val decodes = ScanMetrics.during(spark) {
+      spark.sql(s"DELETE FROM graft.`$p` WHERE v < 100") // exact file boundary
+    }(BtrScanMetrics.DecodedChunks)
+    assert(decodes == 0,
       "aligned DELETE decoded data chunks — metadata fast path lost")
     assert(spark.read.format("btr").load(p).count() == 100)
   }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import BtrScanMetrics._
 
 /** Late materialization: pushed-filter columns decode FIRST; a row group
   * whose decoded filter columns prove the conjunction can never be true
@@ -37,12 +38,12 @@ class LateMatSpec extends AnyFunSuite {
 
   test("empty conjunction range skips every group after decoding only the filter column") {
     val back = spark.read.format("btr").load(straddleDir)
-    val skipped0 = BtrLateMat.groupsSkipped.get()
-    val decodes0 = BtrLateMat.chunkDecodes.get()
-    val rows = back.filter($"v" > 50 && $"v" < 60).collect()
-    assert(rows.isEmpty)
-    val skipped = BtrLateMat.groupsSkipped.get() - skipped0
-    val decodes = BtrLateMat.chunkDecodes.get() - decodes0
+    val m = ScanMetrics.during(spark) {
+      val rows = back.filter($"v" > 50 && $"v" < 60).collect()
+      assert(rows.isEmpty)
+    }
+    val skipped = m(LateMatSkippedGroups)
+    val decodes = m(DecodedChunks)
     assert(skipped == 16, s"all 16 groups must skip row-level, got $skipped")
     // only the v chunks decode — never the 16 s/id sibling chunks each
     assert(decodes <= 16, s"sibling chunks decoded: $decodes total decodes")
@@ -50,14 +51,16 @@ class LateMatSpec extends AnyFunSuite {
 
   test("partially matching groups emit exactly the right rows") {
     val back = spark.read.format("btr").load(straddleDir)
-    val skipped0 = BtrLateMat.groupsSkipped.get()
-    // matches odd rows with id < 100 — first group only
-    val got = back.filter($"v" > 50 && $"id" < 100).select("id").collect().map(_.getLong(0)).sorted
-    assert(got.toSeq == (1 until 100 by 2).map(_.toLong))
-    // groups past the first: id-range pred proves them empty row-level
-    // (their id min > 100 also lets PLANNING skip via stats — either way
-    // no wrong rows and no sibling decodes)
-    val _ = BtrLateMat.groupsSkipped.get() - skipped0
+    val m = ScanMetrics.during(spark) {
+      // matches odd rows with id < 100 — first group only
+      val got = back.filter($"v" > 50 && $"id" < 100).select("id").collect().map(_.getLong(0)).sorted
+      assert(got.toSeq == (1 until 100 by 2).map(_.toLong))
+    }
+    // groups past the first: their id min > 100 lets PLANNING skip them
+    // via stats, and the id-range pred would prove them empty row-level
+    // — either way every one of the 15 skips, with no sibling decodes
+    val skipped = m(StatsPrunedGroups) + m(LateMatSkippedGroups)
+    assert(skipped == 15, s"groups after the first must all skip, got $skipped ($m)")
   }
 
   test("string equality, IN, null-semantics and NaN comparisons stay Spark-exact") {

@@ -183,9 +183,9 @@ class StructColumnSpec extends AnyFunSuite {
       .queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
     assert(plan.contains("rec.g"), s"nested predicate not pushed: $plan")
 
-    val skipped0 = BtrLateMat.groupsSkipped.get()
-    assert(back.filter(col("rec.g") > 40 && col("rec.g") < 60).count() == 0)
-    val skipped = BtrLateMat.groupsSkipped.get() - skipped0
+    val skipped = ScanMetrics.during(spark) {
+      assert(back.filter(col("rec.g") > 40 && col("rec.g") < 60).count() == 0)
+    }(BtrScanMetrics.LateMatSkippedGroups)
     assert(skipped >= 8, s"expected row groups skipped via the leaf predicate, got $skipped")
 
     // null-semantics sanity on the same path: struct-null rows fail
@@ -213,19 +213,12 @@ class StructColumnSpec extends AnyFunSuite {
       .mode("overwrite").save(dir)
 
     val back = spark.read.format("btr").load(dir)
-    // the decode counter is global and suites run in parallel — measure
-    // in a retry loop and accept the quietest observation (a true
-    // skip-failure decodes all 16 groups on EVERY attempt)
-    def minDecodes(q: => Long): Long =
-      (0 until 5).map { _ =>
-        val d0 = BtrLateMat.chunkDecodes.get()
-        assert(q == 1L)
-        BtrLateMat.chunkDecodes.get() - d0
-      }.min
-    val intDecodes = minDecodes(back.filter(col("rec.g") === 4000).count())
+    def decodes(q: => Long): Long =
+      ScanMetrics.during(spark)(assert(q == 1L))(BtrScanMetrics.DecodedChunks)
+    val intDecodes = decodes(back.filter(col("rec.g") === 4000).count())
     assert(intDecodes <= 2, s"expected planning-time leaf skip, got $intDecodes chunk decodes")
     // string leaf bounds skip too
-    val strDecodes = minDecodes(back.filter(col("rec.s") === "p04000").count())
+    val strDecodes = decodes(back.filter(col("rec.s") === "p04000").count())
     assert(strDecodes <= 2, s"string leaf bounds did not skip: $strDecodes")
   }
 
@@ -243,13 +236,9 @@ class StructColumnSpec extends AnyFunSuite {
 
     val back = spark.read.format("btr").load(dir)
     val want = back.filter(col("rec.g") === 4000).count()
-    def minDecodes(q: => Long): Long =
-      (0 until 5).map { _ =>
-        val d0 = BtrLateMat.chunkDecodes.get()
-        assert(q == want)
-        BtrLateMat.chunkDecodes.get() - d0
-      }.min
-    val decodes = minDecodes(back.filter(col("rec.g") === 4000).count())
+    val decodes = ScanMetrics.during(spark) {
+      assert(back.filter(col("rec.g") === 4000).count() == want)
+    }(BtrScanMetrics.DecodedChunks)
     assert(decodes <= 3, s"clustered leaf should skip to ~1 group, got $decodes")
   }
 

@@ -33,8 +33,8 @@ final case class BtrConfig(
     bloomMaxBytes: Int = 2048,
     // SAMPLE-mode selection measures cascading candidates by compressing
     // the retained sample (the reference's estimateCompression contract,
-    // scheme/CompressionScheme.cpp:8-46); `btr.estimate=formula` reverts
-    // to closed-form-only estimates
+    // scheme/CompressionScheme.cpp:8-46); the measurement's own nested
+    // encodes turn it off, keeping their cascade choices closed-form
     measuredEstimate: Boolean = true,
     // per-column file-level HyperLogLog NDV sketches in the footer
     // (format v6) — 2^p register bytes per column per file; 0 disables.
@@ -136,13 +136,6 @@ object BtrConfig {
         require(v > 0, s"btr.bloom.maxBytes must be a positive integer, got '$s'")
         v
       }.getOrElse(2048),
-      measuredEstimate = get("btr.estimate").map(_.trim.toLowerCase) match {
-        case None | Some("measured") => true
-        case Some("formula") => false
-        case Some(other) =>
-          throw new IllegalArgumentException(
-            s"btr.estimate must be measured|formula, got '$other'")
-      },
       ndvPrecision = {
         val enabled = get("btr.ndv.enabled").map(_.trim.toLowerCase) match {
           case None | Some("true") => true

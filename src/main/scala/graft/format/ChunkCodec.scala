@@ -437,12 +437,8 @@ object ChunkCodec {
     var i = 0
     val tag = chunk.tag
     if (PhysType.isIntFamily(tag)) {
-      cfg.forceInt match {
-        case Some(f) =>
-          IntCodec.encodeForced(f, out, chunk.longs, chunk.count, PhysType.physWidth(tag), cascadeDepth, cfg, seed)
-        case None =>
-          IntCodec.encode(out, chunk.longs, chunk.count, PhysType.physWidth(tag), cascadeDepth, cfg, seed)
-      }
+      SchemePicker.encodeColumn(
+        new IntCodec.Chunk(chunk.longs, chunk.count, PhysType.physWidth(tag), cfg, seed), out, cascadeDepth)
       var mn = Long.MaxValue
       var mx = Long.MinValue
       var sum = 0L
@@ -478,18 +474,11 @@ object ChunkCodec {
         bloom = if (hashes != null && !bloomOver) Bloom.build(hashes, cfg.bloomMaxBytes) else null,
         sumLong = sum, sumOverflow = sumOver)
     } else if (tag == PhysType.Double || tag == PhysType.Float) {
-      if (tag == PhysType.Float) {
+      SchemePicker.encodeColumn(
         // floats stored as raw bits via the int path (lossless, narrower)
-        cfg.forceInt match {
-          case Some(f) => IntCodec.encodeForced(f, out, chunk.longs, chunk.count, 4, cascadeDepth, cfg, seed)
-          case None => IntCodec.encode(out, chunk.longs, chunk.count, 4, cascadeDepth, cfg, seed)
-        }
-      } else {
-        cfg.forceDouble match {
-          case Some(f) => DoubleCodec.encodeForced(f, out, chunk.doubles, chunk.count, cascadeDepth, cfg, seed)
-          case None => DoubleCodec.encode(out, chunk.doubles, chunk.count, cascadeDepth, cfg, seed)
-        }
-      }
+        if (tag == PhysType.Float) new IntCodec.Chunk(chunk.longs, chunk.count, 4, cfg, seed)
+        else new DoubleCodec.Chunk(chunk.doubles, chunk.count, cfg, seed),
+        out, cascadeDepth)
       // NaN is EXCLUDED from min/max and recorded in hasNaN instead: Spark
       // orders NaN above every value, so a NaN-polluted max would otherwise
       // make GreaterThan skipping drop rows. Updates use Double.compare so
@@ -654,10 +643,8 @@ object ChunkCodec {
       }
       ChunkStats(nullCount, 0, 0, 0, 0, hasMinMax = false, rawBytes = raw)
     } else {
-      cfg.forceString match {
-        case Some(f) => StringCodec.encodeForced(f, out, chunk.strings, chunk.count, cascadeDepth, cfg, seed)
-        case None => StringCodec.encode(out, chunk.strings, chunk.count, cascadeDepth, cfg, seed)
-      }
+      SchemePicker.encodeColumn(
+        new StringCodec.Chunk(chunk.strings, chunk.count, cfg, seed), out, cascadeDepth)
       // byte-wise unsigned min/max over non-null values — the same ordering
       // Spark's UTF8String comparison uses, so scan-side skipping is exact
       var mn: Array[Byte] = null

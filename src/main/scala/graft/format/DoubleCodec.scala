@@ -42,57 +42,24 @@ object DoubleStats {
       prev = bits
       i += 1
     }
-    val exhaustive = sampleRuns <= 0 || count <= sampleRuns * runLen * 2
+    val ranges = SchemePicker.sampleRanges(count, sampleRuns, runLen, seed)
     val freq = new mutable.LongMap[Int](1 << 10)
-    val sampleBuf =
-      if (sampleRuns <= 0) null
-      else new Array[Double](if (exhaustive) count else sampleRuns * runLen)
+    val sampleBuf = if (sampleRuns > 0) new Array[Double](SchemePicker.sampleSize(ranges)) else null
     var sampleN = 0
-    @inline def addSample(v: Double): Unit = {
-      val bits = java.lang.Double.doubleToRawLongBits(v)
-      freq(bits) = freq.getOrElse(bits, 0) + 1
-      if (sampleBuf != null) sampleBuf(sampleN) = v
-      sampleN += 1
-    }
-    if (exhaustive) {
-      i = 0
-      while (i < count) { addSample(values(i)); i += 1 }
-    } else {
-      // one run per disjoint stratum (see IntStats.compute): overlapping
-      // runs double-count rows and fabricate repeat signal
-      val rnd = new java.util.Random(seed)
-      val stratum = count / sampleRuns
-      var r = 0
-      while (r < sampleRuns) {
-        val base = r * stratum
-        val span = (if (r == sampleRuns - 1) count - base else stratum) - runLen
-        val start = base + (if (span > 0) rnd.nextInt(span + 1) else 0)
-        var j = start
-        val end = start + runLen
-        while (j < end) { addSample(values(j)); j += 1 }
-        r += 1
+    var r = 0
+    while (r < ranges.length) {
+      var j = ranges(r)
+      while (j < ranges(r + 1)) {
+        val bits = java.lang.Double.doubleToRawLongBits(values(j))
+        freq(bits) = freq.getOrElse(bits, 0) + 1
+        if (sampleBuf != null) sampleBuf(sampleN) = values(j)
+        sampleN += 1
+        j += 1
       }
+      r += 2
     }
-    var topB = 0L
-    var topC = 0
-    freq.foreachEntry { (k, c) =>
-      if (c > topC) { topC = c; topB = k }
-    }
-    val d = freq.size
-    // two-part heavy/rare estimate with the method-of-moments inversion
-    // on the rare subpopulation (see IntStats.compute / momentNdv)
-    val distinctEst =
-      if (exhaustive) d
-      else {
-        val hThresh = math.max(3, sampleN / 100)
-        var dRare = 0
-        var mRare = 0
-        freq.foreachEntry { (_, c) => if (c < hThresh) { dRare += 1; mRare += c } }
-        val nRare =
-          math.min(count.toLong, math.round(count.toDouble * mRare / math.max(1, sampleN))).toInt
-        math.min(count, (d - dRare) + IntStats.momentNdv(dRare, mRare, nRare))
-      }
-    DoubleStats(count, runs, sampleN, d, distinctEst, topB, topC, sampleBuf)
+    val f = SchemePicker.frequencies(freq, sampleN, count)
+    DoubleStats(count, runs, sampleN, f.distinct, f.distinctEst, f.top, f.topCount, sampleBuf)
   }
 }
 
@@ -250,6 +217,9 @@ object DoubleCodec {
     false
   }
 
+  /** Encode `count` values; writes [u8 scheme][payload], the scheme picked
+    * by [[SchemePicker.encode]].
+    */
   def encode(
       out: BufWriter,
       values: Array[Double],
@@ -257,41 +227,7 @@ object DoubleCodec {
       depth: Int,
       cfg: BtrConfig = BtrConfig.Default,
       seed: Long = 42L
-  ): Unit = {
-    val s = DoubleStats.compute(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
-    // Run-dominated chunks escalate to exhaustive selection even in SAMPLE
-    // mode (see IntCodec.encode): a stratified sample cannot see sublinear
-    // run structure — on plateau doubles it keeps RLE where the
-    // pseudodecimal cascade (whose digit stream inherits the value runs)
-    // is several times smaller — and a ≤ count/32-run chunk is cheap to
-    // encode under every candidate.
-    // near-constant escalation: parity with the int side — a sample whose
-    // minority values number < 64 decides its scheme race on small-sample
-    // variance, while the chunk itself is cheap under every candidate
-    val runDom = s.runCount.toLong * 32 <= count
-    val nearConst = !runDom && count > s.sampleN && s.sampleN - s.sTopCount < 64
-    if (cfg.tryAll ||
-      (cfg.measuredEstimate && depth >= 1 && count >= 1024 && (runDom || nearConst))) {
-      // TRY_ALL attributes as kind 0 — see IntCodec.encode (ADVICE r20)
-      if (cfg.tryAll) EscalationTelemetry.timed(0) {
-        tryAllEncode(out, values, count, depth, cfg, s, seed)
-      }
-      else EscalationTelemetry.timed(if (runDom) 1 else 2) {
-        tryAllEncode(out, values, count, depth, cfg, s, seed)
-      }
-      return
-    }
-    EscalationTelemetry.timed(0) {
-      val start = out.pos
-      val scheme = choose(values, count, s, depth, cfg)
-      encodeAs(scheme, out, values, count, depth, s, cfg, seed)
-      val rawSize = 1 + count.toLong * 8
-      if (scheme != Uncompressed && (out.pos - start).toLong > rawSize) {
-        out.truncate(start)
-        encodeAs(Uncompressed, out, values, count, depth, s, cfg, seed)
-      }
-    }
-  }
+  ): Unit = SchemePicker.encode(new Chunk(values, count, cfg, seed), out, depth)
 
   /** Forced top-level scheme; validates data-loss safety first. */
   def encodeForced(
@@ -302,62 +238,7 @@ object DoubleCodec {
       depth: Int,
       cfg: BtrConfig = BtrConfig.Default,
       seed: Long = 42L
-  ): Unit = {
-    val s = DoubleStats.compute(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
-    require(structurallyValid(scheme, s, depth),
-      s"btr.forceScheme: ${BtrConfig.doubleNames(scheme)} cannot encode this chunk " +
-        s"(count=$count, runs=${s.runCount}, depth=$depth)")
-    encodeAs(scheme, out, values, count, depth, s, cfg, seed)
-  }
-
-  private def structurallyValid(scheme: Int, s: DoubleStats, depth: Int): Boolean = scheme match {
-    case OneValue => s.runCount <= 1
-    case Uncompressed => true
-    case DoubleBp => s.count >= 1 // terminal scheme, no cascade
-    case Dict | Rle | Frequency | Pseudodecimal | Alp => depth >= 1 && s.count >= 1
-    case _ => false
-  }
-
-  private def tryAllEncode(
-      out: BufWriter,
-      values: Array[Double],
-      count: Int,
-      depth: Int,
-      cfg: BtrConfig,
-      s: DoubleStats,
-      seed: Long
-  ): Unit = {
-    val candidates = Array(OneValue, Dict, Rle, Frequency, Pseudodecimal, DoubleBp, Alp, Uncompressed)
-    var bestBytes: Array[Byte] = null
-    var i = 0
-    while (i < candidates.length) {
-      val sch = candidates(i)
-      val allowed = sch == Uncompressed || sch == OneValue || cfg.doubleEnabled(sch)
-      if (allowed && structurallyValid(sch, s, depth)) {
-        val scratch = new BufWriter(1 << 12)
-        encodeAs(sch, scratch, values, count, depth, s, cfg, seed)
-        if (bestBytes == null || scratch.pos < bestBytes.length) bestBytes = scratch.result()
-      }
-      i += 1
-    }
-    out.putBytes(bestBytes)
-  }
-
-  /** Sample-compress measurement, like IntCodec.measuredEstimate (the
-    * reference's estimateCompression contract,
-    * /root/reference/btrblocks/scheme/CompressionScheme.cpp:8-46).
-    */
-  private def measuredEstimate(scheme: Int, s: DoubleStats, depth: Int, cfg: BtrConfig): Long = {
-    val smp = s.sample
-    val n = s.sampleN
-    val ss = DoubleStats.compute(smp, n, 42L, cfg.sampleRuns, cfg.sampleRunLen)
-    if (!structurallyValid(scheme, ss, depth)) return Long.MaxValue
-    val scratch = new BufWriter(1 << 10)
-    // formula-only cascade choices inside the measurement (see IntCodec)
-    encodeAs(scheme, scratch, smp, n, depth, ss,
-      cfg.copy(measuredEstimate = false), 42L)
-    math.max(1L, math.ceil(scratch.pos.toDouble * s.count / math.max(1, n)).toLong)
-  }
+  ): Unit = SchemePicker.encodeForced(new Chunk(values, count, cfg, seed), scheme, out, depth)
 
   /** Dict-aware measured estimate (see IntCodec.measuredDictEstimate):
     * the raw 8-byte dictionary table scales with NDV, not rows, so only
@@ -387,20 +268,50 @@ object DoubleCodec {
     1L + 4L + 8L * dFull + codeBytes
   }
 
-  private def choose(
+  private val AllSchemes =
+    Array(OneValue, Dict, Rle, Frequency, Pseudodecimal, DoubleBp, Alp, Uncompressed)
+
+  /** `values` as one chunk for [[SchemePicker]]. */
+  private[format] final class Chunk(values: Array[Double], count: Int, cfg: BtrConfig, seed: Long)
+      extends SchemeChunk(count, cfg, seed) {
+    val s: DoubleStats = DoubleStats.compute(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
+    def runCount: Int = s.runCount
+    def names: Map[Int, String] = BtrConfig.doubleNames
+    def forced: Option[Int] = cfg.forceDouble
+    def candidates: Array[Int] = AllSchemes
+    def enabled(scheme: Int): Boolean = cfg.doubleEnabled(scheme)
+    def structurallyValid(scheme: Int, depth: Int): Boolean = scheme match {
+      case OneValue => s.runCount <= 1
+      case Uncompressed => true
+      case DoubleBp => s.count >= 1 // terminal scheme, no cascade
+      case Dict | Rle | Frequency | Pseudodecimal | Alp => depth >= 1 && s.count >= 1
+      case _ => false
+    }
+    def rawBound: Long = 1 + count.toLong * 8
+    def encodeAs(scheme: Int, out: BufWriter, depth: Int, cfg: BtrConfig, seed: Long): Unit =
+      DoubleCodec.encodeAs(scheme, out, values, count, depth, s, cfg, seed)
+    def screen(depth: Int, est: Array[Long]): Int = DoubleCodec.screen(values, count, s, depth, cfg, est)
+    override def sampleN: Int = s.sampleN
+    override def sTopCount: Int = s.sTopCount
+    override def hasSample: Boolean = s.sample != null
+    override def escalates: Boolean = true
+    // every screen but the constant and raw ones cascades
+    override def approx(scheme: Int): Boolean = scheme != Uncompressed && scheme != OneValue
+    override lazy val sampleChunk: SchemeChunk = new Chunk(s.sample, s.sampleN, cfg, 42L)
+    override def measureDict(depth: Int): Long = measuredDictEstimate(s, depth, cfg)
+  }
+
+  /** Closed-form screens of a non-constant chunk (see
+    * [[SchemeChunk.screen]]); the close contenders get measured.
+    */
+  private def screen(
       values: Array[Double],
       count: Int,
       s: DoubleStats,
       depth: Int,
-      cfg: BtrConfig = BtrConfig.Default
+      cfg: BtrConfig,
+      fEst: Array[Long]
   ): Int = {
-    if (count == 0) return Uncompressed
-    if (s.runCount <= 1) return OneValue // exact: single run == constant
-    // formula screen per gated candidate; contenders within 1.5× of the
-    // leader then get MEASURED by compressing the retained sample (the
-    // measure pass below, mirroring IntCodec.choose)
-    val fEst = new Array[Long](8)
-    java.util.Arrays.fill(fEst, Long.MaxValue)
     var best = Uncompressed
     var bestSize = 1L + count.toLong * 8
     fEst(Uncompressed) = bestSize
@@ -458,7 +369,7 @@ object DoubleCodec {
       // opt-in ALP: probe the scale on a strided sample and gate on the
       // same >=50% convertibility the pseudodecimal gate uses; the
       // formula prices a GLOBAL g (per-block adaptivity at encode only
-      // packs tighter) and the measured pass below refines it
+      // packs tighter) and the measure pass refines it
       val sampleStride = math.max(1, count / 1024)
       val m = math.min(1024, count)
       val buf = new Array[Double](m)
@@ -509,33 +420,6 @@ object DoubleCodec {
         Bitpack.packedBytes(count, wLo).toLong + Bitpack.packedBytes(count, wHi).toLong
       fEst(DoubleBp) = e
       if (e < bestSize) { best = DoubleBp; bestSize = e }
-    }
-    // measure pass: every formula here is approximate (all four cascade),
-    // so any contender in the zone is re-sized on the sample
-    if (cfg.measuredEstimate && s.sample != null) {
-      val zone = bestSize + (bestSize >> 1)
-      var needMeasure = false
-      var sch = 0
-      while (sch < fEst.length && !needMeasure) {
-        if (sch != Uncompressed && sch != OneValue && fEst(sch) <= zone) needMeasure = true
-        sch += 1
-      }
-      if (needMeasure) {
-        best = Uncompressed
-        bestSize = 1L + count.toLong * 8
-        sch = 0
-        while (sch < fEst.length) {
-          if (sch != Uncompressed && sch != OneValue && fEst(sch) < Long.MaxValue) {
-            val e =
-              if (fEst(sch) <= zone) {
-                if (sch == Dict) measuredDictEstimate(s, depth, cfg)
-                else measuredEstimate(sch, s, depth, cfg)
-              } else fEst(sch)
-            if (e < bestSize) { best = sch; bestSize = e }
-          }
-          sch += 1
-        }
-      }
     }
     best
   }

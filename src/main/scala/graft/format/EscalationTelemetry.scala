@@ -12,11 +12,13 @@ import java.util.concurrent.atomic.LongAdder
   * spent in them, split by trigger, so any write can report the
   * escalations' share of total encode time.
   *
-  * Attribution is at the OUTERMOST `encode` entry per thread (cascade
-  * recursion re-enters the codecs; nested calls must not double-count),
-  * via a ThreadLocal depth guard. LongAdders keep the 32-writer-thread
-  * updates contention-free; the two nanoTime calls per 65,536-value chunk
-  * are noise. Per-JVM scope: under local[32] this is the whole write; on
+  * Its one call site is [[SchemePicker.encode]], which every int,
+  * double and string chunk encode goes through. Attribution is at the
+  * OUTERMOST entry per thread (cascade recursion re-enters the picker;
+  * nested calls must not double-count), via a ThreadLocal depth guard.
+  * LongAdders keep the 32-writer-thread updates contention-free; the two
+  * nanoTime calls per 65,536-value chunk are noise. Per-JVM scope: under
+  * local[32] this is the whole write; on
   * a multi-executor cluster each executor sees its own share, whose RATIO
   * is still representative of the fleet. Readers: Bench (esc_* artifact
   * fields), RatioCorpus (per-corpus report line), BtrConfigSpec (share

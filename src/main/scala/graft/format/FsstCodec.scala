@@ -9,15 +9,6 @@ package graft.format
   * training on a sample.
   */
 object FsstCodec {
-  /** Capability flag for the Java decode kernels ([[FsstVectorKernel]]:
-    * SWAR escape-scan sizing + VarHandle word-store expansion, both
-    * plain java.base). `-Dgraft.fsst.vector=false` opts out for A/B; a
-    * LinkageError on first use (defensive — nothing outside java.base
-    * is referenced) disarms it permanently and the scalar path serves.
-    */
-  @volatile private[format] var vectorKernel: Boolean =
-    !"false".equalsIgnoreCase(System.getProperty("graft.fsst.vector", "true"))
-
   val Escape = 255
 
   /** Encode a string column: [symbolTable][lengths cascade][bytes]. */
@@ -41,11 +32,10 @@ object FsstCodec {
     * Two passes, like the reference's unconditional-store decoder
     * (fsst paper §4; the vendored C decoder stores a full machine word
     * per code): pass 1 sizes the exact output from the per-code symbol
-    * lengths, pass 2 writes each symbol as ONE little-endian 8-byte
-    * store (symbols are ≤8 bytes, zero-padded at pack time) and advances
-    * by its true length — no per-symbol arraycopy, no growth checks in
-    * the hot loop. The tail guard falls back to byte stores only within
-    * 8 bytes of the buffer end.
+    * lengths, pass 2 ([[FsstVectorKernel.expand]]) writes each symbol as
+    * ONE little-endian 8-byte store (symbols are ≤8 bytes, zero-padded at
+    * pack time) and advances by its true length — no per-symbol
+    * arraycopy, no growth checks in the hot loop.
     */
   def decodeStrings(in: BufReader, count: Int): (Array[Int], Array[Byte]) = {
     val table = SymbolTable.read(in)
@@ -56,8 +46,6 @@ object FsstCodec {
     while (i < count) { lens(i) = lensL(i).toInt; total += lens(i); i += 1 }
     val comp = in.getBytes(total)
     val symLen = table.symLen
-    val symWord = table.symWord
-    val outAdd = table.outAdd
     val nSyms = table.symbols.length
     // pass 1: exact decompressed size, FLAT over the whole buffer (no
     // string boundaries — the per-string lengths come from pass 2's
@@ -65,21 +53,18 @@ object FsstCodec {
     // advance depends on the loaded byte; [[FsstVectorKernel.size]]
     // breaks that with a SWAR escape scan (two long loads) per 16-byte
     // block and independent pipelined table loads inside escape-free
-    // blocks. Codes are validated here (outAdd == 0 marks out-of-table;
-    // the kernel reports via its bad accumulator and this scalar walk
-    // names the offset), so pass 2 keeps its branch-free word-store
+    // blocks. The scalar walk below sizes the tail past the kernel's
+    // cursor and validates codes there (outAdd == 0 marks out-of-table);
+    // when the kernel reports a corrupt code it rescans from the start
+    // to name the offset, so pass 2 keeps its branch-free word-store
     // shape.
     var exact = 0L
     var p = 0
-    if (vectorKernel) {
-      val cursor = new Array[Int](1)
-      val partial =
-        try FsstVectorKernel.size(comp, total, outAdd, cursor)
-        catch { case _: LinkageError => vectorKernel = false; -1L }
-      if (partial >= 0L) {
-        exact = partial
-        p = cursor(0)
-      } // partial < 0: corrupt code seen — rescan scalar for the offset
+    val cursor = new Array[Int](1)
+    val partial = FsstVectorKernel.size(comp, total, table.outAdd, cursor)
+    if (partial >= 0L) {
+      exact = partial
+      p = cursor(0)
     }
     while (p < total) {
       val code = comp(p) & 0xff
@@ -95,43 +80,8 @@ object FsstCodec {
     require(exact <= Int.MaxValue - 16, s"fsst: decoded block exceeds 2 GiB ($exact bytes)")
     val outLen = exact.toInt
     val out = new Array[Byte](outLen)
-    val bb = java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val wordSafe = outLen - 8 // last offset where an 8-byte store fits
     val outLens = new Array[Int](count)
-    if (vectorKernel) {
-      try {
-        FsstVectorKernel.expand(comp, lens, count, out, outLen,
-          symWord, symLen, table.symbols, outLens)
-        return (outLens, out)
-      } catch { case _: LinkageError => vectorKernel = false }
-    }
-    var q = 0
-    p = 0
-    i = 0
-    while (i < count) {
-      val start = q
-      val end = p + lens(i)
-      while (p < end) {
-        val code = comp(p) & 0xff
-        if (code == Escape) {
-          p += 1
-          out(q) = comp(p)
-          q += 1
-          p += 1
-        } else {
-          if (q <= wordSafe) bb.putLong(q, symWord(code))
-          else {
-            val sym = table.symbols(code)
-            var j = 0
-            while (j < sym.length) { out(q + j) = sym(j); j += 1 }
-          }
-          q += symLen(code)
-          p += 1
-        }
-      }
-      outLens(i) = q - start
-      i += 1
-    }
+    FsstVectorKernel.expand(comp, lens, count, out, outLen, table.symWord, symLen, table.symbols, outLens)
     (outLens, out)
   }
 }

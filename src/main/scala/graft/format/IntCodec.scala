@@ -24,7 +24,7 @@ final case class IntStats(
     isSorted: Boolean,
     sampleN: Int, // values sampled (== count when exhaustive)
     sDistinct: Int, // distinct within the sample
-    distinctEst: Int, // Chao1-style chunk-distinct estimate, capped at count
+    distinctEst: Int, // heavy/rare NDV estimate (SchemePicker.frequencies), capped at count
     topValue: Long, // most frequent value in the sample
     sTopCount: Int, // its in-sample frequency
     widthHist: Array[Int], // FOR-width histogram over the sample
@@ -86,96 +86,29 @@ object IntStats {
       if (v < values(i - 1)) sorted = false
       i += 1
     }
-    // sampled pass: frequency map over stratified runs (exhaustive on
-    // small chunks where sampling saves nothing)
-    val exhaustive = sampleRuns <= 0 || count <= sampleRuns * runLen * 2
+    // sampled pass: frequency map over the stratified sample (the whole
+    // chunk when it is small)
+    val ranges = SchemePicker.sampleRanges(count, sampleRuns, runLen, seed)
     val freq = new mutable.LongMap[Int](1 << 10)
     val hist = new Array[Int](65)
-    val keepSample = sampleRuns > 0
-    val sampleBuf =
-      if (!keepSample) null
-      else new Array[Long](if (exhaustive) count else sampleRuns * runLen)
+    val sampleBuf = if (sampleRuns > 0) new Array[Long](SchemePicker.sampleSize(ranges)) else null
     var sampleN = 0
-    @inline def addSample(v: Long): Unit = {
-      freq(v) = freq.getOrElse(v, 0) + 1
-      hist(Bitpack.bitsForRange(0L, v - min)) += 1
-      if (sampleBuf != null) sampleBuf(sampleN) = v
-      sampleN += 1
-    }
-    if (exhaustive) {
-      i = 0
-      while (i < count) { addSample(values(i)); i += 1 }
-    } else {
-      // one run per disjoint stratum: independent starts can overlap
-      // (~9% of chunks at 10×64/65,536), and an overlap double-counts
-      // rows, fabricating repeat signal that poisons the NDV estimate
-      val rnd = new java.util.Random(seed)
-      val stratum = count / sampleRuns
-      var r = 0
-      while (r < sampleRuns) {
-        val base = r * stratum
-        val span = (if (r == sampleRuns - 1) count - base else stratum) - runLen
-        val start = base + (if (span > 0) rnd.nextInt(span + 1) else 0)
-        var j = start
-        val end = start + runLen
-        while (j < end) { addSample(values(j)); j += 1 }
-        r += 1
+    var r = 0
+    while (r < ranges.length) {
+      var j = ranges(r)
+      while (j < ranges(r + 1)) {
+        val v = values(j)
+        freq(v) = freq.getOrElse(v, 0) + 1
+        hist(Bitpack.bitsForRange(0L, v - min)) += 1
+        if (sampleBuf != null) sampleBuf(sampleN) = v
+        sampleN += 1
+        j += 1
       }
+      r += 2
     }
-    var topV = values(0)
-    var topC = 0
-    freq.foreachEntry { (k, c) =>
-      if (c > topC) { topC = c; topV = k }
-    }
-    val d = freq.size
-    val distinctEst =
-      if (exhaustive) d
-      else {
-        // two-part estimate: clearly-heavy values (≥ max(3, m/100) sample
-        // hits) are fully observed, so they contribute their exact count;
-        // the rare remainder gets the moment inversion on its own
-        // subpopulation, which degrades to the all-distinct cap when the
-        // rare part carries no collision signal (a 93%-constant column
-        // with a distinct tail looks like d≈50 overall, but the tail's
-        // rows are ~all distinct and dict must pay for every one)
-        val hThresh = math.max(3, sampleN / 100)
-        var dRare = 0
-        var mRare = 0
-        freq.foreachEntry { (_, c) => if (c < hThresh) { dRare += 1; mRare += c } }
-        val nRare =
-          math.min(count.toLong, math.round(count.toDouble * mRare / math.max(1, sampleN))).toInt
-        math.min(count, (d - dRare) + momentNdv(dRare, mRare, nRare))
-      }
-    IntStats(count, min, max, runs, sorted, sampleN, d, distinctEst, topV, topC, hist, sampleBuf)
-  }
-
-  /** Method-of-moments NDV estimate: solve E[d] = D·(1 − (1−m/n)^(n/D))
-    * for D by bisection (E is monotone increasing in D), assuming
-    * near-uniform value frequencies. Replaces Chao1, whose f1²/2f2 term
-    * explodes with huge variance when the sample is singleton-dominated
-    * (f2 → 0) — exactly the scattered-id shape where the dict size
-    * estimate matters most. A sample with zero repeats carries no
-    * collision signal, so the estimate is the cap (count), which
-    * correctly gates dict out on near-unique columns.
-    */
-  def momentNdv(d: Int, m: Int, n: Int): Int = {
-    if (d <= 0) return 0
-    // < 8 repeat observations: the inversion has no statistical power
-    // (1–2 collisions put the estimate anywhere in [n/3, n]), so return
-    // the conservative cap — an unlucky low draw would let dict win
-    // races it loses by ~18% on near-unique chunks
-    if (m - d < 8 || m >= n) return n
-    val q = 1.0 - m.toDouble / n
-    var lo = d.toDouble
-    var hi = n.toDouble
-    var it = 0
-    while (it < 48) {
-      val mid = 0.5 * (lo + hi)
-      val e = mid * (1.0 - math.pow(q, n / mid))
-      if (e < d) lo = mid else hi = mid
-      it += 1
-    }
-    math.max(d.toLong, math.min(n.toLong, math.round(0.5 * (lo + hi)))).toInt
+    val f = SchemePicker.frequencies(freq, sampleN, count)
+    IntStats(count, min, max, runs, sorted, sampleN, f.distinct, f.distinctEst, f.top, f.topCount,
+      hist, sampleBuf)
   }
 }
 
@@ -229,33 +162,6 @@ object IntCodec {
     (bestW, bestExc, best)
   }
 
-  /** Measured estimate: compress the retained sample with the candidate
-    * scheme — including its full cascade, which on sample-sized inputs is
-    * an EXACT compression — and scale the bytes to the chunk. This is the
-    * reference's estimateCompression contract (sample-compress at the top,
-    * full compression at deeper levels,
-    * /root/reference/btrblocks/scheme/CompressionScheme.cpp:8-46), where
-    * the closed forms below are only the pre-gate screen.
-    */
-  private def measuredEstimate(
-      scheme: Int,
-      s: IntStats,
-      physWidth: Int,
-      depth: Int,
-      cfg: BtrConfig
-  ): Long = {
-    val smp = s.sample
-    val n = s.sampleN
-    val ss = IntStats.compute(smp, n, 42L, cfg.sampleRuns, cfg.sampleRunLen)
-    if (!structurallyValid(scheme, ss, depth)) return Long.MaxValue
-    val scratch = new BufWriter(1 << 10)
-    // cascade choices inside the measurement go by formula — the sample
-    // cascade still compresses fully, and the real encode re-decides
-    encodeAs(scheme, scratch, smp, n, physWidth, depth, ss,
-      cfg.copy(measuredEstimate = false), 42L)
-    math.max(1L, math.ceil(scratch.pos.toDouble * s.count / math.max(1, n)).toLong)
-  }
-
   /** Dict-aware measured estimate. A plain sample-compress extrapolates
     * ALL bytes by the row ratio, but a dictionary table is sublinear in
     * rows — it scales with NDV — so on scattered id spaces (sample NDV ≈
@@ -302,7 +208,8 @@ object IntCodec {
   /** Closed-form size estimates (bytes) per candidate: exact stats where
     * the encoder needs them anyway (min/max/runs), sampled proportions for
     * the frequency-derived ones. For the cascading schemes these closed
-    * forms act as the SCREEN; [[choose]] measures the close contenders.
+    * forms act as the SCREEN; [[SchemePicker]] measures the close
+    * contenders.
     */
   private def formulaEstimate(scheme: Int, s: IntStats, physWidth: Int, depth: Int): Long = {
     val n = s.count.toLong
@@ -362,72 +269,55 @@ object IntCodec {
   private val AllSchemes =
     Array(OneValue, ForBp, DeltaBp, Dict, Rle, Frequency, Pfor, Uncompressed)
 
-  def choose(s: IntStats, physWidth: Int, depth: Int, cfg: BtrConfig = BtrConfig.Default): Int = {
-    if (s.count == 0) return Uncompressed
-    if (s.runCount <= 1) return OneValue // exact: a single run means constant
-    // formula pass over every enabled candidate
-    val est = new Array[Long](AllSchemes.length)
-    var best = Uncompressed
-    var bestSize = formulaEstimate(Uncompressed, s, physWidth, depth)
-    var i = 0
-    while (i < AllSchemes.length) {
-      val sch = AllSchemes(i)
-      val enabled = sch == Uncompressed || sch == OneValue || cfg.intEnabled(sch)
-      est(i) = if (enabled) formulaEstimate(sch, s, physWidth, depth) else Long.MaxValue
-      if (est(i) < bestSize) { best = sch; bestSize = est(i) }
-      i += 1
+  /** `values` as one chunk for [[SchemePicker]]. */
+  private[format] final class Chunk(
+      values: Array[Long],
+      count: Int,
+      physWidth: Int,
+      cfg: BtrConfig,
+      seed: Long
+  ) extends SchemeChunk(count, cfg, seed) {
+    val s: IntStats = IntStats.compute(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
+    def runCount: Int = s.runCount
+    def names: Map[Int, String] = BtrConfig.intNames
+    def forced: Option[Int] = cfg.forceInt
+    def candidates: Array[Int] = AllSchemes
+    def enabled(scheme: Int): Boolean = cfg.intEnabled(scheme)
+    // OneValue requires a constant chunk; everything else encodes
+    // arbitrary data
+    def structurallyValid(scheme: Int, depth: Int): Boolean = scheme match {
+      case OneValue => s.runCount <= 1
+      case Uncompressed | ForBp | DeltaBp => true
+      case Dict | Rle | Frequency => depth >= 1 && s.count >= 1
+      case Pfor => depth >= 1 && s.count >= 1 && Bitpack.bitsForRange(s.min, s.max) > 0
+      case _ => false
     }
-    // measure pass (the reference's estimateCompression contract): the
-    // approximate-formula contenders within 1.5× of the leader get their
-    // size MEASURED by compressing the retained sample; a clear formula
-    // winner skips the work entirely
-    if (cfg.measuredEstimate && s.sample != null && bestSize < Long.MaxValue) {
-      val zone = bestSize + (bestSize >> 1)
-      var needMeasure = false
-      i = 0
-      while (i < AllSchemes.length && !needMeasure) {
-        if (isApprox(AllSchemes(i)) && est(i) <= zone) needMeasure = true
-        i += 1
+    def rawBound: Long = 1 + count.toLong * physWidth
+    def encodeAs(scheme: Int, out: BufWriter, depth: Int, cfg: BtrConfig, seed: Long): Unit =
+      IntCodec.encodeAs(scheme, out, values, count, physWidth, depth, s, cfg, seed)
+    def screen(depth: Int, est: Array[Long]): Int = {
+      var best = Uncompressed
+      est(Uncompressed) = formulaEstimate(Uncompressed, s, physWidth, depth)
+      for (sch <- AllSchemes) {
+        est(sch) = if (admits(sch)) formulaEstimate(sch, s, physWidth, depth) else Long.MaxValue
+        if (est(sch) < est(best)) best = sch
       }
-      if (needMeasure) {
-        best = Uncompressed
-        bestSize = formulaEstimate(Uncompressed, s, physWidth, depth)
-        i = 0
-        while (i < AllSchemes.length) {
-          val sch = AllSchemes(i)
-          if (est(i) < Long.MaxValue) {
-            val e =
-              if (isApprox(sch) && est(i) <= zone) {
-                if (sch == Dict) measuredDictEstimate(s, depth, cfg)
-                else measuredEstimate(sch, s, physWidth, depth, cfg)
-              } else est(i)
-            if (e < bestSize) { best = sch; bestSize = e }
-          }
-          i += 1
-        }
-      }
+      best
     }
-    best
+    // int try-all candidates encode at seed 42, not the chunk seed (their
+    // cascades' samples, hence the written bytes, depend on it)
+    override def tryAllSeed: Long = 42L
+    override def sampleN: Int = s.sampleN
+    override def sTopCount: Int = s.sTopCount
+    override def hasSample: Boolean = s.sample != null
+    override def escalates: Boolean = true
+    override def approx(scheme: Int): Boolean = isApprox(scheme)
+    override lazy val sampleChunk: SchemeChunk = new Chunk(s.sample, s.sampleN, physWidth, cfg, 42L)
+    override def measureDict(depth: Int): Long = measuredDictEstimate(s, depth, cfg)
   }
 
-  /** Schemes that can encode this chunk without data loss (used by
-    * TRY_ALL and forced-scheme validation). OneValue requires a constant
-    * chunk; everything else encodes arbitrary data.
-    */
-  private def structurallyValid(scheme: Int, s: IntStats, depth: Int): Boolean = scheme match {
-    case OneValue => s.runCount <= 1
-    case Uncompressed | ForBp => true
-    case DeltaBp => true
-    case Dict | Rle | Frequency => depth >= 1 && s.count >= 1
-    case Pfor => depth >= 1 && s.count >= 1 && Bitpack.bitsForRange(s.min, s.max) > 0
-    case _ => false
-  }
-
-  /** Encode `count` values; writes [u8 scheme][payload]. SAMPLE mode
-    * (default): greedy pick over estimates with an anti-regression guard
-    * (SchemePicker.hpp:181-190). TRY_ALL (cfg.tryAll): encode every
-    * eligible candidate and keep the smallest
-    * (ref SchemePicker.hpp:139-179).
+  /** Encode `count` values; writes [u8 scheme][payload], the scheme picked
+    * by [[SchemePicker.encode]].
     */
   def encode(
       out: BufWriter,
@@ -437,55 +327,10 @@ object IntCodec {
       depth: Int,
       cfg: BtrConfig = BtrConfig.Default,
       seed: Long = 42L
-  ): Unit = {
-    val s = IntStats.compute(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
-    // Run-dominated chunks escalate to exhaustive selection even in SAMPLE
-    // mode: a stratified sample structurally cannot see sublinear run
-    // structure (run count is exact but does not scale with rows, so every
-    // extrapolated estimate is biased), while a chunk with ≤ count/32 runs
-    // is cheap to encode under every candidate — bounded by the cost the
-    // reference's own TRY_ALL mode pays on EVERY chunk.
-    // Near-constant chunks (e.g. a 98%-null column's dict-codes stream,
-    // where one placeholder code dominates) escalate for the same
-    // structural reason: the sample's MINORITY values — the only signal
-    // the freq-vs-rle-vs-dict race has — number < 64, so the race is
-    // decided by small-sample variance (promo_code's 1.09× stake, r18).
-    // Such chunks are cheap to encode under every candidate: minority
-    // < 10% of a 640-value sample implies run count ≈ 2× the minority
-    // share of rows, so every candidate encode is run- or
-    // exception-bounded, within the reference TRY_ALL's per-chunk cost.
-    val runDom = s.runCount.toLong * 32 <= count
-    val nearConst = !runDom && count > s.sampleN && s.sampleN - s.sTopCount < 64
-    if (cfg.tryAll ||
-      (cfg.measuredEstimate && depth >= 1 && count >= 1024 && (runDom || nearConst))) {
-      // TRY_ALL encodes attribute as kind 0 (un-escalated): a tryall
-      // write's telemetry then yields the exhaustive per-chunk encode
-      // baseline the escalation-cost pin compares against — same
-      // instrument on both sides, no Spark job/commit overhead in the
-      // denominator (ADVICE r20)
-      if (cfg.tryAll) EscalationTelemetry.timed(0) {
-        tryAllEncode(out, values, count, physWidth, depth, cfg, s)
-      }
-      else EscalationTelemetry.timed(if (runDom) 1 else 2) {
-        tryAllEncode(out, values, count, physWidth, depth, cfg, s)
-      }
-      return
-    }
-    EscalationTelemetry.timed(0) {
-      val start = out.pos
-      val scheme = choose(s, physWidth, depth, cfg)
-      encodeAs(scheme, out, values, count, physWidth, depth, s, cfg, seed)
-      val rawSize = 1 + count.toLong * physWidth
-      if (scheme != Uncompressed && (out.pos - start).toLong > rawSize) {
-        out.truncate(start)
-        encodeAs(Uncompressed, out, values, count, physWidth, depth, s, cfg, seed)
-      }
-    }
-  }
+  ): Unit = SchemePicker.encode(new Chunk(values, count, physWidth, cfg, seed), out, depth)
 
-  /** Forced top-level scheme (the Spark analog of EnforceScheme,
-    * ref test/test-cases/V2.cpp:14-98): validates the scheme can hold the
-    * data, then encodes with it; cascade sub-blocks still self-select.
+  /** Forced top-level scheme (see [[SchemePicker.encodeForced]]); cascade
+    * sub-blocks still pick their own.
     */
   def encodeForced(
       scheme: Int,
@@ -496,37 +341,7 @@ object IntCodec {
       depth: Int,
       cfg: BtrConfig = BtrConfig.Default,
       seed: Long = 42L
-  ): Unit = {
-    val s = IntStats.compute(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
-    require(structurallyValid(scheme, s, depth),
-      s"btr.forceScheme: ${BtrConfig.intNames(scheme)} cannot encode this chunk " +
-        s"(count=$count, runs=${s.runCount}, depth=$depth)")
-    encodeAs(scheme, out, values, count, physWidth, depth, s, cfg, seed)
-  }
-
-  private def tryAllEncode(
-      out: BufWriter,
-      values: Array[Long],
-      count: Int,
-      physWidth: Int,
-      depth: Int,
-      cfg: BtrConfig,
-      s: IntStats
-  ): Unit = {
-    var bestBytes: Array[Byte] = null
-    var i = 0
-    while (i < AllSchemes.length) {
-      val sch = AllSchemes(i)
-      val allowed = sch == Uncompressed || sch == OneValue || cfg.intEnabled(sch)
-      if (allowed && structurallyValid(sch, s, depth)) {
-        val scratch = new BufWriter(1 << 12)
-        encodeAs(sch, scratch, values, count, physWidth, depth, s, cfg, 42L)
-        if (bestBytes == null || scratch.pos < bestBytes.length) bestBytes = scratch.result()
-      }
-      i += 1
-    }
-    out.putBytes(bestBytes)
-  }
+  ): Unit = SchemePicker.encodeForced(new Chunk(values, count, physWidth, cfg, seed), scheme, out, depth)
 
   def encodeAs(
       scheme: Int,

@@ -46,31 +46,20 @@ object StringCodec {
       if (i > 0 && !java.util.Arrays.equals(values(i), values(i - 1))) runs += 1
       i += 1
     }
-    val exhaustive = sampleRuns <= 0 || count <= sampleRuns * runLen * 2
+    val ranges = SchemePicker.sampleRanges(count, sampleRuns, runLen, seed)
     val seen = new mutable.HashSet[ByteKey]()
-    var sampleN = 0
-    if (exhaustive) {
-      i = 0
-      while (i < count) { seen.add(new ByteKey(values(i))); sampleN += 1; i += 1 }
-    } else {
-      // one run per disjoint stratum (see IntStats.compute): overlapping
-      // runs double-count rows and fabricate repeat signal
-      val rnd = new java.util.Random(seed)
-      val stratum = count / sampleRuns
-      var r = 0
-      while (r < sampleRuns) {
-        val base = r * stratum
-        val span = (if (r == sampleRuns - 1) count - base else stratum) - runLen
-        val start = base + (if (span > 0) rnd.nextInt(span + 1) else 0)
-        var j = start
-        val end = start + runLen
-        while (j < end) { seen.add(new ByteKey(values(j))); sampleN += 1; j += 1 }
-        r += 1
-      }
+    var r = 0
+    while (r < ranges.length) {
+      i = ranges(r)
+      while (i < ranges(r + 1)) { seen.add(new ByteKey(values(i))); i += 1 }
+      r += 2
     }
-    StringStats(count, total, runs, sampleN, seen.size)
+    StringStats(count, total, runs, SchemePicker.sampleSize(ranges), seen.size)
   }
 
+  /** Encode `count` values; writes [u8 scheme][payload], the scheme picked
+    * by [[SchemePicker.encode]].
+    */
   def encode(
       out: BufWriter,
       values: Array[Array[Byte]],
@@ -78,21 +67,7 @@ object StringCodec {
       depth: Int,
       cfg: BtrConfig = BtrConfig.Default,
       seed: Long = 42L
-  ): Unit = {
-    val s = computeStats(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
-    if (cfg.tryAll) {
-      tryAllEncode(out, values, count, depth, cfg, s, seed)
-      return
-    }
-    val start = out.pos
-    val scheme = choose(s, depth, cfg)
-    encodeAs(scheme, out, values, count, depth, s, cfg, seed)
-    val rawApprox = 1L + 4 + count.toLong * 4 + s.totalLen
-    if (scheme != Uncompressed && (out.pos - start).toLong > rawApprox) {
-      out.truncate(start)
-      encodeAs(Uncompressed, out, values, count, depth, s, cfg, seed)
-    }
-  }
+  ): Unit = SchemePicker.encode(new Chunk(values, count, cfg, seed), out, depth)
 
   /** Forced top-level scheme; validates data-loss safety first. */
   def encodeForced(
@@ -103,55 +78,38 @@ object StringCodec {
       depth: Int,
       cfg: BtrConfig = BtrConfig.Default,
       seed: Long = 42L
-  ): Unit = {
-    val s = computeStats(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
-    require(structurallyValid(scheme, s, depth),
-      s"btr.forceScheme: ${BtrConfig.stringNames(scheme)} cannot encode this chunk " +
-        s"(count=$count, runs=${s.runCount}, depth=$depth)")
-    encodeAs(scheme, out, values, count, depth, s, cfg, seed)
-  }
+  ): Unit = SchemePicker.encodeForced(new Chunk(values, count, cfg, seed), scheme, out, depth)
 
-  private def structurallyValid(scheme: Int, s: StringStats, depth: Int): Boolean = scheme match {
-    case OneValue => s.runCount <= 1
-    case Uncompressed => true
-    case Dict => depth >= 1 && s.count >= 1
-    case Fsst => depth >= 1 && s.count >= 1
-    case _ => false
-  }
+  private val AllSchemes = Array(OneValue, Dict, Fsst, Uncompressed)
 
-  private def tryAllEncode(
-      out: BufWriter,
-      values: Array[Array[Byte]],
-      count: Int,
-      depth: Int,
-      cfg: BtrConfig,
-      s: StringStats,
-      seed: Long
-  ): Unit = {
-    val candidates = Array(OneValue, Dict, Fsst, Uncompressed)
-    var bestBytes: Array[Byte] = null
-    var i = 0
-    while (i < candidates.length) {
-      val sch = candidates(i)
-      val allowed = sch == Uncompressed || sch == OneValue || cfg.stringEnabled(sch)
-      if (allowed && structurallyValid(sch, s, depth)) {
-        val scratch = new BufWriter(1 << 12)
-        encodeAs(sch, scratch, values, count, depth, s, cfg, seed)
-        if (bestBytes == null || scratch.pos < bestBytes.length) bestBytes = scratch.result()
-      }
-      i += 1
+  /** `values` as one chunk for [[SchemePicker]]. No sample is retained,
+    * so the string family neither measures nor escalates.
+    */
+  private[format] final class Chunk(values: Array[Array[Byte]], count: Int, cfg: BtrConfig, seed: Long)
+      extends SchemeChunk(count, cfg, seed) {
+    val s: StringStats = computeStats(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
+    def runCount: Int = s.runCount
+    def names: Map[Int, String] = BtrConfig.stringNames
+    def forced: Option[Int] = cfg.forceString
+    def candidates: Array[Int] = AllSchemes
+    def enabled(scheme: Int): Boolean = cfg.stringEnabled(scheme)
+    def structurallyValid(scheme: Int, depth: Int): Boolean = scheme match {
+      case OneValue => s.runCount <= 1
+      case Uncompressed => true
+      case Dict => depth >= 1 && s.count >= 1
+      case Fsst => depth >= 1 && s.count >= 1
+      case _ => false
     }
-    out.putBytes(bestBytes)
-  }
-
-  private def choose(s: StringStats, depth: Int, cfg: BtrConfig = BtrConfig.Default): Int = {
-    if (s.count == 0) return Uncompressed
-    if (s.runCount <= 1) return OneValue // exact: single run == constant
-    if (depth >= 1 && cfg.stringEnabled(Dict) && s.sDistinct * 2 <= s.sampleN) return Dict
-    // whole-column FSST when high uniqueness and enough bytes
-    if (depth >= 1 && cfg.stringEnabled(Fsst) && s.totalLen > FsstMinBytes &&
-      s.sDistinct * 2 > s.sampleN) return Fsst
-    Uncompressed
+    def rawBound: Long = 1L + 4 + count.toLong * 4 + s.totalLen
+    def encodeAs(scheme: Int, out: BufWriter, depth: Int, cfg: BtrConfig, seed: Long): Unit =
+      StringCodec.encodeAs(scheme, out, values, count, depth, s, cfg, seed)
+    // a rule, not a size race: a repetitive sample goes dict, a unique one
+    // with enough bytes goes whole-column FSST
+    def screen(depth: Int, est: Array[Long]): Int =
+      if (depth >= 1 && cfg.stringEnabled(Dict) && s.sDistinct * 2 <= s.sampleN) Dict
+      else if (depth >= 1 && cfg.stringEnabled(Fsst) && s.totalLen > FsstMinBytes &&
+        s.sDistinct * 2 > s.sampleN) Fsst
+      else Uncompressed
   }
 
   private def encodeAs(

@@ -109,29 +109,20 @@ class FsstSpec extends AnyFunSuite {
   }
 
   test("vector kernel and scalar fallback decode identically (capability flag)") {
-    // the fast kernel is plain java.base SWAR + VarHandle
-    // (FsstVectorKernel.java — the incubator Vector API variant was
-    // measured and rejected for its cold-path interpreter cliff); it is
-    // a pure speedup, so with the flag off (the path a LinkageError
-    // disarm lands on) the decode is bit-identical
+    // one decode path: the SWAR sizing kernel and the VarHandle expansion
+    // (FsstVectorKernel.java — plain java.base; the incubator Vector API
+    // variant was measured and rejected for its cold-path interpreter
+    // cliff), with the scalar sizing walk for the tail past the kernel's
+    // cursor; the decode must reproduce the input byte for byte
     val rnd = new scala.util.Random(99)
     val vals = Array.fill(5000)(
       s"https://host-${rnd.nextInt(40)}.example/p/${rnd.nextInt(100000)}ÿ${rnd.nextLong()}"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val out = new BufWriter(1 << 18)
     FsstCodec.encodeStrings(out, vals, vals.length, 2)
-    val enc = out.result()
-    val was = FsstCodec.vectorKernel
-    try {
-      FsstCodec.vectorKernel = true
-      val (l1, b1) = FsstCodec.decodeStrings(new BufReader(enc), vals.length)
-      FsstCodec.vectorKernel = false
-      val (l2, b2) = FsstCodec.decodeStrings(new BufReader(enc), vals.length)
-      assert(java.util.Arrays.equals(l1, l2), "outLens must match across kernels")
-      assert(java.util.Arrays.equals(b1, b2), "bytes must match across kernels")
-      val flat = vals.flatMap(x => x)
-      assert(java.util.Arrays.equals(b1, flat), "decode must reproduce the input")
-    } finally FsstCodec.vectorKernel = was
+    val (lens, bytes) = FsstCodec.decodeStrings(new BufReader(out.result()), vals.length)
+    assert(java.util.Arrays.equals(lens, vals.map(_.length)), "decoded lengths must match the input")
+    assert(java.util.Arrays.equals(bytes, vals.flatMap(x => x)), "decode must reproduce the input")
   }
 
   test("corrupt codes fail loudly through BOTH kernels") {
@@ -139,20 +130,17 @@ class FsstSpec extends AnyFunSuite {
     val out = new BufWriter(1 << 14)
     FsstCodec.encodeStrings(out, vals, vals.length, 2)
     val enc = out.result()
-    // find a code byte in the payload region and replace it with an
-    // out-of-table code (tables here train far fewer than 254 symbols)
-    // mid-payload so the vector kernel's block path (not just the scalar
-    // tail) sees it; the ~1KB comp payload sits at the end of enc
-    val corrupted = java.util.Arrays.copyOf(enc, enc.length)
-    corrupted(enc.length - 100) = 250.toByte
-    val was = FsstCodec.vectorKernel
-    try {
-      for (flag <- Seq(true, false)) {
-        FsstCodec.vectorKernel = flag
-        intercept[java.io.IOException] {
-          FsstCodec.decodeStrings(new BufReader(corrupted), vals.length)
-        }
+    // replace a code byte with an out-of-table code (tables here train
+    // far fewer than 254 symbols): mid-payload, where the SWAR sizing
+    // kernel's block path sees it, and as the last byte, which only the
+    // scalar tail walk reaches; the ~1KB comp payload sits at the end of
+    // enc
+    for (at <- Seq(enc.length - 100, enc.length - 1)) {
+      val corrupted = java.util.Arrays.copyOf(enc, enc.length)
+      corrupted(at) = 250.toByte
+      intercept[java.io.IOException] {
+        FsstCodec.decodeStrings(new BufReader(corrupted), vals.length)
       }
-    } finally FsstCodec.vectorKernel = was
+    }
   }
 }

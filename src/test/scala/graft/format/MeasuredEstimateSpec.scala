@@ -8,9 +8,10 @@ import scala.util.Random
   * (/root/reference/btrblocks/scheme/CompressionScheme.cpp:8-46): a
   * candidate's size is learned by actually compressing the retained
   * sample (cascade included), not by a formula. These tests pin that
-  * measured mode (the default) round-trips, is deterministic, never
-  * loses meaningfully to formula mode across scheme-triggering
-  * distributions, and can be switched off via `btr.estimate=formula`.
+  * measured mode (the default) round-trips, is deterministic and never
+  * loses meaningfully to formula-only selection (`measuredEstimate =
+  * false`, what the measurement's own nested encodes run under) across
+  * scheme-triggering distributions.
   */
 class MeasuredEstimateSpec extends AnyFunSuite {
   private val measured = BtrConfig.Default // measuredEstimate = true
@@ -105,15 +106,6 @@ class MeasuredEstimateSpec extends AnyFunSuite {
     }
     // TRY_ALL is the floor; measured should land within 10% of it
     assert(mTotal <= tTotal * 110 / 100, s"measured $mTotal vs tryall $tTotal")
-  }
-
-  test("btr.estimate option parses and rejects junk") {
-    def cfgOf(v: Option[String]): BtrConfig =
-      BtrConfig.fromOptions(k => if (k == "btr.estimate") v else None)
-    assert(cfgOf(None).measuredEstimate)
-    assert(cfgOf(Some("measured")).measuredEstimate)
-    assert(!cfgOf(Some("formula")).measuredEstimate)
-    intercept[IllegalArgumentException](cfgOf(Some("guess")))
   }
 
   test("full-stats mode (no sampling) keeps formula selection and round-trips") {

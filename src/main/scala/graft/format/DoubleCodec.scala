@@ -252,13 +252,11 @@ object DoubleCodec {
     val bits = new Array[Long](n)
     var i = 0
     while (i < n) { bits(i) = java.lang.Double.doubleToRawLongBits(smp(i)); i += 1 }
-    val dict = IntCodec.distinctSorted(bits, n)
+    val built = DictBuild.longs(bits, n, s.sDistinct)
+    val dict = built.entries
     if (dict.length < 1 || dict.length >= n) return Long.MaxValue
-    val codes = new Array[Long](n)
-    i = 0
-    while (i < n) { codes(i) = IntCodec.binarySearch(dict, bits(i)).toLong; i += 1 }
     val cScratch = new BufWriter(1 << 10)
-    IntCodec.encode(cScratch, codes, n, 8, depth - 1, cfg.copy(measuredEstimate = false), 43L)
+    IntCodec.encode(cScratch, built.codes, n, 8, depth - 1, cfg.copy(measuredEstimate = false), 43L)
     val dFull = math.max(dict.length, math.min(s.distinctEst, s.count))
     val widthRatio =
       math.max(1, Bitpack.bitsFor(math.max(1L, dFull - 1L))).toDouble /
@@ -445,14 +443,10 @@ object DoubleCodec {
         val bits = new Array[Long](count)
         var i = 0
         while (i < count) { bits(i) = java.lang.Double.doubleToRawLongBits(values(i)); i += 1 }
-        val dict = IntCodec.distinctSorted(bits, count)
-        out.putInt(dict.length)
-        var j = 0
-        while (j < dict.length) { out.putLong(dict(j)); j += 1 }
-        val codes = new Array[Long](count)
-        i = 0
-        while (i < count) { codes(i) = IntCodec.binarySearch(dict, bits(i)).toLong; i += 1 }
-        IntCodec.encode(out, codes, count, 8, depth - 1, cfg, sub)
+        val dict = DictBuild.longs(bits, count, s.distinctEst)
+        out.putInt(dict.entries.length)
+        out.putLongs(dict.entries, dict.entries.length)
+        IntCodec.encode(out, dict.codes, count, 8, depth - 1, cfg, sub)
       case Rle =>
         val bits = new Array[Long](count)
         var i = 0

@@ -222,7 +222,16 @@ object SymbolTable {
     var table = new SymbolTable(Array.empty)
     var r = 0
     while (r < rounds) {
-      val gains = new scala.collection.mutable.HashMap[ByteKey, Long]()
+      // every key is at most 8 bytes: one map per length, keyed by the
+      // bytes packed little-endian into a long
+      val gains = Array.fill(8)(new scala.collection.mutable.LongMap[Long]())
+      def gain(s: Array[Byte], from: Int, len: Int, g: Long): Unit = {
+        var key = 0L
+        var k = 0
+        while (k < len) { key |= (s(from + k) & 0xffL) << (8 * k); k += 1 }
+        val m = gains(len - 1)
+        m(key) = m.getOrElse(key, 0L) + g
+      }
       var si = 0
       while (si < sample.length) {
         val s = sample(si)
@@ -231,12 +240,8 @@ object SymbolTable {
         var prevLen = 0
         while (i < s.length) {
           val len = matchLen(table, s, i)
-          val key = new ByteKey(java.util.Arrays.copyOfRange(s, i, i + len))
-          gains(key) = gains.getOrElse(key, 0L) + len
-          if (prevStart >= 0 && prevLen + len <= 8) {
-            val merged = new ByteKey(java.util.Arrays.copyOfRange(s, prevStart, i + len))
-            gains(merged) = gains.getOrElse(merged, 0L) + prevLen + len
-          }
+          gain(s, i, len, len)
+          if (prevStart >= 0 && prevLen + len <= 8) gain(s, prevStart, prevLen + len, prevLen + len)
           prevStart = i
           prevLen = len
           i += len
@@ -244,14 +249,20 @@ object SymbolTable {
         si += 1
       }
       // deterministic: gain desc, then lexicographic bytes
-      val chosen = gains.toArray
-        .filter { case (k, g) => g > k.bytes.length } // must beat raw coverage
+      val chosen = gains.indices
+        .flatMap { l =>
+          gains(l).iterator.map { case (key, g) =>
+            (Array.tabulate[Byte](l + 1)(k => (key >>> (8 * k)).toByte), g)
+          }
+        }
+        .filter { case (k, g) => g > k.length } // must beat raw coverage
         .sortWith { case ((ka, ga), (kb, gb)) =>
           if (ga != gb) ga > gb
-          else ByteKey.lexicographic.compare(ka.bytes, kb.bytes) < 0
+          else ByteKey.lexicographic.compare(ka, kb) < 0
         }
         .take(255)
-        .map(_._1.bytes)
+        .map(_._1)
+        .toArray
       table = new SymbolTable(chosen)
       r += 1
     }

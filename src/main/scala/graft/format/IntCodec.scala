@@ -176,16 +176,14 @@ object IntCodec {
     if (depth < 1) return Long.MaxValue
     val smp = s.sample
     val n = s.sampleN
-    val dict = distinctSorted(smp, n)
+    val built = DictBuild.longs(smp, n, s.sDistinct)
+    val dict = built.entries
     if (dict.length < 1 || dict.length >= n) return Long.MaxValue
     val sub = cfg.copy(measuredEstimate = false)
     val tScratch = new BufWriter(1 << 10)
     encode(tScratch, dict, dict.length, 8, depth - 1, sub, 42L)
-    val codes = new Array[Long](n)
-    var i = 0
-    while (i < n) { codes(i) = binarySearch(dict, smp(i)).toLong; i += 1 }
     val cScratch = new BufWriter(1 << 10)
-    encode(cScratch, codes, n, 8, depth - 1, sub, 43L)
+    encode(cScratch, built.codes, n, 8, depth - 1, sub, 43L)
     val dFull = math.max(dict.length, math.min(s.distinctEst, s.count))
     val widthRatio =
       math.max(1, Bitpack.bitsFor(math.max(1L, dFull - 1L))).toDouble /
@@ -394,16 +392,10 @@ object IntCodec {
         }
       case Dict =>
         // sorted distinct values; codes cascade-compressed
-        val dict = distinctSorted(values, count)
-        out.putInt(dict.length)
-        encode(out, dict, dict.length, 8, depth - 1, cfg, sub)
-        val codes = new Array[Long](count)
-        var i = 0
-        while (i < count) {
-          codes(i) = binarySearch(dict, values(i)).toLong
-          i += 1
-        }
-        encode(out, codes, count, 8, depth - 1, cfg, sub + 1)
+        val dict = DictBuild.longs(values, count, s.distinctEst)
+        out.putInt(dict.entries.length)
+        encode(out, dict.entries, dict.entries.length, 8, depth - 1, cfg, sub)
+        encode(out, dict.codes, count, 8, depth - 1, cfg, sub + 1)
       case Rle =>
         val (runVals, runLens, nRuns) = runs(values, count)
         out.putInt(nRuns)
@@ -611,31 +603,6 @@ object IntCodec {
         var i = 0
         while (i < count) { out(i) = in.getLong(); i += 1 }
     }
-  }
-
-  private[format] def distinctSorted(values: Array[Long], count: Int): Array[Long] = {
-    val copy = java.util.Arrays.copyOf(values, count)
-    java.util.Arrays.sort(copy)
-    var n = 0
-    var i = 0
-    while (i < count) {
-      if (i == 0 || copy(i) != copy(i - 1)) { copy(n) = copy(i); n += 1 }
-      i += 1
-    }
-    java.util.Arrays.copyOf(copy, n)
-  }
-
-  private[format] def binarySearch(sorted: Array[Long], v: Long): Int = {
-    var lo = 0
-    var hi = sorted.length - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val mv = sorted(mid)
-      if (mv == v) return mid
-      else if (mv < v) lo = mid + 1
-      else hi = mid - 1
-    }
-    -1
   }
 
   private[format] def runs(values: Array[Long], count: Int): (Array[Long], Array[Long], Int) = {

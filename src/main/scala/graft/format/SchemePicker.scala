@@ -233,12 +233,16 @@ private[format] object SchemePicker {
     // < 10% of a 640-value sample implies run count ≈ 2× the minority
     // share of rows, so every candidate encode is run- or
     // exception-bounded, within the reference TRY_ALL's per-chunk cost.
+    // A constant chunk never escalates: OneValue (9 bytes) is smaller
+    // than every other candidate at 1,024 values or more, so the picker's
+    // constant shortcut writes what try-all would.
     // Telemetry kind: 0 un-escalated (TRY_ALL included, so a tryall
     // write's telemetry is the exhaustive per-chunk encode baseline the
     // escalation-cost pin compares against), 1 run-dominated, 2
     // near-constant.
     val escalation =
-      if (cfg.tryAll || !c.escalates || !cfg.measuredEstimate || depth < 1 || c.count < 1024) 0
+      if (cfg.tryAll || !c.escalates || !cfg.measuredEstimate || depth < 1 || c.count < 1024 ||
+        c.runCount <= 1) 0
       else if (c.runCount.toLong * 32 <= c.count) 1
       else if (c.count > c.sampleN && c.sampleN - c.sTopCount < 64) 2
       else 0
@@ -256,14 +260,22 @@ private[format] object SchemePicker {
     }
   }
 
+  /** Encode every eligible candidate into one of two scratch writers,
+    * keeping the smallest (the earlier one on a tie) in the other.
+    */
   private def tryAll(c: SchemeChunk, out: BufWriter, depth: Int): Unit = {
-    var bestBytes: Array[Byte] = null
+    var best = new BufWriter(1 << 12)
+    var cur = new BufWriter(1 << 12)
+    var found = false
     for (sch <- c.candidates if c.admits(sch) && c.structurallyValid(sch, depth)) {
-      val scratch = new BufWriter(1 << 12)
-      c.encodeAs(sch, scratch, depth, c.cfg, c.tryAllSeed)
-      if (bestBytes == null || scratch.pos < bestBytes.length) bestBytes = scratch.result()
+      cur.truncate(0)
+      c.encodeAs(sch, cur, depth, c.cfg, c.tryAllSeed)
+      if (!found || cur.pos < best.pos) {
+        val t = best; best = cur; cur = t
+        found = true
+      }
     }
-    out.putBytes(bestBytes)
+    out.putBytes(best.backing, 0, best.pos)
   }
 
   /** Greedy pick: the screen's leader, unless an approximate contender

@@ -134,7 +134,8 @@ object StringCodec {
         out.putInt(v.length)
         out.putBytes(v)
       case Dict =>
-        val dict = distinctSortedBytes(values, count)
+        val built = DictBuild.bytes(values, count, s.sDistinct)
+        val dict = built.entries
         out.putInt(dict.length)
         // dict blob: lengths cascade + bytes, optionally FSST-compressed
         var dictBytes = 0L
@@ -151,13 +152,7 @@ object StringCodec {
         // codes via int cascade (forced RLE-friendly per the reference's
         // string dict, string/DynamicDictionary.cpp:167-189 — our selector
         // picks RLE itself when runs are long)
-        val index = new mutable.HashMap[ByteKey, Int]()
-        j = 0
-        while (j < dict.length) { index(new ByteKey(dict(j))) = j; j += 1 }
-        val codes = new Array[Long](count)
-        var i = 0
-        while (i < count) { codes(i) = index(new ByteKey(values(i))).toLong; i += 1 }
-        IntCodec.encode(out, codes, count, 8, depth - 1, cfg, sub + 1)
+        IntCodec.encode(out, built.codes, count, 8, depth - 1, cfg, sub + 1)
       case Fsst =>
         FsstCodec.encodeStrings(out, values, count, depth - 1, cfg, seed)
     }
@@ -300,20 +295,6 @@ object StringCodec {
     var i = 0
     while (i < count) { out(i) = l(i).toInt; i += 1 }
     out
-  }
-
-  private[format] def distinctSortedBytes(values: Array[Array[Byte]], count: Int): Array[Array[Byte]] = {
-    val set = new mutable.HashSet[ByteKey]()
-    val list = new mutable.ArrayBuffer[Array[Byte]]()
-    var i = 0
-    while (i < count) {
-      val k = new ByteKey(values(i))
-      if (set.add(k)) list += values(i)
-      i += 1
-    }
-    val arr = list.toArray
-    java.util.Arrays.sort(arr, ByteKey.lexicographic)
-    arr
   }
 }
 

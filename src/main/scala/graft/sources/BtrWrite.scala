@@ -1179,6 +1179,18 @@ object BtrWriteIds {
   def newWriteId(): String = java.util.UUID.randomUUID().toString.substring(0, 8)
 }
 
+object BtrDataWriter {
+  /** A string's UTF-8 bytes in an array the writer owns until the row
+    * group is flushed. `getBytes` already copies unless the string spans
+    * its whole backing array, which a caller may reuse for the next row;
+    * only that array is cloned.
+    */
+  def ownedBytes(s: org.apache.spark.unsafe.types.UTF8String): Array[Byte] = {
+    val b = s.getBytes
+    if (b eq s.getBaseObject) b.clone() else b
+  }
+}
+
 class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: Int, partitionId: Int, taskId: Long,
     cfg: BtrConfig = BtrConfig.Default, fileNameOverride: Option[String] = None,
     writeId: String = "", namePrefix: String = "")
@@ -1365,7 +1377,7 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
           case FloatType =>
             hold.elemLongs(e) = java.lang.Float.floatToRawIntBits(arr.getFloat(j)).toLong
           case d: DecimalType => hold.elemLongs(e) = arr.getDecimal(j, d.precision, d.scale).toUnscaledLong
-          case StringType => hold.elemStrings(e) = arr.getUTF8String(j).getBytes.clone()
+          case StringType => hold.elemStrings(e) = BtrDataWriter.ownedBytes(arr.getUTF8String(j))
           case BinaryType => hold.elemStrings(e) = arr.getBinary(j).clone()
           case other => throw new UnsupportedOperationException(s"btr map elem: $other")
         }
@@ -1433,7 +1445,7 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
                 lh.elemLongs(e) = java.lang.Float.floatToRawIntBits(sr.getFloat(j)).toLong
               case d: DecimalType =>
                 lh.elemLongs(e) = sr.getDecimal(j, d.precision, d.scale).toUnscaledLong
-              case StringType => lh.elemStrings(e) = sr.getUTF8String(j).getBytes.clone()
+              case StringType => lh.elemStrings(e) = BtrDataWriter.ownedBytes(sr.getUTF8String(j))
               case BinaryType => lh.elemStrings(e) = sr.getBinary(j).clone()
               case other =>
                 throw new UnsupportedOperationException(s"btr array<struct> leaf: $other")
@@ -1548,7 +1560,7 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
       case DoubleType => lc.doubles(i) = sr.getDouble(j)
       case FloatType => lc.longs(i) = java.lang.Float.floatToRawIntBits(sr.getFloat(j)).toLong
       case d: DecimalType => lc.longs(i) = sr.getDecimal(j, d.precision, d.scale).toUnscaledLong
-      case StringType => lc.strings(i) = sr.getUTF8String(j).getBytes.clone()
+      case StringType => lc.strings(i) = BtrDataWriter.ownedBytes(sr.getUTF8String(j))
       case BinaryType => lc.strings(i) = sr.getBinary(j).clone()
       case st: org.apache.spark.sql.types.StructType =>
         val sub = sr.getStruct(j, st.fields.length)
@@ -1595,7 +1607,7 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
           case DoubleType => hold.elemDoubles(e) = arr.getDouble(j)
           case IntegerType => hold.elemLongs(e) = arr.getInt(j).toLong
           case LongType => hold.elemLongs(e) = arr.getLong(j)
-          case StringType => hold.elemStrings(e) = arr.getUTF8String(j).getBytes.clone()
+          case StringType => hold.elemStrings(e) = BtrDataWriter.ownedBytes(arr.getUTF8String(j))
           case other => throw new UnsupportedOperationException(s"btr array elem: $other")
         }
       }
@@ -1633,7 +1645,7 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
           case FloatType => longCols(c)(i) = java.lang.Float.floatToRawIntBits(row.getFloat(c)).toLong
           case dt: DecimalType =>
             longCols(c)(i) = row.getDecimal(c, dt.precision, dt.scale).toUnscaledLong
-          case StringType => stringCols(c)(i) = row.getUTF8String(c).getBytes.clone()
+          case StringType => stringCols(c)(i) = BtrDataWriter.ownedBytes(row.getUTF8String(c))
           case BinaryType => stringCols(c)(i) = row.getBinary(c).clone()
           case st: org.apache.spark.sql.types.StructType =>
             val sr = row.getStruct(c, st.fields.length)
@@ -1691,7 +1703,7 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
                   case DoubleType => hold.elemDoubles(e) = arr.getDouble(j)
                   case IntegerType => hold.elemLongs(e) = arr.getInt(j).toLong
                   case LongType => hold.elemLongs(e) = arr.getLong(j)
-                  case StringType => hold.elemStrings(e) = arr.getUTF8String(j).getBytes.clone()
+                  case StringType => hold.elemStrings(e) = BtrDataWriter.ownedBytes(arr.getUTF8String(j))
                   case other => throw new UnsupportedOperationException(s"btr array elem: $other")
                 }
               }

@@ -2,8 +2,8 @@ package graft.tools
 
 import graft.format._
 
-/** Kernel-isolated decode microbenchmark — NO Spark: times each codec's
-  * decode loop on 65,536-value chunks (the format's row-group size and
+/** Kernel-isolated codec microbenchmark — NO Spark: times each codec's
+  * decode loop, and its forced encode, on 65,536-value chunks (the format's row-group size and
   * the granularity of the reference's regression benchmark,
   * `regression_benchmark.cpp:73-135`), so the JVM-vs-native gap can be
   * attributed to the KERNELS rather than plan/scan orchestration
@@ -15,7 +15,9 @@ import graft.format._
   * `encodeForced`; decode reps run over the same encoded bytes into
   * preallocated output arrays where the codec supports it. Reported rate
   * is DECODED bytes / min-rep time (strings: payload + 4-byte offset
-  * slot), matching ColumnBandwidth's denominator.
+  * slot), matching ColumnBandwidth's denominator. The encode rate is the
+  * min-rep time of the same `encodeForced` call per value, the write
+  * side of the same rung.
   *
   *   runMain graft.tools.KernelBench [reps]
   *
@@ -26,11 +28,11 @@ object KernelBench {
   private val N = 65536
   private val Depth = 2
 
-  private def bench(decodedBytes: Long, reps: Int)(decodeOnce: () => Unit): (Double, Double) = {
+  /** Fastest of `reps` runs of `once`, after three JIT-warming runs. */
+  private def bench(reps: Int)(once: () => Unit): Double = {
     var w = 0
-    while (w < 3) { decodeOnce(); w += 1 } // JIT warm
-    val best = Kit.minSecs(reps)(decodeOnce())
-    (best, decodedBytes / 1e9 / best)
+    while (w < 3) { once(); w += 1 } // JIT warm
+    Kit.minSecs(reps)(once())
   }
 
   /** The box-health canary, callable without Spark from the bench main:
@@ -132,45 +134,48 @@ object KernelBench {
     val rnd = new scala.util.Random(42L)
     val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Double, Double)]
 
+    /** Min-rep ns per value of `encodeOnce` into a reused writer, and the
+      * bytes of its last run.
+      */
+    def encodeBench(capacity: Int)(encodeOnce: BufWriter => Unit): (Double, Array[Byte]) = {
+      val out = new BufWriter(capacity)
+      val sec = bench(reps) { () => out.truncate(0); encodeOnce(out) }
+      (sec * 1e9 / N, out.result())
+    }
+
     def intCase(name: String, scheme: Int, values: Array[Long]): Unit = {
-      val out = new BufWriter(1 << 16)
-      IntCodec.encodeForced(scheme, out, values, N, 8, Depth)
-      val enc = out.result()
+      val (encNs, enc) = encodeBench(1 << 16)(IntCodec.encodeForced(scheme, _, values, N, 8, Depth))
       val dst = new Array[Long](N)
-      val (sec, gbps) = bench(N.toLong * 8, reps) { () =>
+      val sec = bench(reps) { () =>
         IntCodec.decodeInto(new BufReader(enc), N, dst)
       }
       require(java.util.Arrays.equals(dst, java.util.Arrays.copyOf(values, N)),
         s"$name: decode mismatch") // correctness inside the bench, not just speed
-      rows += ((name, enc.length.toLong, N.toLong * 8, sec, gbps))
+      rows += ((name, enc.length.toLong, N.toLong * 8, sec, encNs))
     }
 
     def doubleCase(name: String, scheme: Int, values: Array[Double]): Unit = {
-      val out = new BufWriter(1 << 16)
-      DoubleCodec.encodeForced(scheme, out, values, N, Depth)
-      val enc = out.result()
+      val (encNs, enc) = encodeBench(1 << 16)(DoubleCodec.encodeForced(scheme, _, values, N, Depth))
       val dst = new Array[Double](N)
-      val (sec, gbps) = bench(N.toLong * 8, reps) { () =>
+      val sec = bench(reps) { () =>
         DoubleCodec.decodeInto(new BufReader(enc), N, dst)
       }
       require(java.util.Arrays.equals(dst, java.util.Arrays.copyOf(values, N)),
         s"$name: decode mismatch")
-      rows += ((name, enc.length.toLong, N.toLong * 8, sec, gbps))
+      rows += ((name, enc.length.toLong, N.toLong * 8, sec, encNs))
     }
 
     def stringCase(name: String, scheme: Int, values: Array[Array[Byte]]): Unit = {
-      val out = new BufWriter(1 << 20)
-      StringCodec.encodeForced(scheme, out, values, N, Depth)
-      val enc = out.result()
+      val (encNs, enc) = encodeBench(1 << 20)(StringCodec.encodeForced(scheme, _, values, N, Depth))
       val payload = values.iterator.take(N).map(_.length.toLong).sum
       val decodedBytes = payload + N.toLong * 4
       var last: (Array[Int], Array[Byte]) = null
-      val (sec, gbps) = bench(decodedBytes, reps) { () =>
+      val sec = bench(reps) { () =>
         last = StringCodec.decode(new BufReader(enc), N)
       }
       require(last._1.map(_.toLong).sum == payload && last._2.length == payload.toInt,
         s"$name: decoded payload length mismatch")
-      rows += ((name, enc.length.toLong, decodedBytes, sec, gbps))
+      rows += ((name, enc.length.toLong, decodedBytes, sec, encNs))
     }
 
     // ---- integer kernels ------------------------------------------------
@@ -233,12 +238,13 @@ object KernelBench {
       Array.fill(N)(bytes(
         s"https://www.example-${rnd.nextInt(50)}.com/products/category/item-${rnd.nextInt(100000)}?ref=search&page=${rnd.nextInt(40)}")))
 
-    println(f"${"kernel"}%-22s ${"comp_B"}%10s ${"decomp_B"}%10s ${"min_sec"}%10s ${"GB/s"}%8s")
-    rows.foreach { case (n, c, d, s, g) =>
-      println(f"$n%-22s $c%10d $d%10d $s%10.6f $g%8.2f")
+    println(f"${"kernel"}%-22s ${"comp_B"}%10s ${"decomp_B"}%10s ${"min_sec"}%10s ${"GB/s"}%8s ${"enc_ns/v"}%9s")
+    rows.foreach { case (n, c, d, s, e) =>
+      println(f"$n%-22s $c%10d $d%10d $s%10.6f ${d / 1e9 / s}%8.2f $e%9.1f")
     }
-    val json = rows.map { case (n, c, d, s, g) =>
-      f""""$n":{"comp_bytes":$c,"decomp_bytes":$d,"min_sec":$s%.6f,"gbps":$g%.2f}"""
+    val json = rows.map { case (n, c, d, s, e) =>
+      val g = d / 1e9 / s
+      f""""$n":{"comp_bytes":$c,"decomp_bytes":$d,"min_sec":$s%.6f,"gbps":$g%.2f,"enc_ns_per_value":$e%.1f}"""
     }.mkString("{", ",", "}")
     println(s"""{"kernel_bench":$json,"chunk":$N,"reps":$reps}""")
   }

@@ -365,4 +365,22 @@ class SchemePickerSpec extends AnyFunSuite {
         s"$group: digests differ for ${bad.mkString(", ")}; the full table now reads\n" +
           got.toSeq.sortBy(_._1).map { case (k, v) => s"""      "$k" -> "$v",""" }.mkString("\n"))
     }
+
+  test("a constant chunk does not escalate to try-all and keeps its OneValue bytes") {
+    val values = Array.fill(65536)(42L)
+    val before = EscalationTelemetry.snapshot()
+    val out = new BufWriter()
+    IntCodec.encode(out, values, values.length, 8, 3)
+    val after = EscalationTelemetry.snapshot()
+    assert(after.runDomChunks == before.runDomChunks, s"$before -> $after")
+    assert(after.nearConstChunks == before.nearConstChunks, s"$before -> $after")
+    val expected = new BufWriter()
+    expected.putByte(IntCodec.OneValue)
+    expected.putLong(42L)
+    assert(out.result().toSeq == expected.result().toSeq)
+    // exhaustive selection keeps the same 9 bytes
+    val tried = new BufWriter()
+    IntCodec.encode(tried, values, values.length, 8, 3, BtrConfig.Default.copy(tryAll = true))
+    assert(tried.result().toSeq == expected.result().toSeq)
+  }
 }

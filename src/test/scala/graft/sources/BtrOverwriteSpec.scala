@@ -82,6 +82,39 @@ class BtrOverwriteSpec extends AnyFunSuite {
     assert(!listNames(dir).exists(_.startsWith("_tmp_")), listNames(dir).mkString(","))
   }
 
+  test("string values survive the row source reusing their backing arrays") {
+    // UTF8String.fromBytes wraps the caller's array without copying, and a
+    // row source may refill that array for the next row: the writer must
+    // own a copy of every string it buffers (top-level, array element and
+    // struct field)
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val dir = tmp("reused-bytes")
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("s", StringType),
+      StructField("a", ArrayType(StringType)),
+      StructField("t", StructType(Seq(StructField("u", StringType))))))
+    val bufs = Array.fill(3)(new Array[Byte](5))
+    def refill(b: Array[Byte], text: String): UTF8String = {
+      System.arraycopy(text.getBytes("UTF-8"), 0, b, 0, b.length)
+      UTF8String.fromBytes(b)
+    }
+    val n = 300
+    val bw = new BtrBatchWrite(dir, schema, BtrOverwriteMode.Truncate, 65536, 3)
+    val w = bw.createBatchWriterFactory(null).createWriter(0, 1L)
+    (0 until n).foreach { i =>
+      w.write(InternalRow(i, refill(bufs(0), f"s$i%04d"),
+        new GenericArrayData(Array[Any](refill(bufs(1), f"a$i%04d"))),
+        InternalRow(refill(bufs(2), f"u$i%04d"))))
+    }
+    bw.commit(Array(w.commit()))
+    val back = spark.read.format("btr").load(dir).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getSeq[String](2), r.getStruct(3).getString(0)))
+      .sortBy(_._1)
+    assert(back.toSeq == (0 until n).map(i => (i, f"s$i%04d", Seq(f"a$i%04d"), f"u$i%04d")))
+  }
+
   test("commit fails loudly when rename cannot land") {
     import spark.implicits._
     val dir = tmp("loud")

@@ -427,9 +427,8 @@ object ChunkCodec {
       cfg: BtrConfig = BtrConfig.Default,
       seed: Long = 42L,
       // optional file-level HyperLogLog registers for this column — the
-      // stats loops below fold every non-null value's hash in while they
-      // already iterate for min/max/bloom (one extra hash per value for
-      // doubles; ints/strings reuse the bloom hash)
+      // footer stats fold each distinct non-null value's hash in (ints
+      // and strings reuse the bloom hash)
       ndvReg: Array[Byte] = null,
       ndvP: Int = 0
   ): ChunkStats = {
@@ -437,84 +436,21 @@ object ChunkCodec {
     var i = 0
     val tag = chunk.tag
     if (PhysType.isIntFamily(tag)) {
-      SchemePicker.encodeColumn(
-        new IntCodec.Chunk(chunk.longs, chunk.count, PhysType.physWidth(tag), cfg, seed), out, cascadeDepth)
-      var mn = Long.MaxValue
-      var mx = Long.MinValue
-      var sum = 0L
-      var sumOver = false
-      // stop hashing once cardinality provably exceeds the bloom budget
-      // (Bloom.build would reject it) — unique-key columns otherwise pay
-      // a full distinct-set build per chunk for a filter that never ships
-      val ndvCap = cfg.bloomMaxBytes
-      var bloomOver = false
-      val hashes = if (cfg.bloomEnabled) new Bloom.LongSet() else null
-      i = 0
-      while (i < chunk.count) {
-        if (!chunk.isNull(i)) {
-          val v = chunk.longs(i)
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          val ns = sum + v
-          if (((sum ^ ns) & (v ^ ns)) < 0) sumOver = true // signed wrap
-          sum = ns
-          if ((hashes != null && !bloomOver) || ndvReg != null) {
-            val h = Bloom.hashLong(v)
-            if (hashes != null && !bloomOver) {
-              if (hashes.size > ndvCap) bloomOver = true else hashes.add(h)
-            }
-            if (ndvReg != null) Hll.add(ndvReg, ndvP, h)
-          }
-        }
-        i += 1
-      }
-      val has = nullCount < chunk.count
-      ChunkStats(nullCount, mn, mx, 0, 0, has,
-        rawBytes = chunk.count.toLong * PhysType.physWidth(tag),
-        bloom = if (hashes != null && !bloomOver) Bloom.build(hashes, cfg.bloomMaxBytes) else null,
-        sumLong = sum, sumOverflow = sumOver)
-    } else if (tag == PhysType.Double || tag == PhysType.Float) {
-      SchemePicker.encodeColumn(
-        // floats stored as raw bits via the int path (lossless, narrower)
-        if (tag == PhysType.Float) new IntCodec.Chunk(chunk.longs, chunk.count, 4, cfg, seed)
-        else new DoubleCodec.Chunk(chunk.doubles, chunk.count, cfg, seed),
-        out, cascadeDepth)
-      // NaN is EXCLUDED from min/max and recorded in hasNaN instead: Spark
-      // orders NaN above every value, so a NaN-polluted max would otherwise
-      // make GreaterThan skipping drop rows. Updates use Double.compare so
-      // -0.0 orders below 0.0 deterministically (Spark compares them equal,
-      // so either tie-choice is within its equality class).
-      var mn = java.lang.Double.MAX_VALUE
-      var mx = -java.lang.Double.MAX_VALUE
-      var has = false
-      var sawNaN = false
-      i = 0
-      while (i < chunk.count) {
-        if (!chunk.isNull(i)) {
-          val v =
-            if (tag == PhysType.Float) java.lang.Float.intBitsToFloat(chunk.longs(i).toInt).toDouble
-            else chunk.doubles(i)
-          if (ndvReg != null) {
-            // canonical bits: -0.0 folds into 0.0 (SQL DISTINCT equates
-            // them) and doubleToLongBits canonicalizes every NaN
-            val canon = if (v == 0.0d) 0L else java.lang.Double.doubleToLongBits(v)
-            Hll.add(ndvReg, ndvP, Bloom.hashLong(canon))
-          }
-          if (v.isNaN) sawNaN = true
-          else {
-            if (java.lang.Double.compare(v, mn) < 0) mn = v
-            if (java.lang.Double.compare(v, mx) > 0) mx = v
-            has = true
-          }
-        }
-        i += 1
-      }
-      // all-NaN chunk: NaN placeholders (every comparison against them is
-      // false, so skip checks stay conservative) with the flag set
-      if (!has && sawNaN) { mn = java.lang.Double.NaN; mx = java.lang.Double.NaN }
-      ChunkStats(nullCount, 0, 0, mn, mx, has,
-        rawBytes = chunk.count.toLong * (if (tag == PhysType.Float) 4 else 8),
-        hasNaN = sawNaN)
+      val c = new IntCodec.Chunk(chunk.longs, chunk.count, PhysType.physWidth(tag), cfg, seed,
+        withSum = true)
+      SchemePicker.encodeColumn(c, out, cascadeDepth)
+      intStats(chunk, c, nullCount, cfg, ndvReg, ndvP)
+    } else if (tag == PhysType.Float) {
+      // floats stored as raw bits via the int path (lossless, narrower)
+      val c = new IntCodec.Chunk(chunk.longs, chunk.count, 4, cfg, seed)
+      SchemePicker.encodeColumn(c, out, cascadeDepth)
+      val dict = c.builtDict
+      doubleStats(chunk, if (dict == null) null else dict.entries, nullCount, ndvReg, ndvP)
+    } else if (tag == PhysType.Double) {
+      val c = new DoubleCodec.Chunk(chunk.doubles, chunk.count, cfg, seed)
+      SchemePicker.encodeColumn(c, out, cascadeDepth)
+      val dict = c.builtDict
+      doubleStats(chunk, if (dict == null) null else dict.entries, nullCount, ndvReg, ndvP)
     } else if (tag == PhysType.Struct) {
       // [u8 leafCount] then per leaf [u8 tag][i32 len][<leaf column
       // body>] — each leaf column compresses under its own scheme
@@ -643,42 +579,234 @@ object ChunkCodec {
       }
       ChunkStats(nullCount, 0, 0, 0, 0, hasMinMax = false, rawBytes = raw)
     } else {
-      SchemePicker.encodeColumn(
-        new StringCodec.Chunk(chunk.strings, chunk.count, cfg, seed), out, cascadeDepth)
-      // byte-wise unsigned min/max over non-null values — the same ordering
-      // Spark's UTF8String comparison uses, so scan-side skipping is exact
-      var mn: Array[Byte] = null
-      var mx: Array[Byte] = null
-      var totalLen = 0L
-      val ndvCap = cfg.bloomMaxBytes // same budget-overflow early-out as ints
-      var bloomOver = false
-      val hashes = if (cfg.bloomEnabled) new Bloom.LongSet() else null
-      i = 0
-      while (i < chunk.count) {
-        totalLen += chunk.strings(i).length
-        if (!chunk.isNull(i)) {
-          val v = chunk.strings(i)
-          if (mn == null || java.util.Arrays.compareUnsigned(v, mn) < 0) mn = v
-          if (mx == null || java.util.Arrays.compareUnsigned(v, mx) > 0) mx = v
-          if ((hashes != null && !bloomOver) || ndvReg != null) {
-            val h = Bloom.hashBytes(v)
-            if (hashes != null && !bloomOver) {
-              if (hashes.size > ndvCap) bloomOver = true else hashes.add(h)
+      val c = new StringCodec.Chunk(chunk.strings, chunk.count, cfg, seed)
+      SchemePicker.encodeColumn(c, out, cascadeDepth)
+      stringStats(chunk, c, nullCount, cfg, ndvReg, ndvP)
+    }
+  }
+
+  /* Footer statistics of a root chunk, taken from its family stats pass
+   * and its distinct values: the dictionary's entries when an encode
+   * built one, else the first non-null row of each run (a repeat adds
+   * nothing to a set, a min/max or an HLL register). Null rows hold the
+   * placeholder (0, 0.0 or empty), which the dictionary contains; it
+   * counts only when a non-null row holds it too.
+   */
+
+  /** Feeds value hashes into the chunk's bloom set, up to the budget past
+    * which [[Bloom.build]] would reject the set anyway, and into the
+    * column's HyperLogLog.
+    */
+  private final class HashSink(bloom: Boolean, maxBytes: Int, ndvReg: Array[Byte], ndvP: Int) {
+    private val set = if (bloom) new Bloom.LongSet() else null
+    private var over = false
+
+    /** A hash would still change the bloom set or the registers. */
+    def active: Boolean = (set != null && !over) || ndvReg != null
+
+    def add(h: Long): Unit = {
+      if (set != null && !over) {
+        if (set.size > maxBytes) over = true else set.add(h)
+      }
+      if (ndvReg != null) Hll.add(ndvReg, ndvP, h)
+    }
+
+    def bloomBits: Array[Int] = if (set != null && !over) Bloom.build(set, maxBytes) else null
+  }
+
+  /** Some non-null row holds the value 0 (the int/float placeholder). */
+  private def nonNullZero(longs: Array[Long], isNull: Array[Boolean], count: Int): Boolean = {
+    var i = 0
+    while (i < count && (isNull(i) || longs(i) != 0L)) i += 1
+    i < count
+  }
+
+  private def intStats(chunk: ColumnChunk, c: IntCodec.Chunk, nullCount: Int, cfg: BtrConfig,
+      ndvReg: Array[Byte], ndvP: Int): ChunkStats = {
+    val n = chunk.count
+    val sink = new HashSink(cfg.bloomEnabled, cfg.bloomMaxBytes, ndvReg, ndvP)
+    var mn = Long.MaxValue
+    var mx = Long.MinValue
+    val has = nullCount < n
+    if (has) {
+      val dict = c.builtDict
+      if (dict != null) {
+        val e = dict.entries
+        val skipZero = nullCount > 0 && !nonNullZero(chunk.longs, chunk.isNull, n)
+        var k = 0
+        while (k < e.length) {
+          val v = e(k)
+          if (v != 0L || !skipZero) {
+            if (v < mn) mn = v
+            mx = v // ascending entries
+            if (sink.active) sink.add(Bloom.hashLong(v))
+          }
+          k += 1
+        }
+      } else {
+        if (nullCount == 0) { mn = c.s.min; mx = c.s.max }
+        if (sink.active || nullCount > 0) {
+          val longs = chunk.longs
+          val isNull = chunk.isNull
+          var started = false
+          var prev = 0L
+          var i = 0
+          while (i < n) {
+            if (!isNull(i)) {
+              val v = longs(i)
+              if (!started || v != prev) {
+                if (v < mn) mn = v
+                if (v > mx) mx = v
+                if (sink.active) sink.add(Bloom.hashLong(v))
+                started = true
+                prev = v
+              }
             }
-            if (ndvReg != null) Hll.add(ndvReg, ndvP, h)
+            i += 1
           }
         }
-        i += 1
       }
-      val raw = totalLen + 4L * chunk.count // bytes + i32 offsets
-      if (mn == null) ChunkStats(nullCount, 0, 0, 0, 0, hasMinMax = false, rawBytes = raw)
-      else ChunkStats(nullCount, 0, 0, 0, 0, hasMinMax = true,
-        minBytes = truncMin(mn), maxBytes = truncMax(mx), rawBytes = raw,
-        // ≤ StringStatLen bounds are stored untruncated — exact by
-        // construction (truncMin/truncMax return them unchanged)
-        minExact = mn.length <= StringStatLen, maxExact = mx.length <= StringStatLen,
-        bloom = if (hashes != null && !bloomOver) Bloom.build(hashes, cfg.bloomMaxBytes) else null)
     }
+    ChunkStats(nullCount, mn, mx, 0, 0, has,
+      rawBytes = n.toLong * PhysType.physWidth(chunk.tag),
+      bloom = sink.bloomBits, sumLong = c.s.sum, sumOverflow = c.s.sumOverflow)
+  }
+
+  /** Double and float footers. `entries` is the dictionary (raw bits,
+    * float bits for a float chunk) or null. NaN is EXCLUDED from min/max
+    * and recorded in hasNaN instead: Spark orders NaN above every value,
+    * so a NaN-polluted max would otherwise make GreaterThan skipping drop
+    * rows. Updates use Double.compare so -0.0 orders below 0.0
+    * deterministically (Spark compares them equal, so either tie-choice
+    * is within its equality class). The HLL hashes canonical bits: -0.0
+    * folds into 0.0 (SQL DISTINCT equates them) and doubleToLongBits
+    * canonicalizes every NaN. Doubles carry no bloom.
+    */
+  private def doubleStats(chunk: ColumnChunk, entries: Array[Long], nullCount: Int,
+      ndvReg: Array[Byte], ndvP: Int): ChunkStats = {
+    val n = chunk.count
+    val isFloat = chunk.tag == PhysType.Float
+    val acc = new DoubleAcc(isFloat, ndvReg, ndvP)
+    val isNull = chunk.isNull
+    if (nullCount < n) {
+      if (entries != null) {
+        // the placeholder's bits are 0 (+0.0)
+        var skipZero = nullCount > 0
+        var i = 0
+        while (skipZero && i < n) {
+          if (!isNull(i) && acc.bitsAt(chunk, i) == 0L) skipZero = false
+          i += 1
+        }
+        var k = 0
+        while (k < entries.length) {
+          if (entries(k) != 0L || !skipZero) acc.add(entries(k))
+          k += 1
+        }
+      } else {
+        var started = false
+        var prev = 0L
+        var i = 0
+        while (i < n) {
+          if (!isNull(i)) {
+            val b = acc.bitsAt(chunk, i)
+            if (!started || b != prev) { acc.add(b); started = true; prev = b }
+          }
+          i += 1
+        }
+      }
+    }
+    // all-NaN chunk: NaN placeholders (every comparison against them is
+    // false, so skip checks stay conservative) with the flag set
+    if (!acc.has && acc.sawNaN) { acc.mn = java.lang.Double.NaN; acc.mx = java.lang.Double.NaN }
+    ChunkStats(nullCount, 0, 0, acc.mn, acc.mx, acc.has,
+      rawBytes = n.toLong * (if (isFloat) 4 else 8),
+      hasNaN = acc.sawNaN)
+  }
+
+  /** Min/max/NaN and HLL state of [[doubleStats]] over raw value bits. */
+  private final class DoubleAcc(isFloat: Boolean, ndvReg: Array[Byte], ndvP: Int) {
+    var mn: Double = java.lang.Double.MAX_VALUE
+    var mx: Double = -java.lang.Double.MAX_VALUE
+    var has = false
+    var sawNaN = false
+
+    def bitsAt(chunk: ColumnChunk, i: Int): Long =
+      if (isFloat) chunk.longs(i) else java.lang.Double.doubleToRawLongBits(chunk.doubles(i))
+
+    def add(bits: Long): Unit = {
+      val v =
+        if (isFloat) java.lang.Float.intBitsToFloat(bits.toInt).toDouble
+        else java.lang.Double.longBitsToDouble(bits)
+      if (ndvReg != null) {
+        val canon = if (v == 0.0d) 0L else java.lang.Double.doubleToLongBits(v)
+        Hll.add(ndvReg, ndvP, Bloom.hashLong(canon))
+      }
+      if (v.isNaN) sawNaN = true
+      else {
+        if (java.lang.Double.compare(v, mn) < 0) mn = v
+        if (java.lang.Double.compare(v, mx) > 0) mx = v
+        has = true
+      }
+    }
+  }
+
+  /** Byte-wise unsigned min/max over non-null values — the same ordering
+    * Spark's UTF8String comparison uses, so scan-side skipping is exact.
+    */
+  private def stringStats(chunk: ColumnChunk, c: StringCodec.Chunk, nullCount: Int,
+      cfg: BtrConfig, ndvReg: Array[Byte], ndvP: Int): ChunkStats = {
+    val n = chunk.count
+    val strings = chunk.strings
+    val isNull = chunk.isNull
+    val sink = new HashSink(cfg.bloomEnabled, cfg.bloomMaxBytes, ndvReg, ndvP)
+    var mn: Array[Byte] = null
+    var mx: Array[Byte] = null
+    if (nullCount < n) {
+      val dict = c.builtDict
+      if (dict != null) {
+        // ascending entries; the empty placeholder sorts first
+        val e = dict.entries
+        var skipEmpty = nullCount > 0
+        var i = 0
+        while (skipEmpty && i < n) {
+          if (!isNull(i) && strings(i).length == 0) skipEmpty = false
+          i += 1
+        }
+        var k = 0
+        while (k < e.length) {
+          val v = e(k)
+          if (v.length != 0 || !skipEmpty) {
+            if (mn == null) mn = v
+            mx = v
+            if (sink.active) sink.add(Bloom.hashBytes(v))
+          }
+          k += 1
+        }
+      } else {
+        var prev: Array[Byte] = null
+        var i = 0
+        while (i < n) {
+          if (!isNull(i)) {
+            val v = strings(i)
+            if (prev == null || !java.util.Arrays.equals(v, prev)) {
+              if (mn == null || java.util.Arrays.compareUnsigned(v, mn) < 0) mn = v
+              if (mx == null || java.util.Arrays.compareUnsigned(v, mx) > 0) mx = v
+              if (sink.active) sink.add(Bloom.hashBytes(v))
+              prev = v
+            }
+          }
+          i += 1
+        }
+      }
+    }
+    val raw = c.s.totalLen + 4L * n // bytes + i32 offsets
+    if (mn == null) ChunkStats(nullCount, 0, 0, 0, 0, hasMinMax = false, rawBytes = raw)
+    else ChunkStats(nullCount, 0, 0, 0, 0, hasMinMax = true,
+      minBytes = truncMin(mn), maxBytes = truncMax(mx), rawBytes = raw,
+      // ≤ StringStatLen bounds are stored untruncated — exact by
+      // construction (truncMin/truncMax return them unchanged)
+      minExact = mn.length <= StringStatLen, maxExact = mx.length <= StringStatLen,
+      bloom = sink.bloomBits)
   }
 
   /** Decoded column chunk ready to be copied into a ColumnVector;

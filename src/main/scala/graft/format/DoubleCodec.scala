@@ -273,6 +273,19 @@ object DoubleCodec {
   private[format] final class Chunk(values: Array[Double], count: Int, cfg: BtrConfig, seed: Long)
       extends SchemeChunk(count, cfg, seed) {
     val s: DoubleStats = DoubleStats.compute(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
+    private var built: DictBuild.Longs = null
+    /** The dictionary of the chunk's raw bits, built on first use. */
+    def dict: DictBuild.Longs = {
+      if (built == null) {
+        val bits = new Array[Long](count)
+        var i = 0
+        while (i < count) { bits(i) = java.lang.Double.doubleToRawLongBits(values(i)); i += 1 }
+        built = DictBuild.longs(bits, count, s.distinctEst)
+      }
+      built
+    }
+    /** The dictionary if an encode has built it, else null. */
+    def builtDict: DictBuild.Longs = built
     def runCount: Int = s.runCount
     def names: Map[Int, String] = BtrConfig.doubleNames
     def forced: Option[Int] = cfg.forceDouble
@@ -287,7 +300,7 @@ object DoubleCodec {
     }
     def rawBound: Long = 1 + count.toLong * 8
     def encodeAs(scheme: Int, out: BufWriter, depth: Int, cfg: BtrConfig, seed: Long): Unit =
-      DoubleCodec.encodeAs(scheme, out, values, count, depth, s, cfg, seed)
+      DoubleCodec.encodeAs(scheme, out, values, count, depth, s, dict, cfg, seed)
     def screen(depth: Int, est: Array[Long]): Int = DoubleCodec.screen(values, count, s, depth, cfg, est)
     override def sampleN: Int = s.sampleN
     override def sTopCount: Int = s.sTopCount
@@ -429,8 +442,9 @@ object DoubleCodec {
       count: Int,
       depth: Int,
       s: DoubleStats,
-      cfg: BtrConfig = BtrConfig.Default,
-      seed: Long = 42L
+      dictionary: => DictBuild.Longs,
+      cfg: BtrConfig,
+      seed: Long
   ): Unit = {
     val sub = seed * 6364136223846793005L + 1442695040888963407L
     out.putByte(scheme)
@@ -440,10 +454,7 @@ object DoubleCodec {
         while (i < count) { out.putDouble(values(i)); i += 1 }
       case OneValue => out.putDouble(if (count > 0) values(0) else 0.0)
       case Dict =>
-        val bits = new Array[Long](count)
-        var i = 0
-        while (i < count) { bits(i) = java.lang.Double.doubleToRawLongBits(values(i)); i += 1 }
-        val dict = DictBuild.longs(bits, count, s.distinctEst)
+        val dict = dictionary
         out.putInt(dict.entries.length)
         out.putLongs(dict.entries, dict.entries.length)
         IntCodec.encode(out, dict.codes, count, 8, depth - 1, cfg, sub)

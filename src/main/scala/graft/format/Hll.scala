@@ -3,9 +3,10 @@ package graft.format
 /** HyperLogLog distinct-value sketch (Flajolet/Fusy/Gandouet/Meunier,
   * AofA 2007, with the standard linear-counting small-range correction).
   *
-  * The writer folds every value's 64-bit hash into one register array per
-  * COLUMN per FILE while it already iterates values for min/max/bloom
-  * stats, and the registers ride in the file footer (format v6). Merging
+  * The writer folds each chunk's distinct values' 64-bit hashes into one
+  * register array per COLUMN per FILE (a register keeps a maximum, so a
+  * repeated value adds nothing), and the registers ride in the file
+  * footer (format v6). Merging
   * file sketches is an elementwise max, so scan planning derives a
   * table-level NDV per column from footers alone — the statistic the
   * reference's `estimateCompression` sampler approximates per chunk

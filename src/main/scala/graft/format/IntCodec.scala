@@ -15,6 +15,9 @@ import scala.collection.mutable
   *    histogram — that only steer scheme SELECTION. Sampling replaces the
   *    former per-value LongMap over every 65,536-row chunk, the write
   *    path's dominant stats cost at scale.
+  *
+  * A root chunk (`withSum`) also sums its values in the exact pass for
+  * the footer: null rows hold the placeholder 0, so they add nothing.
   */
 final case class IntStats(
     count: Int,
@@ -34,7 +37,10 @@ final case class IntStats(
     // reference's estimateCompression contract,
     // /root/reference/btrblocks/scheme/CompressionScheme.cpp:8-46); null
     // in full-stats mode (sampleRuns == 0), where selection stays formula
-    sample: Array[Long] = null
+    sample: Array[Long] = null,
+    // wrapped sum of every value and whether it wrapped (root chunks only)
+    sum: Long = 0L,
+    sumOverflow: Boolean = false
 ) {
   def avgRunLength: Double = if (runCount == 0) 0.0 else count.toDouble / runCount
 
@@ -68,15 +74,18 @@ object IntStats {
       count: Int,
       seed: Long = 42L,
       sampleRuns: Int = 10,
-      runLen: Int = 64
+      runLen: Int = 64,
+      withSum: Boolean = false
   ): IntStats = {
     if (count == 0)
       return IntStats(0, 0L, 0L, 0, isSorted = true, 0, 0, 0, 0L, 0, new Array[Int](65), null)
-    // exact pass: min/max/runs/sortedness (no hashing)
+    // exact pass: min/max/runs/sortedness (no hashing), and the sum
     var min = values(0)
     var max = values(0)
     var runs = 1
     var sorted = true
+    var sum = if (withSum) values(0) else 0L
+    var sumOver = false
     var i = 1
     while (i < count) {
       val v = values(i)
@@ -84,6 +93,11 @@ object IntStats {
       if (v > max) max = v
       if (v != values(i - 1)) runs += 1
       if (v < values(i - 1)) sorted = false
+      if (withSum) {
+        val ns = sum + v
+        if (((sum ^ ns) & (v ^ ns)) < 0) sumOver = true // signed wrap
+        sum = ns
+      }
       i += 1
     }
     // sampled pass: frequency map over the stratified sample (the whole
@@ -108,7 +122,7 @@ object IntStats {
     }
     val f = SchemePicker.frequencies(freq, sampleN, count)
     IntStats(count, min, max, runs, sorted, sampleN, f.distinct, f.distinctEst, f.top, f.topCount,
-      hist, sampleBuf)
+      hist, sampleBuf, sum, sumOver)
   }
 }
 
@@ -267,15 +281,27 @@ object IntCodec {
   private val AllSchemes =
     Array(OneValue, ForBp, DeltaBp, Dict, Rle, Frequency, Pfor, Uncompressed)
 
-  /** `values` as one chunk for [[SchemePicker]]. */
+  /** `values` as one chunk for [[SchemePicker]]; `withSum` for a root
+    * chunk, whose footer records the sum.
+    */
   private[format] final class Chunk(
       values: Array[Long],
       count: Int,
       physWidth: Int,
       cfg: BtrConfig,
-      seed: Long
+      seed: Long,
+      withSum: Boolean = false
   ) extends SchemeChunk(count, cfg, seed) {
-    val s: IntStats = IntStats.compute(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
+    val s: IntStats =
+      IntStats.compute(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen, withSum)
+    private var built: DictBuild.Longs = null
+    /** The chunk's dictionary, built on first use. */
+    def dict: DictBuild.Longs = {
+      if (built == null) built = DictBuild.longs(values, count, s.distinctEst)
+      built
+    }
+    /** The dictionary if an encode has built it, else null. */
+    def builtDict: DictBuild.Longs = built
     def runCount: Int = s.runCount
     def names: Map[Int, String] = BtrConfig.intNames
     def forced: Option[Int] = cfg.forceInt
@@ -292,7 +318,7 @@ object IntCodec {
     }
     def rawBound: Long = 1 + count.toLong * physWidth
     def encodeAs(scheme: Int, out: BufWriter, depth: Int, cfg: BtrConfig, seed: Long): Unit =
-      IntCodec.encodeAs(scheme, out, values, count, physWidth, depth, s, cfg, seed)
+      IntCodec.encodeAs(scheme, out, values, count, physWidth, depth, s, dict, cfg, seed)
     def screen(depth: Int, est: Array[Long]): Int = {
       var best = Uncompressed
       est(Uncompressed) = formulaEstimate(Uncompressed, s, physWidth, depth)
@@ -341,7 +367,7 @@ object IntCodec {
       seed: Long = 42L
   ): Unit = SchemePicker.encodeForced(new Chunk(values, count, physWidth, cfg, seed), scheme, out, depth)
 
-  def encodeAs(
+  private def encodeAs(
       scheme: Int,
       out: BufWriter,
       values: Array[Long],
@@ -349,8 +375,9 @@ object IntCodec {
       physWidth: Int,
       depth: Int,
       s: IntStats,
-      cfg: BtrConfig = BtrConfig.Default,
-      seed: Long = 42L
+      dictionary: => DictBuild.Longs,
+      cfg: BtrConfig,
+      seed: Long
   ): Unit = {
     // derived seed for cascade sub-blocks (distinct per nesting level)
     val sub = seed * 6364136223846793005L + 1442695040888963407L
@@ -392,7 +419,7 @@ object IntCodec {
         }
       case Dict =>
         // sorted distinct values; codes cascade-compressed
-        val dict = DictBuild.longs(values, count, s.distinctEst)
+        val dict = dictionary
         out.putInt(dict.entries.length)
         encode(out, dict.entries, dict.entries.length, 8, depth - 1, cfg, sub)
         encode(out, dict.codes, count, 8, depth - 1, cfg, sub + 1)

@@ -9,7 +9,9 @@ import scala.collection.mutable
   * closed-form screens, the dict-aware measured estimate and the
   * encoders. Every per-value loop stays behind these methods, so the
   * picker touches no value. Scheme ids 0, 1 and 2 are Uncompressed,
-  * OneValue and Dict in every family.
+  * OneValue and Dict in every family. Each family builds its full-chunk
+  * dictionary at most once, on first use: the Dict encode, try-all's Dict
+  * candidate and the footer statistics share it.
   */
 private[format] abstract class SchemeChunk(val count: Int, val cfg: BtrConfig, val seed: Long) {
   /** Exact run count; a single run is a constant chunk. */

@@ -88,6 +88,14 @@ object StringCodec {
   private[format] final class Chunk(values: Array[Array[Byte]], count: Int, cfg: BtrConfig, seed: Long)
       extends SchemeChunk(count, cfg, seed) {
     val s: StringStats = computeStats(values, count, seed, cfg.sampleRuns, cfg.sampleRunLen)
+    private var built: DictBuild.Bytes = null
+    /** The chunk's dictionary, built on first use. */
+    def dict: DictBuild.Bytes = {
+      if (built == null) built = DictBuild.bytes(values, count, s.sDistinct)
+      built
+    }
+    /** The dictionary if an encode has built it, else null. */
+    def builtDict: DictBuild.Bytes = built
     def runCount: Int = s.runCount
     def names: Map[Int, String] = BtrConfig.stringNames
     def forced: Option[Int] = cfg.forceString
@@ -102,7 +110,7 @@ object StringCodec {
     }
     def rawBound: Long = 1L + 4 + count.toLong * 4 + s.totalLen
     def encodeAs(scheme: Int, out: BufWriter, depth: Int, cfg: BtrConfig, seed: Long): Unit =
-      StringCodec.encodeAs(scheme, out, values, count, depth, s, cfg, seed)
+      StringCodec.encodeAs(scheme, out, values, count, depth, s, dict, cfg, seed)
     // a rule, not a size race: a repetitive sample goes dict, a unique one
     // with enough bytes goes whole-column FSST
     def screen(depth: Int, est: Array[Long]): Int =
@@ -119,8 +127,9 @@ object StringCodec {
       count: Int,
       depth: Int,
       s: StringStats,
-      cfg: BtrConfig = BtrConfig.Default,
-      seed: Long = 42L
+      dictionary: => DictBuild.Bytes,
+      cfg: BtrConfig,
+      seed: Long
   ): Unit = {
     val sub = seed * 6364136223846793005L + 1442695040888963407L
     out.putByte(scheme)
@@ -134,7 +143,7 @@ object StringCodec {
         out.putInt(v.length)
         out.putBytes(v)
       case Dict =>
-        val built = DictBuild.bytes(values, count, s.sDistinct)
+        val built = dictionary
         val dict = built.entries
         out.putInt(dict.length)
         // dict blob: lengths cascade + bytes, optionally FSST-compressed

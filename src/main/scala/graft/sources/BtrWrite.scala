@@ -1189,6 +1189,47 @@ object BtrDataWriter {
     val b = s.getBytes
     if (b eq s.getBaseObject) b.clone() else b
   }
+
+  /** A binary value in an array the writer owns until the row group is
+    * flushed. Unsafe rows and arrays copy it out of their memory already;
+    * other sources (a `GenericInternalRow`, say) hand out the array they
+    * hold, which a caller may refill for the next row, so only those are
+    * cloned.
+    */
+  def ownedBinary(g: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
+      ordinal: Int): Array[Byte] = g match {
+    case _: org.apache.spark.sql.catalyst.expressions.UnsafeRow |
+        _: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData => g.getBinary(ordinal)
+    case _ => g.getBinary(ordinal).clone()
+  }
+
+  // how `write` stores a top-level column's value, resolved per column
+  // once; nested columns keep their per-value type match
+  private final val KNested = 0
+  private final val KInt = 1
+  private final val KShort = 2
+  private final val KByte = 3
+  private final val KLong = 4
+  private final val KBool = 5
+  private final val KDouble = 6
+  private final val KFloat = 7
+  private final val KDecimal = 8
+  private final val KString = 9
+  private final val KBinary = 10
+
+  private def kindOf(dt: DataType): Int = dt match {
+    case IntegerType | DateType => KInt
+    case ShortType => KShort
+    case ByteType => KByte
+    case LongType | TimestampType | TimestampNTZType => KLong
+    case BooleanType => KBool
+    case DoubleType => KDouble
+    case FloatType => KFloat
+    case _: DecimalType => KDecimal
+    case StringType => KString
+    case BinaryType => KBinary
+    case _ => KNested
+  }
 }
 
 class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: Int, partitionId: Int, taskId: Long,
@@ -1221,6 +1262,11 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
   private val fields = schema.fields
   private val tags = fields.map(f => PhysType.of(f.dataType))
   private val numCols = fields.length
+  private val kinds = fields.map(f => BtrDataWriter.kindOf(f.dataType))
+  private val decimals = fields.map(_.dataType match {
+    case d: DecimalType => d
+    case _ => null
+  })
 
   // dense row-group buffers (placeholder values at nulls, like the
   // reference's NULL_CODE convention, common/Units.hpp:134)
@@ -1378,7 +1424,7 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
             hold.elemLongs(e) = java.lang.Float.floatToRawIntBits(arr.getFloat(j)).toLong
           case d: DecimalType => hold.elemLongs(e) = arr.getDecimal(j, d.precision, d.scale).toUnscaledLong
           case StringType => hold.elemStrings(e) = BtrDataWriter.ownedBytes(arr.getUTF8String(j))
-          case BinaryType => hold.elemStrings(e) = arr.getBinary(j).clone()
+          case BinaryType => hold.elemStrings(e) = BtrDataWriter.ownedBinary(arr, j)
           case other => throw new UnsupportedOperationException(s"btr map elem: $other")
         }
       }
@@ -1446,7 +1492,7 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
               case d: DecimalType =>
                 lh.elemLongs(e) = sr.getDecimal(j, d.precision, d.scale).toUnscaledLong
               case StringType => lh.elemStrings(e) = BtrDataWriter.ownedBytes(sr.getUTF8String(j))
-              case BinaryType => lh.elemStrings(e) = sr.getBinary(j).clone()
+              case BinaryType => lh.elemStrings(e) = BtrDataWriter.ownedBinary(sr, j)
               case other =>
                 throw new UnsupportedOperationException(s"btr array<struct> leaf: $other")
             }
@@ -1561,7 +1607,7 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
       case FloatType => lc.longs(i) = java.lang.Float.floatToRawIntBits(sr.getFloat(j)).toLong
       case d: DecimalType => lc.longs(i) = sr.getDecimal(j, d.precision, d.scale).toUnscaledLong
       case StringType => lc.strings(i) = BtrDataWriter.ownedBytes(sr.getUTF8String(j))
-      case BinaryType => lc.strings(i) = sr.getBinary(j).clone()
+      case BinaryType => lc.strings(i) = BtrDataWriter.ownedBinary(sr, j)
       case st: org.apache.spark.sql.types.StructType =>
         val sub = sr.getStruct(j, st.fields.length)
         var k = 0
@@ -1617,6 +1663,7 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
   }
 
   override def write(row: InternalRow): Unit = {
+    import BtrDataWriter._
     val i = rowsInGroup
     var c = 0
     while (c < numCols) {
@@ -1635,82 +1682,20 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
         } else stringCols(c)(i) = Array.emptyByteArray
       } else {
         nullCols(c)(i) = false
-        fields(c).dataType match {
-          case IntegerType | DateType => longCols(c)(i) = row.getInt(c).toLong
-          case ShortType => longCols(c)(i) = row.getShort(c).toLong
-          case ByteType => longCols(c)(i) = row.getByte(c).toLong
-          case LongType | TimestampType | TimestampNTZType => longCols(c)(i) = row.getLong(c)
-          case BooleanType => longCols(c)(i) = if (row.getBoolean(c)) 1L else 0L
-          case DoubleType => doubleCols(c)(i) = row.getDouble(c)
-          case FloatType => longCols(c)(i) = java.lang.Float.floatToRawIntBits(row.getFloat(c)).toLong
-          case dt: DecimalType =>
+        (kinds(c): @scala.annotation.switch) match {
+          case KInt => longCols(c)(i) = row.getInt(c).toLong
+          case KShort => longCols(c)(i) = row.getShort(c).toLong
+          case KByte => longCols(c)(i) = row.getByte(c).toLong
+          case KLong => longCols(c)(i) = row.getLong(c)
+          case KBool => longCols(c)(i) = if (row.getBoolean(c)) 1L else 0L
+          case KDouble => doubleCols(c)(i) = row.getDouble(c)
+          case KFloat => longCols(c)(i) = java.lang.Float.floatToRawIntBits(row.getFloat(c)).toLong
+          case KDecimal =>
+            val dt = decimals(c)
             longCols(c)(i) = row.getDecimal(c, dt.precision, dt.scale).toUnscaledLong
-          case StringType => stringCols(c)(i) = BtrDataWriter.ownedBytes(row.getUTF8String(c))
-          case BinaryType => stringCols(c)(i) = row.getBinary(c).clone()
-          case st: org.apache.spark.sql.types.StructType =>
-            val sr = row.getStruct(c, st.fields.length)
-            var j = 0
-            while (j < structHold(c).length) {
-              setLeaf(structHold(c)(j), st.fields(j).dataType, i, sr, j); j += 1
-            }
-          case mt: org.apache.spark.sql.types.MapType =>
-            val m = row.getMap(c)
-            val n = m.numElements()
-            arrLenCols(c)(i) = n
-            appendElems(mapKeyHold(c), m.keyArray(), mt.keyType, n)
-            appendMapValues(mapValHold(c), m.valueArray(), mt.valueType, n)
-          case at: ArrayType if at.elementType.isInstanceOf[ArrayType] =>
-            val arr = row.getArray(c)
-            val n = arr.numElements()
-            arrLenCols(c)(i) = n
-            appendEntryArrays(arrHold(c).mapVals, arr,
-              at.elementType.asInstanceOf[ArrayType], n)
-          case at: ArrayType if at.elementType.isInstanceOf[org.apache.spark.sql.types.StructType] =>
-            val st = at.elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
-            val arr = row.getArray(c)
-            val n = arr.numElements()
-            val hold = arrHold(c)
-            arrLenCols(c)(i) = n
-            hold.ensureElemCapacity(n)
-            var j = 0
-            while (j < n) {
-              val e = hold.elemCount
-              val sr = if (arr.isNullAt(j)) null else arr.getStruct(j, st.fields.length)
-              hold.elemNull(e) = sr == null
-              appendStructElem(hold, st, sr)
-              hold.elemCount += 1
-              j += 1
-            }
-          case at: ArrayType =>
-            val arr = row.getArray(c)
-            val n = arr.numElements()
-            val hold = arrHold(c)
-            arrLenCols(c)(i) = n
-            hold.ensureElemCapacity(n)
-            var j = 0
-            while (j < n) {
-              val e = hold.elemCount
-              if (arr.isNullAt(j)) {
-                hold.elemNull(e) = true
-                if (hold.elemLongs != null) hold.elemLongs(e) = 0L
-                else if (hold.elemDoubles != null) hold.elemDoubles(e) = 0.0
-                else hold.elemStrings(e) = Array.emptyByteArray
-              } else {
-                hold.elemNull(e) = false
-                at.elementType match {
-                  case FloatType =>
-                    hold.elemLongs(e) = java.lang.Float.floatToRawIntBits(arr.getFloat(j)).toLong
-                  case DoubleType => hold.elemDoubles(e) = arr.getDouble(j)
-                  case IntegerType => hold.elemLongs(e) = arr.getInt(j).toLong
-                  case LongType => hold.elemLongs(e) = arr.getLong(j)
-                  case StringType => hold.elemStrings(e) = BtrDataWriter.ownedBytes(arr.getUTF8String(j))
-                  case other => throw new UnsupportedOperationException(s"btr array elem: $other")
-                }
-              }
-              hold.elemCount += 1
-              j += 1
-            }
-          case other => throw new UnsupportedOperationException(s"btr write: $other")
+          case KString => stringCols(c)(i) = BtrDataWriter.ownedBytes(row.getUTF8String(c))
+          case KBinary => stringCols(c)(i) = BtrDataWriter.ownedBinary(row, c)
+          case _ => writeNested(row, c, i)
         }
       }
       c += 1
@@ -1719,6 +1704,75 @@ class BtrDataWriter(path: String, schema: StructType, blockSize: Int, cascade: I
     totalRows += 1
     if (rowsInGroup == blockSize) flushGroup()
   }
+
+  /** Store a struct, map or array value of top-level column `c` at row `i`. */
+  private def writeNested(row: InternalRow, c: Int, i: Int): Unit =
+    fields(c).dataType match {
+      case st: org.apache.spark.sql.types.StructType =>
+        val sr = row.getStruct(c, st.fields.length)
+        var j = 0
+        while (j < structHold(c).length) {
+          setLeaf(structHold(c)(j), st.fields(j).dataType, i, sr, j); j += 1
+        }
+      case mt: org.apache.spark.sql.types.MapType =>
+        val m = row.getMap(c)
+        val n = m.numElements()
+        arrLenCols(c)(i) = n
+        appendElems(mapKeyHold(c), m.keyArray(), mt.keyType, n)
+        appendMapValues(mapValHold(c), m.valueArray(), mt.valueType, n)
+      case at: ArrayType if at.elementType.isInstanceOf[ArrayType] =>
+        val arr = row.getArray(c)
+        val n = arr.numElements()
+        arrLenCols(c)(i) = n
+        appendEntryArrays(arrHold(c).mapVals, arr,
+          at.elementType.asInstanceOf[ArrayType], n)
+      case at: ArrayType if at.elementType.isInstanceOf[org.apache.spark.sql.types.StructType] =>
+        val st = at.elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
+        val arr = row.getArray(c)
+        val n = arr.numElements()
+        val hold = arrHold(c)
+        arrLenCols(c)(i) = n
+        hold.ensureElemCapacity(n)
+        var j = 0
+        while (j < n) {
+          val e = hold.elemCount
+          val sr = if (arr.isNullAt(j)) null else arr.getStruct(j, st.fields.length)
+          hold.elemNull(e) = sr == null
+          appendStructElem(hold, st, sr)
+          hold.elemCount += 1
+          j += 1
+        }
+      case at: ArrayType =>
+        val arr = row.getArray(c)
+        val n = arr.numElements()
+        val hold = arrHold(c)
+        arrLenCols(c)(i) = n
+        hold.ensureElemCapacity(n)
+        var j = 0
+        while (j < n) {
+          val e = hold.elemCount
+          if (arr.isNullAt(j)) {
+            hold.elemNull(e) = true
+            if (hold.elemLongs != null) hold.elemLongs(e) = 0L
+            else if (hold.elemDoubles != null) hold.elemDoubles(e) = 0.0
+            else hold.elemStrings(e) = Array.emptyByteArray
+          } else {
+            hold.elemNull(e) = false
+            at.elementType match {
+              case FloatType =>
+                hold.elemLongs(e) = java.lang.Float.floatToRawIntBits(arr.getFloat(j)).toLong
+              case DoubleType => hold.elemDoubles(e) = arr.getDouble(j)
+              case IntegerType => hold.elemLongs(e) = arr.getInt(j).toLong
+              case LongType => hold.elemLongs(e) = arr.getLong(j)
+              case StringType => hold.elemStrings(e) = BtrDataWriter.ownedBytes(arr.getUTF8String(j))
+              case other => throw new UnsupportedOperationException(s"btr array elem: $other")
+            }
+          }
+          hold.elemCount += 1
+          j += 1
+        }
+      case other => throw new UnsupportedOperationException(s"btr write: $other")
+    }
 
   private def flushGroup(): Unit = {
     if (rowsInGroup == 0) return

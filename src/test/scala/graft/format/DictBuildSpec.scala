@@ -123,6 +123,27 @@ class DictBuildSpec extends AnyFunSuite {
     assert(bytesMatch(Array.fill(65536)(tricky(rnd.nextInt(tricky.length)).clone())))
   }
 
+  test("bytes: run-heavy chunks match the reference") {
+    // sorted runs of equal copies, runs of one shared array, a run at row
+    // 0 and values that recur after other runs (their first-seen id holds)
+    val pool = Array(utf8("R"), utf8("A"), utf8("N"), Array.emptyByteArray, utf8("TRUCK"),
+      utf8("DELIVER IN PERSON"), Array[Byte](0x80.toByte, 0))
+    val runs = Array.newBuilder[Array[Byte]]
+    var n = 0
+    while (n < 65536) {
+      val v = pool(rnd.nextInt(pool.length))
+      val len = math.min(65536 - n, 1 + rnd.nextInt(2000))
+      val shared = rnd.nextBoolean()
+      var k = 0
+      while (k < len) { runs += (if (shared) v else v.clone()); k += 1 }
+      n += len
+    }
+    assert(bytesMatch(runs.result()))
+    val sorted = Array.tabulate(65536)(i => utf8(f"${i / 4096}%04d"))
+    assert(bytesMatch(sorted))
+    assert(bytesMatch(Array.tabulate(65536)(i => pool((i / 7) % pool.length).clone())))
+  }
+
   test("bytes: 65,536 distinct values") {
     assert(bytesMatch(Array.tabulate(65536)(i => utf8(s"row-$i-${rnd.nextInt()}"))))
   }

@@ -83,36 +83,50 @@ class BtrOverwriteSpec extends AnyFunSuite {
   }
 
   test("string values survive the row source reusing their backing arrays") {
-    // UTF8String.fromBytes wraps the caller's array without copying, and a
-    // row source may refill that array for the next row: the writer must
-    // own a copy of every string it buffers (top-level, array element and
-    // struct field)
+    // UTF8String.fromBytes wraps the caller's array without copying, and
+    // a generic row hands out the binary array it holds; a row source may
+    // refill either for the next row: the writer must own a copy of every
+    // string and binary value it buffers (top-level, array element, map
+    // value, array<struct> element field and struct field)
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
     import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
     val dir = tmp("reused-bytes")
     val schema = StructType(Seq(StructField("id", IntegerType), StructField("s", StringType),
       StructField("a", ArrayType(StringType)),
-      StructField("t", StructType(Seq(StructField("u", StringType))))))
-    val bufs = Array.fill(3)(new Array[Byte](5))
-    def refill(b: Array[Byte], text: String): UTF8String = {
+      StructField("t", StructType(Seq(StructField("u", StringType), StructField("w", BinaryType)))),
+      StructField("b", BinaryType),
+      StructField("m", MapType(IntegerType, BinaryType)),
+      StructField("e", ArrayType(StructType(Seq(StructField("v", BinaryType)))))))
+    val bufs = Array.fill(7)(new Array[Byte](5))
+    def fill(b: Array[Byte], text: String): Array[Byte] = {
       System.arraycopy(text.getBytes("UTF-8"), 0, b, 0, b.length)
-      UTF8String.fromBytes(b)
+      b
     }
+    def refill(b: Array[Byte], text: String): UTF8String = UTF8String.fromBytes(fill(b, text))
     val n = 300
     val bw = new BtrBatchWrite(dir, schema, BtrOverwriteMode.Truncate, 65536, 3)
     val w = bw.createBatchWriterFactory(null).createWriter(0, 1L)
     (0 until n).foreach { i =>
       w.write(InternalRow(i, refill(bufs(0), f"s$i%04d"),
         new GenericArrayData(Array[Any](refill(bufs(1), f"a$i%04d"))),
-        InternalRow(refill(bufs(2), f"u$i%04d"))))
+        InternalRow(refill(bufs(2), f"u$i%04d"), fill(bufs(3), f"w$i%04d")),
+        fill(bufs(4), f"b$i%04d"),
+        new ArrayBasedMapData(new GenericArrayData(Array[Any](i)),
+          new GenericArrayData(Array[Any](fill(bufs(5), f"m$i%04d")))),
+        new GenericArrayData(Array[Any](InternalRow(fill(bufs(6), f"v$i%04d"))))))
     }
     bw.commit(Array(w.commit()))
+    def text(b: Array[Byte]): String = new String(b, "UTF-8")
     val back = spark.read.format("btr").load(dir).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getSeq[String](2), r.getStruct(3).getString(0)))
+      .map(r => (r.getInt(0), r.getString(1), r.getSeq[String](2), r.getStruct(3).getString(0),
+        text(r.getStruct(3).getAs[Array[Byte]](1)), text(r.getAs[Array[Byte]](4)),
+        r.getMap[Int, Array[Byte]](5).map { case (k, v) => k -> text(v) },
+        r.getSeq[org.apache.spark.sql.Row](6).map(e => text(e.getAs[Array[Byte]](0)))))
       .sortBy(_._1)
-    assert(back.toSeq == (0 until n).map(i => (i, f"s$i%04d", Seq(f"a$i%04d"), f"u$i%04d")))
+    assert(back.toSeq == (0 until n).map(i => (i, f"s$i%04d", Seq(f"a$i%04d"), f"u$i%04d",
+      f"w$i%04d", f"b$i%04d", Map(i -> f"m$i%04d"), Seq(f"v$i%04d"))))
   }
 
   test("commit fails loudly when rename cannot land") {
